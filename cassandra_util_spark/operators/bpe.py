@@ -1,5 +1,5 @@
-"""BPE vocabulary learning (Sennrich et al., ACL 2016) as a distributed
-iterative operator — the trainable half of the tokenizer family
+"""BPE vocabulary learning (Sennrich et al., ACL 2016) over a distributed
+word-frequency table — the trainable half of the tokenizer family
 (``text.bpe_token_estimate`` is the static regex estimator).
 
 Algorithm: start from the word-frequency table with each word segmented
@@ -24,14 +24,21 @@ forms is pinned against a plain-Python reference in tests.
 
 Scale design (100 TB):
 - the working state is the WORD-frequency table (vocabulary-sized, not
-  corpus-sized): one corpus scan builds it, and every merge iteration
-  touches only this table — the standard trick that makes BPE training
-  tractable on web corpora;
-- each step = one pair-count shuffle (map-side partial sums) + a 1-row
-  collect (the argmax) + a map-only fold re-segmentation, checkpointed
-  so the plan does not grow with the step count;
-- num_merges is a config constant; production vocab sizes (30k merges)
-  run the same loop — per-step cost is flat in the merge index.
+  corpus-sized): one corpus scan builds it, and merge learning touches
+  only this table — the standard trick that makes BPE training tractable
+  on web corpora;
+- the exact path (``batch=1``) collects the ``(word, cnt)`` table to the
+  driver in ONE bounded collect and learns every merge there with the
+  reference's incremental loop: pair counts and a pair -> words index,
+  the argmax from a lazy-deletion heap, and per merge only the words
+  containing the merged pair are rewritten.  The final segmentation is a
+  map-only replay of the learned merges over the checkpointed table, so
+  training costs a constant number of Spark jobs whatever ``num_merges``
+  is.  ``DRIVER_WORDS_MAX`` bounds the collected table;
+- above that bound, and for ``batch > 1``, the loop stays distributed:
+  each round = one pair-count shuffle (map-side partial sums) + a bounded
+  collect (the argmax) + a map-only fold re-segmentation, checkpointed so
+  the plan does not grow with the round count.
 
 Reference anchor: iterative global-argmax maintenance is the shape of the
 reference's repair/compaction loops (DeletingCompactionStrategy.java's
@@ -41,7 +48,10 @@ part of the training-data surface the brief adds.
 
 from __future__ import annotations
 
-from typing import List, Tuple
+import contextlib
+import heapq
+from collections import defaultdict
+from typing import Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +66,14 @@ END = "</w>"
 # broadcast-join form avoids tens of thousands of driver-side lit()
 # constructions and an O(|vocab|)-literal serialized plan (review r17).
 DECODE_LITERAL_MAP_MAX = 8192
+
+# bpe_train(batch=1) learns its merges on the driver when the word table
+# has at most this many rows, and runs the distributed loop above it.
+# Measured on a 200k-word table (random 2-12 letter words, local[4] on 4
+# vCPUs): the collect takes 0.9 s, the driver loop 2.3 s for 10 merges
+# and 13.7 s for 1000, against 2.2 s per distributed round; the driver
+# holds ~1.5 KB per word (~0.3 GB at the bound), which is what caps it.
+DRIVER_WORDS_MAX = 200_000
 
 
 def byte_fallback_syms(word: Column) -> Column:
@@ -220,7 +238,11 @@ def _select_disjoint(rows, m: int) -> List[Tuple[str, str, int]]:
     return sel
 
 
-import contextlib
+def _merge_col(pairs: List[Tuple[str, str]]) -> Column:
+    """The fold applying one symbol-disjoint pair group to ``syms``."""
+    if len(pairs) == 1:
+        return merge_pair_expr(F.col("syms"), *pairs[0])
+    return merge_pairs_expr(F.col("syms"), pairs)
 
 
 @contextlib.contextmanager
@@ -242,11 +264,12 @@ def _vocab_scoped_shuffle(words: DataFrame):
     conf mutations — exception-safe via the finally, but any query
     running concurrently on the same SparkSession (an active stream,
     another driver thread) would observe the narrowed width and
-    disabled AQE for the scope's duration.  ``bpe_train`` therefore
-    requires a single-threaded session while it runs; a multi-tenant
-    deployment should train on a cloned session
-    (``spark.newSession()``), which shares the SparkContext but not
-    the conf."""
+    disabled AQE for the scope's duration.  The distributed loop
+    (``bpe_train`` with ``batch > 1`` or a word table over
+    ``DRIVER_WORDS_MAX``) therefore requires a single-threaded session
+    while it runs; a multi-tenant deployment should train on a cloned
+    session (``spark.newSession()``), which shares the SparkContext but
+    not the conf.  The exact driver path sets no conf."""
     spark = words.sparkSession
     n = max(words.rdd.getNumPartitions(), 1)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -270,44 +293,78 @@ def _vocab_scoped_shuffle(words: DataFrame):
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    num_merges: int = 10,
-    batch: int = 1,
+def _merge_syms(syms: List[str], lhs: str, rhs: str) -> List[str]:
+    """:func:`merge_pair_expr` on a Python list: greedy left-to-right
+    non-overlapping merge of (lhs, rhs)."""
+    out: List[str] = []
+    for t in syms:
+        if out and out[-1] == lhs and t == rhs:
+            out[-1] = lhs + rhs
+        else:
+            out.append(t)
+    return out
+
+
+def _driver_merges(
+    word_cnts: List[Tuple[str, int]], num_merges: int
+) -> List[Tuple[int, str, str, int]]:
+    """Exact greedy BPE over a collected (word, cnt) table: the reference
+    learner's incremental loop.  ``pairs`` holds each adjacent pair's
+    frequency-weighted count and ``where`` the words that contain it, so a
+    merge rewrites only those words.  The argmax comes from a heap keyed
+    ``(-count, lhs, rhs)``, the distributed loop's total order (Python's
+    code-point order on str equals Spark's UTF-8 byte order).  Entries are
+    deleted lazily: EVERY pair whose count a merge changes is pushed again,
+    including pairs the rewritten words no longer contain, and a popped
+    entry counts only if it still equals the pair's live count.  Words are
+    ``normalize_text`` tokens ([a-z0-9]+), so ``list(w) + [END]`` is the
+    word table's initial ``syms``."""
+    segs = [list(w) + [END] for w, _ in word_cnts]
+    cnts = [c for _, c in word_cnts]
+    pairs: Dict[Tuple[str, str], int] = defaultdict(int)
+    where: Dict[Tuple[str, str], set] = defaultdict(set)
+    for i, syms in enumerate(segs):
+        for p in zip(syms, syms[1:]):
+            pairs[p] += cnts[i]
+            where[p].add(i)
+    heap = [(-c, l, r) for (l, r), c in pairs.items()]
+    heapq.heapify(heap)
+    merges: List[Tuple[int, str, str, int]] = []
+    while heap and len(merges) < num_merges:
+        neg, l, r = heapq.heappop(heap)
+        if pairs.get((l, r)) != -neg:
+            continue  # stale: the pair's count changed after this push
+        merges.append((len(merges), l, r, -neg))
+        delta: Dict[Tuple[str, str], int] = defaultdict(int)
+        for i in where.pop((l, r)):
+            old, c = segs[i], cnts[i]
+            new = _merge_syms(old, l, r)
+            if len(new) == len(old):
+                continue  # an earlier merge already took the pair's symbols
+            segs[i] = new
+            for p in zip(old, old[1:]):
+                delta[p] -= c
+            for p in zip(new, new[1:]):
+                delta[p] += c
+                where[p].add(i)
+        for p, d in delta.items():
+            if not d:
+                continue
+            pairs[p] += d
+            if pairs[p]:
+                heapq.heappush(heap, (-pairs[p], *p))
+            else:
+                del pairs[p]
+                where.pop(p, None)
+    return merges
+
+
+def _distributed_merges(
+    words: DataFrame, num_merges: int, batch: int
 ) -> Tuple[List[Tuple[int, str, str, int]], DataFrame]:
-    """Learn ``num_merges`` BPE merges from the corpus.
-
-    Returns ``(merges, words)``: merges as [(step, lhs, rhs, count)] in
-    learned order, and the word table with its FINAL segmentation (word,
-    cnt, syms) — the lookup table that tokenizes any text over this vocab.
-    Each step's argmax is a bounded 1-row collect; the word table is
-    eagerly checkpointed per step so lineage stays flat across merges.
-
-    ``batch`` > 1 amortizes the per-step constants (one pair-count shuffle +
-    one checkpoint per ROUND instead of per merge) by taking up to ``batch``
-    pairwise symbol-disjoint pairs from each round's argmax order and
-    applying them as one composed fold — the standard fast-trainer trick.
-    Within a round the result is EXACTLY the sequential application of the
-    taken pairs (disjoint pairs cannot affect each other's adjacencies,
-    pinned in tests/test_bpe.py); across rounds it is the standard
-    approximation: sequential greedy could prefer a pair involving a symbol
-    merged earlier in the same round (counts involving fresh merges start
-    from the next round).  ``batch=1`` is the exact certified path
-    (bpe_learned_merges oracle).  Measured on a 15k-word vocabulary at
-    sf0.1: 2.0 merges/s sequential -> 22.7 merges/s at batch=16
-    (SCALING.md), turning a ~3 h 30k-merge vocabulary into ~22 min.
-
-    Requires a SINGLE-THREADED SparkSession for the training call: the
-    merge loop scopes session-level shuffle/AQE confs to the vocabulary
-    size (see ``_vocab_scoped_shuffle``) and a concurrent query on the
-    same session would observe them; multi-tenant callers should train
-    on ``spark.newSession()``."""
-    if num_merges < 1:
-        raise ValueError(f"num_merges must be >= 1, got {num_merges}")
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    words = word_frequency_table(df, text_col).localCheckpoint()
+    """The merge loop as Spark jobs over the checkpointed word table: one
+    pair-count shuffle plus a bounded argmax collect per round, taking up
+    to ``batch`` symbol-disjoint pairs per round."""
     merges: List[Tuple[int, str, str, int]] = []
     with _vocab_scoped_shuffle(words):
         while len(merges) < num_merges:
@@ -328,12 +385,7 @@ def bpe_train(
             taken = _select_disjoint(top, want)
             for lhs, rhs, c in taken:
                 merges.append((len(merges), lhs, rhs, c))
-            if len(taken) == 1:
-                col = merge_pair_expr(F.col("syms"), taken[0][0], taken[0][1])
-            else:
-                col = merge_pairs_expr(
-                    F.col("syms"), [(l, r) for l, r, _ in taken]
-                )
+            col = _merge_col([(l, r) for l, r, _ in taken])
             # lazy checkpoint: the plan is truncated immediately (lineage
             # stays flat in rounds) but materialization rides the NEXT
             # round's pair-count collect — one job per round instead of a
@@ -341,6 +393,65 @@ def bpe_train(
             # materializes in the caller's first action, as before.
             words = words.withColumn("syms", col).localCheckpoint(eager=False)
     return merges, words
+
+
+def bpe_train(
+    df: DataFrame,
+    text_col: str,
+    num_merges: int = 10,
+    batch: int = 1,
+) -> Tuple[List[Tuple[int, str, str, int]], DataFrame]:
+    """Learn ``num_merges`` BPE merges from the corpus.
+
+    Returns ``(merges, words)``: merges as [(step, lhs, rhs, count)] in
+    learned order, and the word table with its FINAL segmentation (word,
+    cnt, syms) — the lookup table that tokenizes any text over this vocab.
+    Training stops early when every word is a single symbol.
+
+    ``batch=1`` is the exact certified path (bpe_learned_merges oracle).
+    The word table is built (one shuffle job) and collected to the driver
+    with a bounded ``limit(DRIVER_WORDS_MAX + 1)`` (one job, which also
+    fills the table's checkpoint), and the exact greedy runs there
+    (``_driver_merges``).  The returned table replays the learned merges
+    over the checkpointed table as map-only folds, the same replay
+    :func:`segment_words` runs, behind lazy checkpoints that materialize
+    in the caller's first action.  So the job count is constant in
+    ``num_merges``, and the path touches no session conf.
+
+    A word table over ``DRIVER_WORDS_MAX`` rows, or ``batch > 1``, runs the
+    distributed loop instead: one pair-count shuffle plus a bounded argmax
+    collect per round, the word table lazily checkpointed per round so
+    lineage stays flat.  ``batch`` > 1 amortizes those per-round constants
+    by taking up to ``batch`` pairwise symbol-disjoint pairs from each
+    round's argmax order and applying them as one composed fold — the
+    standard fast-trainer trick.  Within a round the result is EXACTLY the
+    sequential application of the taken pairs (disjoint pairs cannot affect
+    each other's adjacencies, pinned in tests/test_bpe.py); across rounds
+    it is the standard approximation: sequential greedy could prefer a pair
+    involving a symbol merged earlier in the same round (counts involving
+    fresh merges start from the next round).  Measured on a 15k-word
+    vocabulary at sf0.1: 2.0 merges/s sequential -> 22.7 merges/s at
+    batch=16 (SCALING.md).
+
+    The distributed loop requires a SINGLE-THREADED SparkSession for the
+    training call: it scopes session-level shuffle/AQE confs to the
+    vocabulary size (see ``_vocab_scoped_shuffle``) and a concurrent query
+    on the same session would observe them; multi-tenant callers should
+    train on ``spark.newSession()``."""
+    if num_merges < 1:
+        raise ValueError(f"num_merges must be >= 1, got {num_merges}")
+    if batch < 1:
+        raise ValueError(f"batch must be >= 1, got {batch}")
+    # lazy pin: the word table's shuffle runs here, and its result stage
+    # rides the first action after it (the collect, or the first round)
+    words = word_frequency_table(df, text_col).localCheckpoint(eager=False)
+    if batch == 1:
+        rows = words.select("word", "cnt").limit(DRIVER_WORDS_MAX + 1).collect()
+        if len(rows) <= DRIVER_WORDS_MAX:
+            merges = _driver_merges(rows, num_merges)
+            final = _replay_merges(words, merges, eager=False)
+            return merges, final.localCheckpoint(eager=False)
+    return _distributed_merges(words, num_merges, batch)
 
 
 def bpe_merge_table(spark: SparkSession, merges) -> DataFrame:
@@ -375,6 +486,27 @@ def _ordered_disjoint_batches(
     return batches
 
 
+def _replay_merges(
+    words: DataFrame,
+    merges: List[Tuple[int, str, str, int]],
+    batch: int = 16,
+    checkpoint_every: int = 8,
+    eager: bool = True,
+) -> DataFrame:
+    """Re-segment ``words.syms`` by replaying a learned merge list in
+    order: contiguous symbol-disjoint batching (``_ordered_disjoint_batches``)
+    collapses the ~M folds to ~M/batch composed passes, and a
+    localCheckpoint every ``checkpoint_every`` batches keeps the plan flat
+    in M (``eager=False`` defers each one to the consuming action, so the
+    replay itself runs no job)."""
+    pairs = [(l, r) for (_, l, r, _) in merges]
+    for i, grp in enumerate(_ordered_disjoint_batches(pairs, batch), 1):
+        words = words.withColumn("syms", _merge_col(grp))
+        if i % checkpoint_every == 0:
+            words = words.localCheckpoint(eager=eager)
+    return words
+
+
 def segment_words(
     vocab: DataFrame,
     merges: List[Tuple[int, str, str, int]],
@@ -386,15 +518,13 @@ def segment_words(
     out-of-vocabulary half of the tokenizer (a trained word table only
     covers words seen at training time; a crawl shard always brings new
     ones).  One greedy left-to-right pass per merge, each over the state
-    left by the previous merges — the same semantics ``bpe_train`` used
-    to build the trained table, so an in-vocabulary word re-segmented
-    here lands on its trained segmentation exactly (pinned in tests).
+    left by the previous merges — the same replay ``bpe_train`` uses to
+    build the trained table, so an in-vocabulary word re-segmented here
+    lands on its trained segmentation exactly (pinned in tests).
 
     Scale: the input is a DISTINCT-word table (vocabulary-sized, not
-    corpus-sized) and every merge is a map-only fold; contiguous
-    symbol-disjoint batching (``_ordered_disjoint_batches``) collapses
-    the ~M folds to ~M/batch composed passes, and a localCheckpoint
-    every ``checkpoint_every`` batches keeps the plan flat in M."""
+    corpus-sized) and every merge is a map-only fold, replayed by
+    ``_replay_merges``."""
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
     words = vocab.select(
@@ -403,16 +533,7 @@ def segment_words(
             F.expr("regexp_extract_all(word, '.', 0)"), F.array(F.lit(END))
         ).alias("syms"),
     )
-    pairs = [(l, r) for (_, l, r, _) in merges]
-    for i, grp in enumerate(_ordered_disjoint_batches(pairs, batch), 1):
-        if len(grp) == 1:
-            col = merge_pair_expr(F.col("syms"), grp[0][0], grp[0][1])
-        else:
-            col = merge_pairs_expr(F.col("syms"), grp)
-        words = words.withColumn("syms", col)
-        if i % checkpoint_every == 0:
-            words = words.localCheckpoint()
-    return words
+    return _replay_merges(words, merges, batch, checkpoint_every)
 
 
 def bpe_encode(

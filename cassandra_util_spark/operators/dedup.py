@@ -140,6 +140,27 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame
     )
 
 
+def _shingle_source(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    shingles: DataFrame | None,
+) -> DataFrame:
+    """The shingle stream an operator consumes: its own :func:`shingle_rows`
+    scan, or the injected ``shingles`` frame, which replaces that scan so
+    ``id_col``/``text_col``/``n`` do not apply to it.  The injected frame
+    must have exactly the ``(id, sh)`` columns (a schema check, no job)."""
+    if shingles is None:
+        return shingle_rows(df, id_col, text_col, n)
+    if tuple(shingles.columns) != ("id", "sh"):
+        raise ValueError(
+            f"shingles= must be a shingle_rows() frame with columns "
+            f"('id', 'sh'), got {tuple(shingles.columns)}"
+        )
+    return shingles
+
+
 def _ngram_pair_counts(
     df: DataFrame,
     id_col: str,
@@ -157,9 +178,7 @@ def _ngram_pair_counts(
     # BOTH self-join sides.  Removing it (2.5x slower) or replacing it with a
     # localCheckpoint (1.3x slower) re-runs or re-reads the scan+explode per
     # consumer.  Keep the distinct.
-    sh = (
-        shingle_rows(df, id_col, text_col, n) if shingles is None else shingles
-    ).distinct()
+    sh = _shingle_source(df, id_col, text_col, n, shingles).distinct()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     if max_doc_freq is not None:
@@ -946,9 +965,7 @@ def minhash_signatures(
     the internal scan (the recall audits share one pinned shingle pass
     between their exact and approximate sides).
     """
-    sh = (
-        shingle_rows(df, id_col, text_col, n) if shingles is None else shingles
-    )
+    sh = _shingle_source(df, id_col, text_col, n, shingles)
     # permutations via universal hashing of ONE base hash in the Mersenne
     # field p = 2^31-1: h_j = (a_j * h31 + b_j) mod p with a_j,b_j < p and
     # h31 a 31-bit base hash of the shingle.  Everything must live in the

@@ -188,7 +188,11 @@ def stream_corpus_ingest(
         # its own job, so the admission lineage still runs exactly once but
         # the eager pin's separate pass over the survivors (one extra
         # driver-blocking job + one extra read of the pinned blocks per
-        # trigger) is gone; the index append reads the pinned blocks.
+        # trigger) is gone; the index append reads the pinned blocks.  On a
+        # replayed batch the idempotent corpus append_run no-ops (its run
+        # name is already published), so the index append is the
+        # materializing consumer instead — still before the high-water mark
+        # advances and before maintenance runs.
         kept = kept.localCheckpoint(eager=False)
         corpus_store.append_run(
             kept.withColumn("writetime", F.lit(batch_id).cast("long")),

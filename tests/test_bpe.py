@@ -1,8 +1,9 @@
 """BPE trainer: the Spark fold / DuckDB parity-island merge vs a plain-Python
 reference of greedy left-to-right non-overlapping merging (the equivalence the
 operators/bpe.py and entry_queries.py docstrings claim), full-trainer replay,
-early-break on exhausted corpora, and the oracle's degenerate-corpus no-op
-steps (ADVICE r7: an empty argmax must not annihilate the word table)."""
+early-break on exhausted corpora, the oracle's degenerate-corpus no-op
+steps (an empty argmax must not annihilate the word table), and
+the exact driver path against the reference and the distributed loop."""
 
 from __future__ import annotations
 
@@ -11,10 +12,14 @@ import tempfile
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from cassandra_util_spark.operators import bpe
 from cassandra_util_spark.operators.bpe import (
     END,
+    _driver_merges,
     bpe_token_profile,
     bpe_train,
     merge_pair_expr,
@@ -290,12 +295,14 @@ def test_batched_trainer_rejects_bad_batch(spark):
         bpe_train(df, "text", num_merges=1, batch=0)
 
 
-def test_train_scoped_shuffle_restores_conf_and_result(spark):
-    """r17: bpe_train scopes spark.sql.shuffle.partitions to the word
-    table's own partition count for the merge loop; the session setting
-    must be restored afterwards (even though the loop ran under a smaller
-    one) and the learned merges must be identical to a run under the
-    session default."""
+def test_train_scoped_shuffle_restores_conf_and_result(spark, monkeypatch):
+    """bpe_train's distributed loop scopes spark.sql.shuffle.partitions
+    to the word table's own partition count; the session setting must be
+    restored afterwards (even though the loop ran under a smaller one) and
+    the learned merges must be identical to a run under the session
+    default.  The driver bound is forced to 0 so the loop, not the exact
+    driver path (which sets no conf), runs here."""
+    monkeypatch.setattr(bpe, "DRIVER_WORDS_MAX", 0)
     rows = [("the cat sat on the mat the cat",), ("a cat and a mat and a hat",)]
     d = spark.createDataFrame(rows * 20, "text string")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -318,3 +325,107 @@ def test_train_scoped_shuffle_restores_conf_and_result(spark):
     assert sorted(map(tuple, w1.select("word", "syms").collect())) == sorted(
         map(tuple, w2.select("word", "syms").collect())
     )
+
+
+# ---------------------------------------------------------------------------
+# Exact driver path (batch=1): one word-table collect, merges learned on the
+# driver, final table replayed over the checkpointed word table
+# ---------------------------------------------------------------------------
+
+
+def _corpus_df(spark, word_cnt: dict):
+    """One document per word occurrence, so the word table is ``word_cnt``."""
+    rows = [(w,) for w, c in word_cnt.items() for _ in range(c)]
+    return spark.createDataFrame(rows, "text string")
+
+
+def _table(words) -> dict:
+    return {r["word"]: (r["cnt"], list(r["syms"])) for r in words.collect()}
+
+
+# few letters and small counts force count ties and same-symbol runs;
+# merge budgets past the corpus' symbol count force early exhaustion
+_word_cnts = st.dictionaries(
+    st.text(alphabet="abc", min_size=1, max_size=6),
+    st.integers(min_value=1, max_value=3),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(word_cnt=_word_cnts, num_merges=st.integers(min_value=1, max_value=40))
+def test_driver_merges_match_python_reference(word_cnt, num_merges):
+    ref_merges, _ = py_bpe_train(word_cnt, num_merges)
+    assert _driver_merges(list(word_cnt.items()), num_merges) == ref_merges
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(word_cnt=_word_cnts, num_merges=st.integers(min_value=1, max_value=40))
+def test_exact_path_matches_python_reference(spark, word_cnt, num_merges):
+    """Merges AND the replayed final segmentation equal the reference."""
+    merges, words = bpe_train(_corpus_df(spark, word_cnt), "text", num_merges)
+    ref_merges, ref_segs = py_bpe_train(word_cnt, num_merges)
+    assert merges == ref_merges
+    assert {w: syms for w, (_, syms) in _table(words).items()} == ref_segs
+
+
+def test_driver_heap_repushes_pairs_a_merge_lowered(spark):
+    """(a,a) wins first and rewrites aasx/aab/aac; that lowers (a,s) from 9
+    to 5, and (a,s) is still the next argmax (tied at 5 with (s,y) and
+    (y,</w>), first in pair order) although no rewritten word contains it
+    any more.  A heap that re-pushes only the rewritten words' pairs keeps
+    (a,s)'s stale 9, discards it, and merges (s,y) second."""
+    word_cnt = {"aasx": 4, "asy": 5, "aab": 3, "aac": 3}
+    expect = [(0, "a", "a", 10), (1, "a", "s", 5)]
+    ref_merges, ref_segs = py_bpe_train(word_cnt, 2)
+    assert ref_merges == expect
+    rewritten = [py_merge(list(w) + [END], "a", "a") for w in word_cnt if "aa" in w]
+    assert all(("a", "s") not in zip(syms, syms[1:]) for syms in rewritten)
+    assert _driver_merges(list(word_cnt.items()), 2) == expect
+    merges, words = bpe_train(_corpus_df(spark, word_cnt), "text", 2)
+    assert merges == expect
+    assert {w: syms for w, (_, syms) in _table(words).items()} == ref_segs
+
+
+def test_distributed_fallback_equals_driver_path(spark, monkeypatch):
+    """Over the driver bound the distributed loop runs; it must learn the
+    same merges and return the same (word, cnt, syms) table."""
+    df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
+    merges, words = bpe_train(df, "text", num_merges=12)
+    monkeypatch.setattr(bpe, "DRIVER_WORDS_MAX", 0)
+    fb_merges, fb_words = bpe_train(df, "text", num_merges=12)
+    assert fb_merges == merges
+    assert _table(fb_words) == _table(words)
+
+
+def _run_in_job_group(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran, read from the status
+    tracker under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_exact_path_job_count_is_constant_in_num_merges(spark):
+    df = spark.createDataFrame(
+        CORPUS + [(4, "the quick brown fox jumps over the lazy dog")],
+        "doc_id bigint, text string",
+    )
+    (_, _), jobs_2 = _run_in_job_group(
+        spark, "bpe-train-2", lambda: bpe_train(df, "text", num_merges=2)
+    )
+    (merges, _), jobs_30 = _run_in_job_group(
+        spark, "bpe-train-30", lambda: bpe_train(df, "text", num_merges=30)
+    )
+    assert len(merges) == 30  # the corpus does not run dry before 30 merges
+    assert jobs_2 == jobs_30 <= 3

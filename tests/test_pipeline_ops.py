@@ -97,6 +97,39 @@ def test_shared_shingle_rows_identical(spark, docs):
     assert shared_lsh == base_lsh
 
 
+def test_injected_shingles_must_be_shingle_rows_frame(spark, docs):
+    """``shingles=`` replaces the operator's own scan, so a frame that is not
+    an ``(id, sh)`` shingle_rows() frame is refused when the operator is
+    called, before any Spark job runs."""
+    from cassandra_util_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+        ngram_jaccard_pairs,
+        shingle_rows,
+    )
+
+    sh = shingle_rows(docs, "doc_id", "text", 3)
+    wrong = [
+        sh.withColumnRenamed("id", "doc_id"),
+        sh.select("sh", "id"),
+        sh.withColumn("n", F.lit(3)),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("shingles-check", "shingles-check")
+    try:
+        for bad in wrong:
+            with pytest.raises(ValueError, match="shingles="):
+                ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.6, shingles=bad)
+            with pytest.raises(ValueError, match="shingles="):
+                minhash_signatures(docs, "doc_id", "text", 3, shingles=bad)
+            with pytest.raises(ValueError, match="shingles="):
+                minhash_lsh_pairs(docs, "doc_id", "text", shingles=bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("shingles-check") == []
+
+
 def test_simhash_finds_planted_dups(spark, docs):
     from cassandra_util_spark.operators.dedup import simhash_pairs
 
