@@ -520,29 +520,37 @@ class RunStore:
         Returns the new run names (empty when no bucket qualifies).
         The read view is invariant under compaction (minus convicted rows).
         """
-        from cassandra_util_spark.operators.merge import merge_snapshots
-
         plan = size_tiered_plan(
             self.run_sizes(), min_threshold=min_threshold, max_threshold=max_threshold
         )
-        new_runs: list[str] = []
-        for bucket in plan:
-            dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in bucket]
-            merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
-            if keep_expr is not None:
-                merged = keep_expr(merged)
-            run = self._next_run()
-            path = os.path.join(self.root, run)
-            KeyedTable(merged, self.meta).clustered().write.parquet(path)
-            self._write_stats(spark, path)
-            # publish under the manifest lock, re-reading the live set: a
-            # writer appending concurrently with this maintenance pass must
-            # not have its just-published run dropped by a stale-list swap
-            with self.locked():
-                live = [r for r in self.live_runs() if r not in bucket]
-                self._swap_manifest([*live, run])
-            new_runs.append(run)
-        return new_runs
+        return [self._compact_bucket(spark, bucket, keep_expr) for bucket in plan]
+
+    def _compact_bucket(
+        self,
+        spark: SparkSession,
+        bucket: list[str],
+        keep_expr: Optional[Callable[[DataFrame], DataFrame]],
+    ) -> str:
+        """Merge ``bucket``'s runs into one new clustered run (LWW winners,
+        ``keep_expr`` applied in-merge) and swap it in for them; returns the
+        new run's name.  The body of every size- and time-bucketed round."""
+        from cassandra_util_spark.operators.merge import merge_snapshots
+
+        dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in bucket]
+        merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
+        if keep_expr is not None:
+            merged = keep_expr(merged)
+        run = self._next_run()
+        path = os.path.join(self.root, run)
+        KeyedTable(merged, self.meta).clustered().write.parquet(path)
+        self._write_stats(spark, path)
+        # publish under the manifest lock, re-reading the live set: a
+        # writer appending concurrently with this maintenance pass must
+        # not have its just-published run dropped by a stale-list swap
+        with self.locked():
+            live = [r for r in self.live_runs() if r not in bucket]
+            self._swap_manifest([*live, run])
+        return run
 
     def compact_leveled(
         self,
@@ -798,27 +806,10 @@ def compact_time_windowed(
     compaction hook) and atomically replace the inputs.  The merged run's
     recomputed stats land in the same window, so a second round finds the
     window at one run and stops — the loop converges per window."""
-    from cassandra_util_spark.core.table import KeyedTable
-    from cassandra_util_spark.operators.merge import merge_snapshots
-
     plan = time_window_plan(
         store.run_stats(), store.live_runs(), time_col, window_us, min_threshold
     )
-    new_runs: list[str] = []
-    for bucket in plan:
-        dfs = [spark.read.parquet(os.path.join(store.root, r)) for r in bucket]
-        merged = merge_snapshots(dfs, store.meta, allow_schema_evolution=True)
-        if keep_expr is not None:
-            merged = keep_expr(merged)
-        run = store._next_run()
-        path = os.path.join(store.root, run)
-        KeyedTable(merged, store.meta).clustered().write.parquet(path)
-        store._write_stats(spark, path)
-        with store.locked():
-            live = [r for r in store.live_runs() if r not in set(bucket)]
-            store._swap_manifest([*live, run])
-        new_runs.append(run)
-    return new_runs
+    return [store._compact_bucket(spark, bucket, keep_expr) for bucket in plan]
 
 
 def drop_expired_windows(store: RunStore, time_col: str, cutoff: int) -> list[str]:

@@ -33,9 +33,9 @@ normalization) carry a NULL signature in the index: they still block
 exact re-crawls by digest, and a null band bucket can never join, so
 they are transparent to the near-dup probe on both sides.
 
-Exactly-once: the corpus store's ``_INGEST_HWM`` carries the txn
-identity + batch high-water mark (the ``stream_to_runstore`` protocol);
-both appends are idempotent named runs, so a replay after a crash
+Exactly-once: the replay guard of :mod:`.ingest`, with the corpus
+store's ``_INGEST_HWM`` as the mark; both appends are idempotent named
+runs and the mark advances after both, so a replay after a crash
 between the two appends re-derives byte-stable runs and no-ops into the
 manifest.  Document ids are assumed unique across the stream — same-id
 re-crawl UPDATE semantics belong to :func:`stream_lsh_index`'s LWW
@@ -51,6 +51,7 @@ disciplines into the corpus-building workload the engine targets.
 from __future__ import annotations
 
 import os
+from functools import partial
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -70,8 +71,8 @@ from cassandra_util_spark.operators.text import (
 from cassandra_util_spark.sources.runs import RunStore, maintain
 from cassandra_util_spark.streaming.ingest import (
     _advance_batch_hwm,
-    _read_hwm,
-    resolve_txn_app_id,
+    _drain,
+    _hwm_applied,
     run_name_for_batch,
 )
 
@@ -123,19 +124,8 @@ def stream_corpus_ingest(
             f"writetime={index_store.meta.writetime_col}"
         )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         spark = batch_df.sparkSession
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
-        stored_app, hwm = _read_hwm(corpus_store)
-        if stored_app is not None and stored_app != app_id:
-            raise RuntimeError(
-                f"corpus store {corpus_store.root} was written by stream "
-                f"{stored_app!r}; this stream is {app_id!r} — refusing to "
-                "compare batch ids across streams. Pass txn_app_id="
-                f"{stored_app!r} to continue that sequence deliberately."
-            )
-        if batch_id <= hwm:
-            return
         kept = keep_expr(batch_df) if keep_expr is not None else batch_df.filter(
             whitespace_token_count(F.col(text_col)) >= min_tokens
         )
@@ -209,6 +199,8 @@ def stream_corpus_ingest(
             .withColumn("writetime", F.lit(batch_id).cast("long"))
         )
         index_store.append_run(idx_rows, name=run_name_for_batch(batch_id))
+        # the mark advances only after BOTH appends: a crash between them
+        # replays the batch, and the published corpus run no-ops
         _advance_batch_hwm(corpus_store, batch_id, app_id)
         if maintain_every is not None and (batch_id + 1) % maintain_every == 0:
             for store in (corpus_store, index_store):
@@ -219,14 +211,10 @@ def stream_corpus_ingest(
                     vacuum_min_age_s=0.0,
                 )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, partial(_hwm_applied, corpus_store), apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_encode(

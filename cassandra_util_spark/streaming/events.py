@@ -23,6 +23,7 @@ reported at an interval.  Mapping:
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,8 @@ from pyspark.sql.types import StructType
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
 from cassandra_util_spark.functions import normalize_event_time, writetime_micros
 from cassandra_util_spark.operators.convictors import Convictor
+from cassandra_util_spark.streaming.ingest import _drain
+from cassandra_util_spark.streaming.sketches import _last_applied
 
 
 def progress_listener(registry, name: str = "stream"):
@@ -139,8 +142,9 @@ def streaming_retention(
 
     ``Trigger.AvailableNow`` drains everything currently present then stops —
     the scheduled-compaction analog; leave the query running for continuous
-    maintenance.  Exactly-once: checkpointed source offsets + idempotent
-    parquet append per batch id.
+    maintenance.  At-least-once: the checkpoint records source offsets, but
+    the sinks are plain ``mode("append")`` writes with no applied-batch
+    mark, so a batch replayed after a crash appends its rows again.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -181,24 +185,13 @@ def continuous_rollup(
 
     Merge math: counts and DECIMAL sums are associative, so
     merge(old, partial) = groupBy(keys).sum — one tiny shuffle over
-    (windows x groups), independent of event volume.  Exactly-once: the last
-    applied batch id rides in the SAME atomic pointer write as the snapshot
-    commit (``SnapshotStore.commit(tag=...)``), so a crash between "snapshot
-    merged" and "batch id recorded" is impossible by construction — replayed
-    batches (checkpoint recovery) are skipped instead of double-counted.
+    (windows x groups), independent of event volume.  Exactly-once: the
+    replay guard of :mod:`.ingest` with the snapshot-tag mark, so replayed
+    batches are skipped instead of double-counted.
     """
     from pyspark.sql import functions as F2
 
-    def last_applied() -> int:
-        tag = store.current_tag()
-        try:
-            return int(tag) if tag is not None else -1
-        except ValueError:
-            return -1
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_applied():
-            return
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         partial = (
             batch_df.groupBy(F2.window(F2.col(ts_col), window).alias("w"), *group_cols)
             .agg(
@@ -225,13 +218,10 @@ def continuous_rollup(
             )
         else:
             merged = partial
-        store.commit(merged, tag=str(batch_id))
+        store.commit(merged, tag=f"{app_id}:{batch_id}")
 
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events, checkpoint_dir, None, functools.partial(_last_applied, store), apply
     )
 
 
@@ -362,8 +352,8 @@ def streaming_apply_changelog(
     of gc_grace: here "no older data can still arrive" has no watermark, so
     markers live for the state's lifetime.
 
-    Exactly-once: the applied batch id rides in the snapshot pointer write
-    (the continuous_rollup protocol) — replayed batches skip, not re-apply.
+    Exactly-once: the replay guard of :mod:`.ingest` with the snapshot-tag
+    mark — replayed batches skip, not re-apply.
 
     Scale: per micro-batch one key shuffle over state ∪ batch.  State is
     table-sized; for 100 TB state the same merge runs against a partitioned
@@ -373,13 +363,6 @@ def streaming_apply_changelog(
     from pyspark.sql import Window
     from pyspark.sql import functions as F2
 
-    def last_applied() -> int:
-        tag = store.current_tag()
-        try:
-            return int(tag) if tag is not None else -1
-        except ValueError:
-            return -1
-
     order = [
         F2.col(writetime_col).desc(),
         (F2.col(op_col) == "D").desc(),
@@ -387,9 +370,7 @@ def streaming_apply_changelog(
     ]
     w = Window.partitionBy(*primary_key).orderBy(*order)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_applied():
-            return
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         current = store.current_path()
         if current is not None:
             state = batch_df.sparkSession.read.parquet(current)
@@ -401,13 +382,10 @@ def streaming_apply_changelog(
             .filter(F2.col("__rn") == 1)
             .drop("__rn")
         )
-        store.commit(merged, tag=str(batch_id))
+        store.commit(merged, tag=f"{app_id}:{batch_id}")
 
-    return (
-        changes.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        changes, checkpoint_dir, None, functools.partial(_last_applied, store), apply
     )
 
 

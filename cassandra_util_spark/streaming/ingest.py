@@ -20,9 +20,9 @@ replay guard, though: once an interleaved ``maintain`` cycle COMPACTS
 would re-append it — resurrecting rows the in-merge ``keep_expr`` already
 convicted.  Applied batch ids are therefore tracked independently of the
 manifest by a high-water-mark file (``_INGEST_HWM``, atomic-rename updated
-immediately after the run publishes, the same tag discipline as
-``streaming_apply_changelog``); batches at or below it are skipped, so the
-store converges to exactly-once run content across compaction boundaries.
+immediately after the run publishes); batches at or below it are skipped,
+so the store converges to exactly-once run content across compaction
+boundaries.
 
 Batch ids are only meaningful WITHIN one logical stream: a restart from a
 FRESH checkpoint resets ids to 0, and a bare ``batch_id <= hwm`` guard
@@ -33,6 +33,16 @@ Spark persists in the checkpoint's ``metadata`` file, which is stable
 across restarts of the same checkpoint and regenerates exactly when the
 checkpoint is wiped.  An identity mismatch FAILS LOUDLY instead of
 skipping.
+
+Every store-backed drain in this package runs that protocol through one
+helper, :func:`_drain`; only the mark differs by store.  Run-store drains
+keep the ``_INGEST_HWM`` file above (read by :func:`_hwm_applied`).
+Snapshot-store drains (the sketch tables, ``continuous_rollup``,
+``streaming_apply_changelog``) ride the mark in the snapshot pointer
+write itself, ``SnapshotStore.commit(tag="app_id:batch_id")`` (read by
+``sketches._last_applied``), so "state merged" and "batch recorded" are
+one atomic rename.  Both readers share one identity check.  Each drain
+writes its own mark, after the last write the batch owes the store.
 """
 
 from __future__ import annotations
@@ -40,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from functools import partial
 from typing import Callable, Optional, Tuple
 
 from pyspark.sql import DataFrame
@@ -112,6 +123,79 @@ def _advance_batch_hwm(store: RunStore, batch_id: int, app_id: str) -> None:
     with os.fdopen(fd, "w") as f:
         f.write(f"{app_id}\n{batch_id}")
     os.replace(tmp, _hwm_path(store))  # atomic on POSIX
+
+
+def _refuse_foreign_stream(root: str, stored_app: Optional[str], app_id: str) -> None:
+    """Raise when a store's applied-batch mark was written by another stream.
+
+    A DIFFERENT stream's ids are incomparable with ours: batch 0 of a fresh
+    checkpoint would read as "already applied" and the replay guard would
+    silently drop every batch (ADVICE r5).  A mark without an identity
+    (legacy) is adopted instead."""
+    if stored_app is not None and stored_app != app_id:
+        raise RuntimeError(
+            f"store {root} was written by stream {stored_app!r}; this "
+            f"stream is {app_id!r} — refusing to compare batch ids across "
+            "streams. Restart from that stream's checkpoint to continue "
+            "it; drains that take txn_app_id can instead continue its "
+            f"sequence deliberately with txn_app_id={stored_app!r}."
+        )
+
+
+def _hwm_applied(store: RunStore, app_id: str) -> int:
+    """Last batch id the stream ``app_id`` applied to ``store`` (-1 if none);
+    raises when another stream wrote the HWM."""
+    stored_app, hwm = _read_hwm(store)
+    _refuse_foreign_stream(store.root, stored_app, app_id)
+    return hwm
+
+
+def _drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    query_name: Optional[str],
+    applied: Callable[[str], int],
+    apply: Callable[[DataFrame, int, str], None],
+    txn_app_id: Optional[str] = None,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start ``stream`` as an exactly-once drain into a store.
+
+    Per micro-batch: resolve the transaction identity (``txn_app_id``, else
+    the checkpoint's query id via :func:`resolve_txn_app_id`), ask
+    ``applied(app_id)`` for the last batch id this stream applied (it
+    raises when another stream wrote the store's mark), skip the batch if
+    its id is at or below that, else call ``apply(batch_df, batch_id,
+    app_id)``.  ``apply`` writes the batch and then advances the store's
+    mark itself, after its last write: a crash before the mark replays the
+    batch into idempotent named writes, a crash after it skips the replay
+    even when compaction has since folded the batch's run away.  The guard
+    is driver-side file reads; it runs no Spark job.
+
+    ``query_name=None`` leaves the query unnamed (the identity fallback
+    for unreadable checkpoints is then the checkpoint path), and
+    ``available_now=True`` drains what exists then stops.
+    """
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        app_id = txn_app_id or resolve_txn_app_id(
+            checkpoint_dir, query_name or checkpoint_dir
+        )
+        if batch_id <= applied(app_id):
+            # replay of an already-applied batch whose run compaction may
+            # have folded away — re-applying would resurrect convicted rows
+            # or double-count additive state
+            return
+        apply(batch_df, batch_id, app_id)
+
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_to_runstore(
@@ -191,23 +275,7 @@ def stream_to_runstore(
         ]
         return max(highs) - retention_us if highs else None
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
-        stored_app, hwm = _read_hwm(store)
-        if stored_app is not None and stored_app != app_id:
-            # a DIFFERENT stream's ids are incomparable with ours — batch 0
-            # of a fresh checkpoint would read as "already applied" and the
-            # guard below would silently drop every batch (ADVICE r5)
-            raise RuntimeError(
-                f"run store {store.root} was written by stream "
-                f"{stored_app!r}; this stream is {app_id!r} — refusing to "
-                "compare batch ids across streams. Pass txn_app_id="
-                f"{stored_app!r} to continue that sequence deliberately."
-            )
-        if batch_id <= hwm:
-            # replay of an already-applied batch whose run compaction may
-            # have folded away — re-appending would resurrect convicted rows
-            return
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
         store.append_run(batch_df, name=run_name_for_batch(batch_id))
@@ -230,14 +298,10 @@ def stream_to_runstore(
                 expire_before=_event_time_cutoff(),
             )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, partial(_hwm_applied, store), apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_counter_deltas(
@@ -280,18 +344,7 @@ def stream_counter_deltas(
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
     store = counters.store
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
-        stored_app, hwm = _read_hwm(store)
-        if stored_app is not None and stored_app != app_id:
-            raise RuntimeError(
-                f"counter store {store.root} was written by stream "
-                f"{stored_app!r}; this stream is {app_id!r} — refusing to "
-                "compare batch ids across streams. Pass txn_app_id="
-                f"{stored_app!r} to continue that sequence deliberately."
-            )
-        if batch_id <= hwm:
-            return  # replay after compaction: appending would double-count
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
         counters.append_increments(batch_df, name=run_name_for_batch(batch_id))
@@ -299,11 +352,7 @@ def stream_counter_deltas(
         if compact_every is not None and (batch_id + 1) % compact_every == 0:
             counters.compact(batch_df.sparkSession)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, partial(_hwm_applied, store), apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -11,22 +11,12 @@ persisted table for point estimates (``count_min_query``), heavy-hitter
 gates, join-size estimates (``cm_join_size_estimate``/``plan_join``), or
 cardinality (``hll_estimate``) without touching events at all.
 
-Exactly-once: the applied micro-batch id rides in the snapshot pointer
-write (``SnapshotStore.commit(tag="app_id:batch_id")`` — the same protocol
-as ``streaming_apply_changelog`` and the run store's ``_INGEST_HWM``), so
-an at-least-once ``foreachBatch`` replay after a crash skips instead of
-double-counting.  Double-counting is the failure mode that matters here:
-CM counters are additive, so a replayed merge would silently inflate every
-estimate — there is no LWW to absorb it.
-
-The tag carries a transaction identity (Delta's ``txnAppId`` +
-``txnVersion`` pattern; by default the checkpoint's persisted query id) so
-batch ids are only ever compared within one logical stream.  A fresh
-checkpoint (ids reset to 0) against an existing store FAILS LOUDLY —
-without the identity it would silently freeze the sketch (every batch
-reads as already-applied).  A foreign or unparsable tag likewise raises
-instead of degrading to "never applied", which would re-merge and
-double-count CM counters on replay (ADVICE r5).
+Exactly-once: the replay guard of :mod:`.ingest`, with the applied
+``app_id:batch_id`` riding in the snapshot pointer write
+(``SnapshotStore.commit(tag=...)``, the mark ``continuous_rollup`` and
+``streaming_apply_changelog`` keep too).  Double-counting is the failure
+it prevents here: CM counters are additive, so a replayed merge would
+silently inflate every estimate — there is no LWW to absorb it.
 
 Store growth: each micro-batch commits a new version; after a successful
 commit the store is vacuumed down to ``retain_versions`` so a long-running
@@ -41,6 +31,7 @@ per micro-batch flush.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,7 +41,7 @@ from typing import Optional
 
 from cassandra_util_spark.operators.sketches import count_min_build, hll_build
 from cassandra_util_spark.sources.snapshots import SnapshotStore
-from cassandra_util_spark.streaming.ingest import resolve_txn_app_id
+from cassandra_util_spark.streaming.ingest import _drain, _refuse_foreign_stream
 
 
 def _pin_sampler_identity(store: SnapshotStore, identity: dict) -> None:
@@ -152,25 +143,20 @@ def _last_applied(store: SnapshotStore, app_id: str) -> int:
 
     Raises on an identity mismatch or an unparsable tag: both mean the
     store's version history is NOT this stream's — skipping would freeze
-    the sketch, re-merging would double-count, and only failing is safe.
+    the state, re-merging would double-count, and only failing is safe.
     """
     tag = store.current_tag()
     if tag is None:
         return -1
-    stored_app, sep, version = tag.rpartition(":")
-    if sep and stored_app != app_id:
-        raise RuntimeError(
-            f"sketch store {store.root} is maintained by stream "
-            f"{stored_app!r}; this stream is {app_id!r} — refusing to "
-            "compare batch ids across streams. Pass txn_app_id="
-            f"{stored_app!r} to continue that sequence deliberately."
-        )
+    stored_app, _, version = tag.rpartition(":")
+    # a legacy bare-integer tag has no identity and is adopted
+    _refuse_foreign_stream(store.root, stored_app or None, app_id)
     try:
         return int(version)
     except ValueError:
         raise RuntimeError(
-            f"sketch store {store.root} has a foreign snapshot tag "
-            f"{tag!r} — not this module's 'app_id:batch_id' protocol; "
+            f"snapshot store {store.root} has a foreign snapshot tag "
+            f"{tag!r} — not the drains' 'app_id:batch_id' protocol; "
             "treating it as 'never applied' would double-count on replay."
         ) from None
 
@@ -200,10 +186,7 @@ def stream_count_min_to_store(
     addition is exactly how CM composes.
     """
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
-        if batch_id <= _last_applied(store, app_id):
-            return  # replay: merging again would double-count every key
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         delta = count_min_build(batch_df, key_col, depth, width, seed, hash_fn)
         current = store.current_path()
         if current is not None:
@@ -216,14 +199,10 @@ def stream_count_min_to_store(
         store.commit(delta, tag=f"{app_id}:{batch_id}")
         store.vacuum(keep_last=retain_versions)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, partial(_last_applied, store), apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hll_to_store(
@@ -245,10 +224,7 @@ def stream_hll_to_store(
     (and to spare the no-op snapshot commit).
     """
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
-        if batch_id <= _last_applied(store, app_id):
-            return
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         delta = hll_build(batch_df, key_col, p, seed)
         current = store.current_path()
         if current is not None:
@@ -261,14 +237,10 @@ def stream_hll_to_store(
         store.commit(delta, tag=f"{app_id}:{batch_id}")
         store.vacuum(keep_last=retain_versions)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, partial(_last_applied, store), apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_bottomk_to_store(
@@ -355,11 +327,11 @@ def stream_bottomk_to_store(
         "k": k,
     }
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        app_id = txn_app_id or resolve_txn_app_id(checkpoint_dir, query_name)
+    def applied(app_id: str) -> int:
         _pin_sampler_identity(store, sampler_identity)
-        if batch_id <= _last_applied(store, app_id):
-            return
+        return _last_applied(store, app_id)
+
+    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if weight_col is not None:
             sampler = (
                 weighted_bottomk_sample_logcost
@@ -380,11 +352,7 @@ def stream_bottomk_to_store(
         store.commit(delta, tag=f"{app_id}:{batch_id}")
         store.vacuum(keep_last=retain_versions)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return _drain(
+        stream, checkpoint_dir, query_name, applied, apply,
+        txn_app_id, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -364,3 +364,71 @@ def test_corpus_ingest_crash_replay_after_index_append(spark, tmp_path):
     assert sorted(tuple(r) for r in corpus.read_merged(spark).collect()) == before_corpus
     assert sorted(tuple(r) for r in index.read_merged(spark).collect()) == before_index
     assert applied_batch_hwm(corpus) == 1
+
+
+def test_corpus_ingest_fault_between_appends_restarts_clean(
+    spark, tmp_path, monkeypatch
+):
+    """Replay fault injection at the drain's step boundary between its two
+    stores: batch 1 dies after the corpus append and before the index
+    append, so the HWM has not moved.  A restart from the same checkpoint
+    replays batch 1 (the published corpus run no-ops, the index run is
+    written) and must end equal to an uninterrupted run: both stores'
+    merged views and the HWM."""
+    from pyspark.errors import StreamingQueryException
+
+    from cassandra_util_spark.streaming.ingest import (
+        applied_batch_hwm,
+        applied_txn_app_id,
+        resolve_txn_app_id,
+        run_name_for_batch,
+    )
+
+    near_a = LONG_A.replace("today", "tonight")
+    batches = [
+        [(1, LONG_A)],
+        [(2, LONG_B), (3, near_a)],
+        [(4, LONG_A), (5, LONG_B + " and one more sentence")],
+    ]
+    clean_corpus, clean_index = _ingest(
+        spark, tmp_path / "clean", batches, min_tokens=5
+    )
+
+    corpus, index = _corpus_stores(tmp_path / "crash")
+    real_append = index.append_run
+    injected = []
+
+    def append_failing_once(df, name=None, **kw):
+        if name == run_name_for_batch(1) and not injected:
+            injected.append(name)
+            raise RuntimeError("injected fault before the index append")
+        return real_append(df, name=name, **kw)
+
+    monkeypatch.setattr(index, "append_run", append_failing_once)
+    cp = str(tmp_path / "crash" / "cp")
+
+    def start():
+        stream = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(str(tmp_path / "clean" / "src"))
+        )
+        return stream_corpus_ingest(stream, corpus, index, cp, min_tokens=5)
+
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        start().awaitTermination(120)
+        raise AssertionError("the injected fault did not stop the drain")
+    assert run_name_for_batch(1) in corpus.live_runs()
+    assert run_name_for_batch(1) not in index.live_runs()
+    assert applied_batch_hwm(corpus) == 0
+
+    start().awaitTermination(120)
+
+    def view(store):
+        return sorted(tuple(r) for r in store.read_merged(spark).collect())
+
+    assert view(corpus) == view(clean_corpus)
+    assert view(index) == view(clean_index)
+    assert applied_batch_hwm(corpus) == applied_batch_hwm(clean_corpus) == 2
+    assert applied_txn_app_id(corpus) == resolve_txn_app_id(cp, "")

@@ -10,6 +10,7 @@ view equals the batch answer.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.table import TableMeta
@@ -288,6 +289,107 @@ def test_fresh_checkpoint_against_written_store_fails_loudly(spark, tmp_path):
         q5.awaitTermination(120)
         raise AssertionError("fresh-checkpoint sketch restart silently succeeded")
     assert cm.current_tag() == tag_before  # no double-count commit happened
+
+
+def _counter_deltas_case(spark, tmp_path):
+    from cassandra_util_spark.operators.counters import CounterStore
+    from cassandra_util_spark.streaming.ingest import stream_counter_deltas
+
+    rows = _events(spark, 400).groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("hits")
+    )
+    cs = CounterStore(str(tmp_path / "counters"), ["user_id"], ["hits"])
+    return rows, lambda s, cp: stream_counter_deltas(s, cs, cp), [cs.store]
+
+
+def _corpus_ingest_case(spark, tmp_path):
+    from cassandra_util_spark.streaming.corpus import stream_corpus_ingest
+
+    rows = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog by the river"),
+         (2, "an entirely different document about compaction in storage")],
+        "doc_id bigint, text string",
+    )
+    corpus = RunStore(
+        str(tmp_path / "corpus"), TableMeta(("doc_id",), (), "writetime")
+    )
+    index = RunStore(str(tmp_path / "index"), TableMeta(("id",), (), "writetime"))
+    return (
+        rows,
+        lambda s, cp: stream_corpus_ingest(s, corpus, index, cp, min_tokens=5),
+        [corpus, index],
+    )
+
+
+def _continuous_rollup_case(spark, tmp_path):
+    from cassandra_util_spark.functions import normalize_event_time
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+    from cassandra_util_spark.streaming.events import continuous_rollup
+
+    rows = normalize_event_time(
+        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ).limit(400)
+    store = SnapshotStore(str(tmp_path / "rollup"))
+    return rows, lambda s, cp: continuous_rollup(s, store, cp), [store]
+
+
+def _changelog_case(spark, tmp_path):
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+    from cassandra_util_spark.streaming.events import streaming_apply_changelog
+
+    schema = "k string, v string, writetime bigint, op string"
+    rows = spark.createDataFrame([("a", "v1", 20, "U"), ("b", None, 30, "D")], schema)
+    base = spark.createDataFrame(
+        [("a", "v0", 10), ("b", "v0", 10)], "k string, v string, writetime bigint"
+    )
+    store = SnapshotStore(str(tmp_path / "cdc"))
+    return (
+        rows,
+        lambda s, cp: streaming_apply_changelog(
+            s, base, store, cp, primary_key=("k",)
+        ),
+        [store],
+    )
+
+
+def _store_state(store):
+    """Everything a drain writes: runs + HWM, or versions + pointer tag."""
+    from cassandra_util_spark.streaming.ingest import _read_hwm
+
+    if isinstance(store, RunStore):
+        return store.live_runs(), _read_hwm(store)
+    return store.versions(), store.current_tag()
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_counter_deltas_case, _corpus_ingest_case, _continuous_rollup_case, _changelog_case],
+    ids=["counter_deltas", "corpus_ingest", "continuous_rollup", "changelog"],
+)
+def test_fresh_checkpoint_fails_loudly_on_every_drain(spark, tmp_path, case):
+    """The refusal above, on the other drains: a second stream (fresh
+    checkpoint) against a store the first one wrote raises and writes
+    nothing.  ``continuous_rollup`` and ``streaming_apply_changelog`` used
+    to keep a bare batch id in their snapshot tag, so the second stream's
+    batch 0 read as applied and its rows were silently dropped."""
+    from pyspark.errors import StreamingQueryException
+
+    rows, start, stores = case(spark, tmp_path)
+    src = str(tmp_path / "src")
+    rows.coalesce(1).write.parquet(src)
+
+    def run(cp):
+        stream = spark.readStream.schema(rows.schema).parquet(src)
+        return start(stream, str(tmp_path / cp))
+
+    run("cp1").awaitTermination(120)
+    before = [_store_state(s) for s in stores]
+    assert before[0][1] not in (None, (None, -1))  # the first stream's mark
+    q = run("cp2")
+    with pytest.raises(StreamingQueryException, match="refusing to compare"):
+        q.awaitTermination(120)
+        raise AssertionError("fresh-checkpoint restart silently succeeded")
+    assert [_store_state(s) for s in stores] == before
 
 
 def test_foreign_or_legacy_sketch_tags(spark, tmp_path):
