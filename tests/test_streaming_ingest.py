@@ -322,13 +322,17 @@ def _corpus_ingest_case(spark, tmp_path):
 
 
 def _continuous_rollup_case(spark, tmp_path):
-    from cassandra_util_spark.functions import normalize_event_time
+    from datetime import datetime
+
     from cassandra_util_spark.sources.snapshots import SnapshotStore
     from cassandra_util_spark.streaming.events import continuous_rollup
 
-    rows = normalize_event_time(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ).limit(400)
+    rows = spark.createDataFrame(
+        [(datetime(2024, 1, 1, 0, 5), "click", 1.0),
+         (datetime(2024, 1, 1, 1, 5), "view", 2.5),
+         (datetime(2024, 1, 1, 1, 20), "click", 0.5)],
+        "ts timestamp, event_type string, value double",
+    )
     store = SnapshotStore(str(tmp_path / "rollup"))
     return rows, lambda s, cp: continuous_rollup(s, store, cp), [store]
 
