@@ -82,9 +82,7 @@ class CounterStore:
     # -- read path ----------------------------------------------------------
 
     def _sum_runs(self, spark: SparkSession, runs: Sequence[str]) -> DataFrame:
-        dfs = [
-            spark.read.parquet(os.path.join(self.store.root, r)) for r in runs
-        ]
+        dfs = self.store._scan(spark, runs)
         merged = dfs[0]
         for d in dfs[1:]:
             merged = merged.unionByName(d)

@@ -209,9 +209,9 @@ def restore_from_backup(
             f"store at {store.root} has no recorded TableMeta; restore needs "
             "the key layout to merge backup rows deterministically"
         )
-    current = store.current_path()
-    if current is None:
+    version = store.current_version()
+    if version is None:
         raise ValueError(f"store at {store.root} has no committed snapshot")
-    live = spark.read.parquet(current)
+    live = store.read(spark, version)
     backed_up = spark.read.parquet(backup_path)
     return merge_snapshots([live, backed_up], meta)

@@ -12,15 +12,21 @@ overlapping runs, readable without merging eagerly, with a maintenance
 buckets that reach ``min_threshold``) — and optionally the retention
 filter, which is exactly where the reference hooks its convictors.
 
-Scale notes: planning is O(#runs) driver-side file metadata — never data.
-A merge reads only the bucket's runs (multi-file scan) and shuffles once on
-the primary key (the LWW window).  Readers always see a consistent run set:
-the live-run manifest swaps atomically via the same rename protocol as
-``_CURRENT``.
+Scale notes: planning is O(#runs) driver-side file metadata — never data,
+and planning a read never runs a Spark job.  Each run's Spark schema is
+recorded in its ``_STATS.json`` when the run is written (the table schema
+lives in table metadata, as in Cassandra's ``cfs.metadata`` and Delta
+Lake's log), so every scan is handed its schema instead of inferring it
+from a parquet footer, which costs one job per scanned directory.  Runs
+sharing a schema are read as one multi-file scan.  A merge reads only the
+bucket's runs and shuffles once on the primary key (the LWW window).
+Readers always see a consistent run set: the live-run manifest swaps
+atomically via the same rename protocol as ``_CURRENT``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 import time
@@ -28,8 +34,69 @@ from contextlib import contextmanager
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
+
+# the footer key Spark's parquet writer stores the row schema under — the
+# one Spark's own schema inference reads back
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_parts(path: str) -> list[str]:
+    """The parquet part files of a written directory, sorted.  Like Spark's
+    listing, ``_``/``.``-prefixed names (stats, sidecars) never count."""
+    return sorted(
+        os.path.join(path, p)
+        for p in os.listdir(path)
+        if p.endswith(".parquet") and not p.startswith((".", "_"))
+    )
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable`` on a schema's JSON form.  A file
+    source reports every field, array element and map value nullable
+    whatever the footer says, so a recorded schema is kept in that form and
+    equals the schema an inferring read reports."""
+    kind = t.get("type") if isinstance(t, dict) else None
+    if kind == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]}
+    if kind == "array":
+        return {**t, "containsNull": True, "elementType": _as_nullable(t["elementType"])}
+    if kind == "map":
+        return {**t, "valueContainsNull": True, "keyType": _as_nullable(t["keyType"]),
+                "valueType": _as_nullable(t["valueType"])}
+    return t
+
+
+def _spark_schema(arrow_schema) -> Optional[dict]:
+    """The Spark schema (``StructType`` JSON) a parquet footer records, or
+    None for a file Spark did not write."""
+    raw = (arrow_schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else _as_nullable(json.loads(raw))
+
+
+def _footer_schema(path: str) -> Optional[dict]:
+    """The Spark schema of the parquet written to directory ``path``, from
+    its first part's footer (what Spark's inference would read), or None
+    when there is no readable part."""
+    parts = _parquet_parts(path)
+    try:
+        import pyarrow.parquet as pq
+
+        return _spark_schema(pq.read_schema(parts[0])) if parts else None
+    except (ImportError, OSError, ValueError):
+        return None
+
+
+def _read(spark: SparkSession, paths: list[str], schema: Optional[dict]) -> DataFrame:
+    """One parquet scan over ``paths``: given ``schema`` it plans without a
+    Spark job; without it Spark infers the schema from a footer (one job)."""
+    reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
+    return reader.parquet(*paths)
 
 
 def size_tiered_plan(
@@ -265,12 +332,16 @@ class RunStore:
         kept so stores written by newer code stay readable by older
         readers.  ``zorder_by`` records layout provenance (which columns
         the run's files are Morton-ordered on) so an operator can see WHY
-        a run prunes well on those columns."""
+        a run prunes well on those columns.  ``schema`` is the run's Spark
+        schema (``StructType`` JSON, every field nullable, exactly what
+        ``spark.read.parquet(run).schema`` reports): :meth:`_scan` hands it
+        to the reader so no read of the run infers it again.  Stores
+        written before it existed have no ``schema`` key and read as they
+        always did."""
         stats = self._footer_stats(run_path)
         if stats is None:  # unreadable footers — pay the read-back job
             stats = self._spark_stats(spark, run_path)
-        rows, cols = stats
-        import json
+        rows, cols, schema = stats
 
         c0 = self._range_col
         b0 = cols.get(c0, {"min": None, "max": None})
@@ -283,28 +354,28 @@ class RunStore:
                     "rows": rows,
                     "columns": cols,
                     **({"zorder": list(zorder_by)} if zorder_by else {}),
+                    **({"schema": schema} if schema is not None else {}),
                 },
                 f,
                 default=str,
             )
 
     def _footer_stats(self, run_path: str):
-        """(rows, {col: {min, max}}) from the parquet footers, or None when
-        the directory holds no readable parquet parts.  Values are
-        normalized to what the Spark-agg path produced (timestamps to
+        """(rows, {col: {min, max}}, schema) from the parquet footers, or
+        None when the directory holds no readable parquet parts.  Values
+        are normalized to what the Spark-agg path produced (timestamps to
         naive UTC datetimes, int64 as int) so _STATS.json is byte-
-        compatible either way — pinned by tests/test_runstore.py."""
+        compatible either way — pinned by tests/test_runstore.py.
+        ``schema`` is the Spark schema the first part's footer records
+        (the one Spark's inference reads; None for a file Spark did not
+        write)."""
         import datetime
 
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover — pyarrow ships with pyspark
             return None
-        parts = sorted(
-            os.path.join(run_path, p)
-            for p in os.listdir(run_path)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        )
+        parts = _parquet_parts(run_path)
         if not parts:
             return None
         try:
@@ -374,11 +445,12 @@ class RunStore:
             c: {"min": v[0], "max": v[1]}
             for c, v in bounds.items()
             if c not in bad
-        }
+        }, _spark_schema(schema)
 
     def _spark_stats(self, spark: SparkSession, run_path: str):
         """The original read-back job: one column-pruned scan aggregating
-        min/max over every atomic column.  Fallback only."""
+        min/max over every atomic column, plus the inferred schema.
+        Fallback only."""
         from pyspark.sql import functions as F
 
         df = spark.read.parquet(run_path)
@@ -394,14 +466,12 @@ class RunStore:
         row = df.agg(*aggs).collect()[0]
         return row["__rows"], {
             c: {"min": row[f"__mn_{c}"], "max": row[f"__mx_{c}"]} for c in atomic
-        }
+        }, json.loads(df.schema.json())
 
     def run_stats(self) -> dict[str, dict]:
         """Run → {column, min, max, rows} for every live run that has a
         stats file (runs written before stats existed simply have none —
         they are never pruned and never assumed non-overlapping)."""
-        import json
-
         out: dict[str, dict] = {}
         for r in self.live_runs():
             p = os.path.join(self.root, r, "_STATS.json")
@@ -411,6 +481,33 @@ class RunStore:
             except FileNotFoundError:
                 continue
         return out
+
+    def _scan(self, spark: SparkSession, runs: list[str]) -> list[DataFrame]:
+        """The scans that read ``runs``, planned without a Spark job: one
+        per group of runs whose ``_STATS.json`` records the same schema,
+        given that schema.  A run with no recorded schema (written before
+        schemas were recorded) gets its own inferring scan, as every read
+        did before.  Groups keep the order of their first run, so unioning
+        the scans by name yields the columns a union of per-run reads did.
+        A group is cut into scans of at most
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths:
+        listing more paths than that is itself a Spark job."""
+        groups: dict = {}
+        for r in runs:
+            path = os.path.join(self.root, r)
+            try:
+                with open(os.path.join(path, "_STATS.json")) as f:
+                    schema = json.load(f).get("schema")
+            except FileNotFoundError:
+                schema = None
+            key = r if schema is None else json.dumps(schema, sort_keys=True)
+            groups.setdefault(key, (schema, []))[1].append(path)
+        step = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        return [
+            _read(spark, paths[i:i + step], schema)
+            for schema, paths in groups.values()
+            for i in range(0, len(paths), step)
+        ]
 
     def prune_runs(self, lower, upper, column: Optional[str] = None) -> list[str]:
         """Live runs whose range on ``column`` (default: the first
@@ -481,13 +578,12 @@ class RunStore:
         for col, (lo, hi) in (extra_bounds or {}).items():
             runs = [r for r in runs if r in set(self.prune_runs(lo, hi, column=col))]
         if not runs:
-            if self.live_runs():
+            live = self.live_runs()
+            if live:
                 # everything pruned: an empty view with the store's schema
-                any_run = self.live_runs()[0]
-                empty = spark.read.parquet(os.path.join(self.root, any_run)).limit(0)
-                return empty
+                return self._scan(spark, live[:1])[0].limit(0)
             raise ValueError(f"run store at {self.root} has no runs")
-        dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in runs]
+        dfs = self._scan(spark, runs)
         if bounded or extra_bounds:
             cond = F.lit(True)
             all_bounds = dict(extra_bounds or {})
@@ -536,8 +632,9 @@ class RunStore:
         new run's name.  The body of every size- and time-bucketed round."""
         from cassandra_util_spark.operators.merge import merge_snapshots
 
-        dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in bucket]
-        merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
+        merged = merge_snapshots(
+            self._scan(spark, bucket), self.meta, allow_schema_evolution=True
+        )
         if keep_expr is not None:
             merged = keep_expr(merged)
         run = self._next_run()
@@ -582,7 +679,8 @@ class RunStore:
 
         The split writes one staging job (`repartitionByRange` on the
         primary key, so chunk boundaries come from range sampling), then
-        registers each chunk directory as a run — data moves once.
+        registers each chunk directory as a run — data moves once, and each
+        chunk's stats come from its footers, with no read-back job.
         Returns the new run names (empty when no level triggers).
         """
         import shutil
@@ -607,8 +705,9 @@ class RunStore:
             return []
         inputs, target_level = job
         sizes = self.run_sizes()
-        dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in inputs]
-        merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
+        merged = merge_snapshots(
+            self._scan(spark, inputs), self.meta, allow_schema_evolution=True
+        )
         if keep_expr is not None:
             merged = keep_expr(merged)
         in_bytes = sum(sizes[r] for r in inputs)
@@ -628,50 +727,13 @@ class RunStore:
             (d for d in os.listdir(stage) if d.startswith("__chunk=")),
             key=lambda d: int(d.split("=")[1]),
         )
-        # ONE stats job for every chunk (groupBy the partition column of the
-        # staged layout) instead of one read-back job per chunk — at hundreds
-        # of chunks per merge the per-job latency dominated the merge itself.
-        # Aggregates min/max for EVERY atomic column so leveled chunks carry
-        # the same skip index appends do (round 6).
-        c = self._range_col
-        staged = spark.read.option("basePath", stage).parquet(
-            *(os.path.join(stage, d) for d in chunks)
-        )
-        atomic = [
-            f.name
-            for f in staged.schema.fields
-            if f.name != "__chunk"
-            and f.dataType.typeName() not in ("array", "map", "struct", "binary")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for col in atomic:
-            aggs += [F.min(col).alias(f"__mn_{col}"), F.max(col).alias(f"__mx_{col}")]
-        stat_rows = {
-            int(r["__chunk"]): r
-            for r in staged.groupBy("__chunk").agg(*aggs).collect()
-        }
-        import json as _json
-
         for d in chunks:
             run = self._next_run()
             path = os.path.join(self.root, run)
             os.replace(os.path.join(stage, d), path)
-            row = stat_rows[int(d.split("=")[1])]
-            with open(os.path.join(path, "_STATS.json"), "w") as f:
-                _json.dump(
-                    {
-                        "column": c,
-                        "min": row[f"__mn_{c}"],
-                        "max": row[f"__mx_{c}"],
-                        "rows": row["__rows"],
-                        "columns": {
-                            col: {"min": row[f"__mn_{col}"], "max": row[f"__mx_{col}"]}
-                            for col in atomic
-                        },
-                    },
-                    f,
-                    default=str,
-                )
+            # each chunk's skip index and schema come from its own footers,
+            # like an append's — no read-back job over the staged layout
+            self._write_stats(spark, path)
             new_runs.append(run)
             levels[run] = target_level
             # publish incrementally-named runs only after ALL chunks land

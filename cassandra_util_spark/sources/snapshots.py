@@ -10,10 +10,19 @@ write never touches the pointer — the abort path is "do nothing".
 
 Old versions remain until vacuumed, giving snapshot-read isolation to
 concurrent readers (they hold the old pointer's path).
+
+Each version directory also carries a ``_SCHEMA.json`` sidecar: the Spark
+schema its parquet footer records, written by ``commit`` after the data and
+before the pointer swap.  ``read`` hands it to the reader, so reading a
+snapshot plans without a Spark job instead of inferring the schema from a
+footer (one job per read).  Spark's listing skips ``_``-prefixed files, so
+the sidecar is invisible to plain parquet readers; a version without one
+(written before sidecars existed) reads by inference, as it always did.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 from typing import Optional
@@ -21,6 +30,9 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
+from cassandra_util_spark.sources.runs import _footer_schema, _read
+
+_SCHEMA = "_SCHEMA.json"
 
 
 class SnapshotStore:
@@ -76,7 +88,9 @@ class SnapshotStore:
         ``tag`` rides in the SAME pointer write (second line of ``_CURRENT``),
         so bookkeeping like "which streaming batch produced this version" is
         atomic with the version swap — there is no window where the snapshot
-        is committed but its provenance is not.
+        is committed but its provenance is not.  The version's schema
+        sidecar is written before the swap too, so every published version
+        reads without a schema-inference job.
         """
         version = self._next_version()
         path = os.path.join(self.root, version)
@@ -84,6 +98,10 @@ class SnapshotStore:
             df = KeyedTable(df, meta).clustered()
             self._write_meta(meta)
         df.write.mode("errorifexists").parquet(path)
+        schema = _footer_schema(path)
+        if schema is not None:
+            with open(os.path.join(path, _SCHEMA), "w") as f:
+                json.dump(schema, f)
         if tag is not None and "\n" in tag:
             raise ValueError("tag must be a single line")
         # POSIX rename is atomic: readers see either the old or the new pointer
@@ -96,8 +114,6 @@ class SnapshotStore:
     # -- table metadata (the catalog entry for this store) ------------------
 
     def _write_meta(self, meta: TableMeta) -> None:
-        import json
-
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._META.")
         with os.fdopen(fd, "w") as f:
             json.dump(
@@ -111,8 +127,6 @@ class SnapshotStore:
         os.replace(tmp, os.path.join(self.root, "_META"))
 
     def read_meta(self) -> Optional[TableMeta]:
-        import json
-
         try:
             with open(os.path.join(self.root, "_META")) as f:
                 d = json.load(f)
@@ -134,18 +148,25 @@ class SnapshotStore:
         historical ``version`` (as listed by :meth:`versions`).  Old
         versions are immutable once the pointer moves past them, so a
         version read is a consistent point-in-time view for as long as
-        vacuum retention keeps it."""
+        vacuum retention keeps it.  The version's ``_SCHEMA.json`` sidecar,
+        when present, is the read's schema, so planning runs no Spark job."""
         if version is not None:
             if version not in self.versions():
                 raise FileNotFoundError(
                     f"snapshot store {self.root} has no version {version!r} "
                     f"(available: {self.versions()})"
                 )
-            return spark.read.parquet(os.path.join(self.root, version))
-        path = self.current_path()
-        if path is None:
-            raise FileNotFoundError(f"snapshot store {self.root} has no committed version")
-        return spark.read.parquet(path)
+            path = os.path.join(self.root, version)
+        else:
+            path = self.current_path()
+            if path is None:
+                raise FileNotFoundError(f"snapshot store {self.root} has no committed version")
+        try:
+            with open(os.path.join(path, _SCHEMA)) as f:
+                schema = json.load(f)
+        except FileNotFoundError:
+            schema = None
+        return _read(spark, [path], schema)
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` versions (never the current)."""

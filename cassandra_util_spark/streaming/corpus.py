@@ -50,8 +50,7 @@ disciplines into the corpus-building workload the engine targets.
 
 from __future__ import annotations
 
-import os
-from functools import partial
+from functools import partial, reduce
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -143,9 +142,7 @@ def stream_corpus_ingest(
             # the digest anti-join reads one column, the sig probe two —
             # where the old persist() materialized every column once to
             # amortize the merge that no longer exists
-            idx = spark.read.parquet(
-                *(os.path.join(index_store.root, r) for r in idx_runs)
-            )
+            idx = reduce(DataFrame.unionByName, index_store._scan(spark, idx_runs))
             kept = (
                 kept.withColumn("__digest", _digest_for(kept, [text_col]))
                 .join(
@@ -426,9 +423,7 @@ def _boundary_row(store: RunStore, spark, key_lower, batch_id: int):
         runs = [r for r in runs if r in wt_keep]
         if runs:
             rows = (
-                spark.read.parquet(
-                    *(os.path.join(store.root, r) for r in runs)
-                )
+                reduce(DataFrame.unionByName, store._scan(spark, runs))
                 .filter(
                     (F.col("bin") >= key_lower)
                     & (F.col("writetime") <= batch_id - 1)

@@ -205,9 +205,9 @@ def continuous_rollup(
                 "value_sum",
             )
         )
-        current = store.current_path()
-        if current is not None:
-            old = batch_df.sparkSession.read.parquet(current)
+        version = store.current_version()
+        if version is not None:
+            old = store.read(batch_df.sparkSession, version)
             merged = (
                 old.unionByName(partial)
                 .groupBy("window_start", *group_cols)
@@ -371,9 +371,9 @@ def streaming_apply_changelog(
     w = Window.partitionBy(*primary_key).orderBy(*order)
 
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
-        current = store.current_path()
-        if current is not None:
-            state = batch_df.sparkSession.read.parquet(current)
+        version = store.current_version()
+        if version is not None:
+            state = store.read(batch_df.sparkSession, version)
         else:
             state = base.withColumn(op_col, F2.lit("U"))
         merged = (
@@ -394,7 +394,7 @@ def read_changelog_state(spark, store, op_col: str = "op") -> DataFrame:
     markers filtered out, marker column dropped."""
     from pyspark.sql import functions as F2
 
-    path = store.current_path()
-    if path is None:
+    version = store.current_version()
+    if version is None:
         raise ValueError("changelog state has no committed version yet")
-    return spark.read.parquet(path).filter(F2.col(op_col) != "D").drop(op_col)
+    return store.read(spark, version).filter(F2.col(op_col) != "D").drop(op_col)

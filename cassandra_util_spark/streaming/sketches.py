@@ -188,9 +188,9 @@ def stream_count_min_to_store(
 
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         delta = count_min_build(batch_df, key_col, depth, width, seed, hash_fn)
-        current = store.current_path()
-        if current is not None:
-            state = batch_df.sparkSession.read.parquet(current)
+        version = store.current_version()
+        if version is not None:
+            state = store.read(batch_df.sparkSession, version)
             delta = (
                 state.unionByName(delta)
                 .groupBy("row", "idx")
@@ -226,9 +226,9 @@ def stream_hll_to_store(
 
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         delta = hll_build(batch_df, key_col, p, seed)
-        current = store.current_path()
-        if current is not None:
-            state = batch_df.sparkSession.read.parquet(current)
+        version = store.current_version()
+        if version is not None:
+            state = store.read(batch_df.sparkSession, version)
             delta = (
                 state.unionByName(delta)
                 .groupBy("bucket")
@@ -343,9 +343,9 @@ def stream_bottomk_to_store(
         else:
             delta = bottomk_sample(batch_df, key_col, k, payload, seed, hash_fn)
             pri = "h"
-        current = store.current_path()
-        if current is not None:
-            state = batch_df.sparkSession.read.parquet(current)
+        version = store.current_version()
+        if version is not None:
+            state = store.read(batch_df.sparkSession, version)
             delta = bottomk_merge(
                 state, delta, k=k, key_col=key_col, priority_col=pri
             )

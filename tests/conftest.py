@@ -46,6 +46,24 @@ def spark():
 
 
 @pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` -> ``(fn(), number of Spark jobs fn ran)``,
+    read from the status tracker under a job group named ``group``."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
 def tenanted(spark):
     """Factory for the reference's `tenanted` fixture table:
     pk = (id, tenant), no clustering keys (testing.cql:119-128)."""

@@ -403,29 +403,16 @@ def test_distributed_fallback_equals_driver_path(spark, monkeypatch):
     assert _table(fb_words) == _table(words)
 
 
-def _run_in_job_group(spark, group: str, fn):
-    """``fn()`` and the number of Spark jobs it ran, read from the status
-    tracker under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_exact_path_job_count_is_constant_in_num_merges(spark):
+def test_exact_path_job_count_is_constant_in_num_merges(spark, count_jobs):
     df = spark.createDataFrame(
         CORPUS + [(4, "the quick brown fox jumps over the lazy dog")],
         "doc_id bigint, text string",
     )
-    (_, _), jobs_2 = _run_in_job_group(
-        spark, "bpe-train-2", lambda: bpe_train(df, "text", num_merges=2)
+    (_, _), jobs_2 = count_jobs(
+        "bpe-train-2", lambda: bpe_train(df, "text", num_merges=2)
     )
-    (merges, _), jobs_30 = _run_in_job_group(
-        spark, "bpe-train-30", lambda: bpe_train(df, "text", num_merges=30)
+    (merges, _), jobs_30 = count_jobs(
+        "bpe-train-30", lambda: bpe_train(df, "text", num_merges=30)
     )
     assert len(merges) == 30  # the corpus does not run dry before 30 merges
     assert jobs_2 == jobs_30 <= 3

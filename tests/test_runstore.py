@@ -464,3 +464,174 @@ def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
     # a bound far above the data prunes the clean run via its dbl stats
     # but must KEEP the NaN run (no stats = non-prunable)
     assert store.prune_runs(1e12, 2e12, column="dbl") == [run2]
+
+
+# -- schema-carrying reads: planning a store read runs no Spark job ---------
+
+
+def _small_store(spark, root, n_runs=4):
+    """``n_runs`` overlapping runs over keys 0..10*n_runs+9: run i holds keys
+    [10*i, 10*i + 20) at writetime i, so every key but the lowest ten has
+    a stale version in an older run."""
+    store = RunStore(root, TableMeta(("k",), (), "wt"))
+    for i in range(n_runs):
+        store.append_run(spark.range(10 * i, 10 * i + 20).selectExpr(
+            "id as k", f"{i} as wt", f"concat('v', cast(id as string), '_{i}') as v"
+        ))
+    return store
+
+
+def _strip_schema(store, runs):
+    """Rewrite ``runs``' stats as a store written before schemas were
+    recorded: the same ``_STATS.json`` with no ``schema`` key."""
+    import json
+    import os
+
+    for r in runs:
+        p = os.path.join(store.root, r, "_STATS.json")
+        with open(p) as f:
+            st = json.load(f)
+        del st["schema"]
+        with open(p, "w") as f:
+            json.dump(st, f)
+
+
+def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs):
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    store = _small_store(spark, str(tmp_path / "runs"))
+    for name, build in [
+        ("unbounded", lambda: store.read_merged(spark)),
+        ("bounded", lambda: store.read_merged(spark, key_lower=0, key_upper=15)),
+        ("pruned", lambda: store.read_merged(spark, key_lower=1000, key_upper=2000)),
+    ]:
+        _, jobs = count_jobs(f"build-{name}", build)
+        assert jobs == 0, f"building the {name} read ran {jobs} job(s)"
+    # keys 0..15 live in the first two runs only: the lookup scans both in
+    # one schema-given scan and executes in at most two jobs
+    assert store.prune_runs(0, 15) == store.live_runs()[:2]
+    rows, jobs = count_jobs("lookup", lambda: store.read_merged(
+        spark, key_lower=0, key_upper=15).collect())
+    assert jobs <= 2, f"a bounded 2-run lookup ran {jobs} jobs"
+    assert sorted((r.k, r.wt) for r in rows) == [
+        (k, 0 if k < 10 else 1) for k in range(16)
+    ]
+
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    v = snap.commit(spark.range(5).selectExpr("id as k", "array(id) as ids"))
+    for name, read in [("current", lambda: snap.read(spark)),
+                       ("version", lambda: snap.read(spark, v))]:
+        df, jobs = count_jobs(f"snapshot-{name}", read)
+        assert jobs == 0, f"SnapshotStore.read ({name}) ran {jobs} job(s)"
+    assert sorted(r.k for r in df.collect()) == list(range(5))
+
+
+def test_compaction_reads_no_schema(spark, tmp_path, count_jobs):
+    """A compact over 4 runs with recorded schemas runs exactly 4 fewer
+    jobs than the same compact over a store without them — the 4 per-run
+    schema-inference jobs — and writes the same merged rows."""
+    recorded = _small_store(spark, str(tmp_path / "recorded"))
+    legacy = _small_store(spark, str(tmp_path / "legacy"))
+    _strip_schema(legacy, legacy.live_runs())
+    _, jobs = count_jobs("compact-recorded",
+                         lambda: recorded.compact(spark, min_threshold=4))
+    _, legacy_jobs = count_jobs("compact-legacy",
+                                lambda: legacy.compact(spark, min_threshold=4))
+    assert legacy_jobs - jobs == 4, (jobs, legacy_jobs)
+    assert len(recorded.live_runs()) == len(legacy.live_runs()) == 1
+    assert sorted(recorded.read_merged(spark).collect()) == sorted(
+        legacy.read_merged(spark).collect()
+    )
+    # the merged run records its schema too
+    assert "schema" in recorded.run_stats()[recorded.live_runs()[0]]
+
+
+def test_listing_threshold_caps_paths_per_scan(spark, tmp_path, count_jobs):
+    """More paths than the parallel-listing threshold in one scan would
+    list them in a Spark job; the scan is cut so planning stays job-free."""
+    store = _small_store(spark, str(tmp_path / "runs"))
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        df, jobs = count_jobs("build-cut", lambda: store.read_merged(spark))
+        assert jobs == 0
+        assert len(store._scan(spark, store.live_runs())) == 2
+    finally:
+        spark.conf.set(key, old)
+    assert df.count() == 50
+
+
+@pytest.mark.parametrize("stripped", ["all", "mixed"])
+def test_runs_without_recorded_schema_read_as_before(spark, tmp_path, stripped):
+    """Stores written before schemas were recorded (no ``schema`` key), and
+    stores mixing such runs with new ones, read the same rows and schema."""
+    recorded = _small_store(spark, str(tmp_path / "recorded"))
+    old = _small_store(spark, str(tmp_path / "old"))
+    runs = old.live_runs()
+    _strip_schema(old, runs if stripped == "all" else runs[1::2])
+    for kw in ({}, {"key_lower": 5, "key_upper": 25}):
+        want, got = recorded.read_merged(spark, **kw), old.read_merged(spark, **kw)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+    # one inferring scan per stripped run, the recorded ones grouped
+    assert len(old._scan(spark, runs)) == (4 if stripped == "all" else 3)
+
+
+def test_schema_evolution_groups_scans_by_schema(spark, tmp_path):
+    """Runs with different recorded column sets are separate scans, and
+    under ``allow_schema_evolution`` their union fills the added column
+    with nulls, in the column order a union of per-run reads had."""
+    store = RunStore(str(tmp_path / "evo"), TableMeta(("k",), (), "wt"))
+    old_df = "k bigint, wt bigint"
+    new_df = "k bigint, wt bigint, note string"
+    store.append_run(spark.createDataFrame([(1, 1), (2, 1)], old_df))
+    store.append_run(spark.createDataFrame([(2, 2, "b"), (3, 2, "c")], new_df))
+    store.append_run(spark.createDataFrame([(4, 3)], old_df))
+    store.append_run(spark.createDataFrame([(5, 4, "e")], new_df))
+    assert len(store._scan(spark, store.live_runs())) == 2
+    view = store.read_merged(spark, allow_schema_evolution=True)
+    assert view.columns == ["k", "wt", "note"]
+    assert sorted(tuple(r) for r in view.collect()) == [
+        (1, 1, None), (2, 2, "b"), (3, 2, "c"), (4, 3, None), (5, 4, "e"),
+    ]
+
+
+def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
+    """The schema a run records is exactly what an inferring read of the
+    run reports, for every column type the engine writes: array<int>
+    token ids, array<struct> doc spans, array<bigint> signatures,
+    timestamp, string and bigint — and a SnapshotStore version's sidecar
+    matches its version the same way."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    df = spark.range(3).selectExpr(
+        "id as doc_id",
+        "array(cast(id as int), 7) as token_ids",
+        "array(named_struct('doc_id', id, 'start', 0, 'end', cast(id as int))) as spans",
+        "array(id, id * 3) as sig",
+        "timestamp_micros(id * 1000000) as ts",
+        "concat('d', cast(id as string)) as text",
+        "id * 10 as writetime",
+    )
+    store = RunStore(str(tmp_path / "runs"), TableMeta(("doc_id",), (), "writetime"))
+    run = store.append_run(df)
+    recorded = StructType.fromJson(store.run_stats()[run]["schema"])
+    inferred = spark.read.parquet(os.path.join(store.root, run)).schema
+    assert recorded == inferred
+    assert [f.name for f in recorded.fields] == df.columns
+    assert sorted(store.read_merged(spark).collect()) == sorted(df.collect())
+
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    v = snap.commit(df)
+    with open(os.path.join(snap.root, v, "_SCHEMA.json")) as f:
+        sidecar = StructType.fromJson(json.load(f))
+    assert sidecar == spark.read.parquet(os.path.join(snap.root, v)).schema
+    # a version with no sidecar (written before sidecars existed) still reads
+    os.remove(os.path.join(snap.root, v, "_SCHEMA.json"))
+    assert sorted(snap.read(spark, v).collect()) == sorted(df.collect())
