@@ -19,8 +19,31 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+def _fits_one_partition(df: DataFrame) -> bool:
+    """True when ``df``'s optimized-plan size estimate is at most
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the input AQE
+    would coalesce into one post-shuffle partition anyway.  The estimate is
+    the metadata-only one ``autoBroadcastJoinThreshold`` trusts (file
+    sizes, local-relation rows), so deciding runs no Spark job.  An
+    unknown estimate reads as ``Long.MaxValue`` and an inflated one (a
+    join's estimate is the product of its inputs') exceeds the bound, so
+    both keep the shuffle; so does a frame with no JVM plan to read."""
+    try:
+        spark = df.sparkSession
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+        # read through SQLConf so the conf's fallback default resolves
+        bound = spark._jsparkSession.sessionState().conf().getConf(
+            sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+        )
+        return int(str(size)) <= int(bound)
+    except (AttributeError, Py4JError):  # no JVM plan to read: keep the shuffle
+        return False
 
 
 @dataclass(frozen=True)
@@ -113,8 +136,17 @@ class KeyedTable:
         """Physical layout the reference guarantees on disk: partitioned by
         partition key, rows sorted by clustering key within a partition
         (``BackupSinkForDeletingCompaction.java:55-57`` relies on it).  Use
-        before writing so downstream merge/scan gets sorted runs."""
-        out = self.df.repartition(*[F.col(c) for c in self.meta.partition_keys])
+        before writing so downstream merge/scan gets sorted runs.
+
+        A frame that fits one partition (:func:`_fits_one_partition`) lands
+        as ONE sorted file with no shuffle — a memtable flush, not a
+        redistribution; AQE would coalesce its shuffle output to one
+        partition anyway.  Larger frames hash-repartition on the partition
+        key as before."""
+        if _fits_one_partition(self.df):
+            out = self.df.coalesce(1)
+        else:
+            out = self.df.repartition(*[F.col(c) for c in self.meta.partition_keys])
         order = [F.col(c) for c in self.meta.primary_key]
         if self.meta.writetime_col:
             order.append(F.col(self.meta.writetime_col))

@@ -10413,10 +10413,11 @@ def manifest_incremental_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the windows once: three batch filters must not re-run the
     # train+encode chain (the bounded-materialization discipline).
-    # LAZY (r18): the first append's write is a single sequential
-    # full-scan consumer — it materializes the pin inside its own job;
-    # the later batch filters read the pinned blocks, so the eager
-    # pin's separate pass over the window chain is gone
+    # LAZY: the first consumer is the ``bin % 3 == 0`` filtered counter
+    # append.  It writes only a third of the windows, but its job still
+    # computes every partition of the pinned RDD, so the pin materializes
+    # inside that job; the later batch filters read the pinned blocks,
+    # and no separate eager pass over the window chain runs
     win = materialize_packed_windows(
         enc, "doc_id", "token_ids", capacity=1024, distributed=True
     ).localCheckpoint(eager=False)

@@ -28,8 +28,9 @@ using the machinery an LSM already has:
 
 Scale shape: writes are O(batch) appends with no read of existing state
 (ingest latency flat as the store grows); reads shuffle once on the
-counter key; compaction bounds read fan-in the same way STCS bounds
-SSTable counts.
+counter key, or sum in one partition with no shuffle when the deltas fit
+one (the run store's size rule); compaction bounds read fan-in the same
+way STCS bounds SSTable counts.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_util_spark.core.table import TableMeta
+from cassandra_util_spark.core.table import KeyedTable, TableMeta, _fits_one_partition
 from cassandra_util_spark.sources.runs import RunStore
 
 # exact partial type: decimal addition is order-independent, and 28,6 holds
@@ -82,10 +83,14 @@ class CounterStore:
     # -- read path ----------------------------------------------------------
 
     def _sum_runs(self, spark: SparkSession, runs: Sequence[str]) -> DataFrame:
+        """Per-key sums over ``runs``; deltas that fit one partition are
+        coalesced to it first, so the aggregate plans no exchange."""
         dfs = self.store._scan(spark, runs)
         merged = dfs[0]
         for d in dfs[1:]:
             merged = merged.unionByName(d)
+        if _fits_one_partition(merged):
+            merged = merged.coalesce(1)
         return merged.groupBy(*self.keys).agg(
             *[F.sum(c).alias(c) for c in self.counters]
         )
@@ -116,8 +121,6 @@ class CounterStore:
         folded = self._sum_runs(spark, inputs)
         run = f"c{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.store.root, run)
-        from cassandra_util_spark.core.table import KeyedTable
-
         KeyedTable(folded, self.store.meta).clustered().write.parquet(path)
         self.store._write_stats(spark, path)
         with self.store.locked():

@@ -39,6 +39,27 @@ def lww_merge(
     )
 
 
+def _union_runs(
+    runs: Sequence[DataFrame], meta: TableMeta, allow_schema_evolution: bool
+) -> DataFrame:
+    """The union by name that :func:`merge_snapshots` merges: strict, or
+    filling columns a run lacks with nulls under ``allow_schema_evolution``
+    (a run missing a KEY column fails loudly either way)."""
+    if not allow_schema_evolution:
+        return reduce(DataFrame.unionByName, runs)
+    required = set(meta.primary_key) | (
+        {meta.writetime_col} if meta.writetime_col else set()
+    )
+    for i, r in enumerate(runs):
+        missing = required - set(r.columns)
+        if missing:
+            raise ValueError(
+                f"run {i} is missing key column(s) {sorted(missing)}; "
+                "schema evolution only covers non-key columns"
+            )
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), runs)
+
+
 def merge_snapshots(
     runs: Sequence[DataFrame],
     meta: TableMeta,
@@ -47,7 +68,10 @@ def merge_snapshots(
 ) -> DataFrame:
     """Union overlapping sorted runs and collapse to the LWW view — the
     compaction merge.  Spark's multi-file scan already parallelizes the
-    union; the only cost is the key shuffle of the dedup window.
+    union; the only cost is the dedup window's distribution on the key:
+    one shuffle, or none when the input already sits in one partition (the
+    run store coalesces inputs that fit one partition before merging, see
+    ``RunStore._merge``).
 
     ``allow_schema_evolution``: accept runs whose column sets differ — the
     ALTER TABLE ADD life-cycle, where runs written before the new column
@@ -56,22 +80,7 @@ def merge_snapshots(
     PRIMARY KEY column is corrupt, not evolved, and fails loudly.
     Default strict: an unexpected column-set mismatch usually means wrong
     inputs, not evolution."""
-    if allow_schema_evolution:
-        required = set(meta.primary_key) | (
-            {meta.writetime_col} if meta.writetime_col else set()
-        )
-        for i, r in enumerate(runs):
-            missing = required - set(r.columns)
-            if missing:
-                raise ValueError(
-                    f"run {i} is missing key column(s) {sorted(missing)}; "
-                    "schema evolution only covers non-key columns"
-                )
-        unioned = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), runs
-        )
-    else:
-        unioned = reduce(DataFrame.unionByName, runs)
+    unioned = _union_runs(runs, meta, allow_schema_evolution)
     if meta.writetime_col is None:
         return unioned.dropDuplicates(list(meta.primary_key))
     return lww_merge(unioned, meta.primary_key, meta.writetime_col, tiebreak)

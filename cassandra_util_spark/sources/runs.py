@@ -19,7 +19,12 @@ lives in table metadata, as in Cassandra's ``cfs.metadata`` and Delta
 Lake's log), so every scan is handed its schema instead of inferring it
 from a parquet footer, which costs one job per scanned directory.  Runs
 sharing a schema are read as one multi-file scan.  A merge reads only the
-bucket's runs and shuffles once on the primary key (the LWW window).
+bucket's runs.  When their union's size estimate fits one partition
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size AQE would
+coalesce a shuffle's output to) it merges in ONE partition with no
+exchange, as Cassandra merges a partition's few SSTable fragments in
+place, and an append or compaction output that fits lands as one sorted
+file; larger inputs shuffle once on the primary key (the LWW window).
 Readers always see a consistent run set: the live-run manifest swaps
 atomically via the same rename protocol as ``_CURRENT``.
 """
@@ -36,7 +41,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from cassandra_util_spark.core.table import KeyedTable, TableMeta
+from cassandra_util_spark.core.table import KeyedTable, TableMeta, _fits_one_partition
 
 # the footer key Spark's parquet writer stores the row schema under — the
 # one Spark's own schema inference reads back
@@ -263,8 +268,9 @@ class RunStore:
         the z-columns' space, so a ``read_merged(extra_bounds=...)``
         predicate on ANY z-column — and especially a 2-D conjunction —
         prunes row groups INSIDE the runs the skip index could not
-        eliminate.  The LWW merge is layout-agnostic (it shuffles on the
-        key), so z-ordered and key-clustered runs coexist in one store.
+        eliminate.  The LWW merge is layout-agnostic (it never relies on
+        file order), so z-ordered and key-clustered runs coexist in one
+        store.
         Reference anchor: the reference prunes sstables by their one
         clustering dimension (DeletingCompactionStrategy.java:102-126
         delegates the key-range scan choice to the layout-aware strategy);
@@ -509,6 +515,19 @@ class RunStore:
             for i in range(0, len(paths), step)
         ]
 
+    def _merge(self, dfs: list[DataFrame], allow_schema_evolution: bool) -> DataFrame:
+        """The LWW view of the scans ``dfs``.  A union that fits one
+        partition is coalesced to it first: one partition satisfies the
+        window's key distribution, so the merge plans no exchange and runs
+        in the one job that consumes it.  A larger union shuffles on the
+        key as before."""
+        from cassandra_util_spark.operators.merge import _union_runs, merge_snapshots
+
+        unioned = _union_runs(dfs, self.meta, allow_schema_evolution)
+        if _fits_one_partition(unioned):
+            unioned = unioned.coalesce(1)
+        return merge_snapshots([unioned], self.meta)
+
     def prune_runs(self, lower, upper, column: Optional[str] = None) -> list[str]:
         """Live runs whose range on ``column`` (default: the first
         partition-key column) MAY intersect [lower, upper].  On the
@@ -571,8 +590,6 @@ class RunStore:
         established contract."""
         from pyspark.sql import functions as F
 
-        from cassandra_util_spark.operators.merge import merge_snapshots
-
         bounded = key_lower is not None or key_upper is not None
         runs = self.prune_runs(key_lower, key_upper) if bounded else self.live_runs()
         for col, (lo, hi) in (extra_bounds or {}).items():
@@ -595,9 +612,7 @@ class RunStore:
                 if hi is not None:
                     cond = cond & (F.col(c) <= F.lit(hi))
             dfs = [d.filter(cond) for d in dfs]
-        return merge_snapshots(
-            dfs, self.meta, allow_schema_evolution=allow_schema_evolution
-        )
+        return self._merge(dfs, allow_schema_evolution)
 
     def compact(
         self,
@@ -629,12 +644,10 @@ class RunStore:
     ) -> str:
         """Merge ``bucket``'s runs into one new clustered run (LWW winners,
         ``keep_expr`` applied in-merge) and swap it in for them; returns the
-        new run's name.  The body of every size- and time-bucketed round."""
-        from cassandra_util_spark.operators.merge import merge_snapshots
-
-        merged = merge_snapshots(
-            self._scan(spark, bucket), self.meta, allow_schema_evolution=True
-        )
+        new run's name.  The body of every size- and time-bucketed round.
+        A bucket that fits one partition merges and writes there, with no
+        shuffle (see :meth:`_merge` and ``KeyedTable.clustered``)."""
+        merged = self._merge(self._scan(spark, bucket), allow_schema_evolution=True)
         if keep_expr is not None:
             merged = keep_expr(merged)
         run = self._next_run()

@@ -80,10 +80,12 @@ class SnapshotStore:
     def commit(self, df: DataFrame, meta: Optional[TableMeta] = None, tag: Optional[str] = None) -> str:
         """Write ``df`` as the next version and swap the pointer atomically.
 
-        With ``meta``, data lands clustered: repartitioned by partition key
-        and sorted by (pk, ck, writetime) within partitions — the sorted-run
+        With ``meta``, data lands clustered (``KeyedTable.clustered``):
+        sorted by (pk, ck, writetime) within partitions — the sorted-run
         layout the reference guarantees, which gives parquet row-group pruning
-        on key predicates at read time.
+        on key predicates at read time.  A frame that fits one partition
+        lands as one sorted file with no shuffle; a larger one is
+        repartitioned by partition key first.
 
         ``tag`` rides in the SAME pointer write (second line of ``_CURRENT``),
         so bookkeeping like "which streaming batch produced this version" is

@@ -413,10 +413,13 @@ def _boundary_row(store: RunStore, spark, key_lower, batch_id: int):
     is the merge's winner because the protocol yields one row per
     (bin, writetime): each batch appends one run under its batch id as
     the constant writetime, replays no-op, and compaction folds to
-    per-bin LWW winners keeping original writetimes.  Degraded stats
-    (``key_lower`` None) or an unexpectedly empty direct read fall back
-    to the bounded LWW read — pruning stays an optimization, never a
-    correctness bet."""
+    per-bin LWW winners keeping original writetimes.  So the read holds
+    at most one row per scanned run, and the collect is bounded at one
+    more: more rows than runs means the store broke that contract, and
+    the read falls back to the LWW merge rather than trust a max over
+    them.  Degraded stats (``key_lower`` None) or an unexpectedly empty
+    direct read fall back the same way — pruning stays an optimization,
+    never a correctness bet."""
     if key_lower is not None:
         runs = store.prune_runs(key_lower, None)
         wt_keep = set(store.prune_runs(None, batch_id - 1, column="writetime"))
@@ -428,9 +431,13 @@ def _boundary_row(store: RunStore, spark, key_lower, batch_id: int):
                     (F.col("bin") >= key_lower)
                     & (F.col("writetime") <= batch_id - 1)
                 )
+                # one partition, so the limited collect is one job (a
+                # limit over several partitions may take them in rounds)
+                .coalesce(1)
+                .limit(len(runs) + 1)
                 .collect()
             )
-            if rows:
+            if rows and len(rows) <= len(runs):
                 return max(rows, key=lambda r: r["writetime"])
     prior = store.read_merged(
         spark,

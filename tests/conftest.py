@@ -63,6 +63,55 @@ def count_jobs(spark):
     return run
 
 
+def _shuffle_exchanges(plan) -> int:
+    """``ShuffleExchangeExec`` nodes under a physical plan node, looking
+    through AQE's wrapper and its query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _shuffle_exchanges(plan.executedPlan())
+    own = 1 if name == "ShuffleExchangeExec" else 0
+    if name.endswith("QueryStageExec"):
+        return own + _shuffle_exchanges(plan.plan())
+    kids = plan.children()
+    return own + sum(_shuffle_exchanges(kids.apply(i)) for i in range(kids.size()))
+
+
+@pytest.fixture
+def exchanges():
+    """``exchanges(df)`` -> the number of ``ShuffleExchangeExec`` nodes in
+    ``df``'s final, post-AQE executed plan.  It collects ``df`` first, so
+    AQE has settled the plan it counts."""
+
+    def count(df) -> int:
+        df.collect()
+        return _shuffle_exchanges(df._jdf.queryExecution().executedPlan())
+
+    return count
+
+
+@pytest.fixture
+def size_estimate():
+    """``size_estimate(df)`` -> ``df``'s optimized-plan ``sizeInBytes``,
+    the estimate the store's one-partition size rule reads."""
+    return lambda df: int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+@pytest.fixture
+def advisory_size(spark):
+    """``advisory_size(n)`` sets ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    the bound of the store's one-partition size rule, to ``n`` bytes; the
+    fixture restores the session's setting when the test ends."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    try:
+        yield lambda n: spark.conf.set(key, str(n))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 @pytest.fixture
 def tenanted(spark):
     """Factory for the reference's `tenanted` fixture table:

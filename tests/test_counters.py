@@ -232,3 +232,24 @@ def test_compaction_swap_preserves_concurrent_append(spark, tmp_path):
     # manifest (its data directory orphaned) — now both survive
     assert new and fired and "late" in s_maint.live_runs()
     assert s_maint.read_merged(spark).count() == 100  # 50 keys + 50 shifted
+
+
+def test_small_counter_totals_sum_in_one_partition(
+    spark, tmp_path, count_jobs, exchanges, advisory_size, size_estimate
+):
+    """Deltas that fit one partition sum there: ``totals().collect()`` is
+    one job with no exchange.  With the bound one byte below the deltas'
+    estimate the sum shuffles on the key again, to the same totals."""
+    cs = CounterStore(str(tmp_path / "counters"), ["tenant"], ["hits", "bytes"])
+    cs.append_increments(_batch(spark, [("a", 1, 10), ("b", 2, 20)]))
+    cs.append_increments(_batch(spark, [("a", 3, 30), ("c", 4, 40)]))
+    want, jobs = count_jobs("totals-small", lambda: cs.totals(spark).collect())
+    assert jobs == 1 and exchanges(cs.totals(spark)) == 0
+    assert {r["tenant"]: (r["hits"], r["bytes"]) for r in want} == {
+        "a": (4.0, 40.0), "b": (2.0, 20.0), "c": (4.0, 40.0),
+    }
+    (deltas,) = cs.store._scan(spark, cs.store.live_runs())
+    advisory_size(size_estimate(deltas) - 1)
+    got, jobs = count_jobs("totals-over", lambda: cs.totals(spark).collect())
+    assert jobs > 1 and exchanges(cs.totals(spark)) == 1
+    assert sorted(got) == sorted(want)

@@ -635,3 +635,179 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
     # a version with no sidecar (written before sidecars existed) still reads
     os.remove(os.path.join(snap.root, v, "_SCHEMA.json"))
     assert sorted(snap.read(spark, v).collect()) == sorted(df.collect())
+
+
+# -- one-partition store paths: inputs that fit one partition merge and ----
+# -- write with no exchange; anything larger keeps the key shuffle ---------
+
+
+def test_small_store_paths_run_one_job_without_exchange(
+    spark, tmp_path, count_jobs, exchanges, advisory_size, size_estimate
+):
+    """Under the size bound a bounded 2-run lookup, an append, a 4-run STCS
+    compact and a clustered snapshot commit each run in ONE job with no
+    exchange.  With the bound one byte below the frame's estimate each
+    shuffles again and yields the same rows; at exactly the estimate the
+    lookup still takes the one-partition path."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from cassandra_util_spark.core.table import KeyedTable
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    def union(store, runs):
+        return reduce(DataFrame.unionByName, store._scan(spark, runs))
+
+    # bounded 2-run lookup
+    store = _small_store(spark, str(tmp_path / "lookup"))
+    lookup = lambda: store.read_merged(spark, key_lower=0, key_upper=15)  # noqa: E731
+    want, jobs = count_jobs("lookup-small", lambda: lookup().collect())
+    assert jobs == 1 and exchanges(lookup()) == 0
+    est = size_estimate(union(store, store.prune_runs(0, 15)))
+    advisory_size(est)
+    _, jobs = count_jobs("lookup-at-bound", lambda: lookup().collect())
+    assert jobs == 1 and exchanges(lookup()) == 0
+    advisory_size(est - 1)
+    got, jobs = count_jobs("lookup-over", lambda: lookup().collect())
+    assert jobs > 1 and exchanges(lookup()) == 1
+    assert sorted(got) == sorted(want)
+    advisory_size(64 << 20)
+
+    # append: the write lands as one sorted file
+    meta = TableMeta(("k",), (), "wt")
+    df = spark.range(40).selectExpr("(id * 7) % 40 as k", "id as wt", "id * 3 as v")
+    small = RunStore(str(tmp_path / "append-small"), meta)
+    _, jobs = count_jobs("append-small", lambda: small.append_run(df))
+    assert jobs == 1 and exchanges(KeyedTable(df, meta).clustered()) == 0
+    advisory_size(size_estimate(df) - 1)
+    big = RunStore(str(tmp_path / "append-over"), meta)
+    _, jobs = count_jobs("append-over", lambda: big.append_run(df))
+    assert jobs > 1 and exchanges(KeyedTable(df, meta).clustered()) == 1
+    assert sorted(big.read_merged(spark).collect()) == sorted(
+        small.read_merged(spark).collect()
+    )
+    advisory_size(64 << 20)
+
+    # 4-run STCS compact: merge and write in the one job
+    small = _small_store(spark, str(tmp_path / "compact-small"))
+    big = _small_store(spark, str(tmp_path / "compact-over"))
+    est = size_estimate(union(big, big.live_runs()))
+    _, jobs = count_jobs("compact-small", lambda: small.compact(spark, min_threshold=4))
+    assert jobs == 1 and len(small.live_runs()) == 1
+    advisory_size(est - 1)
+    _, jobs = count_jobs("compact-over", lambda: big.compact(spark, min_threshold=4))
+    assert jobs > 1 and len(big.live_runs()) == 1
+    assert sorted(big.read_merged(spark).collect()) == sorted(
+        small.read_merged(spark).collect()
+    )
+    advisory_size(64 << 20)
+
+    # clustered snapshot commit
+    snap_small = SnapshotStore(str(tmp_path / "snap-small"))
+    snap_big = SnapshotStore(str(tmp_path / "snap-over"))
+    _, jobs = count_jobs("commit-small", lambda: snap_small.commit(df, meta=meta))
+    assert jobs == 1
+    advisory_size(size_estimate(df) - 1)
+    _, jobs = count_jobs("commit-over", lambda: snap_big.commit(df, meta=meta))
+    assert jobs > 1
+    assert sorted(snap_big.read(spark).collect()) == sorted(
+        snap_small.read(spark).collect()
+    )
+
+
+def test_inflated_estimate_keeps_the_shuffle(spark, exchanges, size_estimate):
+    """A join multiplies its inputs' size estimates, so an explode-and-join
+    of a few thousand rows estimates far above the bound: clustering it
+    keeps the partition-key shuffle (one more exchange than the frame)."""
+    from cassandra_util_spark.core.table import KeyedTable, _fits_one_partition
+
+    exploded = spark.range(2000).selectExpr("id as k", "explode(sequence(0, 4)) as x")
+    df = exploded.join(spark.range(10000).withColumnRenamed("id", "k"), "k")
+    # far above the default 64 MB bound, for 10,000 rows
+    assert size_estimate(df) > 64 << 20 and not _fits_one_partition(df)
+    clustered = KeyedTable(df, TableMeta(("x",), ("k",))).clustered()
+    assert exchanges(clustered) == exchanges(df) + 1
+    assert clustered.count() == 10000
+
+
+try:
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    # one run: key -> value, at most one row per key
+    _run_rows = st.dictionaries(st.integers(0, 24), st.integers(0, 99), min_size=1, max_size=10)
+
+    @given(
+        runs=st.lists(st.tuples(_run_rows, st.booleans()), min_size=2, max_size=4),
+        data=st.data(),
+        key_lo=st.integers(0, 24),
+        key_span=st.integers(0, 24),
+        wt_lo=st.integers(0, 40),
+    )
+    @settings(max_examples=6, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    def test_one_partition_merge_equals_shuffled_merge(
+        spark, runs, data, key_lo, key_span, wt_lo
+    ):
+        """On small stores with distinct writetimes per key, every form of
+        ``read_merged`` (unbounded, key-bounded, with ``extra_bounds``, and
+        with ``allow_schema_evolution`` over runs with and without an added
+        column) returns the same rows on the one-partition path as with
+        the shuffle forced, and so does the view a compaction leaves."""
+        import tempfile
+
+        n_rows = sum(len(rows) for rows, _ in runs)
+        wts = iter(data.draw(st.permutations(range(n_rows))))
+        batches = [
+            ([(k, next(wts), v) for k, v in rows.items()], with_note)
+            for rows, with_note in runs
+        ]
+        evolve = len({with_note for _, with_note in batches}) > 1
+        kw = {"allow_schema_evolution": True} if evolve else {}
+        forms = [
+            kw,
+            {**kw, "key_lower": key_lo, "key_upper": key_lo + key_span},
+            {**kw, "extra_bounds": {"wt": (wt_lo, None)}},
+            {"allow_schema_evolution": True},
+        ]
+
+        def views(root):
+            store = RunStore(root, TableMeta(("k",), (), "wt"))
+            for rows, with_note in batches:
+                df = spark.createDataFrame(rows, "k bigint, wt bigint, v bigint")
+                if with_note:
+                    df = df.withColumn("note", F.concat(F.lit("n"), F.col("v").cast("string")))
+                store.append_run(df)
+            out = [
+                {r.k: r.asDict() for r in store.read_merged(spark, **f).collect()}
+                for f in forms
+            ]
+            store._compact_bucket(spark, store.live_runs(), None)
+            out.append({r.k: r.asDict() for r in store.read_merged(
+                spark, allow_schema_evolution=True).collect()})
+            return out
+
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        old = spark.conf.get(key, None)
+        with tempfile.TemporaryDirectory() as tmp:
+            one = views(f"{tmp}/one")
+            spark.conf.set(key, "1")  # nothing fits: every path shuffles
+            try:
+                shuffled = views(f"{tmp}/shuffled")
+            finally:
+                if old is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, old)
+        assert one == shuffled
+        # and the unbounded view is the last-write-wins of the batches
+        newest = {}
+        for rows, _ in batches:
+            for k, wt, v in rows:
+                if k not in newest or wt > newest[k][0]:
+                    newest[k] = (wt, v)
+        assert {k: (r["wt"], r["v"]) for k, r in one[0].items()} == newest
+        assert one[-1] == one[3]
+except ImportError:  # pragma: no cover
+    pass

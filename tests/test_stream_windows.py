@@ -701,3 +701,81 @@ def test_boundary_row_fast_path_matches_merged_read(spark, tmp_path):
         fast = _boundary_row(store, spark, key_lower, batch_id)
         slow = merged_top(batch_id)
         assert fast.asDict() == slow.asDict(), (batch_id, fast, slow)
+
+
+def test_boundary_row_collect_is_bounded_and_falls_back_on_extra_rows(
+    spark, tmp_path, count_jobs, monkeypatch
+):
+    """The direct boundary read collects at most one row more than the
+    runs it scans.  On a healthy store it is one job, even when the runs
+    it scans are several scan partitions, and it never touches the merged
+    read; a run that holds its max-bin row twice breaks the
+    one-row-per-bin-per-run contract, so the read falls back to the LWW
+    merge, which returns the right boundary row."""
+    from cassandra_util_spark.core.table import TableMeta
+    from cassandra_util_spark.sources.runs import RunStore
+    from cassandra_util_spark.streaming.corpus import (
+        _boundary_row,
+        _prior_max_bin_runs,
+    )
+
+    store = RunStore(str(tmp_path / "bstore"), TableMeta(("bin",), (), "writetime"))
+    schema = (
+        "bin bigint, n_docs bigint, n_tokens bigint, token_ids array<bigint>, "
+        "doc_spans array<struct<doc:bigint,off:bigint,len:bigint>>, "
+        "writetime long"
+    )
+    # batch 0: full bin 0 + partial bin 1; batch 1 fills bin 1 exactly, so
+    # both runs hold the max bin
+    store.append_run(
+        spark.createDataFrame(
+            [(0, 1, 4, [1, 2, 3, 4], [(10, 0, 4)], 0),
+             (1, 1, 2, [5, 6], [(11, 0, 2)], 0)],
+            schema,
+        ),
+        name="b0000000000",
+    )
+    store.append_run(
+        spark.createDataFrame(
+            [(1, 2, 4, [5, 6, 7, 8], [(11, 0, 2), (12, 2, 2)], 1)], schema
+        ),
+        name="b0000000001",
+    )
+    merged_calls = []
+    read_merged = store.read_merged
+
+    def spy(*args, **kwargs):
+        merged_calls.append(kwargs)
+        return read_merged(*args, **kwargs)
+
+    monkeypatch.setattr(store, "read_merged", spy)
+
+    def merged_top(batch_id):
+        prior = read_merged(spark, extra_bounds={"writetime": (None, batch_id - 1)})
+        return prior.orderBy(F.col("bin").desc()).limit(1).collect()[0]
+
+    key_lower = _prior_max_bin_runs(store, 2)[0]
+    assert key_lower == 1 and store.prune_runs(1, None) == store.live_runs()
+    # an open cost at the split size puts each run's file in its own scan
+    # partition, so a limit over the plain scan would take them in rounds
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try:
+        row, jobs = count_jobs("boundary-healthy",
+                               lambda: _boundary_row(store, spark, key_lower, 2))
+    finally:
+        spark.conf.set(key, old)
+    assert jobs == 1 and merged_calls == []
+    assert row.asDict() == merged_top(2).asDict()
+    assert row["writetime"] == 1 and row["n_tokens"] == 4
+
+    # a run holding its max-bin row twice: two rows from one run
+    dup = (2, 1, 2, [10, 11], [(13, 0, 2)], 2)
+    store.append_run(spark.createDataFrame([dup, dup], schema), name="b0000000002")
+    key_lower = _prior_max_bin_runs(store, 3)[0]
+    assert key_lower == 2
+    row = _boundary_row(store, spark, key_lower, 3)
+    assert len(merged_calls) == 1
+    assert row.asDict() == merged_top(3).asDict()
+    assert row["bin"] == 2 and list(row["token_ids"]) == [10, 11]
