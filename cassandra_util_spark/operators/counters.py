@@ -13,18 +13,19 @@ This module is the loss-free multi-writer re-expression on Spark files,
 using the machinery an LSM already has:
 
 - **Write = append.**  Each counter batch lands as its own DELTA RUN
-  (uuid-named, so independent writers never collide; the manifest publish
-  is serialized by ``RunStore.locked()``).  No writer ever reads a total,
-  so there is nothing to lose — exactly Cassandra's shape, with the
-  "server-side merge" moved to read/compact time.
+  (uuid-named, so independent writers never collide; each publish
+  re-reads and swaps the store's commit record under
+  ``RunStore.locked()``).  No writer ever reads a total, so there is
+  nothing to lose — exactly Cassandra's shape, with the "server-side
+  merge" moved to read/compact time.
 - **Read = merge.**  ``totals()`` unions the live delta runs and sums per
   key — ``counter_merge`` semantics, in DECIMAL(28,6) so a 1000-executor
   sum is order-independent and equals any single-node oracle.
 - **Maintenance = fold.**  ``compact()`` collapses the live deltas into
   one partial-sum run.  Addition is associative and commutative, so the
   read view is INVARIANT under compaction; deltas appended concurrently
-  with a compaction survive because the swap re-reads the manifest under
-  the lock and only removes the folded inputs.
+  with a compaction survive because its publish re-reads the record under
+  the lock and only drops the folded inputs.
 
 Scale shape: writes are O(batch) appends with no read of existing state
 (ingest latency flat as the store grows); reads shuffle once on the
@@ -113,7 +114,7 @@ class CounterStore:
 
         The fold keeps DECIMAL partials (still a delta — further appends
         keep summing into it on read).  Concurrent appends are safe: only
-        the runs this call READ are removed from the manifest, under the
+        the runs this call READ are dropped from the record, under the
         lock, so a delta published mid-compaction stays live."""
         inputs = self.store.live_runs()
         if len(inputs) < 2:
@@ -122,9 +123,5 @@ class CounterStore:
         run = f"c{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.store.root, run)
         KeyedTable(folded, self.store.meta).clustered().write.parquet(path)
-        self.store._write_stats(spark, path)
-        with self.store.locked():
-            live = self.store.live_runs()
-            survivors = [r for r in live if r not in set(inputs)]
-            self.store._swap_manifest([*survivors, run])
+        self.store._publish(add=[run], drop=inputs)
         return run

@@ -12,21 +12,25 @@ overlapping runs, readable without merging eagerly, with a maintenance
 buckets that reach ``min_threshold``) — and optionally the retention
 filter, which is exactly where the reference hooks its convictors.
 
-Scale notes: planning is O(#runs) driver-side file metadata — never data,
-and planning a read never runs a Spark job.  Each run's Spark schema is
-recorded in its ``_STATS.json`` when the run is written (the table schema
-lives in table metadata, as in Cassandra's ``cfs.metadata`` and Delta
-Lake's log), so every scan is handed its schema instead of inferring it
-from a parquet footer, which costs one job per scanned directory.  Runs
-sharing a schema are read as one multi-file scan.  A merge reads only the
-bucket's runs.  When their union's size estimate fits one partition
-(``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size AQE would
-coalesce a shuffle's output to) it merges in ONE partition with no
-exchange, as Cassandra merges a partition's few SSTable fragments in
+A store's metadata is one commit record, ``_RUNS`` (JSON): the ordered
+live runs, each with its LSM level and its stats entry (row count,
+per-column min/max skip index, parquet bytes and Spark schema, all taken
+from the written footers), plus the stream mark ``"app_id:batch_id"`` of
+the last micro-batch a drain applied.  :meth:`RunStore._publish` is its
+only writer: under the store lock it re-reads the record, applies the
+adds, drops, levels and mark, and swaps it in through a temp file and
+``os.replace`` — one atomic step, as the reference replaces SSTables and
+their metadata together and as Delta Lake's log commits a table version.
+Readers parse that one file, so planning a read opens one metadata file
+and never runs a Spark job: every scan is handed its run's recorded
+schema instead of inferring it from a footer (one job per directory).
+Runs sharing a schema are read as one multi-file scan.  A merge reads
+only the bucket's runs.  When their union's size estimate fits one
+partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
+AQE would coalesce a shuffle's output to) it merges in ONE partition with
+no exchange, as Cassandra merges a partition's few SSTable fragments in
 place, and an append or compaction output that fits lands as one sorted
 file; larger inputs shuffle once on the primary key (the LWW window).
-Readers always see a consistent run set: the live-run manifest swaps
-atomically via the same rename protocol as ``_CURRENT``.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ import os
 import tempfile
 import time
 from contextlib import contextmanager
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -138,10 +142,10 @@ def size_tiered_plan(
 
 
 class RunStore:
-    """A table as a set of overlapping parquet runs with an atomic live-run
-    manifest.  ``append_run`` is the write path (cheap, no merge);
-    ``read_merged`` is the query view (LWW across live runs); ``compact``
-    is the maintenance loop."""
+    """A table as a set of overlapping parquet runs with one atomically
+    swapped commit record (``_RUNS``).  ``append_run`` is the write path
+    (cheap, no merge); ``read_merged`` is the query view (LWW across live
+    runs); ``compact`` is the maintenance loop."""
 
     def __init__(self, root: str, meta: TableMeta) -> None:
         self.root = root
@@ -149,42 +153,45 @@ class RunStore:
         os.makedirs(root, exist_ok=True)
 
     @property
-    def _manifest(self) -> str:
+    def _record_path(self) -> str:
         return os.path.join(self.root, "_RUNS")
 
-    def live_runs(self) -> list[str]:
+    def _record(self) -> dict:
+        """The store's commit record: ``{"runs": [{"name", "level",
+        "stats"}, ...], "mark": "app_id:batch_id" | None}``, runs in
+        publish order.  A store with no record yet is empty; a ``_RUNS``
+        that is not a record raises rather than read as an empty store."""
         try:
-            with open(self._manifest) as f:
-                return [ln.split(" ")[0] for ln in f.read().split("\n") if ln]
+            with open(self._record_path) as f:
+                text = f.read()
         except FileNotFoundError:
-            return []
+            return {"runs": [], "mark": None}
+        try:
+            rec = json.loads(text)
+        except ValueError:
+            rec = None
+        if not isinstance(rec, dict) or not isinstance(rec.get("runs"), list):
+            raise ValueError(f"run store at {self.root}: _RUNS is not a commit record")
+        return rec
+
+    def live_runs(self) -> list[str]:
+        return [e["name"] for e in self._record()["runs"]]
 
     def live_levels(self) -> dict[str, int]:
-        """Run → LSM level.  Manifest v1 lines (bare names, every store
-        written before leveling existed) read as level 0 — the overlapping
-        tier, which is exactly what an un-leveled run is."""
-        out: dict[str, int] = {}
-        try:
-            with open(self._manifest) as f:
-                for ln in f.read().split("\n"):
-                    if not ln:
-                        continue
-                    parts = ln.split(" ")
-                    out[parts[0]] = int(parts[1]) if len(parts) > 1 else 0
-        except FileNotFoundError:
-            pass
-        return out
+        """Run → LSM level (0 is the overlapping append tier)."""
+        return {e["name"]: e["level"] for e in self._record()["runs"]}
 
     @contextmanager
     def locked(self, timeout_s: float = 30.0, stale_s: float = 120.0):
-        """Advisory manifest lock (O_CREAT|O_EXCL lockfile) for multi-writer
+        """Advisory record lock (O_CREAT|O_EXCL lockfile) for multi-writer
         appends.  The LWW/compaction paths keep their single-maintainer
         discipline; this exists so INDEPENDENT writers (counter deltas,
         concurrent backfills) can append runs without one writer's
         read-live → swap losing the other's just-published run.  Held only
-        around the manifest read+swap — never across a data write.  A lock
-        older than ``stale_s`` is presumed abandoned (crashed holder) and
-        broken; acquisition past ``timeout_s`` raises rather than deadlock."""
+        around :meth:`_publish`'s record re-read and swap — never across a
+        data write.  A lock older than ``stale_s`` is presumed abandoned
+        (crashed holder) and broken; acquisition past ``timeout_s`` raises
+        rather than deadlock."""
         lock = os.path.join(self.root, "_LOCK")
         deadline = time.monotonic() + timeout_s
         while True:
@@ -201,7 +208,7 @@ class RunStore:
                 except FileNotFoundError:
                     continue
                 if time.monotonic() > deadline:
-                    raise TimeoutError(f"manifest lock {lock} held past {timeout_s}s")
+                    raise TimeoutError(f"record lock {lock} held past {timeout_s}s")
                 time.sleep(0.05)
         try:
             yield
@@ -211,17 +218,40 @@ class RunStore:
             except FileNotFoundError:
                 pass
 
-    def _swap_manifest(self, runs: list[str], levels: Optional[dict[str, int]] = None) -> None:
-        """Atomically publish a new live-run set.  Levels carry over for
-        surviving runs (so an STCS pass on a leveled store cannot silently
-        flatten it); new names default to level 0 unless ``levels`` says
-        otherwise."""
-        current = self.live_levels()
-        lv = {**current, **(levels or {})}
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_RUNS.")
-        with os.fdopen(fd, "w") as f:
-            f.write("\n".join(f"{r} {lv.get(r, 0)}" for r in runs))
-        os.replace(tmp, self._manifest)  # atomic on POSIX
+    def _publish(
+        self,
+        add: Sequence[str] = (),
+        drop: Sequence[str] = (),
+        levels: Optional[dict[str, int]] = None,
+        mark: Optional[str] = None,
+        zorder_by: Optional[list[str]] = None,
+    ) -> None:
+        """Commit one change to the store's record, the only write of it:
+        append the written runs ``add`` (level 0 unless ``levels`` says
+        otherwise; a name already live is left as it is), remove the runs
+        ``drop``, and set the stream ``mark`` when given.  The added runs'
+        stats entries are computed first, outside the lock; the record is
+        then re-read under :meth:`locked` and swapped atomically, so a run
+        another writer published meanwhile is never lost — a mark-only
+        publish included."""
+        entries = [
+            {"name": r, "level": 0, "stats": self._stats(r, zorder_by)} for r in add
+        ]
+        with self.locked():
+            rec = self._record()
+            live, gone = {e["name"] for e in rec["runs"]}, set(drop)
+            runs = [e for e in rec["runs"] if e["name"] not in gone]
+            runs += [e for e in entries if e["name"] not in live]
+            for e in runs:
+                e["level"] = (levels or {}).get(e["name"], e["level"])
+            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_RUNS.")
+            with os.fdopen(fd, "w") as f:
+                json.dump(
+                    {"runs": runs, "mark": rec["mark"] if mark is None else mark},
+                    f,
+                    default=str,
+                )
+            os.replace(tmp, self._record_path)  # atomic on POSIX
 
     def _next_run(self) -> str:
         existing = [
@@ -231,15 +261,8 @@ class RunStore:
         return f"r{n:05d}"
 
     def run_sizes(self) -> dict[str, int]:
-        out = {}
-        for r in self.live_runs():
-            total = 0
-            d = os.path.join(self.root, r)
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(d, fn))
-            out[r] = total
-        return out
+        """Run → parquet bytes, as recorded when the run was published."""
+        return {e["name"]: e["stats"]["bytes"] for e in self._record()["runs"]}
 
     def append_run(
         self,
@@ -250,11 +273,11 @@ class RunStore:
         zorder_files: int = 16,
     ) -> str:
         """Write a new run (clustered by the key layout) and publish it.
-        The write is invisible until the manifest swap — a failed job
-        leaves a dead directory, never a half-visible run.  Key-range stats
-        are computed from the WRITTEN parquet (a column-pruned read-back,
-        never a recompute of the input lineage) so leveling and pruned
-        reads can reason about the run without scanning data.
+        The write is invisible until :meth:`_publish` adds it to the
+        commit record — a failed job leaves a dead directory, never a
+        half-visible run.  The run's stats entry is taken from the written
+        parquet's footers (no Spark job), so leveling and pruned reads can
+        reason about the run without scanning data.
 
         ``name`` makes the append IDEMPOTENT for retrying writers (the
         streaming ingest path names runs by micro-batch id): an already-
@@ -295,14 +318,7 @@ class RunStore:
             )
         else:
             KeyedTable(df, self.meta).clustered().write.mode(mode).parquet(path)
-        self._write_stats(df.sparkSession, path, zorder_by=zorder_by)
-        # publish under the manifest lock, re-reading the live set: a second
-        # writer may have appended between our read and our swap, and a
-        # stale-list swap would silently drop their run from the manifest
-        with self.locked():
-            live = self.live_runs()
-            if run not in live:
-                self._swap_manifest([*live, run])
+        self._publish(add=[run], zorder_by=zorder_by)
         return run
 
     # -- key-range stats (leveling + pruned reads) --------------------------
@@ -311,70 +327,47 @@ class RunStore:
     def _range_col(self) -> str:
         return self.meta.partition_keys[0]
 
-    def _write_stats(
-        self,
-        spark: SparkSession,
-        run_path: str,
-        zorder_by: Optional[list[str]] = None,
-    ) -> None:
-        """Aggregate min/max for EVERY atomic column (the skip-index a run
-        carries — ClickHouse minmax-index / Iceberg manifest-stats shape)
-        plus the row count, from the WRITTEN parquet's FOOTERS: a
-        driver-side metadata walk, no Spark job (the Iceberg-manifest
-        consumption pattern — the writer already computed these bounds).
-        This took a column-pruned read-back job per append before; on the
-        streaming ingest path that job was a fixed per-batch cost paid
-        twice per micro-batch (VERDICT r7 item 3).  A column whose footer
-        stats are missing/unreliable in any row group is OMITTED from the
-        columns map — consumers already treat a missing column as
-        non-prunable, so degraded stats can only lose pruning, never rows.
-        A float column whose stats contain NaN is likewise omitted:
-        Spark's parquet writer records NaN as a bound, and folding NaN
-        through ``>``/``<`` (always false) could UNDERSTATE a run's max
-        and wrongly prune it — omission is the only NaN handling that can
-        never lose rows.  The Spark agg
-        survives as the fallback when footers can't be walked.  The legacy
-        top-level {column, min, max} mirror of the first partition key is
-        kept so stores written by newer code stay readable by older
-        readers.  ``zorder_by`` records layout provenance (which columns
-        the run's files are Morton-ordered on) so an operator can see WHY
-        a run prunes well on those columns.  ``schema`` is the run's Spark
-        schema (``StructType`` JSON, every field nullable, exactly what
-        ``spark.read.parquet(run).schema`` reports): :meth:`_scan` hands it
-        to the reader so no read of the run infers it again.  Stores
-        written before it existed have no ``schema`` key and read as they
-        always did."""
-        stats = self._footer_stats(run_path)
+    def _stats(self, run: str, zorder_by: Optional[list[str]] = None) -> dict:
+        """The stats entry the record keeps for the written run ``run``:
+        ``rows``, parquet ``bytes``, the Spark ``schema`` (``StructType``
+        JSON, every field nullable, exactly what
+        ``spark.read.parquet(run).schema`` reports, so :meth:`_scan` never
+        infers it again) and ``columns``, the min/max skip index of EVERY
+        atomic column (ClickHouse minmax-index / Iceberg manifest-stats
+        shape).  All of it comes from the parquet FOOTERS, a driver-side
+        metadata walk with no Spark job; the Spark agg of
+        :meth:`_spark_stats` is the fallback when footers cannot be read.
+        A column whose footer stats are missing or unreliable in any row
+        group is OMITTED from ``columns``, and so is a float column whose
+        stats hold NaN: Spark's parquet writer records NaN as a bound, and
+        folding it through ``>``/``<`` (always false) could UNDERSTATE a
+        run's max and wrongly prune it.  Consumers treat a missing column
+        as non-prunable, so degraded stats can only lose pruning, never
+        rows.  ``zorder`` records layout provenance (the columns the run's
+        files are Morton-ordered on), so an operator can see WHY a run
+        prunes well on them."""
+        path = os.path.join(self.root, run)
+        stats = self._footer_stats(path)
         if stats is None:  # unreadable footers — pay the read-back job
-            stats = self._spark_stats(spark, run_path)
+            stats = self._spark_stats(SparkSession.active(), path)
         rows, cols, schema = stats
-
-        c0 = self._range_col
-        b0 = cols.get(c0, {"min": None, "max": None})
-        with open(os.path.join(run_path, "_STATS.json"), "w") as f:
-            json.dump(
-                {
-                    "column": c0,
-                    "min": b0["min"],
-                    "max": b0["max"],
-                    "rows": rows,
-                    "columns": cols,
-                    **({"zorder": list(zorder_by)} if zorder_by else {}),
-                    **({"schema": schema} if schema is not None else {}),
-                },
-                f,
-                default=str,
-            )
+        return {
+            "rows": rows,
+            "bytes": sum(os.path.getsize(p) for p in _parquet_parts(path)),
+            "columns": cols,
+            "schema": schema,
+            **({"zorder": list(zorder_by)} if zorder_by else {}),
+        }
 
     def _footer_stats(self, run_path: str):
         """(rows, {col: {min, max}}, schema) from the parquet footers, or
-        None when the directory holds no readable parquet parts.  Values
-        are normalized to what the Spark-agg path produced (timestamps to
-        naive UTC datetimes, int64 as int) so _STATS.json is byte-
-        compatible either way — pinned by tests/test_runstore.py.
-        ``schema`` is the Spark schema the first part's footer records
-        (the one Spark's inference reads; None for a file Spark did not
-        write)."""
+        None when the directory holds no readable parquet parts or its
+        footer records no Spark schema (a file Spark did not write).
+        Values are normalized to what the Spark-agg path produces
+        (timestamps to naive UTC datetimes, int64 as int), so a stats
+        entry is byte-compatible either way — pinned by
+        tests/test_runstore.py.  ``schema`` is the Spark schema the first
+        part's footer records, the one Spark's inference reads."""
         import datetime
 
         try:
@@ -389,6 +382,9 @@ class RunStore:
 
             schema = pq.read_schema(parts[0])
         except (OSError, ValueError):
+            return None
+        spark_schema = _spark_schema(schema)
+        if spark_schema is None:
             return None
         rows = 0
         # seed every atomic column with null bounds so an empty or all-null
@@ -451,12 +447,12 @@ class RunStore:
             c: {"min": v[0], "max": v[1]}
             for c, v in bounds.items()
             if c not in bad
-        }, _spark_schema(schema)
+        }, spark_schema
 
     def _spark_stats(self, spark: SparkSession, run_path: str):
-        """The original read-back job: one column-pruned scan aggregating
-        min/max over every atomic column, plus the inferred schema.
-        Fallback only."""
+        """One column-pruned read-back job aggregating min/max over every
+        atomic column, plus the inferred schema: the fallback of
+        :meth:`_stats` for runs whose footers cannot be read."""
         from pyspark.sql import functions as F
 
         df = spark.read.parquet(run_path)
@@ -475,39 +471,24 @@ class RunStore:
         }, json.loads(df.schema.json())
 
     def run_stats(self) -> dict[str, dict]:
-        """Run → {column, min, max, rows} for every live run that has a
-        stats file (runs written before stats existed simply have none —
-        they are never pruned and never assumed non-overlapping)."""
-        out: dict[str, dict] = {}
-        for r in self.live_runs():
-            p = os.path.join(self.root, r, "_STATS.json")
-            try:
-                with open(p) as f:
-                    out[r] = json.load(f)
-            except FileNotFoundError:
-                continue
-        return out
+        """Run → stats entry (``rows``, ``bytes``, ``columns``,
+        ``schema``; see :meth:`_stats`) for every live run."""
+        return {e["name"]: e["stats"] for e in self._record()["runs"]}
 
     def _scan(self, spark: SparkSession, runs: list[str]) -> list[DataFrame]:
         """The scans that read ``runs``, planned without a Spark job: one
-        per group of runs whose ``_STATS.json`` records the same schema,
-        given that schema.  A run with no recorded schema (written before
-        schemas were recorded) gets its own inferring scan, as every read
-        did before.  Groups keep the order of their first run, so unioning
+        per group of runs whose record entries hold the same schema, given
+        that schema.  Groups keep the order of their first run, so unioning
         the scans by name yields the columns a union of per-run reads did.
         A group is cut into scans of at most
         ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths:
         listing more paths than that is itself a Spark job."""
+        stats = self.run_stats()
         groups: dict = {}
         for r in runs:
-            path = os.path.join(self.root, r)
-            try:
-                with open(os.path.join(path, "_STATS.json")) as f:
-                    schema = json.load(f).get("schema")
-            except FileNotFoundError:
-                schema = None
-            key = r if schema is None else json.dumps(schema, sort_keys=True)
-            groups.setdefault(key, (schema, []))[1].append(path)
+            schema = stats[r]["schema"]
+            key = json.dumps(schema, sort_keys=True)
+            groups.setdefault(key, (schema, []))[1].append(os.path.join(self.root, r))
         step = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
         return [
             _read(spark, paths[i:i + step], schema)
@@ -540,13 +521,10 @@ class RunStore:
         clustered store).  Runs without stats for the column (or with
         un-comparable stats types) are kept — pruning is an optimization,
         never a correctness bet."""
-        stats = self.run_stats()
         col = column or self._range_col
         keep: list[str] = []
-        for r in self.live_runs():
-            s = stats.get(r)
-            if s is not None and col != s.get("column"):
-                s = (s.get("columns") or {}).get(col)
+        for r, st in self.run_stats().items():
+            s = st["columns"].get(col)
             if s is None or s["min"] is None:
                 keep.append(r)
                 continue
@@ -593,7 +571,8 @@ class RunStore:
         bounded = key_lower is not None or key_upper is not None
         runs = self.prune_runs(key_lower, key_upper) if bounded else self.live_runs()
         for col, (lo, hi) in (extra_bounds or {}).items():
-            runs = [r for r in runs if r in set(self.prune_runs(lo, hi, column=col))]
+            kept = set(self.prune_runs(lo, hi, column=col))
+            runs = [r for r in runs if r in kept]
         if not runs:
             live = self.live_runs()
             if live:
@@ -623,7 +602,7 @@ class RunStore:
     ) -> list[str]:
         """One round of size-tiered compaction: merge each planned bucket
         into a single run (LWW winners only) and atomically replace the
-        inputs in the manifest.  ``keep_expr`` is the retention hook — the
+        inputs in the record.  ``keep_expr`` is the retention hook — the
         deleting-compaction integration point: rows it filters out vanish
         from the merged run exactly as the reference's convictors drop rows
         during the underlying strategy's merge.
@@ -653,13 +632,7 @@ class RunStore:
         run = self._next_run()
         path = os.path.join(self.root, run)
         KeyedTable(merged, self.meta).clustered().write.parquet(path)
-        self._write_stats(spark, path)
-        # publish under the manifest lock, re-reading the live set: a
-        # writer appending concurrently with this maintenance pass must
-        # not have its just-published run dropped by a stale-list swap
-        with self.locked():
-            live = [r for r in self.live_runs() if r not in bucket]
-            self._swap_manifest([*live, run])
+        self._publish(add=[run], drop=bucket)
         return run
 
     def compact_leveled(
@@ -709,9 +682,9 @@ class RunStore:
             min_threshold=min_threshold,
             fanout=fanout,
             run_ranges={
-                r: (s["min"], s["max"])
+                r: (c["min"], c["max"])
                 for r, s in self.run_stats().items()
-                if s.get("min") is not None
+                if (c := s["columns"].get(self._range_col)) and c["min"] is not None
             },
         )
         if job is None:
@@ -742,19 +715,13 @@ class RunStore:
         )
         for d in chunks:
             run = self._next_run()
-            path = os.path.join(self.root, run)
-            os.replace(os.path.join(stage, d), path)
-            # each chunk's skip index and schema come from its own footers,
-            # like an append's — no read-back job over the staged layout
-            self._write_stats(spark, path)
+            os.replace(os.path.join(stage, d), os.path.join(self.root, run))
             new_runs.append(run)
             levels[run] = target_level
-            # publish incrementally-named runs only after ALL chunks land
         shutil.rmtree(stage, ignore_errors=True)
-        # manifest lock: see append_run/compact — concurrent appends survive
-        with self.locked():
-            live = [r for r in self.live_runs() if r not in set(inputs)]
-            self._swap_manifest([*live, *new_runs], levels=levels)
+        # publish the chunks only after ALL of them land; each chunk's stats
+        # come from its own footers, like an append's
+        self._publish(add=new_runs, drop=inputs, levels=levels)
         return new_runs
 
 
@@ -892,23 +859,19 @@ def drop_expired_windows(store: RunStore, time_col: str, cutoff: int) -> list[st
     ``cutoff`` — WITHOUT scanning a row.  This is Cassandra's
     fully-expired-sstable drop, the reason operators run TWCS under
     time-based retention: once a window ages out, its (single, compacted)
-    run disappears with a manifest swap, not a rewrite.  Only the
+    run disappears with a record swap, not a rewrite.  Only the
     skip-index stats are consulted; a run with no stats for ``time_col``
     (or a max AT/after the cutoff) is kept and left to row-level
     retention.  Returns the dropped run names; directories remain for
     :func:`vacuum_dead_runs`, so concurrent readers holding the old
-    manifest stay consistent."""
-    stats = store.run_stats()
+    run list stay consistent."""
     victims = []
-    for r in store.live_runs():
-        s = (stats.get(r, {}).get("columns") or {}).get(time_col)
+    for r, st in store.run_stats().items():
+        s = st["columns"].get(time_col)
         if s is not None and isinstance(s.get("max"), int) and s["max"] < cutoff:
             victims.append(r)
     if victims:
-        with store.locked():
-            store._swap_manifest(
-                [r for r in store.live_runs() if r not in set(victims)]
-            )
+        store._publish(drop=victims)
     return victims
 
 
@@ -917,12 +880,13 @@ def _dir_mtime(path: str) -> float:
 
 
 def vacuum_dead_runs(store: RunStore, min_age_s: float = 3600.0) -> list[str]:
-    """Garbage-collect run directories absent from the live manifest —
+    """Garbage-collect run directories absent from the commit record —
     compaction inputs already replaced, and the debris of failed appends
-    (which write their directory BEFORE the manifest swap publishes it).
+    or compactions (which write their directory BEFORE the record swap
+    publishes it).
 
     ``min_age_s`` is the in-flight guard: a directory younger than this may
-    be an append that has not swapped its manifest yet, so it is left
+    be an append that has not published it yet, so it is left
     alone — the same reasoning as SnapshotStore.vacuum keeping the current
     pointer's version.  Returns the removed run names.
     """
@@ -930,7 +894,7 @@ def vacuum_dead_runs(store: RunStore, min_age_s: float = 3600.0) -> list[str]:
 
     live = set(store.live_runs())
     removed: list[str] = []
-    now = __import__("time").time()
+    now = time.time()
     for d in sorted(os.listdir(store.root)):
         if not (d[:1] in ("r", "b") and d[1:].isdigit()) or d in live:
             continue
@@ -965,7 +929,7 @@ def maintain(
     (:meth:`RunStore.compact_leveled` — non-overlapping levels, pruned
     bounded reads), or "twcs" (:func:`compact_time_windowed` —
     time-window buckets on ``time_col``/``window_us``; with
-    ``expire_before`` set, fully-expired runs are dropped manifest-only
+    ``expire_before`` set, fully-expired runs are dropped record-only
     FIRST via :func:`drop_expired_windows`, so aged-out windows cost zero
     scan).  ``max_rounds`` bounds the loop — every strategy converges
     (each merge strictly reduces run count in its bucket), but a bound

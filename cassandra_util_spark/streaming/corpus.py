@@ -33,14 +33,14 @@ normalization) carry a NULL signature in the index: they still block
 exact re-crawls by digest, and a null band bucket can never join, so
 they are transparent to the near-dup probe on both sides.
 
-Exactly-once: the replay guard of :mod:`.ingest`, with the corpus
-store's ``_INGEST_HWM`` as the mark; both appends are idempotent named
-runs and the mark advances after both, so a replay after a crash
-between the two appends re-derives byte-stable runs and no-ops into the
-manifest.  Document ids are assumed unique across the stream — same-id
-re-crawl UPDATE semantics belong to :func:`stream_lsh_index`'s LWW
-index, not to an admission pipeline (an edited re-crawl is usually a
-near-dup of its own predecessor and would be dropped here by rule 4).
+Exactly-once: the replay guard of :mod:`.ingest`, with the mark kept in
+the corpus store's commit record; both appends are idempotent named
+runs and the mark is published after both, so a replay after a crash
+between the two appends re-derives byte-stable runs and no-ops on the
+live corpus run.  Document ids are assumed unique across the stream —
+same-id re-crawl UPDATE semantics belong to :func:`stream_lsh_index`'s
+LWW index, not to an admission pipeline (an edited re-crawl is usually
+a near-dup of its own predecessor and would be dropped here by rule 4).
 
 Reference anchor: the reference's write path batches mutations and
 consults per-sstable summaries before reads (CQLBatch concurrent
@@ -50,7 +50,7 @@ disciplines into the corpus-building workload the engine targets.
 
 from __future__ import annotations
 
-from functools import partial, reduce
+from functools import reduce
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -68,12 +68,7 @@ from cassandra_util_spark.operators.text import (
     whitespace_token_count,
 )
 from cassandra_util_spark.sources.runs import RunStore, maintain
-from cassandra_util_spark.streaming.ingest import (
-    _advance_batch_hwm,
-    _drain,
-    _hwm_applied,
-    run_name_for_batch,
-)
+from cassandra_util_spark.streaming.ingest import _applied, _drain, run_name_for_batch
 
 
 def stream_corpus_ingest(
@@ -178,8 +173,8 @@ def stream_corpus_ingest(
         # trigger) is gone; the index append reads the pinned blocks.  On a
         # replayed batch the idempotent corpus append_run no-ops (its run
         # name is already published), so the index append is the
-        # materializing consumer instead — still before the high-water mark
-        # advances and before maintenance runs.
+        # materializing consumer instead — still before the mark is
+        # published and before maintenance runs.
         kept = kept.localCheckpoint(eager=False)
         corpus_store.append_run(
             kept.withColumn("writetime", F.lit(batch_id).cast("long")),
@@ -196,9 +191,9 @@ def stream_corpus_ingest(
             .withColumn("writetime", F.lit(batch_id).cast("long"))
         )
         index_store.append_run(idx_rows, name=run_name_for_batch(batch_id))
-        # the mark advances only after BOTH appends: a crash between them
-        # replays the batch, and the published corpus run no-ops
-        _advance_batch_hwm(corpus_store, batch_id, app_id)
+        # the mark is published only after BOTH appends: a crash between
+        # them replays the batch, and the published corpus run no-ops
+        corpus_store._publish(mark=f"{app_id}:{batch_id}")
         if maintain_every is not None and (batch_id + 1) % maintain_every == 0:
             for store in (corpus_store, index_store):
                 maintain(
@@ -209,8 +204,9 @@ def stream_corpus_ingest(
                 )
 
     return _drain(
-        stream, checkpoint_dir, query_name, partial(_hwm_applied, corpus_store), apply,
-        txn_app_id, available_now,
+        stream, checkpoint_dir, query_name,
+        lambda app: _applied(corpus_store.root, corpus_store._record()["mark"], app),
+        apply, txn_app_id, available_now,
     )
 
 
@@ -367,19 +363,17 @@ def _prior_max_bin_runs(store: RunStore, batch_id: int):
     pruning is an optimization, never a correctness bet.  A run whose
     writetime-min equals ``batch_id`` is this batch's own run from a
     crashed attempt (every appended run carries one batch's constant
-    writetime; compaction only ever folds hwm-passed batches, which are
+    writetime; compaction only ever folds marked batches, which are
     strictly older than a replaying one) and is excluded on both counts."""
-    stats = store.run_stats()
     hi = None
     have_prior = False
     missing = False
-    for r in store.live_runs():
-        st = stats.get(r)
-        wt = ((st or {}).get("columns") or {}).get("writetime")
+    for st in store.run_stats().values():
+        wt = st["columns"].get("writetime")
         wt_min_usable = wt is not None and isinstance(wt.get("min"), int)
         if wt_min_usable and wt["min"] > batch_id - 1:
             continue  # this batch's own crashed-attempt run
-        b = st if st is not None and st.get("column") == "bin" else None
+        b = st["columns"].get("bin")
         if b is not None and b.get("min") is None and b.get("max") is None:
             continue  # empty run (an empty micro-batch): no rows to read
         have_prior = True

@@ -8,10 +8,11 @@ index an incremental crawl pipeline maintains"): the index is now a real
 store with the run store's full discipline —
 
 - **idempotent ingest**: signatures ride :func:`stream_to_runstore`'s
-  per-batch transform hook, so the `_INGEST_HWM` replay guard (txn
-  identity + batch high-water mark) and the locked manifest swap apply
-  unchanged; an at-least-once `foreachBatch` replay re-derives the same
-  run name and no-ops instead of double-indexing;
+  per-batch transform hook, so the replay guard (the txn identity and
+  last applied batch id in the store's commit record) and the locked
+  record publish apply unchanged; an at-least-once `foreachBatch`
+  replay re-derives the same run name and no-ops instead of
+  double-indexing;
 - **LWW on re-crawl**: the store merges on ``id`` by ``writetime`` (the
   micro-batch id — monotone within one logical stream), so a re-crawled
   document's newer signature REPLACES the stale one at read time and
@@ -69,7 +70,7 @@ def stream_lsh_index(
 
     Per micro-batch: one signature build over the batch's documents (the
     explode→groupBy(min×num_perm) single-shuffle form), one clustered run
-    append under the manifest lock, HWM advance — identical replay and
+    append and a mark publish under the record lock — identical replay and
     maintenance semantics to :func:`stream_to_runstore` because it IS
     stream_to_runstore with a signature transform.  ``maintain_every=N``
     interleaves compaction so a long-running crawl's index stays at a
@@ -135,7 +136,7 @@ def stream_token_span_index(
     additive delta run of its combiner-reduced gram counts
     (:func:`~cassandra_util_spark.operators.dedup.gram_count_deltas` —
     a pure function of batch content and parameters, so a replayed batch
-    re-derives the same delta and the counter HWM guard's no-op is safe),
+    re-derives the same delta and the counter mark guard's no-op is safe),
     and a gram duplicated ACROSS batches — once in Monday's shard, once
     in Friday's — counts as duplicated exactly like a same-shard repeat:
     probing the full ingested corpus is bit-equal to the batch operator

@@ -23,7 +23,6 @@ reported at an interval.  Mapping:
 
 from __future__ import annotations
 
-import functools
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,8 +33,7 @@ from pyspark.sql.types import StructType
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
 from cassandra_util_spark.functions import normalize_event_time, writetime_micros
 from cassandra_util_spark.operators.convictors import Convictor
-from cassandra_util_spark.streaming.ingest import _drain
-from cassandra_util_spark.streaming.sketches import _last_applied
+from cassandra_util_spark.streaming.ingest import _applied, _drain
 
 
 def progress_listener(registry, name: str = "stream"):
@@ -221,7 +219,8 @@ def continuous_rollup(
         store.commit(merged, tag=f"{app_id}:{batch_id}")
 
     return _drain(
-        events, checkpoint_dir, None, functools.partial(_last_applied, store), apply
+        events, checkpoint_dir, None,
+        lambda app: _applied(store.root, store.current_tag(), app), apply,
     )
 
 
@@ -385,7 +384,8 @@ def streaming_apply_changelog(
         store.commit(merged, tag=f"{app_id}:{batch_id}")
 
     return _drain(
-        changes, checkpoint_dir, None, functools.partial(_last_applied, store), apply
+        changes, checkpoint_dir, None,
+        lambda app: _applied(store.root, store.current_tag(), app), apply,
     )
 
 

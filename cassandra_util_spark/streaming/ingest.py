@@ -14,44 +14,38 @@ Delivery semantics: ``foreachBatch`` is at-least-once on recovery — after a
 crash the last micro-batch can replay with the SAME batch id.  Runs are
 named by batch id (``b<id>``), and :meth:`RunStore.append_run` treats an
 already-published name as a no-op and overwrites a half-written directory
-from a crashed attempt.  Manifest membership alone is NOT a sufficient
-replay guard, though: once an interleaved ``maintain`` cycle COMPACTS
-``b<id>`` away, the name leaves the live manifest, and a replayed batch
-would re-append it — resurrecting rows the in-merge ``keep_expr`` already
-convicted.  Applied batch ids are therefore tracked independently of the
-manifest by a high-water-mark file (``_INGEST_HWM``, atomic-rename updated
-immediately after the run publishes); batches at or below it are skipped,
-so the store converges to exactly-once run content across compaction
-boundaries.
+from a crashed attempt.  Run membership alone is NOT a sufficient replay
+guard, though: once an interleaved ``maintain`` cycle COMPACTS ``b<id>``
+away, the name leaves the live runs, and a replayed batch would re-append
+it — resurrecting rows the in-merge ``keep_expr`` already convicted.  Each
+store therefore keeps a stream mark, ``"app_id:batch_id"`` of the last
+batch applied; batches at or below it are skipped, so the store converges
+to exactly-once run content across compaction boundaries.
 
 Batch ids are only meaningful WITHIN one logical stream: a restart from a
-FRESH checkpoint resets ids to 0, and a bare ``batch_id <= hwm`` guard
+FRESH checkpoint resets ids to 0, and a bare ``batch_id <= mark`` guard
 would then silently no-op every batch — data loss, not idempotence.  The
-HWM therefore records a transaction identity alongside the id (Delta's
-``txnAppId`` + ``txnVersion`` pattern): by default the streaming query id
-Spark persists in the checkpoint's ``metadata`` file, which is stable
-across restarts of the same checkpoint and regenerates exactly when the
-checkpoint is wiped.  An identity mismatch FAILS LOUDLY instead of
-skipping.
+mark therefore carries a transaction identity (Delta's ``txnAppId`` +
+``txnVersion`` pattern): by default the streaming query id Spark persists
+in the checkpoint's ``metadata`` file, which is stable across restarts of
+the same checkpoint and regenerates exactly when the checkpoint is wiped.
+An identity mismatch FAILS LOUDLY instead of skipping.
 
 Every store-backed drain in this package runs that protocol through one
-helper, :func:`_drain`; only the mark differs by store.  Run-store drains
-keep the ``_INGEST_HWM`` file above (read by :func:`_hwm_applied`).
-Snapshot-store drains (the sketch tables, ``continuous_rollup``,
-``streaming_apply_changelog``) ride the mark in the snapshot pointer
-write itself, ``SnapshotStore.commit(tag="app_id:batch_id")`` (read by
-``sketches._last_applied``), so "state merged" and "batch recorded" are
-one atomic rename.  Both readers share one identity check.  Each drain
-writes its own mark, after the last write the batch owes the store.
+helper, :func:`_drain`, and reads its mark through one parser,
+:func:`_applied`.  A run store keeps the mark in its commit record, set
+by a mark-only ``RunStore._publish(mark=...)`` after the batch's last
+append.  A snapshot store (the sketch tables, ``continuous_rollup``,
+``streaming_apply_changelog``) carries it in the pointer write itself,
+``SnapshotStore.commit(tag="app_id:batch_id")``, so "state merged" and
+"batch recorded" are one atomic rename.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
-from functools import partial
-from typing import Callable, Optional, Tuple
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -84,55 +78,20 @@ def resolve_txn_app_id(checkpoint_dir: str, fallback: str) -> str:
     return fallback
 
 
-def _hwm_path(store: RunStore) -> str:
-    return os.path.join(store.root, "_INGEST_HWM")
+def _applied(root: str, tag: Optional[str], app_id: str) -> int:
+    """Last batch id the stream ``app_id`` applied to the store at ``root``,
+    read from its mark ``tag`` (``"app_id:batch_id"``; -1 when None).
 
-
-def _read_hwm(store: RunStore) -> Tuple[Optional[str], int]:
-    """(txn_app_id, batch hwm) from the store; (None, -1) if absent.
-
-    Legacy single-line files (pre-identity) parse as (None, hwm) — the
-    identity is adopted on the next advance.
-    """
-    try:
-        with open(_hwm_path(store)) as f:
-            content = f.read().strip()
-    except FileNotFoundError:
-        return None, -1
-    parts = content.split("\n")
-    try:
-        if len(parts) >= 2:
-            return parts[0] or None, int(parts[1])
-        return None, int(parts[0])
-    except ValueError:
-        return None, -1
-
-
-def applied_batch_hwm(store: RunStore) -> int:
-    """Highest micro-batch id already applied to ``store`` (-1 if none)."""
-    return _read_hwm(store)[1]
-
-
-def applied_txn_app_id(store: RunStore) -> Optional[str]:
-    """Transaction identity recorded with the HWM (None if legacy/absent)."""
-    return _read_hwm(store)[0]
-
-
-def _advance_batch_hwm(store: RunStore, batch_id: int, app_id: str) -> None:
-    fd, tmp = tempfile.mkstemp(dir=store.root, prefix="_HWM.")
-    with os.fdopen(fd, "w") as f:
-        f.write(f"{app_id}\n{batch_id}")
-    os.replace(tmp, _hwm_path(store))  # atomic on POSIX
-
-
-def _refuse_foreign_stream(root: str, stored_app: Optional[str], app_id: str) -> None:
-    """Raise when a store's applied-batch mark was written by another stream.
-
-    A DIFFERENT stream's ids are incomparable with ours: batch 0 of a fresh
-    checkpoint would read as "already applied" and the replay guard would
-    silently drop every batch (ADVICE r5).  A mark without an identity
-    (legacy) is adopted instead."""
-    if stored_app is not None and stored_app != app_id:
+    Raises when another stream wrote the mark: a DIFFERENT stream's ids are
+    incomparable with ours, and batch 0 of a fresh checkpoint would read as
+    "already applied", so the guard would silently drop every batch.  Also
+    raises on an unparsable tag: reading it as "never applied" would
+    re-apply a replay and double-count additive state.  A bare-integer tag
+    carries no identity and is adopted."""
+    if tag is None:
+        return -1
+    stored_app, _, version = tag.rpartition(":")
+    if stored_app and stored_app != app_id:
         raise RuntimeError(
             f"store {root} was written by stream {stored_app!r}; this "
             f"stream is {app_id!r} — refusing to compare batch ids across "
@@ -140,14 +99,25 @@ def _refuse_foreign_stream(root: str, stored_app: Optional[str], app_id: str) ->
             "it; drains that take txn_app_id can instead continue its "
             f"sequence deliberately with txn_app_id={stored_app!r}."
         )
+    try:
+        return int(version)
+    except ValueError:
+        raise RuntimeError(
+            f"store {root} has a foreign mark {tag!r} — not the drains' "
+            "'app_id:batch_id' protocol; treating it as 'never applied' "
+            "would double-count on replay."
+        ) from None
 
 
-def _hwm_applied(store: RunStore, app_id: str) -> int:
-    """Last batch id the stream ``app_id`` applied to ``store`` (-1 if none);
-    raises when another stream wrote the HWM."""
-    stored_app, hwm = _read_hwm(store)
-    _refuse_foreign_stream(store.root, stored_app, app_id)
-    return hwm
+def applied_txn_app_id(store: RunStore) -> Optional[str]:
+    """Transaction identity recorded with ``store``'s mark (None if none)."""
+    mark = store._record()["mark"]
+    return (mark or "").rpartition(":")[0] or None
+
+
+def applied_batch_hwm(store: RunStore) -> int:
+    """Highest micro-batch id already applied to ``store`` (-1 if none)."""
+    return _applied(store.root, store._record()["mark"], applied_txn_app_id(store))
 
 
 def _drain(
@@ -231,7 +201,7 @@ def stream_to_runstore(
     its contemporaries, and with ``retention_us`` set the expiry cutoff
     TRACKS EVENT TIME — each cycle computes ``max(time_col over run
     stats) − retention_us`` from the per-run skip index (driver-side
-    metadata, no scan) and drops fully-aged windows manifest-only.  The
+    metadata, no scan) and drops fully-aged windows record-only.  The
     whole retention life-cycle of an old window is therefore one pointer
     swap, never a rewrite — Cassandra's TWCS + fully-expired-sstable drop
     under the reference's deleting wrapper.
@@ -251,8 +221,9 @@ def stream_to_runstore(
     every batch.  ``available_now=True`` drains what exists then stops (the
     test/backfill trigger); ``False`` runs continuously.
 
-    Scale shape: the per-batch work is one clustered parquet write plus a
-    column-pruned stats read-back — no merge, no read of existing runs.
+    Scale shape: the per-batch work is one clustered parquet write, whose
+    stats come from its footers with no job — no merge, no read of
+    existing runs.
     Compaction cost is bounded per cycle by the strategy's plan (one
     bucket / one victim job at a time), so ingest latency stays flat as
     the store grows.
@@ -279,11 +250,11 @@ def stream_to_runstore(
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
         store.append_run(batch_df, name=run_name_for_batch(batch_id))
-        # advance the mark BEFORE maintenance: a crash between append and
-        # this write replays into append_run's manifest no-op (the run is
-        # still live — maintenance below hasn't run); a crash after it
-        # skips the replay outright, compacted or not
-        _advance_batch_hwm(store, batch_id, app_id)
+        # mark BEFORE maintenance: a crash between the append and this
+        # publish replays into append_run's no-op (the run is still live —
+        # maintenance below hasn't run); a crash after it skips the replay
+        # outright, compacted or not
+        store._publish(mark=f"{app_id}:{batch_id}")
         if maintain_every is not None and (batch_id + 1) % maintain_every == 0:
             maintain(
                 store,
@@ -299,7 +270,8 @@ def stream_to_runstore(
             )
 
     return _drain(
-        stream, checkpoint_dir, query_name, partial(_hwm_applied, store), apply,
+        stream, checkpoint_dir, query_name,
+        lambda app: _applied(store.root, store._record()["mark"], app), apply,
         txn_app_id, available_now,
     )
 
@@ -329,9 +301,10 @@ def stream_counter_deltas(
     the raw events need rolling up first).
 
     Exactly-once under at-least-once replay uses BOTH run-store guards:
-    the run name is the batch id (an in-manifest replay is append_run's
-    no-op) and the ``_INGEST_HWM`` (txn identity + batch id, same protocol
-    as :func:`stream_to_runstore`) skips replays whose run a compaction
+    the run name is the batch id (a replay of a live run is append_run's
+    no-op) and the store's mark (txn identity + batch id in its commit
+    record, same protocol as :func:`stream_to_runstore`) skips replays
+    whose run a compaction
     already FOLDED AWAY — for counters that replay would not merely
     resurrect rows, it would double-count every increment in the batch,
     the failure additive state cannot absorb.
@@ -348,11 +321,12 @@ def stream_counter_deltas(
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
         counters.append_increments(batch_df, name=run_name_for_batch(batch_id))
-        _advance_batch_hwm(store, batch_id, app_id)
+        store._publish(mark=f"{app_id}:{batch_id}")
         if compact_every is not None and (batch_id + 1) % compact_every == 0:
             counters.compact(batch_df.sparkSession)
 
     return _drain(
-        stream, checkpoint_dir, query_name, partial(_hwm_applied, store), apply,
+        stream, checkpoint_dir, query_name,
+        lambda app: _applied(store.root, store._record()["mark"], app), apply,
         txn_app_id, available_now,
     )

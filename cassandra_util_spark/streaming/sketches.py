@@ -31,7 +31,6 @@ per micro-batch flush.
 from __future__ import annotations
 
 import os
-from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +40,7 @@ from typing import Optional
 
 from cassandra_util_spark.operators.sketches import count_min_build, hll_build
 from cassandra_util_spark.sources.snapshots import SnapshotStore
-from cassandra_util_spark.streaming.ingest import _drain, _refuse_foreign_stream
+from cassandra_util_spark.streaming.ingest import _applied, _drain
 
 
 def _pin_sampler_identity(store: SnapshotStore, identity: dict) -> None:
@@ -138,29 +137,6 @@ def _pin_sampler_identity(store: SnapshotStore, identity: dict) -> None:
         return
 
 
-def _last_applied(store: SnapshotStore, app_id: str) -> int:
-    """Batch id of the last commit by the stream ``app_id`` (-1 if none).
-
-    Raises on an identity mismatch or an unparsable tag: both mean the
-    store's version history is NOT this stream's — skipping would freeze
-    the state, re-merging would double-count, and only failing is safe.
-    """
-    tag = store.current_tag()
-    if tag is None:
-        return -1
-    stored_app, _, version = tag.rpartition(":")
-    # a legacy bare-integer tag has no identity and is adopted
-    _refuse_foreign_stream(store.root, stored_app or None, app_id)
-    try:
-        return int(version)
-    except ValueError:
-        raise RuntimeError(
-            f"snapshot store {store.root} has a foreign snapshot tag "
-            f"{tag!r} — not the drains' 'app_id:batch_id' protocol; "
-            "treating it as 'never applied' would double-count on replay."
-        ) from None
-
-
 def stream_count_min_to_store(
     stream: DataFrame,
     store: SnapshotStore,
@@ -200,7 +176,8 @@ def stream_count_min_to_store(
         store.vacuum(keep_last=retain_versions)
 
     return _drain(
-        stream, checkpoint_dir, query_name, partial(_last_applied, store), apply,
+        stream, checkpoint_dir, query_name,
+        lambda app: _applied(store.root, store.current_tag(), app), apply,
         txn_app_id, available_now,
     )
 
@@ -238,7 +215,8 @@ def stream_hll_to_store(
         store.vacuum(keep_last=retain_versions)
 
     return _drain(
-        stream, checkpoint_dir, query_name, partial(_last_applied, store), apply,
+        stream, checkpoint_dir, query_name,
+        lambda app: _applied(store.root, store.current_tag(), app), apply,
         txn_app_id, available_now,
     )
 
@@ -329,7 +307,7 @@ def stream_bottomk_to_store(
 
     def applied(app_id: str) -> int:
         _pin_sampler_identity(store, sampler_identity)
-        return _last_applied(store, app_id)
+        return _applied(store.root, store.current_tag(), app_id)
 
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if weight_col is not None:

@@ -106,10 +106,7 @@ elif which == "windows":
         _boundary_row,
         _prior_max_bin_runs,
     )
-    from cassandra_util_spark.streaming.ingest import (
-        _advance_batch_hwm,
-        run_name_for_batch,
-    )
+    from cassandra_util_spark.streaming.ingest import run_name_for_batch
 
     stream = build_windows_fixture()
     store = RunStore(
@@ -151,8 +148,8 @@ elif which == "windows":
             ).withColumn("writetime", F.lit(batch_id).cast("long"))
         with step("5-append-run"):
             store.append_run(out, name=run_name_for_batch(batch_id))
-        with step("6-hwm"):
-            _advance_batch_hwm(store, batch_id, "pbs")
+        with step("6-mark"):
+            store._publish(mark=f"pbs:{batch_id}")
 
     t0 = time.monotonic()
     with eq._scoped_shuffle_partitions(spark, 8):
@@ -179,10 +176,7 @@ elif which == "ingest":
         minhash_signatures,
     )
     from cassandra_util_spark.operators.text import whitespace_token_count
-    from cassandra_util_spark.streaming.ingest import (
-        _advance_batch_hwm,
-        run_name_for_batch,
-    )
+    from cassandra_util_spark.streaming.ingest import run_name_for_batch
 
     d = eq._t(spark, sf_dir, "documents")
     dd = d.select("doc_id", "text")
@@ -254,7 +248,7 @@ elif which == "ingest":
                 .withColumn("writetime", F.lit(batch_id).cast("long"))
             )
             index_store.append_run(idx_rows, name=run_name_for_batch(batch_id))
-        _advance_batch_hwm(corpus_store, batch_id, "pbs")
+        corpus_store._publish(mark=f"pbs:{batch_id}")
 
     t0 = time.monotonic()
     with eq._scoped_shuffle_partitions(spark, 8):

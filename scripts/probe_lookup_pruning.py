@@ -41,7 +41,7 @@ stats = store.run_stats()
 print(f"doc range [{lo_d}, {hi_d}] -> bin range [{lo_b}, {hi_b}]")
 print("live runs and their bin stats:")
 for r in store.live_runs():
-    s = stats.get(r) or {}
+    s = stats[r]["columns"].get("bin") or {}
     print(f"  {r}: bin [{s.get('min')}, {s.get('max')}]")
 pruned = store.prune_runs(lo_b, hi_b)
 print(f"prune_runs({lo_b}, {hi_b}) -> {pruned} "

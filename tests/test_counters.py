@@ -214,22 +214,23 @@ def test_compaction_swap_preserves_concurrent_append(spark, tmp_path):
         s_maint.append_run(df)
 
     # inject the interleaved append INSIDE the compaction, after its plan
-    # fixed the inputs but before its manifest swap: hook the stats write
-    # of the merged output (the last step before publish)
+    # fixed the inputs but before its record swap: hook the stats entry
+    # of the merged output (the last step before the locked publish)
     late_df = df.selectExpr("k + 100 as k", "wt")
-    orig_write_stats = s_maint._write_stats
+    orig_stats = s_maint._stats
     fired = []
 
-    def hook(spark_arg, path):
-        orig_write_stats(spark_arg, path)
+    def hook(run, zorder_by=None):
+        entry = orig_stats(run, zorder_by)
         if not fired:
             fired.append(True)
             s_writer.append_run(late_df, name="late")
+        return entry
 
-    s_maint._write_stats = hook
+    s_maint._stats = hook
     new = s_maint.compact(spark, min_threshold=4)
     # before the lock fix, the stale-list swap dropped "late" from the
-    # manifest (its data directory orphaned) — now both survive
+    # live runs (its data directory orphaned) — now both survive
     assert new and fired and "late" in s_maint.live_runs()
     assert s_maint.read_merged(spark).count() == 100  # 50 keys + 50 shifted
 

@@ -352,7 +352,6 @@ def test_zordered_append_same_view_and_2d_file_pruning(spark, tmp_path):
     Morton layout's payoff is measurable — inside a run, files can be
     eliminated on EACH z-column independently (footer min/max rectangles),
     which the key-clustered layout cannot do for a non-leading column."""
-    import json
     import os
 
     from cassandra_util_spark.operators.zorder import zorder_file_stats
@@ -374,8 +373,7 @@ def test_zordered_append_same_view_and_2d_file_pruning(spark, tmp_path):
     b = zord.read_merged(spark).orderBy("user_id", "event_id").collect()
     assert a == b
 
-    with open(os.path.join(zord.root, run, "_STATS.json")) as f:
-        st = json.load(f)
+    st = zord.run_stats()[run]
     assert st["zorder"] == ["ux", "ex"]
     # whole-run skip index unaffected by layout: same min/max either way
     assert st["columns"]["ux"] == plain.run_stats()[plain.live_runs()[0]]["columns"]["ux"]
@@ -403,12 +401,12 @@ def test_zordered_append_same_view_and_2d_file_pruning(spark, tmp_path):
 
 
 def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
-    """_write_stats now derives the skip index from parquet FOOTERS (a
+    """A run's stats entry derives the skip index from parquet FOOTERS (a
     driver-side metadata walk — no Spark job per append); the Spark agg
     survives as the fallback for unreadable footers.  The two paths must
-    produce byte-identical _STATS.json payloads across every atomic type
-    the store carries (long, double, string, timestamp, date, boolean,
-    all-null) or old stores and new stores would prune differently."""
+    produce byte-identical stats payloads across every atomic type the
+    store carries (long, double, string, timestamp, date, boolean,
+    all-null) or the two paths would prune differently."""
     import datetime
     import json
     import os
@@ -436,7 +434,7 @@ def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
     assert footer is not None, "testdata parquet must have readable footers"
     agg = store._spark_stats(spark, path)
 
-    # normalize exactly like _write_stats does (json with default=str)
+    # normalize exactly like _publish does (json with default=str)
     norm = lambda s: json.loads(json.dumps(
         {"rows": s[0], "columns": s[1]}, default=str))
     nf, na = norm(footer), norm(agg)
@@ -445,9 +443,8 @@ def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
     assert "payload" not in nf["columns"] and "payload" not in na["columns"]
     assert nf["columns"]["allnull"] == {"min": None, "max": None}
     assert nf["columns"] == na["columns"]
-    # the published _STATS.json is the footer-derived payload
-    with open(os.path.join(path, "_STATS.json")) as f:
-        st = json.load(f)
+    # the published record entry is the footer-derived payload
+    st = store.run_stats()[run]
     assert st["columns"] == nf["columns"] and st["rows"] == nf["rows"]
 
     # NaN-bearing float column: Spark's parquet writer records NaN as a
@@ -481,21 +478,6 @@ def _small_store(spark, root, n_runs=4):
     return store
 
 
-def _strip_schema(store, runs):
-    """Rewrite ``runs``' stats as a store written before schemas were
-    recorded: the same ``_STATS.json`` with no ``schema`` key."""
-    import json
-    import os
-
-    for r in runs:
-        p = os.path.join(store.root, r, "_STATS.json")
-        with open(p) as f:
-            st = json.load(f)
-        del st["schema"]
-        with open(p, "w") as f:
-            json.dump(st, f)
-
-
 def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs):
     from cassandra_util_spark.sources.snapshots import SnapshotStore
 
@@ -526,26 +508,6 @@ def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs):
     assert sorted(r.k for r in df.collect()) == list(range(5))
 
 
-def test_compaction_reads_no_schema(spark, tmp_path, count_jobs):
-    """A compact over 4 runs with recorded schemas runs exactly 4 fewer
-    jobs than the same compact over a store without them — the 4 per-run
-    schema-inference jobs — and writes the same merged rows."""
-    recorded = _small_store(spark, str(tmp_path / "recorded"))
-    legacy = _small_store(spark, str(tmp_path / "legacy"))
-    _strip_schema(legacy, legacy.live_runs())
-    _, jobs = count_jobs("compact-recorded",
-                         lambda: recorded.compact(spark, min_threshold=4))
-    _, legacy_jobs = count_jobs("compact-legacy",
-                                lambda: legacy.compact(spark, min_threshold=4))
-    assert legacy_jobs - jobs == 4, (jobs, legacy_jobs)
-    assert len(recorded.live_runs()) == len(legacy.live_runs()) == 1
-    assert sorted(recorded.read_merged(spark).collect()) == sorted(
-        legacy.read_merged(spark).collect()
-    )
-    # the merged run records its schema too
-    assert "schema" in recorded.run_stats()[recorded.live_runs()[0]]
-
-
 def test_listing_threshold_caps_paths_per_scan(spark, tmp_path, count_jobs):
     """More paths than the parallel-listing threshold in one scan would
     list them in a Spark job; the scan is cut so planning stays job-free."""
@@ -562,20 +524,78 @@ def test_listing_threshold_caps_paths_per_scan(spark, tmp_path, count_jobs):
     assert df.count() == 50
 
 
-@pytest.mark.parametrize("stripped", ["all", "mixed"])
-def test_runs_without_recorded_schema_read_as_before(spark, tmp_path, stripped):
-    """Stores written before schemas were recorded (no ``schema`` key), and
-    stores mixing such runs with new ones, read the same rows and schema."""
-    recorded = _small_store(spark, str(tmp_path / "recorded"))
-    old = _small_store(spark, str(tmp_path / "old"))
-    runs = old.live_runs()
-    _strip_schema(old, runs if stripped == "all" else runs[1::2])
-    for kw in ({}, {"key_lower": 5, "key_upper": 25}):
-        want, got = recorded.read_merged(spark, **kw), old.read_merged(spark, **kw)
-        assert got.schema == want.schema
-        assert sorted(got.collect()) == sorted(want.collect())
-    # one inferring scan per stripped run, the recorded ones grouped
-    assert len(old._scan(spark, runs)) == (4 if stripped == "all" else 3)
+def test_record_readers_open_one_file(spark, tmp_path, monkeypatch):
+    """Runs, levels, stats, sizes and schemas live in one commit record:
+    ``run_stats()``, ``live_runs()``, ``run_sizes()`` and ``_scan`` over a
+    4-run store each open exactly that one file."""
+    import builtins
+    import os
+
+    store = _small_store(spark, str(tmp_path / "runs"))
+    runs = store.live_runs()
+    real_open = builtins.open
+    opened = []
+
+    def spy(path, *args, **kwargs):
+        opened.append(str(path))
+        return real_open(path, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    record = os.path.join(store.root, "_RUNS")
+    for name, read in [
+        ("run_stats", store.run_stats),
+        ("live_runs", store.live_runs),
+        ("run_sizes", store.run_sizes),
+        ("_scan", lambda: store._scan(spark, runs)),
+    ]:
+        opened.clear()
+        read()
+        assert opened == [record], (name, opened)
+    monkeypatch.setattr(builtins, "open", real_open)
+    sizes = store.run_sizes()
+    for r in runs:
+        parts = os.listdir(os.path.join(store.root, r))
+        assert sizes[r] == sum(
+            os.path.getsize(os.path.join(store.root, r, p))
+            for p in parts if p.endswith(".parquet") and not p.startswith((".", "_"))
+        )
+
+
+def test_non_record_runs_file_raises(tmp_path):
+    """A ``_RUNS`` that is not a commit record — a bare run list, a bare
+    number, empty — raises naming the store; it never reads as empty."""
+    import os
+
+    store = RunStore(str(tmp_path / "runs"), TableMeta(("k",), (), "wt"))
+    assert store.live_runs() == []  # no record yet: an empty store
+    for text in ("r00001 0\nr00002 0", "5", "", "[]"):
+        with open(os.path.join(store.root, "_RUNS"), "w") as f:
+            f.write(text)
+        for read in (store.live_runs, store.run_stats, store.live_levels):
+            with pytest.raises(ValueError, match="not a commit record") as e:
+                read()
+            assert store.root in str(e.value)
+
+
+def test_extra_bound_prunes_once(spark, tmp_path, monkeypatch):
+    """An ``extra_bounds`` column is pruned once per read, not once per
+    run: a 4-run store read with one extra bound and no key bound calls
+    ``prune_runs`` exactly once, and reads the right rows."""
+    store = _small_store(spark, str(tmp_path / "runs"))
+    real = store.prune_runs
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append((args, kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(store, "prune_runs", counting)
+    got = store.read_merged(spark, extra_bounds={"wt": (2, 3)}).collect()
+    assert len(calls) == 1, calls
+    # keys 20..49 have their newest version in runs 2 and 3
+    assert sorted((r.k, r.wt) for r in got) == [
+        (k, 2 if k < 30 else 3) for k in range(20, 50)
+    ]
 
 
 def test_schema_evolution_groups_scans_by_schema(spark, tmp_path):

@@ -87,7 +87,9 @@ def test_leveled_compaction_view_levels_and_disjointness(spark, seeded_store):
     # L1 runs are key-disjoint per their stats (adjacent runs may touch at
     # a shared boundary value; ranges must never properly interleave)
     stats = store.run_stats()
-    spans = sorted((stats[r]["min"], stats[r]["max"]) for r in levels)
+    spans = sorted(
+        (c["min"], c["max"]) for c in (stats[r]["columns"]["user_id"] for r in levels)
+    )
     for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert lo1 <= hi1 and hi1 <= lo2
     # the read view is invariant under leveled compaction
@@ -135,27 +137,6 @@ def test_keep_expr_applies_during_leveled_merge(spark, seeded_store):
     assert got.count() == n_src
 
 
-def test_manifest_v1_backcompat(spark, tmp_path):
-    meta = TableMeta(("user_id",), ("event_id",), "writetime")
-    store = RunStore(str(tmp_path / "runs"), meta)
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("writetime", F.unix_micros(F.col("ts").cast("timestamp")))
-        .select("user_id", "event_id", "event_type", "writetime")
-        .limit(100)
-    )
-    run = store.append_run(ev)
-    # rewrite the manifest in the v1 bare-name format
-    with open(os.path.join(store.root, "_RUNS"), "w") as f:
-        f.write(run)
-    assert store.live_runs() == [run]
-    assert store.live_levels() == {run: 0}
-    assert store.read_merged(spark).count() == 100
-    # a run with no stats file is never pruned
-    os.remove(os.path.join(store.root, run, "_STATS.json"))
-    assert store.prune_runs(10**9, 10**9 + 1) == [run]
-
-
 def test_incremental_plan_picks_victim_and_overlaps_only():
     sizes = {"a": 300, "b": 300, "x": 100, "y": 100, "z": 100}
     levels = {"a": 1, "b": 1, "x": 2, "y": 2, "z": 2}
@@ -199,7 +180,9 @@ def test_incremental_compaction_leaves_siblings_untouched(spark, seeded_store):
     assert all(levels[r] == 2 for r in new)
     # L2 runs are key-disjoint and the view is invariant
     stats = store.run_stats()
-    spans = sorted((stats[r]["min"], stats[r]["max"]) for r in new)
+    spans = sorted(
+        (c["min"], c["max"]) for c in (stats[r]["columns"]["user_id"] for r in new)
+    )
     for (_, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert hi1 <= lo2
     after_view = {tuple(r) for r in store.read_merged(spark).collect()}
@@ -305,7 +288,7 @@ def test_leveled_merge_crash_mid_stage_is_invisible_and_rerun_converges(
 ):
     """VERDICT r4 task 6: kill a leveled merge at both crash windows —
     (a) mid-chunk-install (stage dir present, some chunks already moved to
-    unpublished run dirs) and (b) just before the manifest swap — and prove
+    unpublished run dirs) and (b) just before the record swap — and prove
     readers still see the OLD consistent run set, the debris is
     vacuumable, and a clean re-run converges to the same content."""
     import shutil
@@ -334,7 +317,7 @@ def test_leveled_merge_crash_mid_stage_is_invisible_and_rerun_converges(
         store.compact_leveled(spark, run_target_bytes=16 << 10, min_threshold=2)
     monkeypatch.setattr(runs_mod.os, "replace", real_replace)
 
-    # manifest untouched: readers see the old, consistent run set
+    # record untouched: readers see the old, consistent run set
     assert store.live_runs() == before_runs
     assert {tuple(r) for r in store.read_merged(spark).collect()} == before
     # debris exists (stage dir and/or orphan run dir), but never as a live run
@@ -354,16 +337,16 @@ def test_leveled_merge_crash_mid_stage_is_invisible_and_rerun_converges(
     removed = vacuum_dead_runs(store, min_age_s=0.0)
     assert set(orphans) <= set(removed)
 
-    # -- window (b): crash just before the manifest swap ------------------
-    real_swap = RunStore._swap_manifest
+    # -- window (b): crash just before the record swap --------------------
+    real_publish = RunStore._publish
 
-    def exploding_swap(self, runs, levels=None):
-        raise RuntimeError("simulated crash: before manifest swap")
+    def exploding_publish(self, **kw):
+        raise RuntimeError("simulated crash: before record swap")
 
-    monkeypatch.setattr(RunStore, "_swap_manifest", exploding_swap)
-    with pytest.raises(RuntimeError, match="before manifest swap"):
+    monkeypatch.setattr(RunStore, "_publish", exploding_publish)
+    with pytest.raises(RuntimeError, match="before record swap"):
         store.compact_leveled(spark, run_target_bytes=16 << 10, min_threshold=2)
-    monkeypatch.setattr(RunStore, "_swap_manifest", real_swap)
+    monkeypatch.setattr(RunStore, "_publish", real_publish)
 
     assert store.live_runs() == before_runs
     assert {tuple(r) for r in store.read_merged(spark).collect()} == before

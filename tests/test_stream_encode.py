@@ -5,7 +5,6 @@ never saw — plus the UNK contract of bpe_encode_ids."""
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,15 +53,15 @@ def _batch_reference(spark, d, merges, words, vocab):
 
 
 @pytest.mark.slow
-def test_streamed_store_equals_batch_encode_with_oov(spark, frozen):
+def test_streamed_store_equals_batch_encode_with_oov(spark, frozen, tmp_path_factory):
     d, merges, words, vocab = frozen
-    src = tempfile.mkdtemp(prefix="enc-src-")
+    src = str(tmp_path_factory.mktemp("enc-src-"))
     for k in range(3):
         d.filter(F.col("doc_id") % 3 == k).coalesce(1).write.mode(
             "append"
         ).parquet(src)
     store = RunStore(
-        tempfile.mkdtemp(prefix="enc-store-"),
+        str(tmp_path_factory.mktemp("enc-store-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     stream = (
@@ -72,7 +71,7 @@ def test_streamed_store_equals_batch_encode_with_oov(spark, frozen):
         .parquet(src)
     )
     q = stream_encode(
-        stream, store, tempfile.mkdtemp(prefix="enc-cp-"),
+        stream, store, str(tmp_path_factory.mktemp("enc-cp-")),
         words, vocab, merges=merges,
     )
     q.awaitTermination(300)
@@ -118,34 +117,34 @@ def test_unk_never_shortens_the_stream(spark, frozen):
         assert got[i] == n
 
 
-def test_store_key_contract(spark, frozen):
+def test_store_key_contract(spark, frozen, tmp_path_factory):
     d, merges, words, vocab = frozen
     bad = RunStore(
-        tempfile.mkdtemp(prefix="enc-bad-"),
+        str(tmp_path_factory.mktemp("enc-bad-")),
         TableMeta(("other",), (), "writetime"),
     )
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
-        .parquet(tempfile.mkdtemp(prefix="enc-empty-"))
+        .parquet(str(tmp_path_factory.mktemp("enc-empty-")))
     )
     with pytest.raises(ValueError, match="encode stores are keyed"):
         stream_encode(
-            stream, bad, tempfile.mkdtemp(), words, vocab, merges=merges
+            stream, bad, str(tmp_path_factory.mktemp("cp-")), words, vocab, merges=merges
         )
 
 
-def test_intra_batch_duplicate_delivery(spark, frozen):
+def test_intra_batch_duplicate_delivery(spark, frozen, tmp_path_factory):
     # two deliveries of the same doc inside ONE micro-batch must collapse
     # to a single clean stream (review r13: writetime is the batch id, so
     # without the per-id collapse the per-doc collect interleaves the two
     # copies into one garbled stream and LWW has no tie-break)
     d, merges, words, vocab = frozen
-    src = tempfile.mkdtemp(prefix="encdup-src-")
+    src = str(tmp_path_factory.mktemp("encdup-src-"))
     one = d.filter(F.col("doc_id") == 0)
     one.unionAll(one).coalesce(1).write.mode("append").parquet(src)
     store = RunStore(
-        tempfile.mkdtemp(prefix="encdup-store-"),
+        str(tmp_path_factory.mktemp("encdup-store-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     stream = (
@@ -154,7 +153,7 @@ def test_intra_batch_duplicate_delivery(spark, frozen):
         .parquet(src)
     )
     q = stream_encode(
-        stream, store, tempfile.mkdtemp(prefix="encdup-cp-"),
+        stream, store, str(tmp_path_factory.mktemp("encdup-cp-")),
         words, vocab, merges=merges,
     )
     q.awaitTermination(300)
@@ -164,7 +163,7 @@ def test_intra_batch_duplicate_delivery(spark, frozen):
     assert list(rows[0]["token_ids"]) == list(want["token_ids"])
 
 
-def test_streamed_byte_fallback_equals_batch_encode(spark, frozen):
+def test_streamed_byte_fallback_equals_batch_encode(spark, frozen, tmp_path_factory):
     """r16 byte fallback, streaming half: with the frozen word table
     alone (no merges) and oov='bytes', OOV words in later shards —
     including the unseen character 'z' — encode as reserved byte-token
@@ -172,13 +171,13 @@ def test_streamed_byte_fallback_equals_batch_encode(spark, frozen):
     one-batch byte-fallback encode regardless of batch boundaries."""
     d, merges, words, _ = frozen
     fb_vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
-    src = tempfile.mkdtemp(prefix="enc-fb-src-")
+    src = str(tmp_path_factory.mktemp("enc-fb-src-"))
     for k in range(3):
         d.filter(F.col("doc_id") % 3 == k).coalesce(1).write.mode(
             "append"
         ).parquet(src)
     store = RunStore(
-        tempfile.mkdtemp(prefix="enc-fb-store-"),
+        str(tmp_path_factory.mktemp("enc-fb-store-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     stream = (
@@ -188,7 +187,7 @@ def test_streamed_byte_fallback_equals_batch_encode(spark, frozen):
         .parquet(src)
     )
     q = stream_encode(
-        stream, store, tempfile.mkdtemp(prefix="enc-fb-cp-"),
+        stream, store, str(tmp_path_factory.mktemp("enc-fb-cp-")),
         words, fb_vocab, oov="bytes",
     )
     assert q.awaitTermination(300)
@@ -213,25 +212,25 @@ def test_streamed_byte_fallback_equals_batch_encode(spark, frozen):
     assert any(t >= byte_base for t in got[5][0])
 
 
-def test_stream_encode_rejects_bytes_with_merges(spark, frozen):
+def test_stream_encode_rejects_bytes_with_merges(spark, frozen, tmp_path_factory):
     d, merges, words, _ = frozen
     fb_vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
-        .parquet(tempfile.mkdtemp(prefix="enc-rej-"))
+        .parquet(str(tmp_path_factory.mktemp("enc-rej-")))
     )
     store = RunStore(
-        tempfile.mkdtemp(prefix="enc-rej-store-"),
+        str(tmp_path_factory.mktemp("enc-rej-store-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     with pytest.raises(ValueError, match="ambiguous"):
         stream_encode(
-            stream, store, tempfile.mkdtemp(prefix="enc-rej-cp-"),
+            stream, store, str(tmp_path_factory.mktemp("enc-rej-cp-")),
             words, fb_vocab, merges=merges, oov="bytes",
         )
 
 
-def test_stream_encode_fail_fast_validation(spark, frozen):
+def test_stream_encode_fail_fast_validation(spark, frozen, tmp_path_factory):
     """A misconfigured stream must refuse at SETUP, not start
     successfully and die later inside the first foreachBatch as a
     wrapped StreamingQueryException (ADVICE r16): an unknown oov value
@@ -240,19 +239,19 @@ def test_stream_encode_fail_fast_validation(spark, frozen):
     d, merges, words, vocab = frozen  # vocab WITHOUT the byte block
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
-        .parquet(tempfile.mkdtemp(prefix="enc-ff-"))
+        .parquet(str(tmp_path_factory.mktemp("enc-ff-")))
     )
     store = RunStore(
-        tempfile.mkdtemp(prefix="enc-ff-store-"),
+        str(tmp_path_factory.mktemp("enc-ff-store-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     with pytest.raises(ValueError, match="oov must be"):
         stream_encode(
-            stream, store, tempfile.mkdtemp(prefix="enc-ff-cp-"),
+            stream, store, str(tmp_path_factory.mktemp("enc-ff-cp-")),
             words, vocab, oov="drop",
         )
     with pytest.raises(ValueError, match="byte-fallback vocabulary"):
         stream_encode(
-            stream, store, tempfile.mkdtemp(prefix="enc-ff-cp2-"),
+            stream, store, str(tmp_path_factory.mktemp("enc-ff-cp2-")),
             words, vocab, oov="bytes",
         )

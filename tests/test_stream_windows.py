@@ -7,7 +7,6 @@ carry is reconstructed from the store, never driver memory)."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 import pytest
@@ -34,10 +33,10 @@ DOCS = [
 CAPACITY = 8
 
 
-def _write_shards(d, cuts):
+def _write_shards(tmp_path_factory, d, cuts):
     """Ascending doc-id range shards as separate files with pinned mtimes
     so the file source delivers them in append order."""
-    src = tempfile.mkdtemp(prefix="win-stream-src-")
+    src = str(tmp_path_factory.mktemp("win-stream-src-"))
     lo = None
     now = time.time()
     for k, hi in enumerate(cuts + [None]):
@@ -55,9 +54,9 @@ def _write_shards(d, cuts):
     return [os.path.join(src, p) for p in sorted(os.listdir(src))], src
 
 
-def _new_store():
+def _new_store(tmp_path_factory):
     return RunStore(
-        tempfile.mkdtemp(prefix="win-store-"),
+        str(tmp_path_factory.mktemp("win-store-")),
         TableMeta(("bin",), (), "writetime"),
     )
 
@@ -101,11 +100,11 @@ def _want(spark, d):
     }
 
 
-def test_streamed_windows_equal_one_shot(spark):
+def test_streamed_windows_equal_one_shot(spark, tmp_path_factory):
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     assert _view(spark, store) == _want(spark, d)
     # attribution rides along: spans tile every window exactly
     for r in store.read_merged(spark).collect():
@@ -119,19 +118,19 @@ def test_streamed_windows_equal_one_shot(spark):
         assert pos == int(r["n_tokens"])
 
 
-def test_restart_continues_from_store_carry(spark):
+def test_restart_continues_from_store_carry(spark, tmp_path_factory):
     """Drain shards 0-1, stop, then RESTART the same checkpoint after
     shard 2 lands: the carry must come back from the store's partial
     window (no driver state survives the restart), and the final view
     still equals the one-shot windows."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, src = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
+    paths, src = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
     live = os.path.join(src, "live")
     os.makedirs(live)
     for p in paths[:2]:
         os.symlink(p, os.path.join(live, os.path.basename(p)))
-    cp = tempfile.mkdtemp(prefix="win-cp-")
+    cp = str(tmp_path_factory.mktemp("win-cp-"))
 
     def _run():
         stream = (
@@ -152,14 +151,14 @@ def test_restart_continues_from_store_carry(spark):
     assert _view(spark, store) == _want(spark, d)
 
 
-def test_replay_is_idempotent(spark):
+def test_replay_is_idempotent(spark, tmp_path_factory):
     """Restarting the SAME checkpoint after a full drain appends nothing
-    (availableNow finds no new files; the HWM guard covers a forced
+    (availableNow finds no new files; the mark guard covers a forced
     replay), and the view is unchanged."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[4])
-    store = _new_store()
-    cp = tempfile.mkdtemp(prefix="win-cp-")
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[4])
+    store = _new_store(tmp_path_factory)
+    cp = str(tmp_path_factory.mktemp("win-cp-"))
     _drain(spark, paths, store, cp, txn_app_id="win-replay")
     view1 = _view(spark, store)
     runs1 = sorted(store.live_runs())
@@ -168,12 +167,12 @@ def test_replay_is_idempotent(spark):
     assert _view(spark, store) == view1
 
 
-def test_out_of_order_batch_raises(spark):
+def test_out_of_order_batch_raises(spark, tmp_path_factory):
     """A batch whose ids fall at or below a carried document's must fail
     loudly — silently re-packing emitted windows is data corruption."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, src = _write_shards(d, cuts=[5])
-    store = _new_store()
+    paths, src = _write_shards(tmp_path_factory, d, cuts=[5])
+    store = _new_store(tmp_path_factory)
     # deliver shard 1 (ids 6-8) FIRST, then shard 0 (ids 0-5)
     for p, name in [(paths[1], "a"), (paths[0], "b")]:
         os.symlink(p, os.path.join(src, f"re-{name}"))
@@ -190,31 +189,31 @@ def test_out_of_order_batch_raises(spark):
             for f in files:
                 os.utime(os.path.join(root, f), (now + k, now + k))
     q = stream_windows(
-        stream, store, tempfile.mkdtemp(prefix="win-cp-"), CAPACITY,
+        stream, store, str(tmp_path_factory.mktemp("win-cp-")), CAPACITY,
     )
     with pytest.raises(Exception, match="ascending id order"):
         q.awaitTermination(300)
         raise RuntimeError("stream should have failed")
 
 
-def test_store_key_contract(spark):
+def test_store_key_contract(spark, tmp_path_factory):
     bad = RunStore(
-        tempfile.mkdtemp(prefix="win-bad-"),
+        str(tmp_path_factory.mktemp("win-bad-")),
         TableMeta(("doc_id",), (), "writetime"),
     )
     with pytest.raises(ValueError, match="keyed \\('bin',\\)"):
         stream_windows(None, bad, "/tmp/x", CAPACITY)
 
 
-def test_loader_bounded_read_prunes_runs(spark):
+def test_loader_bounded_read_prunes_runs(spark, tmp_path_factory):
     """The loader read path: a bin-bounded read of the window store skips
     runs whose bin range excludes the bound (the per-run skip index) and
     returns exactly the bounded windows — what lets a trainer mount one
     shard of a 100 TB window store without touching the rest."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     all_bins = _view(spark, store)
     hi = max(all_bins)
     lo = hi // 2
@@ -229,29 +228,29 @@ def test_loader_bounded_read_prunes_runs(spark):
 
 
 @pytest.mark.slow
-def test_singleton_batches_equal_one_shot(spark):
+def test_singleton_batches_equal_one_shot(spark, tmp_path_factory):
     """One document per micro-batch (9 batches, maximal carry churn —
     every boundary partial is rebuilt 8 times): the merged view must
     still equal the one-shot windows."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=list(range(8)))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=list(range(8)))
     assert len(paths) == 9
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     assert _view(spark, store) == _want(spark, d)
 
 
 @pytest.mark.slow
-def test_compaction_interleaves_with_carry(spark):
+def test_compaction_interleaves_with_carry(spark, tmp_path_factory):
     """maintain_every folds runs WHILE the stream ingests: the carry
     read's writetime-stats exclusion and skip-index bound must survive
     compacted (mixed-writetime) runs, and the final view still equals
     the one-shot windows."""
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[1, 3, 5, 6])
-    store = _new_store()
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[1, 3, 5, 6])
+    store = _new_store(tmp_path_factory)
     _drain(
-        spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"),
+        spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")),
         maintain_every=2, min_threshold=2,
     )
     assert _view(spark, store) == _want(spark, d)
@@ -260,7 +259,7 @@ def test_compaction_interleaves_with_carry(spark):
 
 
 @pytest.mark.slow
-def test_masks_from_store_equal_one_shot(spark):
+def test_masks_from_store_equal_one_shot(spark, tmp_path_factory):
     """The soft-removal production flow: windows live in the store,
     a verdict table arrives later, and loss masks computed from the
     store's read view (spans round-tripped through parquet) equal masks
@@ -268,9 +267,9 @@ def test_masks_from_store_equal_one_shot(spark):
     from cassandra_util_spark.operators.packing import loss_mask_windows
 
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     keep = spark.createDataFrame(
         [(i, i % 3 != 0) for i, _ in DOCS], "doc bigint, keep boolean"
     )
@@ -288,7 +287,7 @@ def test_masks_from_store_equal_one_shot(spark):
     assert got == want
 
 
-def test_out_of_order_after_exact_tiling_raises(spark):
+def test_out_of_order_after_exact_tiling_raises(spark, tmp_path_factory):
     """Review r15: when the boundary tiles to a FULL window the carry is
     empty, but the append-order guard must STILL fire — the high-water
     doc id comes from the max-bin row's spans, not from the carry."""
@@ -301,7 +300,7 @@ def test_out_of_order_after_exact_tiling_raises(spark):
     late = spark.createDataFrame(
         [(5, [9, 9])], "doc_id bigint, token_ids array<int>"
     )
-    src = tempfile.mkdtemp(prefix="win-oo-src-")
+    src = str(tmp_path_factory.mktemp("win-oo-src-"))
     now = time.time()
     for k, sh in enumerate([full, late]):
         sub = os.path.join(src, f"shard-{k:02d}")
@@ -309,7 +308,7 @@ def test_out_of_order_after_exact_tiling_raises(spark):
         for root, _, files in os.walk(sub):
             for f in files:
                 os.utime(os.path.join(root, f), (now + k, now + k))
-    store = _new_store()
+    store = _new_store(tmp_path_factory)
     stream = (
         spark.readStream.schema("doc_id bigint, token_ids array<int>")
         .option("maxFilesPerTrigger", 1)
@@ -317,7 +316,7 @@ def test_out_of_order_after_exact_tiling_raises(spark):
         .parquet(os.path.join(src, "shard-*"))
     )
     q = stream_windows(
-        stream, store, tempfile.mkdtemp(prefix="win-oo-cp-"), CAPACITY,
+        stream, store, str(tmp_path_factory.mktemp("win-oo-cp-")), CAPACITY,
     )
     with pytest.raises(Exception, match="ascending id order"):
         q.awaitTermination(300)
@@ -348,12 +347,12 @@ def test_unusable_writetime_stats_degrade_to_unbounded_read():
     from cassandra_util_spark.streaming.corpus import _prior_max_bin_runs
 
     real_prior = {
-        "column": "bin", "min": 0, "max": 0, "rows": 1,
-        "columns": {"writetime": {"min": 0, "max": 0}},
+        "rows": 1,
+        "columns": {"bin": {"min": 0, "max": 0}, "writetime": {"min": 0, "max": 0}},
     }
     crashed_stringified = {
-        "column": "bin", "min": 1, "max": 5, "rows": 5,
-        "columns": {"writetime": {"min": "1", "max": "1"}},
+        "rows": 5,
+        "columns": {"bin": {"min": 1, "max": 5}, "writetime": {"min": "1", "max": "1"}},
     }
     # crashed run's bin max must NOT become the prune bound
     got = _prior_max_bin_runs(
@@ -361,29 +360,29 @@ def test_unusable_writetime_stats_degrade_to_unbounded_read():
     )
     assert got == (None,)
     # absent writetime stats: same degrade
-    no_wt = {"column": "bin", "min": 1, "max": 5, "rows": 5}
+    no_wt = {"rows": 5, "columns": {"bin": {"min": 1, "max": 5}}}
     assert _prior_max_bin_runs(
         _StatsOnlyStore({"r0": real_prior, "r1": no_wt}), 1
     ) == (None,)
     # usable stats keep the pruned read
     prior2 = {
-        "column": "bin", "min": 1, "max": 3, "rows": 3,
-        "columns": {"writetime": {"min": 0, "max": 0}},
+        "rows": 3,
+        "columns": {"bin": {"min": 1, "max": 3}, "writetime": {"min": 0, "max": 0}},
     }
     assert _prior_max_bin_runs(
         _StatsOnlyStore({"r0": real_prior, "r2": prior2}), 1
     ) == (3,)
     # a genuine own-run (usable int writetime == batch_id) stays excluded
     own = {
-        "column": "bin", "min": 1, "max": 9, "rows": 9,
-        "columns": {"writetime": {"min": 1, "max": 1}},
+        "rows": 9,
+        "columns": {"bin": {"min": 1, "max": 9}, "writetime": {"min": 1, "max": 1}},
     }
     assert _prior_max_bin_runs(
         _StatsOnlyStore({"r0": real_prior, "r3": own}), 1
     ) == (0,)
 
 
-def test_epoch_plan_from_store_equals_in_memory_twin(spark):
+def test_epoch_plan_from_store_equals_in_memory_twin(spark, tmp_path_factory):
     """VERDICT r15 task 4 (store-backed loader plan): the epoch-shuffle
     plan computed from the PERSISTED window store's merged view must
     equal the plan over the in-memory one-shot windows row-for-row —
@@ -393,9 +392,9 @@ def test_epoch_plan_from_store_equals_in_memory_twin(spark):
     from cassandra_util_spark.operators.packing import epoch_shuffle_plan
 
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     view = store.read_merged(spark).select("bin", "n_tokens")
     from_store = epoch_shuffle_plan(view, epochs=2, num_shards=3, seed="eq")
     one_shot = materialize_packed_windows(
@@ -416,7 +415,7 @@ def test_epoch_plan_from_store_equals_in_memory_twin(spark):
     assert "doc_spans" not in plan.split("ReadSchema: ", 1)[1].split("\n", 1)[0]
 
 
-def test_stream_windows_on_a_monotone_order_key(spark):
+def test_stream_windows_on_a_monotone_order_key(spark, tmp_path_factory):
     """The carry protocol is keyed on ANY monotone non-negative bigint,
     not just doc ids: streaming a curriculum-ordered corpus keyed on
     ord = stage·100 + doc (one micro-batch per stage, ascending) must
@@ -436,7 +435,7 @@ def test_stream_windows_on_a_monotone_order_key(spark):
             "doc_id", "token_ids", capacity=CAPACITY,
         ).collect()
     }
-    src = tempfile.mkdtemp(prefix="win-cur-src-")
+    src = str(tmp_path_factory.mktemp("win-cur-src-"))
     now = time.time()
     for k in range(3):
         sub = os.path.join(src, f"shard-{k:02d}")
@@ -445,7 +444,7 @@ def test_stream_windows_on_a_monotone_order_key(spark):
         for root, _, files in os.walk(sub):
             for f in files:
                 os.utime(os.path.join(root, f), (now + k, now + k))
-    store = _new_store()
+    store = _new_store(tmp_path_factory)
     stream = (
         spark.readStream.schema("ord bigint, token_ids array<int>")
         .option("maxFilesPerTrigger", 1)
@@ -453,7 +452,7 @@ def test_stream_windows_on_a_monotone_order_key(spark):
         .parquet(os.path.join(src, "shard-*"))
     )
     q = stream_windows(
-        stream, store, tempfile.mkdtemp(prefix="win-cur-cp-"), CAPACITY,
+        stream, store, str(tmp_path_factory.mktemp("win-cur-cp-")), CAPACITY,
         id_col="ord",
     )
     q.awaitTermination(300)
@@ -483,7 +482,7 @@ def test_reserved_column_names_rejected_loudly(spark):
             )
 
 
-def test_doc_lookup_filters_spans_before_reassembly(spark):
+def test_doc_lookup_filters_spans_before_reassembly(spark, tmp_path_factory):
     """The random-access lookup shape (`windows_doc_lookup`): restore
     ONE document from a bin-bounded store read.  The attribution spans
     must be filtered to the wanted doc BEFORE reassembly — boundary
@@ -493,9 +492,9 @@ def test_doc_lookup_filters_spans_before_reassembly(spark):
     from cassandra_util_spark.operators.packing import reassemble_doc_streams
 
     d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
-    paths, _ = _write_shards(d, cuts=[2, 5])
-    store = _new_store()
-    _drain(spark, paths, store, tempfile.mkdtemp(prefix="win-cp-"))
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    store = _new_store(tmp_path_factory)
+    _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
     # doc 7 (13 tokens) spans multiple windows; find its bin range from
     # the spans (the doc→bin index step)
     spans = (
@@ -531,14 +530,13 @@ def test_doc_lookup_filters_spans_before_reassembly(spark):
 
 
 @pytest.mark.slow
-def test_doc_lookup_empty_range_returns_zero_rows_not_crash(spark):
+def test_doc_lookup_empty_range_returns_zero_rows_not_crash(spark, tmp_path_factory):
     """An all-empty looked-up doc range has no spans and therefore no
     bins to read: the lookup must render those docs as (0, 0, '') —
     exactly what the oracle's LEFT JOIN does — instead of crashing on
     the NULL min/max bin aggregate (review r17)."""
     import os
-    import tempfile
-
+    
     from cassandra_util_spark.entry_queries import QUERIES
 
     # mx=20 puts the lookup range [2·20//5, 9·20//20] = [8, 9]; docs 8
@@ -548,7 +546,7 @@ def test_doc_lookup_empty_range_returns_zero_rows_not_crash(spark):
          10)
         for i in range(21)
     ]
-    sf = tempfile.mkdtemp(prefix="lookup-edge-")
+    sf = str(tmp_path_factory.mktemp("lookup-edge-"))
     spark.createDataFrame(
         rows,
         "doc_id bigint, text string, lang string, source string, "

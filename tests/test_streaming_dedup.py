@@ -227,7 +227,7 @@ def test_corpus_ingest_within_batch_neardups_both_admit(spark, tmp_path):
 @pytest.mark.slow
 def test_corpus_ingest_replay_is_idempotent(spark, tmp_path):
     """A fresh checkpoint replaying the same batch ids with the SAME txn
-    identity skips every batch instead of re-admitting (the HWM guard on
+    identity skips every batch instead of re-admitting (the mark guard on
     the corpus store)."""
     batches = [[(1, LONG_A)], [(2, LONG_B)]]
     corpus, index = _ingest(
@@ -324,16 +324,14 @@ def test_corpus_ingest_interleaved_maintenance(spark, tmp_path):
 @pytest.mark.slow
 def test_corpus_ingest_crash_replay_after_index_append(spark, tmp_path):
     """The worst crash window: batch N's corpus AND index runs are live but
-    the HWM never advanced.  The replay recomputes the batch against an
+    the mark was never published.  The replay recomputes the batch against an
     index that already contains the batch's own digests — every doc
     re-reads as 'already admitted', kept is EMPTY, and the replay must
     resolve to live-name no-ops on both stores (append_run checks the
     manifest BEFORE writing, so the empty recompute can never overwrite
-    the original data).  Simulated by rewinding _INGEST_HWM one batch and
-    re-draining under the same txn identity."""
-    import os
-
-    from cassandra_util_spark.streaming.ingest import _hwm_path, applied_batch_hwm
+    the original data).  Simulated by rewinding the corpus store's mark
+    one batch and re-draining under the same txn identity."""
+    from cassandra_util_spark.streaming.ingest import applied_batch_hwm
 
     batches = [[(1, LONG_A)], [(2, LONG_B)]]
     corpus, index = _ingest(
@@ -342,10 +340,9 @@ def test_corpus_ingest_crash_replay_after_index_append(spark, tmp_path):
     assert applied_batch_hwm(corpus) == 1
     before_corpus = sorted(tuple(r) for r in corpus.read_merged(spark).collect())
     before_index = sorted(tuple(r) for r in index.read_merged(spark).collect())
-    # rewind the HWM to batch 0: batch 1 is now "in the crash window"
-    with open(_hwm_path(corpus) + ".tmp", "w") as f:
-        f.write("crawl-x\n0")
-    os.replace(_hwm_path(corpus) + ".tmp", _hwm_path(corpus))
+    # rewind the mark to batch 0: batch 1 is now "in the crash window"
+    corpus._publish(mark="crawl-x:0")
+    assert applied_batch_hwm(corpus) == 0
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -371,10 +368,10 @@ def test_corpus_ingest_fault_between_appends_restarts_clean(
 ):
     """Replay fault injection at the drain's step boundary between its two
     stores: batch 1 dies after the corpus append and before the index
-    append, so the HWM has not moved.  A restart from the same checkpoint
+    append, so the mark has not moved.  A restart from the same checkpoint
     replays batch 1 (the published corpus run no-ops, the index run is
     written) and must end equal to an uninterrupted run: both stores'
-    merged views and the HWM."""
+    merged views and the mark."""
     from pyspark.errors import StreamingQueryException
 
     from cassandra_util_spark.streaming.ingest import (

@@ -108,8 +108,8 @@ def test_replay_after_compaction_does_not_resurrect(spark, tmp_path):
     """ADVICE r4: once maintenance compacts run b<id> away, its name leaves
     the live manifest — a replayed micro-batch with the same id used to
     re-append it, resurrecting keep_expr-convicted rows until the next
-    compaction.  The _INGEST_HWM high-water mark now skips the replay
-    regardless of manifest membership."""
+    compaction.  The store's mark (last applied batch id) now skips the
+    replay regardless of run membership."""
     from cassandra_util_spark.sources.runs import maintain
     from cassandra_util_spark.streaming.ingest import (
         applied_batch_hwm,
@@ -154,6 +154,180 @@ def test_replay_after_compaction_does_not_resurrect(spark, tmp_path):
     assert store.read_merged(spark).filter(F.col("event_type") == "click").count() == 0
 
 
+def _file_stream(spark, schema, src):
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+
+
+def _publish_failing_once(monkeypatch, when):
+    """Make the first ``RunStore._publish`` whose keyword arguments satisfy
+    ``when`` raise, as a crash at that commit would."""
+    real = RunStore._publish
+    fired = []
+
+    def publish(self, **kw):
+        if not fired and when(kw):
+            fired.append(kw)
+            raise RuntimeError("injected fault in _publish")
+        return real(self, **kw)
+
+    monkeypatch.setattr(RunStore, "_publish", publish)
+    return fired
+
+
+def _crash(query):
+    from pyspark.errors import StreamingQueryException
+
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        query.awaitTermination(120)
+        raise AssertionError("the injected fault did not stop the drain")
+
+
+@pytest.mark.parametrize("drain", ["runstore", "counter_deltas"])
+def test_fault_in_mark_publish_restarts_clean(spark, tmp_path, monkeypatch, drain):
+    """Fault injection at the mark-only publish after a batch's append:
+    batch 1's run is live but the mark still names batch 0.  A restart
+    from the same checkpoint replays batch 1 into the append's no-op and
+    publishes its mark, so the store's view and mark equal an
+    uninterrupted run's.  Counters would double-count a batch applied
+    twice, and a counter drain also folds its deltas every 2 batches."""
+    from cassandra_util_spark.operators.counters import CounterStore
+    from cassandra_util_spark.streaming.ingest import (
+        applied_batch_hwm,
+        applied_txn_app_id,
+        resolve_txn_app_id,
+        stream_counter_deltas,
+    )
+
+    ev = _events(spark, 600)
+    src = str(tmp_path / "src")
+    for i in range(3):  # users recur across batches: their counters add up
+        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+
+    def start(root, cp):
+        stream = _file_stream(spark, ev.schema, src)
+        if drain == "runstore":
+            store = RunStore(root, TableMeta(("user_id",), ("event_id",), "writetime"))
+            q = stream_to_runstore(stream, store, cp)
+            return store, lambda: store.read_merged(spark), q
+        cs = CounterStore(root, ["user_id"], ["hits"])
+        q = stream_counter_deltas(
+            stream, cs, cp, compact_every=2,
+            transform=lambda df, _: df.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("hits")),
+        )
+        return cs.store, lambda: cs.totals(spark), q
+
+    clean, clean_view, q = start(str(tmp_path / "clean"), str(tmp_path / "cp-clean"))
+    q.awaitTermination(120)
+
+    _publish_failing_once(monkeypatch, lambda kw: (kw.get("mark") or "").endswith(":1"))
+    root, cp = str(tmp_path / "crash"), str(tmp_path / "cp")
+    store, _, q = start(root, cp)
+    _crash(q)
+    assert run_name_for_batch(1) in store.live_runs()
+    assert applied_batch_hwm(store) == 0
+
+    store, view, q = start(root, cp)
+    q.awaitTermination(120)
+    assert sorted(view().collect()) == sorted(clean_view().collect())
+    assert applied_batch_hwm(store) == applied_batch_hwm(clean) == 2
+    assert applied_txn_app_id(store) == resolve_txn_app_id(cp, "")
+
+
+def test_fault_in_compaction_publish_restarts_clean(spark, tmp_path, monkeypatch):
+    """Fault injection at the publish inside ``_compact_bucket`` during a
+    ``maintain_every=2`` drain with a retention ``keep_expr``: batch 1's
+    mark is published, its maintenance writes the merged run and dies
+    before the record swap.  The merged directory is an orphan, the
+    inputs stay live, and the restart skips the replayed batch 1 by its
+    mark.  The store's view and mark then equal an uninterrupted run's,
+    and the drain's own vacuum removes the orphan."""
+    from cassandra_util_spark.streaming.ingest import applied_batch_hwm
+
+    ev = _events(spark, 1200)
+    src = str(tmp_path / "src")
+    for i in range(4):
+        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode("append").parquet(src)
+    keep = lambda df: df.filter(F.col("event_type") != "click")  # noqa: E731
+    meta = TableMeta(("user_id",), ("event_id",), "writetime")
+
+    def start(store, cp):
+        return stream_to_runstore(
+            _file_stream(spark, ev.schema, src), store, cp,
+            maintain_every=2, strategy="stcs", min_threshold=2, keep_expr=keep,
+        )
+
+    clean = RunStore(str(tmp_path / "clean"), meta)
+    start(clean, str(tmp_path / "cp-clean")).awaitTermination(120)
+
+    fired = _publish_failing_once(
+        monkeypatch, lambda kw: bool(kw.get("add")) and bool(kw.get("drop"))
+    )
+    store = RunStore(str(tmp_path / "crash"), meta)
+    cp = str(tmp_path / "cp")
+    _crash(start(store, cp))
+    assert sorted(fired[0]["drop"]) == [run_name_for_batch(0), run_name_for_batch(1)]
+    orphans = [
+        d for d in os.listdir(store.root)
+        if d.startswith("r") and d[1:].isdigit()
+    ]
+    assert orphans and not set(orphans) & set(store.live_runs())
+    assert store.live_runs() == [run_name_for_batch(0), run_name_for_batch(1)]
+    assert applied_batch_hwm(store) == 1
+
+    start(store, cp).awaitTermination(120)
+    view = sorted(store.read_merged(spark).collect())
+    assert view == sorted(clean.read_merged(spark).collect())
+    assert view == sorted(keep(ev).collect())
+    assert applied_batch_hwm(store) == applied_batch_hwm(clean) == 3
+    assert not any(os.path.exists(os.path.join(store.root, d)) for d in orphans)
+
+
+def test_drain_with_maintenance_writes_only_the_record(spark, tmp_path):
+    """A drain with interleaved maintenance keeps all store metadata in
+    the commit record: no per-run stats file and no separate mark file is
+    written anywhere under the store."""
+    import json
+
+    ev = _events(spark, 400)
+    src = str(tmp_path / "src")
+    for i in range(2):
+        ev.filter(F.col("event_id") % 2 == i).coalesce(1).write.mode("append").parquet(src)
+    store = RunStore(
+        str(tmp_path / "runs"), TableMeta(("user_id",), ("event_id",), "writetime")
+    )
+    stream_to_runstore(
+        _file_stream(spark, ev.schema, src), store, str(tmp_path / "cp"),
+        maintain_every=2, min_threshold=2,
+        keep_expr=lambda df: df.filter(F.col("event_type") != "click"),
+    ).awaitTermination(120)
+    names = {f for _, _, files in os.walk(store.root) for f in files}
+    assert not names & {"_STATS.json", "_INGEST_HWM"}, names
+    with open(os.path.join(store.root, "_RUNS")) as f:
+        record = json.load(f)
+    assert [e["name"] for e in record["runs"]] == store.live_runs()
+    assert len(store.live_runs()) == 1  # the two batch runs were compacted
+    assert record["mark"].endswith(":1")
+
+
+def test_garbage_mark_fails_loudly(tmp_path):
+    """An unparsable mark must raise, never read as 'never applied' (a
+    replay would then be re-applied and double-count additive state)."""
+    from cassandra_util_spark.streaming.ingest import _applied, applied_batch_hwm
+
+    store = RunStore(str(tmp_path / "runs"), TableMeta(("k",), (), "wt"))
+    store._publish(mark="garbage")
+    with pytest.raises(RuntimeError, match="foreign mark"):
+        _applied(store.root, store._record()["mark"], "me")
+    with pytest.raises(RuntimeError, match="foreign mark"):
+        applied_batch_hwm(store)
+
+
 def test_streaming_count_min_equals_batch_sketch(spark, tmp_path):
     """The persisted CM sketch after draining N micro-batches must be
     BIT-IDENTICAL to count_min_build over their union (counter addition is
@@ -195,11 +369,11 @@ def test_streaming_count_min_equals_batch_sketch(spark, tmp_path):
 
     # replayed batch id must be a no-op (no new version, no inflation)
     versions_before = store.versions()
-    from cassandra_util_spark.streaming import sketches as sk_mod
+    from cassandra_util_spark.streaming.ingest import _applied
 
-    assert sk_mod._last_applied(store, app) == 2
+    assert _applied(store.root, store.current_tag(), app) == 2
     # what process_batch does on replay: batch_id 2 <= last applied -> skip
-    assert 2 <= sk_mod._last_applied(store, app)
+    assert 2 <= _applied(store.root, store.current_tag(), app)
     assert store.versions() == versions_before
     # per-batch vacuum keeps the version COUNT bounded for long streams
     assert len(versions_before) <= 2, versions_before
@@ -357,12 +531,15 @@ def _changelog_case(spark, tmp_path):
 
 
 def _store_state(store):
-    """Everything a drain writes: runs + HWM, or versions + pointer tag."""
-    from cassandra_util_spark.streaming.ingest import _read_hwm
+    """Everything a drain writes: runs + the record's mark, or versions +
+    the pointer tag; each mark with the batch id it reads as."""
+    from cassandra_util_spark.streaming.ingest import _applied
 
     if isinstance(store, RunStore):
-        return store.live_runs(), _read_hwm(store)
-    return store.versions(), store.current_tag()
+        state, mark = store.live_runs(), store._record()["mark"]
+    else:
+        state, mark = store.versions(), store.current_tag()
+    return state, mark, _applied(store.root, mark, (mark or "").rpartition(":")[0])
 
 
 @pytest.mark.parametrize(
@@ -404,23 +581,26 @@ def test_foreign_or_legacy_sketch_tags(spark, tmp_path):
     import pytest
 
     from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import _last_applied
+    from cassandra_util_spark.streaming.ingest import _applied
+
+    def last_applied(store, app_id):
+        return _applied(store.root, store.current_tag(), app_id)
 
     df = spark.range(3)
     foreign = SnapshotStore(str(tmp_path / "foreign"))
     foreign.commit(df, tag="some-other-module-tag")
-    with pytest.raises(RuntimeError, match="foreign snapshot tag"):
-        _last_applied(foreign, "me")
+    with pytest.raises(RuntimeError, match="foreign mark"):
+        last_applied(foreign, "me")
 
     legacy = SnapshotStore(str(tmp_path / "legacy"))
     legacy.commit(df, tag="5")
-    assert _last_applied(legacy, "me") == 5
+    assert last_applied(legacy, "me") == 5
 
     other = SnapshotStore(str(tmp_path / "other"))
     other.commit(df, tag="someone-else:3")
     with pytest.raises(RuntimeError, match="refusing to compare"):
-        _last_applied(other, "me")
-    assert _last_applied(other, "someone-else") == 3
+        last_applied(other, "me")
+    assert last_applied(other, "someone-else") == 3
 
 
 def test_heavy_hitters_from_store_equals_rebuild(spark, tmp_path):

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,9 +31,9 @@ def trained(spark):
     return bpe_train(d, "text", num_merges=6)
 
 
-def test_roundtrip_hands_back_the_in_memory_shapes(spark, trained):
+def test_roundtrip_hands_back_the_in_memory_shapes(spark, trained, tmp_path_factory):
     merges, words = trained
-    path = tempfile.mkdtemp(prefix="tok-") + "/bpe"
+    path = str(tmp_path_factory.mktemp("tok-")) + "/bpe"
     write_tokenizer(spark, path, words, merges, byte_fallback=True)
     r_merges, r_words, r_vocab, meta = read_tokenizer(spark, path)
     assert r_merges == merges
@@ -56,9 +55,9 @@ def test_roundtrip_hands_back_the_in_memory_shapes(spark, trained):
     } == want_vocab
 
 
-def test_capped_write_keeps_top_n_and_requires_byte_fallback(spark, trained):
+def test_capped_write_keeps_top_n_and_requires_byte_fallback(spark, trained, tmp_path_factory):
     merges, words = trained
-    path = tempfile.mkdtemp(prefix="tok-cap-") + "/bpe"
+    path = str(tmp_path_factory.mktemp("tok-cap-")) + "/bpe"
     write_tokenizer(
         spark, path, words, merges, byte_fallback=True, capped_words=3
     )
@@ -75,21 +74,21 @@ def test_capped_write_keeps_top_n_and_requires_byte_fallback(spark, trained):
     assert r_vocab.filter(F.col("kind") == "byte").count() == 256
     with pytest.raises(ValueError, match="byte_fallback=True"):
         write_tokenizer(
-            spark, tempfile.mkdtemp(prefix="tok-bad-") + "/bpe",
+            spark, str(tmp_path_factory.mktemp("tok-bad-")) + "/bpe",
             words, merges, capped_words=3,
         )
     with pytest.raises(ValueError, match="capped_words must be positive"):
         write_tokenizer(
-            spark, tempfile.mkdtemp(prefix="tok-bad-") + "/bpe",
+            spark, str(tmp_path_factory.mktemp("tok-bad-")) + "/bpe",
             words, merges, byte_fallback=True, capped_words=0,
         )
 
 
-def test_meta_contract_fails_loudly(spark, trained):
+def test_meta_contract_fails_loudly(spark, trained, tmp_path_factory):
     merges, words = trained
     with pytest.raises(ValueError, match="not a tokenizer artifact"):
-        read_tokenizer(spark, tempfile.mkdtemp(prefix="tok-empty-"))
-    path = tempfile.mkdtemp(prefix="tok-v-") + "/bpe"
+        read_tokenizer(spark, str(tmp_path_factory.mktemp("tok-empty-")))
+    path = str(tmp_path_factory.mktemp("tok-v-")) + "/bpe"
     write_tokenizer(spark, path, words, merges, byte_fallback=True)
     meta_path = os.path.join(path, "_META.json")
     meta = json.load(open(meta_path))
@@ -109,7 +108,7 @@ def test_meta_contract_fails_loudly(spark, trained):
         read_tokenizer(spark, path)
     json.dump(meta, open(meta_path, "w"))
     # byte_fallback claimed but block missing
-    path2 = tempfile.mkdtemp(prefix="tok-nb-") + "/bpe"
+    path2 = str(tmp_path_factory.mktemp("tok-nb-")) + "/bpe"
     write_tokenizer(spark, path2, words, merges, byte_fallback=False)
     m2 = json.load(open(os.path.join(path2, "_META.json")))
     json.dump({**m2, "byte_fallback": True},
@@ -118,7 +117,7 @@ def test_meta_contract_fails_loudly(spark, trained):
         read_tokenizer(spark, path2)
 
 
-def test_schemed_path_routes_meta_through_hadoop_fs(spark, trained):
+def test_schemed_path_routes_meta_through_hadoop_fs(spark, trained, tmp_path_factory):
     """A URI-scheme'd artifact path (file:// standing in for s3a://,
     hdfs://) routes _META.json through the Hadoop FileSystem API, so
     the meta lands on the SAME filesystem as the parquet tables and
@@ -126,7 +125,7 @@ def test_schemed_path_routes_meta_through_hadoop_fs(spark, trained):
     local paths keep direct open() (pinned by the other tests: no .crc
     sidecars, hand-editable meta)."""
     merges, words = trained
-    local = tempfile.mkdtemp(prefix="tok-fs-") + "/bpe"
+    local = str(tmp_path_factory.mktemp("tok-fs-")) + "/bpe"
     path = "file://" + local
     write_tokenizer(spark, path, words, merges, byte_fallback=True)
     assert os.path.exists(os.path.join(local, "_META.json"))
