@@ -250,6 +250,7 @@ class RunStore:
                     {"runs": runs, "mark": rec["mark"] if mark is None else mark},
                     f,
                     default=str,
+                    separators=(",", ":"),
                 )
             os.replace(tmp, self._record_path)  # atomic on POSIX
 
