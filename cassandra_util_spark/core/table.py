@@ -17,7 +17,7 @@ merge and scales linearly with executors (AQE splits skewed keys).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -163,18 +163,3 @@ class KeyedTable:
 
     def with_df(self, df: DataFrame) -> "KeyedTable":
         return KeyedTable(df, self.meta, self.name)
-
-
-@dataclass
-class Catalog:
-    """Name → KeyedTable registry (the engine's tiny catalog; retention policy
-    and key layout are catalog properties here, not DDL)."""
-
-    tables: dict[str, KeyedTable] = field(default_factory=dict)
-
-    def register(self, table: KeyedTable) -> KeyedTable:
-        self.tables[table.name] = table
-        return table
-
-    def __getitem__(self, name: str) -> KeyedTable:
-        return self.tables[name]

@@ -85,17 +85,6 @@ def exact_dedup(
     )
 
 
-def duplicate_clusters(df: DataFrame, id_col: str, content_cols: list[str]) -> DataFrame:
-    """(digest, n_copies, keep_id) per duplicated content — the audit view."""
-    digest = _digest_for(df, content_cols)
-    return (
-        df.withColumn("digest", digest)
-        .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_copies") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Shingling
 # ---------------------------------------------------------------------------

@@ -120,79 +120,3 @@ def histogram_percentiles(
         )
         ps = row if ps is None else ps.unionByName(row)
     return ps
-
-
-def equi_width_histogram_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    lo: float,
-    hi: float,
-    bins: int = 256,
-) -> DataFrame:
-    """Per-group histograms in one pass: (grp, bin, cnt), at most
-    |groups| × bins rows.  Same clamping and merge law as the ungrouped
-    form."""
-    if not lo < hi:
-        raise ValueError(f"need lo < hi, got [{lo}, {hi})")
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2, got {bins}")
-    v = F.col(value_col).cast("double")
-    raw = F.floor((v - F.lit(float(lo))) / F.lit(float(hi - lo)) * F.lit(bins))
-    b = F.least(F.lit(bins - 1), F.greatest(F.lit(0), raw)).cast("bigint")
-    return (
-        df.select(F.col(group_col).alias("grp"), b.alias("bin"))
-        .groupBy("grp", "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def histogram_percentiles_grouped(
-    hist: DataFrame,
-    percentiles: Sequence[float],
-    lo: float,
-    hi: float,
-    bins: int = 256,
-) -> DataFrame:
-    """Per-group percentile read-off — one plan for ALL groups and ALL
-    requested percentiles (explode the p-list, rank eligible bins per
-    (group, p), interpolate the first).  The windows run over
-    |groups| × bins rows, never data.  Output: (grp, p, value)."""
-    from pyspark.sql import Window
-
-    for p in percentiles:
-        if not 0.0 < p < 1.0:
-            raise ValueError(f"percentiles must be in (0,1), got {p}")
-    width = (hi - lo) / bins
-    wc = Window.partitionBy("grp").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(wc))
-    totals = hist.groupBy("grp").agg(F.sum("cnt").alias("n"))
-    pexp = (
-        cum.join(totals, "grp")
-        .withColumn("p", F.explode(F.array(*[F.lit(float(p)) for p in percentiles])))
-        .withColumn("target", F.ceil(F.col("p") * F.col("n")).cast("bigint"))
-        .filter(F.col("cum") >= F.col("target"))
-    )
-    wr = Window.partitionBy("grp", "p").orderBy("bin")
-    return (
-        pexp.withColumn("__r", F.row_number().over(wr))
-        .filter(F.col("__r") == 1)
-        .select(
-            "grp",
-            "p",
-            F.round(
-                F.lit(float(lo))
-                + (
-                    F.col("bin").cast("double")
-                    + (
-                        (F.col("target") - (F.col("cum") - F.col("cnt"))).cast("double")
-                        / F.col("cnt")
-                    )
-                )
-                * F.lit(float(width)),
-                4,
-            ).alias("value"),
-        )
-    )

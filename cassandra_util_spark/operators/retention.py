@@ -180,38 +180,3 @@ class RetentionJob:
             backup_path=backup_written,
             committed_version=committed,
         )
-
-
-def restore_from_backup(
-    spark,
-    store: SnapshotStore,
-    backup_path: str,
-) -> DataFrame:
-    """Un-delete drill: the current snapshot plus every backed-up convicted
-    row, LWW-merged back into the pre-retention view — the recovery path
-    the deleted-records sink exists for (BackupSinkForDeletingCompaction's
-    whole purpose is that deletion is REVERSIBLE until the backup is
-    discarded; DeletedRecordsSinkSpec.scala's write-then-delete round trip).
-
-    The merge uses the store's recorded TableMeta, so re-run retention jobs
-    that appended the same conviction twice (at-least-once backup append)
-    collapse to one row — restore is idempotent.  Restoring without a
-    writetime column falls back to key-dedup, matching merge_snapshots.
-
-    Scale: one key shuffle (the LWW window), identical to any compaction
-    merge; the backup dir streams in as a normal multi-file scan.
-    """
-    from cassandra_util_spark.operators.merge import merge_snapshots
-
-    meta = store.read_meta()
-    if meta is None:
-        raise ValueError(
-            f"store at {store.root} has no recorded TableMeta; restore needs "
-            "the key layout to merge backup rows deterministically"
-        )
-    version = store.current_version()
-    if version is None:
-        raise ValueError(f"store at {store.root} has no committed snapshot")
-    live = store.read(spark, version)
-    backed_up = spark.read.parquet(backup_path)
-    return merge_snapshots([live, backed_up], meta)

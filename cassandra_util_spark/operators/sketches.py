@@ -272,46 +272,6 @@ def hll_estimate_grouped(registers: DataFrame, p: int = 9) -> DataFrame:
     )
 
 
-def hll_union(*register_tables: DataFrame) -> DataFrame:
-    """Union of HLL sketches: element-wise register max — the lossless
-    merge (HLL's defining property: sketch(A ∪ B) == max-merge of
-    sketch(A), sketch(B), exactly)."""
-    from functools import reduce
-
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    unioned = reduce(DataFrame.unionByName, register_tables)
-    return unioned.groupBy("bucket").agg(F.max("register").alias("register"))
-
-
-def hll_intersect_estimate(
-    regs_a: DataFrame, regs_b: DataFrame, p: int = 9
-) -> DataFrame:
-    """|A ∩ B| by inclusion-exclusion over HLL estimates:
-    est(A) + est(B) − est(A ∪ B).  Unlike union, intersection has no
-    lossless sketch form — the error compounds (can even go negative for
-    near-disjoint sets; clamped at 0), which is the documented limit of
-    cardinality sketches, not a defect.  Output: 1 row with all four
-    numbers so the caller sees the arithmetic."""
-    a = hll_estimate(regs_a, p).select(F.col("estimate").alias("est_a"))
-    b = hll_estimate(regs_b, p).select(F.col("estimate").alias("est_b"))
-    u = hll_estimate(hll_union(regs_a, regs_b), p).select(
-        F.col("estimate").alias("est_union")
-    )
-    return (
-        a.crossJoin(b)
-        .crossJoin(u)
-        .select(
-            "est_a",
-            "est_b",
-            "est_union",
-            F.greatest(
-                F.lit(0.0), F.round(F.col("est_a") + F.col("est_b") - F.col("est_union"), 4)
-            ).alias("est_intersection"),
-        )
-    )
-
-
 def cm_join_size_estimate(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     """Equi-join cardinality estimate from two Count-Min sketches built on
     the SAME (depth, width, seed): |A ⋈ B| ≈ min over hash rows of the
@@ -629,35 +589,6 @@ def _stats_from_counters(ca: list, cb: list, width: int) -> dict:
     }
 
 
-def plan_join_from_stores(
-    spark,
-    store_a,
-    store_b,
-    depth: int = 4,
-    width: int = 256,
-    broadcast_threshold_rows: int = 1_000_000,
-    skew_factor: int = 16,
-) -> DataFrame:
-    """:func:`plan_join`'s advisory computed from two PERSISTED sketch
-    stores — ZERO scans of either input table.
-
-    The stores are :class:`~cassandra_util_spark.sources.snapshots.
-    SnapshotStore` tables a ``stream_count_min_to_store`` query maintains
-    (or any committed ``count_min_build`` output); both must share
-    (depth, width) — the default mirrors the streaming builder's — and a
-    shape mismatch raises.  This is the actual 100 TB planning pattern:
-    the sketches are maintained incrementally as data lands, and the join
-    decision for tomorrow's pipeline run costs two bounded reads of
-    ≤ depth × width rows, not a pass over either table.  Advice values and
-    semantics are identical to :func:`plan_join` (the stats ladder is
-    shared code), so ``advice`` feeds the same executors."""
-    ca = _collect_cm_counters(store_a.read(spark), depth, width)
-    cb = _collect_cm_counters(store_b.read(spark), depth, width)
-    st = _stats_from_counters(ca, cb, width)
-    advice = _join_advice(st, broadcast_threshold_rows, skew_factor)
-    return _advice_row(spark, st, advice)
-
-
 def _join_advice(st: dict, broadcast_threshold_rows: int, skew_factor: int) -> str:
     """The advice ladder, shared by plan_join (reports) and advised_join
     (executes) so the two can never disagree."""
@@ -719,34 +650,6 @@ def advised_join(
                            broadcast_threshold_rows, max_salt_buckets)
 
 
-def advised_join_from_stores(
-    a: DataFrame,
-    b: DataFrame,
-    key_col: str,
-    store_a,
-    store_b,
-    how: str = "inner",
-    depth: int = 4,
-    width: int = 256,
-    broadcast_threshold_rows: int = 1_000_000,
-    skew_factor: int = 16,
-    max_salt_buckets: int = 64,
-) -> DataFrame:
-    """:func:`advised_join` with the plan decided from two PERSISTED
-    sketch stores (:func:`plan_join_from_stores`) — the join pays ZERO
-    planning scans: the stream already maintained the sketches, so routing
-    ``a ⨝ b`` costs two bounded store reads plus the join itself.  The
-    stores must hold CM sketches of the SAME key columns this call joins
-    on (and the same depth/width), which the caller owns — a sketch of a
-    different column routes the join suboptimally but never incorrectly
-    (every branch is row-identical by construction)."""
-    ca = _collect_cm_counters(store_a.read(a.sparkSession), depth, width)
-    cb = _collect_cm_counters(store_b.read(b.sparkSession), depth, width)
-    st = _stats_from_counters(ca, cb, width)
-    return _execute_advice(a, b, key_col, how, st, skew_factor,
-                           broadcast_threshold_rows, max_salt_buckets)
-
-
 def _execute_advice(
     a: DataFrame,
     b: DataFrame,
@@ -794,14 +697,6 @@ def _execute_advice(
     else:
         out = a.join(b, key_col, how)
     return out.select(*out_cols)
-
-
-def hll_estimate_from_store(store, spark, p: int = 9) -> DataFrame:
-    """Cardinality estimate straight off a stream-maintained HLL register
-    store (``stream_hll_to_store``) — the gate-from-store pattern for
-    distinct counts: consumers never rescan the stream, they read ≤ 2^p
-    register rows and run the exact-integer harmonic estimate."""
-    return hll_estimate(store.read(spark), p)
 
 
 # ---------------------------------------------------------------------------

@@ -113,12 +113,6 @@ def quality_score(col: Column) -> Column:
     )
 
 
-def lang_marker_hits(col: Column, lang: str) -> Column:
-    toks = tokens(F.lower(col))
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*markers)))
-
-
 def _marker_hits_of(toks: Column, lang: str) -> Column:
     markers = LANG_MARKERS[lang]
     return F.size(F.filter(toks, lambda t: t.isin(*markers)))
@@ -587,22 +581,6 @@ def retrieval_metrics(
     )
 
 
-def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One-pass profile: counts, fingerprint, quality, language."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.length(t).alias("n_chars"),
-        whitespace_token_count(t).alias("n_tokens"),
-        bpe_token_estimate(t).alias("bpe_tokens"),
-        fingerprint(t).alias("fingerprint"),
-        F.round(punct_ratio(t), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("lang_pred"),
-    )
-
-
 def commonness_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document corpus-commonness — the exactly-reproducible surrogate
     for the LM-perplexity quality filter (CCNet's KenLM gate): documents of
@@ -905,60 +883,6 @@ def adaptive_length_filter(
     )
 
 
-def compression_ratio(
-    df: DataFrame, id_col: str, text_col: str, level: int = 6
-) -> DataFrame:
-    """Per-document zlib compression ratio — the repetitiveness signal
-    (RefinedWeb/Gopher family) that n-gram fractions miss: machine-generated
-    and template text compresses far below prose, so a low ratio flags
-    boilerplate even when no single n-gram dominates.
-
-    Output: (id, n_bytes, n_compressed, ratio) with ratio =
-    compressed/uncompressed UTF-8 bytes rounded to 6dp; empty documents get
-    ratio 1.0.  Deterministic for a fixed zlib level.
-
-    Python-side justification (the repo's UDF rule): DEFLATE is a stateful
-    LZ77+Huffman coder with no Catalyst expression form — this is the
-    genuinely-non-expressible case, so it runs Arrow-batched through
-    ``mapInPandas`` (one Python call per batch, zlib in C per row),
-    map-only with no shuffle at any scale.  There is deliberately NO
-    contract query: DuckDB has no SQL zlib, so a registry entry could only
-    get the weaker rows-only check — the operator is instead pinned by
-    direct-zlib parity tests.
-    """
-    if not 0 <= level <= 9:
-        raise ValueError(f"zlib level must be in [0, 9], got {level}")
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, n_bytes bigint, n_compressed bigint"
-
-    def _measure(batches):
-        import zlib
-
-        for pdf in batches:
-            raw = pdf[text_col].fillna("").map(lambda t: t.encode("utf-8"))
-            yield type(pdf)(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": raw.map(len),
-                    "n_compressed": raw.map(
-                        lambda b: len(zlib.compress(b, level))
-                    ),
-                }
-            )
-
-    return (
-        df.select(id_col, text_col)
-        .mapInPandas(_measure, out_schema)
-        .withColumn(
-            "ratio",
-            F.when(F.col("n_bytes") == 0, F.lit(1.0)).otherwise(
-                F.round(F.col("n_compressed") / F.col("n_bytes").cast("double"), 6)
-            ),
-        )
-    )
-
-
 def bigram_lm_score(
     df: DataFrame,
     reference: DataFrame,
@@ -1094,63 +1018,6 @@ def pii_report(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         "pii_type",
         F.col("n_matches").cast("bigint").alias("n_matches"),
         F.col("n_docs").cast("bigint").alias("n_docs"),
-    )
-
-
-def adaptive_length_report_hist(
-    df: DataFrame,
-    strata_col: str,
-    length_col: str,
-    id_col: str,
-    lo_p: float = 0.05,
-    hi_p: float = 0.95,
-    hist_lo: float = 0.0,
-    hist_hi: float = 4096.0,
-    bins: int = 512,
-) -> DataFrame:
-    """:func:`adaptive_length_report`'s extreme-cardinality path, now code
-    (the docstring lever): per-stratum [lo_p, hi_p] bounds read off
-    per-stratum equi-width HISTOGRAMS instead of exact percentiles —
-    no per-stratum sort, a |strata| × bins mergeable count table, bounds
-    within one bin width of the ceil(p·n)-th order statistic (the
-    histogram-module guarantee).  Same output schema as the exact form:
-    (stratum, lo, hi, n_docs, n_kept)."""
-    from cassandra_util_spark.operators.histogram import (
-        equi_width_histogram_grouped,
-        histogram_percentiles_grouped,
-    )
-
-    hist = equi_width_histogram_grouped(
-        df, strata_col, length_col, hist_lo, hist_hi, bins
-    )
-    pct = histogram_percentiles_grouped(hist, [lo_p, hi_p], hist_lo, hist_hi, bins)
-    bounds = (
-        pct.groupBy("grp")
-        .pivot("p", [lo_p, hi_p])
-        .agg(F.first("value"))
-        .select(
-            F.col("grp").alias(strata_col),
-            F.col(f"`{lo_p}`").alias("lo"),
-            F.col(f"`{hi_p}`").alias("hi"),
-        )
-    )
-    counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n_docs"))
-    kept = (
-        df.join(F.broadcast(bounds), strata_col)
-        .filter(F.col(length_col).between(F.col("lo"), F.col("hi")))
-        .groupBy(strata_col)
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    return (
-        counts.join(bounds, strata_col)
-        .join(kept, strata_col, "left")
-        .select(
-            strata_col,
-            "lo",
-            "hi",
-            "n_docs",
-            F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
-        )
     )
 
 

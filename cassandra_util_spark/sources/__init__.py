@@ -4,7 +4,6 @@ from cassandra_util_spark.sources.bucketed import (
     selected_buckets,
     write_bucketed,
 )
-from cassandra_util_spark.sources.shards import read_epoch_shard, write_epoch_shards
 from cassandra_util_spark.sources.ivf_index import probe_ivf_index, write_ivf_index
 from cassandra_util_spark.sources.runs import RunStore, size_tiered_plan
 from cassandra_util_spark.sources.snapshots import SnapshotStore
@@ -22,6 +21,4 @@ __all__ = [
     "join_is_colocated",
     "selected_buckets",
     "write_bucketed",
-    "read_epoch_shard",
-    "write_epoch_shards",
 ]

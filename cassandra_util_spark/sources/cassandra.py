@@ -1,28 +1,24 @@
 """Cassandra-backed KeyedTable via the Spark Cassandra Connector — the bulk
-read/write path (BASELINE.json: "Spark Cassandra Connector for bulk
-operations").
+read path (BASELINE.json: "Spark Cassandra Connector for bulk operations").
 
-The connector jar is not in this container, so everything here degrades to a
-clear ImportError-style failure until ``spark.jars.packages`` includes
-``com.datastax.spark:spark-cassandra-connector_2.13``; the call shapes and
+The connector jar is not bundled, so a read fails with
+:class:`ConnectorUnavailable` until ``spark.jars.packages`` includes
+``com.datastax.spark:spark-cassandra-connector_2.13``; the call shape and
 option names are the connector's public, documented surface:
-
-- reads: ``spark.read.format("org.apache.spark.sql.cassandra")``
-  with ``keyspace``/``table`` options; the connector pushes key predicates
-  down to CQL token ranges and exposes ``writetime(col)`` through
-  ``spark.cassandra.read.*`` options;
-- writes: ``df.write.format("org.apache.spark.sql.cassandra")``; writetime
-  set via ``spark.cassandra.output.timestamp`` (the USING TIMESTAMP analog);
-- locality: ``repartitionByCassandraReplica`` / DirectJoin arrive with the
-  connector's Catalyst extensions
-  (``spark.sql.extensions=com.datastax.spark.connector.CassandraSparkExtensions``).
+``spark.read.format("org.apache.spark.sql.cassandra")`` with
+``keyspace``/``table`` options; the connector pushes key predicates down to
+CQL token ranges and exposes ``writetime(col)`` through
+``spark.cassandra.read.*`` options.  Locality
+(``repartitionByCassandraReplica`` / DirectJoin) arrives with the
+connector's Catalyst extensions
+(``spark.sql.extensions=com.datastax.spark.connector.CassandraSparkExtensions``).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
 
@@ -48,19 +44,6 @@ def writetime_projection(column: str) -> str:
     if not column.isidentifier():
         raise ValueError(f"writetime_of must be a column identifier, got {column!r}")
     return f"writetime({column})"
-
-
-def write_options(
-    keyspace: str, table: str, writetime_us: Optional[int] = None
-) -> dict[str, str]:
-    """Writer options; ``writetime_us`` maps to
-    ``spark.cassandra.output.timestamp`` (the USING TIMESTAMP analog)."""
-    opts = {"keyspace": keyspace, "table": table}
-    if writetime_us is not None:
-        if int(writetime_us) < 0:
-            raise ValueError("writetime_us must be non-negative microseconds")
-        opts["spark.cassandra.output.timestamp"] = str(int(writetime_us))
-    return opts
 
 
 # Smoke recipe when a connector jar IS present (not in this container):
@@ -114,21 +97,3 @@ def read_cassandra_table(
         "writetime" if writetime_of else None,
     )
     return KeyedTable(df, meta, f"{keyspace}.{table}")
-
-
-def write_cassandra_table(
-    df: DataFrame,
-    keyspace: str,
-    table: str,
-    writetime_us: Optional[int] = None,
-    mode: str = "append",
-) -> None:
-    """Bulk write; ``writetime_us`` maps to spark.cassandra.output.timestamp
-    (USING TIMESTAMP for the whole write)."""
-    _check_connector(df.sparkSession)
-    (
-        df.write.format(CASSANDRA_FORMAT)
-        .options(**write_options(keyspace, table, writetime_us))
-        .mode(mode)
-        .save()
-    )

@@ -101,11 +101,10 @@ def _footer_schema(path: str) -> Optional[dict]:
         return None
 
 
-def _read(spark: SparkSession, paths: list[str], schema: Optional[dict]) -> DataFrame:
-    """One parquet scan over ``paths``: given ``schema`` it plans without a
-    Spark job; without it Spark infers the schema from a footer (one job)."""
-    reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
-    return reader.parquet(*paths)
+def _read(spark: SparkSession, paths: list[str], schema: dict) -> DataFrame:
+    """One parquet scan over ``paths`` with the given ``schema``, planned
+    without a Spark job."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
 
 
 def size_tiered_plan(

@@ -16,8 +16,8 @@ schema its parquet footer records, written by ``commit`` after the data and
 before the pointer swap.  ``read`` hands it to the reader, so reading a
 snapshot plans without a Spark job instead of inferring the schema from a
 footer (one job per read).  Spark's listing skips ``_``-prefixed files, so
-the sidecar is invisible to plain parquet readers; a version without one
-(written before sidecars existed) reads by inference, as it always did.
+the sidecar is invisible to plain parquet readers.  A version without one
+does not read: ``read`` raises, naming the store and the version.
 """
 
 from __future__ import annotations
@@ -150,8 +150,9 @@ class SnapshotStore:
         historical ``version`` (as listed by :meth:`versions`).  Old
         versions are immutable once the pointer moves past them, so a
         version read is a consistent point-in-time view for as long as
-        vacuum retention keeps it.  The version's ``_SCHEMA.json`` sidecar,
-        when present, is the read's schema, so planning runs no Spark job."""
+        vacuum retention keeps it.  The version's ``_SCHEMA.json`` sidecar
+        is the read's schema, so planning runs no Spark job; a version
+        without one raises FileNotFoundError."""
         if version is not None:
             if version not in self.versions():
                 raise FileNotFoundError(
@@ -167,7 +168,10 @@ class SnapshotStore:
             with open(os.path.join(path, _SCHEMA)) as f:
                 schema = json.load(f)
         except FileNotFoundError:
-            schema = None
+            raise FileNotFoundError(
+                f"snapshot store {self.root} version {os.path.basename(path)!r} "
+                f"has no {_SCHEMA}"
+            ) from None
         return _read(spark, [path], schema)
 
     def vacuum(self, keep_last: int = 1) -> list[str]:

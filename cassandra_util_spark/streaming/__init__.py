@@ -23,7 +23,6 @@ from cassandra_util_spark.streaming.ingest import (
 )
 from cassandra_util_spark.streaming.sketches import (
     stream_count_min_to_store,
-    stream_hll_to_store,
 )
 
 __all__ = [
@@ -37,7 +36,6 @@ __all__ = [
     "stream_count_min_to_store",
     "stream_counter_deltas",
     "stream_events",
-    "stream_hll_to_store",
     "stream_lsh_index",
     "stream_to_runstore",
     "stream_token_span_index",

@@ -291,41 +291,6 @@ def streaming_interval_join(
     return l.join(r, cond, "inner")
 
 
-def streaming_dedup_against(
-    stream: DataFrame,
-    reference: DataFrame,
-    content_cols: tuple[str, ...],
-) -> DataFrame:
-    """Streaming incremental dedup against a HISTORICAL store — the
-    streaming form of :func:`operators.dedup.dedup_against`: every
-    micro-batch anti-joins the static reference digest set, so records
-    whose content already exists in history never reach the sink.
-    Composes with :func:`streaming_dedup` (within-stream duplicates) the
-    same way the batch operators split the job.
-
-    ``reference`` is a STATIC DataFrame (the persisted digest table of the
-    historical corpus — one 32-byte digest per document, content never
-    re-read); a stream-static left-anti join is fully supported by
-    Structured Streaming, is stateless (nothing accumulates — the static
-    side is re-resolvable per batch, picking up reference refreshes on
-    restart), and broadcasts or shuffle-joins by AQE's choice exactly as
-    in batch.  Output matches batch ``dedup_against`` row-for-row on the
-    same inputs (pinned by test_streaming_dedup_against_matches_batch).
-    """
-    from cassandra_util_spark.operators.dedup import _digest_for
-
-    # digest derived PER SIDE (the batch dedup_against rule): a stream whose
-    # content column arrives binary while the reference stores string (or
-    # vice versa) must not silently cast bytes through a lossy UTF-8 decode
-    cols = list(content_cols)
-    ref = reference.select(_digest_for(reference, cols).alias("__digest")).distinct()
-    return (
-        stream.withColumn("__digest", _digest_for(stream, cols))
-        .join(ref, "__digest", "left_anti")
-        .drop("__digest")
-    )
-
-
 def streaming_apply_changelog(
     changes: DataFrame,
     base: DataFrame,

@@ -1,15 +1,14 @@
-"""Streaming sketch maintenance: fold each micro-batch's Count-Min / HLL
-sketch into a persisted sketch table — the mergeability story of
+"""Streaming sketch maintenance: fold each micro-batch's Count-Min sketch
+into a persisted sketch table — the mergeability story of
 ``operators.sketches`` made real on a stream.
 
-This is the 100 TB frequency/cardinality pattern: the raw stream is never
-re-scanned; each micro-batch contributes a bounded sketch (≤ depth × width
-rows for CM, ≤ 2^p for HLL) that MERGES algebraically into the persisted
-state (counter addition for CM, register max for HLL — the same laws the
-batch operators' union-merge tests pin).  Downstream consumers read the
+This is the 100 TB frequency pattern: the raw stream is never re-scanned;
+each micro-batch contributes a bounded sketch (≤ depth × width rows) that
+MERGES algebraically into the persisted state by counter addition (the law
+the batch operator's union-merge tests pin).  Downstream consumers read the
 persisted table for point estimates (``count_min_query``), heavy-hitter
-gates, join-size estimates (``cm_join_size_estimate``/``plan_join``), or
-cardinality (``hll_estimate``) without touching events at all.
+gates (``heavy_hitters_from_store``) or join-size estimates
+(``cm_join_size_estimate``) without touching events at all.
 
 Exactly-once: the replay guard of :mod:`.ingest`, with the applied
 ``app_id:batch_id`` riding in the snapshot pointer write
@@ -24,8 +23,8 @@ stream's version count — not just its per-batch compute — stays bounded.
 
 Reference anchor: the reference keeps per-sstable key-count estimates
 maintained incrementally as sstables flush (SSTableReader estimated keys);
-this generalizes that to full frequency/cardinality sketches maintained
-per micro-batch flush.
+this generalizes that to a full frequency sketch maintained per
+micro-batch flush.
 """
 
 from __future__ import annotations
@@ -38,7 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from typing import Optional
 
-from cassandra_util_spark.operators.sketches import count_min_build, hll_build
+from cassandra_util_spark.operators.sketches import count_min_build
 from cassandra_util_spark.sources.snapshots import SnapshotStore
 from cassandra_util_spark.streaming.ingest import _applied, _drain
 
@@ -171,45 +170,6 @@ def stream_count_min_to_store(
                 state.unionByName(delta)
                 .groupBy("row", "idx")
                 .agg(F.sum("c").alias("c"))
-            )
-        store.commit(delta, tag=f"{app_id}:{batch_id}")
-        store.vacuum(keep_last=retain_versions)
-
-    return _drain(
-        stream, checkpoint_dir, query_name,
-        lambda app: _applied(store.root, store.current_tag(), app), apply,
-        txn_app_id, available_now,
-    )
-
-
-def stream_hll_to_store(
-    stream: DataFrame,
-    store: SnapshotStore,
-    checkpoint_dir: str,
-    key_col: str,
-    p: int = 9,
-    seed: str = "hll",
-    available_now: bool = True,
-    query_name: str = "hll-sketch-ingest",
-    txn_app_id: Optional[str] = None,
-    retain_versions: int = 2,
-) -> StreamingQuery:
-    """Maintain a persisted HLL register table over a stream.
-
-    Register MAX is idempotent, so unlike CM this merge would tolerate a
-    replayed batch — the tag skip is kept anyway for one uniform protocol
-    (and to spare the no-op snapshot commit).
-    """
-
-    def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
-        delta = hll_build(batch_df, key_col, p, seed)
-        version = store.current_version()
-        if version is not None:
-            state = store.read(batch_df.sparkSession, version)
-            delta = (
-                state.unionByName(delta)
-                .groupBy("bucket")
-                .agg(F.max("register").alias("register"))
             )
         store.commit(delta, tag=f"{app_id}:{batch_id}")
         store.vacuum(keep_last=retain_versions)

@@ -1,10 +1,10 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""``ttl_counter``: a per-key TTL counter on applyInPandasWithState.
 
 The reference's TTL/expiration semantics map to per-key state with a timeout
-(SURVEY §2.8: "TTL ≈ per-key state timeout").  This operator maintains a
-live per-key counter keyed by event time and expires the key's state when no
-event arrives within ``ttl``, emitting a final tombstone row — the streaming
-analog of the late-TTL convictor deciding a key aged out.
+(SURVEY §2.8: "TTL ≈ per-key state timeout").  ``ttl_counter`` keeps a live
+per-key event counter and expires the key's state when no event arrives
+within ``ttl_seconds`` of event time, emitting a final tombstone row — the
+streaming analog of the late-TTL convictor deciding a key aged out.
 
 State size is O(distinct live keys), not O(events); the watermark bounds how
 long a silent key is retained, so state cannot grow without bound.
@@ -106,311 +106,6 @@ def ttl_counter(
             update,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-FUNNEL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("stage_reached", LongType(), False),  # 1-based
-        StructField("start_ms", LongType(), True),
-        StructField("end_ms", LongType(), True),
-        StructField("completed", BooleanType(), False),
-        StructField("abandoned", BooleanType(), False),
-    ]
-)
-
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("stage_idx", LongType(), False),  # stages completed so far
-        StructField("start_ms", LongType(), False),
-        StructField("last_stage_ms", LongType(), False),
-    ]
-)
-
-
-def funnel_detector(
-    events: DataFrame,
-    stages: tuple[str, ...],
-    timeout_seconds: int,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming ordered-sequence (CEP) detection: per key, advance a stage
-    machine through ``stages`` as events arrive; emit ONE row when the final
-    stage completes (completed=True, funnel start/end times) or when the
-    key's funnel times out mid-sequence (abandoned=True, stage reached) —
-    the live form of the batch ``funnel_counts`` operator.
-
-    State is O(1) per live key (stage index + two timestamps) — never the
-    event history.  Batches sort by event time before advancing, so the
-    detector matches the batch earliest-first recurrence EXACTLY when each
-    key's events arrive across micro-batches in event-time order
-    (test_streaming_funnel_matches_batch pins this); under cross-batch
-    disorder it degrades to arrival-order CEP semantics — the standard
-    streaming tradeoff, chosen over unbounded per-stage timestamp sets.
-    Abandonment fires on the EVENT-TIME watermark passing
-    last-progress + timeout, not wall clock — deterministic replay, like
-    every other clock in this engine.  One conversion per key per funnel
-    lifetime; completed keys clear their state.
-    """
-    n_stages = len(stages)
-    if n_stages < 2:
-        raise ValueError("a funnel needs at least 2 stages")
-    stage_of = {name: i for i, name in enumerate(stages)}
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            stage_idx, start_ms, last_ms = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "stage_reached": [stage_idx],
-                    "start_ms": [start_ms],
-                    "end_ms": [last_ms],
-                    "completed": [False],
-                    "abandoned": [True],
-                }
-            )
-            return
-        stage_idx, start_ms, last_ms = state.get if state.exists else (0, 0, 0)
-        done = False
-        for pdf in batches:
-            if done:
-                break
-            pdf = pdf.sort_values(ts_col, kind="mergesort")  # stable: ties keep order
-            ts_ms = (pd.to_datetime(pdf[ts_col]).astype("int64") // 1_000_000).tolist()
-            types = pdf[type_col].tolist()
-            for t_ms, etype in zip(ts_ms, types):
-                if stage_of.get(etype) != stage_idx:
-                    continue
-                if stage_idx > 0 and t_ms < last_ms:
-                    continue  # stage event predates previous stage: not a progression
-                if stage_idx == 0:
-                    start_ms = t_ms
-                stage_idx += 1
-                last_ms = t_ms
-                if stage_idx == n_stages:
-                    done = True
-                    break
-        if done:
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "stage_reached": [n_stages],
-                    "start_ms": [start_ms],
-                    "end_ms": [last_ms],
-                    "completed": [True],
-                    "abandoned": [False],
-                }
-            )
-        elif stage_idx > 0:
-            deadline_ms = last_ms + timeout_seconds * 1000
-            wm_ms = state.getCurrentWatermarkMs()
-            if wm_ms >= deadline_ms:
-                # The key's deadline already passed the event-time watermark —
-                # this happens when a stage>=1 key receives only NON-advancing
-                # events after its timeout elapsed, so hasTimedOut never fired
-                # for it this batch.  Re-arming with a timestamp <= watermark
-                # raises INVALID_TIMEOUT_TIMESTAMP (PySpark 4 GroupState) and
-                # fails the whole query; the correct semantics is the same as
-                # the timeout path: emit the abandonment row and drop state.
-                if state.exists:
-                    state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "stage_reached": [stage_idx],
-                        "start_ms": [start_ms],
-                        "end_ms": [last_ms],
-                        "completed": [False],
-                        "abandoned": [True],
-                    }
-                )
-            else:
-                state.update((stage_idx, start_ms, last_ms))
-                state.setTimeoutTimestamp(deadline_ms)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-ANOMALY_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("bucket_start_ms", LongType(), False),
-        StructField("n_events", LongType(), False),
-        StructField("z_scaled_1e4", LongType(), False),  # z * 1e4, rounded
-        StructField("anomalous", BooleanType(), False),
-    ]
-)
-
-ANOMALY_STATE_SCHEMA = StructType(
-    [
-        StructField("s1", LongType(), False),   # Σ count over closed buckets
-        StructField("s2", LongType(), False),   # Σ count² over closed buckets
-        StructField("h", LongType(), False),    # closed buckets
-        StructField("open_start_ms", LongType(), False),
-        StructField("open_n", LongType(), False),
-        StructField("max_closed_ms", LongType(), False),  # newest CLOSED bucket
-    ]
-)
-
-
-def streaming_anomalies(
-    events: DataFrame,
-    z_threshold: float = 2.0,
-    bucket_ms: int = 3_600_000,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Online per-key activity anomalies: the live form of the batch
-    ``activity_anomalies`` operator.  Per key the state holds exact integer
-    moments (Σn, Σn², #buckets) over CLOSED time buckets plus the one open
-    bucket — O(1) state per key, never event history.
-
-    A bucket closes when a later bucket's event arrives (or the key times
-    out); at close it is scored PREQUENTIALLY against the moments
-    accumulated so far (itself included, matching the batch formula's
-    self-inclusion) and then folded in.  This is the honest online
-    contract: the batch operator scores against ALL buckets including
-    future ones, which no stream can know — early buckets therefore score
-    against less history.  A planted burst after a stable baseline alerts
-    identically in both.
-
-    The z-score is emitted as an integer (z·10⁴ rounded) — the same
-    integer-export discipline as every other float frontier here.  Keys
-    with zero variance emit z=0, not 0/0.
-
-    Closed buckets are FINAL: the state tracks the newest closed bucket
-    start (``max_closed_ms``) and a cross-batch disorder fragment arriving
-    for a bucket at or before it is DROPPED — folding it into the moments
-    would count one real bucket twice (skewing s1/s2/h) and emit a
-    duplicate ``bucket_start_ms`` row with a fragment count (ADVICE r5).
-    This is the same finality a watermark gives windows: events behind the
-    close frontier don't reopen history.  Disordered buckets NEWER than the
-    frontier (between it and the open bucket) still close and score exactly
-    once.
-    """
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-
-        def close_bucket(s1, s2, h, start_ms, n):
-            # fold the closing bucket in, then score it against the updated
-            # moments (self-inclusive, like the batch population z)
-            s1 += n
-            s2 += n * n
-            h += 1
-            mean = s1 / h
-            var = s2 / h - mean * mean
-            z = (n - mean) / var**0.5 if var > 0 else 0.0
-            return s1, s2, h, z
-
-        if state.hasTimedOut:
-            s1, s2, h, start_ms, n, _max_closed = state.get
-            state.remove()
-            if n > 0:
-                s1, s2, h, z = close_bucket(s1, s2, h, start_ms, n)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "bucket_start_ms": [start_ms],
-                        "n_events": [n],
-                        "z_scaled_1e4": [int(round(z * 1e4))],
-                        "anomalous": [abs(z) >= z_threshold],
-                    }
-                )
-            return
-
-        s1, s2, h, open_start, open_n, max_closed = (
-            state.get if state.exists else (0, 0, 0, -1, 0, -1)
-        )
-        out_rows: list[dict] = []
-        last_ms = 0
-        for pdf in batches:
-            ts_ms = (pd.to_datetime(pdf[ts_col]).astype("int64") // 1_000_000)
-            buckets = (ts_ms // bucket_ms) * bucket_ms
-            last_ms = max(last_ms, int(ts_ms.max()))
-            for b, cnt in buckets.value_counts().sort_index().items():
-                b = int(b)
-                if b == open_start:
-                    open_n += int(cnt)
-                    continue
-                if open_start >= 0 and b < open_start:
-                    # Cross-batch disorder: an in-watermark event arrived for
-                    # a bucket OLDER than the open one (sorting is only
-                    # intra-batch).  Behind the close frontier it's a
-                    # fragment of an ALREADY-closed-and-scored bucket —
-                    # drop it (folding would double-count the bucket in the
-                    # moments and emit a duplicate output row).  Ahead of
-                    # the frontier, close/score bucket b exactly once
-                    # without touching the open bucket.
-                    if b <= max_closed:
-                        continue
-                    s1, s2, h, z = close_bucket(s1, s2, h, b, int(cnt))
-                    max_closed = b
-                    out_rows.append(
-                        {
-                            "user_id": user_id,
-                            "bucket_start_ms": b,
-                            "n_events": int(cnt),
-                            "z_scaled_1e4": int(round(z * 1e4)),
-                            "anomalous": abs(z) >= z_threshold,
-                        }
-                    )
-                    continue
-                if open_start >= 0 and open_n > 0 and b > open_start:
-                    s1, s2, h, z = close_bucket(s1, s2, h, open_start, open_n)
-                    max_closed = max(max_closed, open_start)
-                    out_rows.append(
-                        {
-                            "user_id": user_id,
-                            "bucket_start_ms": open_start,
-                            "n_events": open_n,
-                            "z_scaled_1e4": int(round(z * 1e4)),
-                            "anomalous": abs(z) >= z_threshold,
-                        }
-                    )
-                open_start, open_n = b, int(cnt)
-        state.update((s1, s2, h, open_start, open_n, max_closed))
-        state.setTimeoutTimestamp(last_ms + 2 * bucket_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=ANOMALY_OUTPUT_SCHEMA,
-            stateStructType=ANOMALY_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

@@ -282,25 +282,16 @@ def test_connector_option_construction_without_jar():
     from cassandra_util_spark.sources.cassandra import (
         CASSANDRA_FORMAT,
         read_options,
-        write_options,
         writetime_projection,
     )
 
     assert CASSANDRA_FORMAT == "org.apache.spark.sql.cassandra"
     assert read_options("ks", "events") == {"keyspace": "ks", "table": "events"}
     assert writetime_projection("payload") == "writetime(payload)"
-    assert write_options("ks", "t") == {"keyspace": "ks", "table": "t"}
-    assert write_options("ks", "t", 1_700_000_000_000_000) == {
-        "keyspace": "ks",
-        "table": "t",
-        "spark.cassandra.output.timestamp": "1700000000000000",
-    }
     with pytest.raises(ValueError, match="identifier"):
         writetime_projection("payload); DROP TABLE x")
     with pytest.raises(ValueError, match="required"):
         read_options("", "t")
-    with pytest.raises(ValueError, match="non-negative"):
-        write_options("ks", "t", -5)
 
 
 def test_snapshot_time_travel_read(spark, tmp_path):
@@ -330,9 +321,9 @@ def test_snapshot_time_travel_read(spark, tmp_path):
 
 def test_cassandra_connector_format_registration_smoke(spark):
     """VERDICT r4 task 5: when a Spark Cassandra Connector jar IS on the
-    classpath, exercise read_options/write_options against the REAL format
-    registration (reader/writer construction + option plumbing — no live
-    cluster needed for that layer); otherwise skip with the environmental
+    classpath, exercise read_options against the REAL format registration
+    (reader construction + option plumbing — no live cluster needed for
+    that layer); otherwise skip with the environmental
     reason.  In this container the jar is absent and unresolvable offline:
     ivy resolution of com.datastax.spark:spark-cassandra-connector_2.13:3.5.1
     fails with 'unresolved dependency ... not found' (no network, no local
@@ -340,7 +331,6 @@ def test_cassandra_connector_format_registration_smoke(spark):
     from cassandra_util_spark.sources.cassandra import (
         CASSANDRA_FORMAT,
         read_options,
-        write_options,
     )
 
     try:
@@ -356,13 +346,8 @@ def test_cassandra_connector_format_registration_smoke(spark):
 
     # connector present: the documented option surface must be accepted by
     # the real DataSource (reader construction validates options lazily;
-    # load() would need a cluster, so stop at writer/reader wiring)
+    # load() would need a cluster, so stop at reader wiring)
     reader = spark.read.format(CASSANDRA_FORMAT).options(
         **read_options("ks", "events")
     )
     assert reader is not None
-    df = spark.createDataFrame([(1,)], "pk bigint")
-    writer = df.write.format(CASSANDRA_FORMAT).options(
-        **write_options("ks", "events", writetime_us=1_700_000_000_000_000)
-    )
-    assert writer is not None

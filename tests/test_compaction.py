@@ -7,7 +7,6 @@ purge — is pinned as pure DataFrame algebra.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from cassandra_util_spark.operators.merge import apply_changelog, compact_with_tombstones
 
@@ -117,45 +116,3 @@ def test_changelog_single_shuffle(spark):
     )
     plan = apply_changelog(base, changes, ["k"], "writetime", "op")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 2  # one hash partition per input branch of the union, same key
-
-
-def test_restore_from_backup_round_trip(spark, tmp_path):
-    """Retention → restore = identity: the backup sink holds exactly enough
-    to un-delete, and a double-appended backup (at-least-once) restores
-    idempotently."""
-    from pyspark.sql import functions as F
-
-    from cassandra_util_spark.core.table import KeyedTable, TableMeta
-    from cassandra_util_spark.operators.convictors import create_convictor
-    from cassandra_util_spark.operators.retention import RetentionJob, restore_from_backup
-    from cassandra_util_spark.sources.snapshots import SnapshotStore
-
-    src = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("writetime", F.unix_micros(F.col("ts").cast("timestamp")))
-        .select("user_id", "event_id", "event_type", "writetime")
-    )
-    meta = TableMeta(("user_id",), ("event_id",), "writetime")
-    store = SnapshotStore(str(tmp_path / "store"))
-    store.commit(src, meta=meta)
-    table = KeyedTable(spark.read.parquet(store.current_path()), meta, "events")
-
-    rules = spark.createDataFrame(
-        [("drop_half", "user_id", ("1", "75"))],
-        "rulename string, column string, range struct<lo:string,hi:string>",
-    )
-    conv = create_convictor("rule_based_deletion", table, rules=rules)
-    backup = str(tmp_path / "backup")
-    stats = RetentionJob(table, conv, backup_path=backup, store=store).run()
-    assert stats.convicted > 0 and stats.committed_version is not None
-
-    restored = restore_from_backup(spark, store, backup)
-    orig = {tuple(r) for r in src.collect()}
-    got = {tuple(r) for r in restored.select(*src.columns).collect()}
-    assert got == orig  # full round trip
-
-    # idempotence under duplicate backup append (at-least-once semantics)
-    spark.read.parquet(backup).write.mode("append").parquet(backup)
-    again = {tuple(r) for r in restore_from_backup(spark, store, backup)
-             .select(*src.columns).collect()}
-    assert again == orig

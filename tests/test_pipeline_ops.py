@@ -28,19 +28,6 @@ def test_exact_dedup_collapses_copies(spark, docs):
     assert out.agg(F.max("doc_id")).collect()[0][0] < 10_000  # lowest id survives
 
 
-def test_duplicate_clusters(spark, docs):
-    from cassandra_util_spark.operators.dedup import duplicate_clusters
-
-    d = docs.select("doc_id", "text").limit(10)
-    tripled = d.unionByName(
-        d.select((F.col("doc_id") + 100).alias("doc_id"), "text")
-    ).unionByName(d.select((F.col("doc_id") + 200).alias("doc_id"), "text"))
-    clusters = duplicate_clusters(tripled, "doc_id", ["text"]).collect()
-    assert len(clusters) == 10
-    assert all(r["n_copies"] == 3 for r in clusters)
-    assert all(r["keep_id"] < 100 for r in clusters)
-
-
 def test_minhash_recall_vs_exact(spark, docs):
     """LSH candidates must recover the exact-jaccard near-dup pairs (the
     planted dups sit at >=0.8 true jaccard — banded MinHash at this setting
@@ -1431,43 +1418,6 @@ def test_winnowing_pairs_df_cap_and_validation(spark):
         winnowing_pairs(d, "doc_id", "text", min_shared=0)
 
 
-def test_compression_ratio_matches_direct_zlib(spark, docs):
-    """The Arrow-batched operator agrees byte-for-byte with direct zlib on
-    every corpus document."""
-    import zlib
-
-    from cassandra_util_spark.operators.text import compression_ratio
-
-    got = {
-        r["doc_id"]: (r["n_bytes"], r["n_compressed"], r["ratio"])
-        for r in compression_ratio(docs, "doc_id", "text").collect()
-    }
-    for r in docs.select("doc_id", "text").collect():
-        raw = r["text"].encode("utf-8")
-        comp = len(zlib.compress(raw, 6))
-        want_ratio = 1.0 if not raw else round(comp / len(raw), 6)
-        assert got[r["doc_id"]] == (len(raw), comp, want_ratio)
-
-
-def test_compression_ratio_flags_repetitive_text(spark):
-    from cassandra_util_spark.operators.text import compression_ratio
-
-    rows = [
-        (1, "buy now click here " * 200),                      # template spam
-        (2, " ".join(f"w{i}x{i*7%13}" for i in range(800))),   # diverse tokens
-        (3, ""),                                               # empty guard
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {r["doc_id"]: r["ratio"] for r in
-           compression_ratio(df, "doc_id", "text").collect()}
-    assert got[1] < 0.1 < got[2]
-    assert got[3] == 1.0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        compression_ratio(df, "doc_id", "text", level=11)
-
-
 def test_winnowing_fast_mode_guarantee_and_validation(spark):
     """xxhash64 mode selects different minima but keeps the detection
     guarantee: the planted shared run still pairs."""
@@ -2248,27 +2198,6 @@ def test_hll_grouped_estimates_accurate(spark):
         assert abs(est[k] - exact[k]) / exact[k] < 0.15, (k, est[k], exact[k])
 
 
-def test_hll_union_exact_and_intersection_estimate(spark):
-    from cassandra_util_spark.operators.sketches import (
-        hll_build,
-        hll_intersect_estimate,
-        hll_union,
-    )
-
-    # sf0.01: 150 distinct users (sf0.001 has only 15)
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    a = ev.filter(F.col("user_id") <= 100)   # users 1..100
-    b = ev.filter(F.col("user_id") >= 51)    # users 51..150; overlap = 50
-    ra, rb = hll_build(a, "user_id", p=9), hll_build(b, "user_id", p=9)
-    # union merge is LOSSLESS: equals the sketch of the union
-    direct = hll_build(ev.filter((F.col("user_id") <= 100) | (F.col("user_id") >= 51)), "user_id", p=9)
-    assert {tuple(r) for r in hll_union(ra, rb).collect()} == {
-        tuple(r) for r in direct.collect()
-    }
-    est = hll_intersect_estimate(ra, rb, p=9).collect()[0]
-    assert abs(est.est_intersection - 50) / 50 < 0.35  # compounded error band
-
-
 def test_cm_join_size_estimate_upper_bounds_true_size(spark):
     from cassandra_util_spark.operators.sketches import (
         cm_join_size_estimate,
@@ -2322,68 +2251,6 @@ def test_histogram_tail_clamping(spark):
     df = spark.createDataFrame([(-5.0,), (0.5,), (99.0,)], "v double")
     h = {r.bin: r.cnt for r in equi_width_histogram(df, "v", 0.0, 1.0, bins=4).collect()}
     assert h == {0: 1, 2: 1, 3: 1}  # -5 clamps to bin 0, 99 to the last bin
-
-
-def test_grouped_histogram_percentiles_match_exact_within_bin(spark):
-    """Per-language histogram bounds approximate the exact per-stratum
-    percentiles within one bin width — the extreme-cardinality path for
-    the adaptive length gate."""
-    from cassandra_util_spark.operators.histogram import (
-        equi_width_histogram_grouped,
-        histogram_percentiles_grouped,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    hist = equi_width_histogram_grouped(d, "lang", "n_chars", 0.0, 2048.0, bins=256)
-    got = {
-        (r.grp, r.p): r.value
-        for r in histogram_percentiles_grouped(
-            hist, [0.05, 0.95], 0.0, 2048.0, bins=256
-        ).collect()
-    }
-    # the histogram guarantee is RANK-bracketing, not value distance (at a
-    # small stratum the gap between adjacent order statistics can exceed
-    # any bin width): the ceil(p*n)-th value must lie within one bin of
-    # the returned bound
-    import math
-
-    bin_w = 2048.0 / 256
-    rows = d.select("lang", "n_chars").collect()
-    per_lang = {}
-    for r in rows:
-        per_lang.setdefault(r.lang, []).append(r.n_chars)
-    for lang, vals in per_lang.items():
-        vals.sort()
-        n = len(vals)
-        for p in (0.05, 0.95):
-            target_val = vals[math.ceil(p * n) - 1]
-            assert abs(got[(lang, p)] - target_val) <= bin_w, (
-                lang, p, got[(lang, p)], target_val,
-            )
-
-
-def test_adaptive_length_hist_mode_close_to_exact(spark):
-    """The histogram path's per-stratum gates keep nearly the same rows as
-    the exact-percentile path (the only divergence is one bin width of
-    boundary)."""
-    from cassandra_util_spark.operators.text import (
-        adaptive_length_report,
-        adaptive_length_report_hist,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact = {r.lang: r for r in adaptive_length_report(
-        d, "lang", "n_chars", "doc_id"
-    ).collect()}
-    hist = {r.lang: r for r in adaptive_length_report_hist(
-        d, "lang", "n_chars", "doc_id", hist_lo=0.0, hist_hi=2048.0, bins=512
-    ).collect()}
-    assert set(exact) == set(hist)
-    for lang in exact:
-        assert exact[lang].n_docs == hist[lang].n_docs
-        # gate agreement: kept counts within 5% of each other
-        e, h = exact[lang].n_kept, hist[lang].n_kept
-        assert abs(e - h) <= max(2, 0.05 * e), (lang, e, h)
 
 
 def test_unicode_normalize_collapses_decomposed_dupes(spark):

@@ -652,9 +652,11 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
     with open(os.path.join(snap.root, v, "_SCHEMA.json")) as f:
         sidecar = StructType.fromJson(json.load(f))
     assert sidecar == spark.read.parquet(os.path.join(snap.root, v)).schema
-    # a version with no sidecar (written before sidecars existed) still reads
+    # a version with no sidecar does not read; the error names store and version
     os.remove(os.path.join(snap.root, v, "_SCHEMA.json"))
-    assert sorted(snap.read(spark, v).collect()) == sorted(df.collect())
+    with pytest.raises(FileNotFoundError) as err:
+        snap.read(spark, v)
+    assert snap.root in str(err.value) and v in str(err.value)
 
 
 # -- one-partition store paths: inputs that fit one partition merge and ----

@@ -258,39 +258,6 @@ def test_temperature_weights_compose_with_mixture(spark, docs):
         assert abs(got.get(s, 0) / total - ws) < 0.12
 
 
-def test_write_epoch_shards_roundtrip(spark, docs, tmp_path):
-    """Materialized epoch: shard directories prune, rows come back in
-    epoch order, and a rewrite with the same seed reproduces the exact
-    assignment (idempotent epochs)."""
-    import os
-
-    from cassandra_util_spark.operators.sampling import deterministic_shards
-    from cassandra_util_spark.sources.shards import read_epoch_shard, write_epoch_shards
-
-    path = os.path.join(str(tmp_path), "epoch0")
-    write_epoch_shards(docs.select("doc_id", "text"), path, "doc_id", 4, seed="e0")
-    # every shard directory exists and partition-prunes on read
-    assert sorted(d for d in os.listdir(path) if d.startswith("shard=")) == [
-        f"shard={i}" for i in range(4)
-    ]
-    back = read_epoch_shard(spark, path, 2).collect()
-    assert [r["pos"] for r in back] == list(range(1, len(back) + 1))
-    # stored order equals the logical assignment
-    want = (
-        deterministic_shards(docs.select("doc_id", "text"), "doc_id", 4, seed="e0")
-        .filter(F.col("shard") == 2)
-        .orderBy("pos")
-        .collect()
-    )
-    assert [r["doc_id"] for r in back] == [r["doc_id"] for r in want]
-    # idempotence: rewriting yields the identical shard contents
-    write_epoch_shards(docs.select("doc_id", "text"), path, "doc_id", 4, seed="e0")
-    again = read_epoch_shard(spark, path, 2).collect()
-    assert [r["doc_id"] for r in again] == [r["doc_id"] for r in back]
-    # total rows preserved across shards
-    assert spark.read.parquet(path).count() == docs.count()
-
-
 def test_corpus_splits_exhaustive_exclusive_stable(spark, docs):
     from cassandra_util_spark.operators.sampling import corpus_splits
 

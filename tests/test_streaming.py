@@ -531,73 +531,6 @@ def test_streaming_winnowing_fingerprints_matches_batch(spark, workdir, events_s
     assert got == want and len(got) == batch_df.count()
 
 
-def test_streaming_compression_ratio_matches_batch(spark, workdir, events_src):
-    """compression_ratio is stateless Arrow-batched row work — it runs
-    unchanged on a stream and matches batch byte-for-byte, so streaming
-    ingestion can score repetitiveness with no dedicated code."""
-    from cassandra_util_spark.operators.text import compression_ratio
-
-    src, batch_df = events_src
-    out = os.path.join(workdir, "zratio")
-    cp = os.path.join(workdir, "cp_zratio")
-    events = stream_events(spark, src, batch_df.schema)
-    q = (
-        compression_ratio(events, "event_id", "props")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(map(tuple, compression_ratio(batch_df, "event_id", "props").collect()))
-    assert got == want and len(got) == batch_df.count()
-
-
-def test_streaming_dedup_against_matches_batch(spark, workdir):
-    """The stream-static anti-join drops exactly what batch dedup_against
-    drops: streamed documents whose content digest exists in the reference
-    store never reach the sink."""
-    from cassandra_util_spark.operators.dedup import dedup_against
-    from cassandra_util_spark.streaming.events import streaming_dedup_against
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    reference = docs.filter(F.col("doc_id") < 250)
-    incoming = docs.filter(F.col("doc_id") >= 200)
-
-    src = os.path.join(workdir, "docs-src")
-    out = os.path.join(workdir, "docs-new")
-    cp = os.path.join(workdir, "docs-cp")
-    incoming.write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    fresh = streaming_dedup_against(stream, reference, ("text",))
-    assert fresh.isStreaming
-    q = (
-        fresh.writeStream.outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
-    want = {
-        r["doc_id"]
-        for r in dedup_against(incoming, reference, "doc_id", ["text"])
-        .select("doc_id").collect()
-    }
-    assert got == want and got  # non-empty and row-identical to batch
-
-
 def test_streaming_interval_join_matches_batch(spark, workdir, events_src):
     """The watermarked stream-stream interval join emits exactly the pairs
     the equivalent batch range join produces: clicks joined to same-user
@@ -693,269 +626,3 @@ def test_streaming_changelog_apply_matches_batch(spark, workdir):
     assert got == {("a", "v0"), ("c", "v1")}
     # exactly-once bookkeeping: batch id rode the pointer write
     assert store.current_tag() is not None
-
-
-def test_streaming_funnel_matches_batch(spark, workdir):
-    """In event-time-ordered delivery the streaming CEP funnel completes
-    exactly the users the batch earliest-first recurrence completes."""
-    from cassandra_util_spark.streaming.stateful import funnel_detector
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        # watermarks require TIMESTAMP; Spark 4 reads the nanos parquet as NTZ
-        .select("user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"))
-    )
-    stages = ("view", "click", "purchase")
-
-    # batch expectation: the funnel_counts frontier recurrence, per user
-    frontier = None
-    for name in stages:
-        cur = ev.filter(F.col("event_type") == name).select(
-            "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("wt")
-        )
-        if frontier is None:
-            frontier = cur.groupBy("user_id").agg(F.min("wt").alias("t"))
-        else:
-            frontier = (
-                cur.join(frontier.select("user_id", F.col("t").alias("prev")), "user_id")
-                .filter(F.col("wt") >= F.col("prev"))
-                .groupBy("user_id")
-                .agg(F.min("wt").alias("t"))
-            )
-    want = {r.user_id for r in frontier.select("user_id").collect()}
-
-    # deliver chronologically: four quarter files appended in ts order
-    import time as _time
-
-    src = os.path.join(workdir, "funnel-src")
-    qs_bounds = ev.approxQuantile("user_id", [0.0], 0.0)  # touch to materialize
-    bounds = ev.selectExpr("percentile(unix_micros(cast(ts as timestamp)), array(0.25,0.5,0.75)) as q").collect()[0].q
-    lo = float("-inf")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    for hi in [*bounds, float("inf")]:
-        part = ev.filter((us > F.lit(lo)) & (us <= F.lit(hi))) if lo != float("-inf") else ev.filter(us <= F.lit(hi))
-        part = part if hi != float("inf") else ev.filter(us > F.lit(lo))
-        part.coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes: the file source replays in mtime order
-        lo = hi
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        funnel_detector(stream, stages, timeout_seconds=10**9, watermark="0 seconds")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(workdir, "funnel-cp"))
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName("funnel_mem")
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.sql("select * from funnel_mem")
-    got = {r.user_id for r in res.filter(F.col("completed")).collect()}
-    assert got == want and got, (len(got), len(want))
-
-
-def test_streaming_funnel_abandonment_timeout(spark, workdir):
-    """A key stuck mid-funnel emits an abandoned row once the event-time
-    watermark passes last-progress + timeout."""
-    from datetime import datetime
-
-    from cassandra_util_spark.streaming.stateful import funnel_detector
-
-    schema = "user_id bigint, event_type string, ts timestamp"
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-    b0 = [(1, "view", t0), (1, "click", datetime(2024, 1, 1, 0, 0, 10))]
-    b1 = [(2, "view", datetime(2024, 1, 1, 2, 0, 0))]  # pushes the watermark
-    src = os.path.join(workdir, "aband-src")
-    import time as _time
-
-    spark.createDataFrame(b0, schema).coalesce(1).write.parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        funnel_detector(
-            stream, ("view", "click", "purchase"),
-            timeout_seconds=600, watermark="1 second",
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(workdir, "aband-cp"))
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName("aband_mem")
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.sql("select * from aband_mem").collect()
-    ab = [r for r in res if r.abandoned]
-    assert len(ab) == 1 and ab[0].user_id == 1 and ab[0].stage_reached == 2
-    assert not [r for r in res if r.completed]
-
-
-@pytest.mark.slow
-def test_streaming_anomalies_planted_burst(spark, workdir):
-    """A 20x burst after a stable baseline alerts online; the stable
-    baseline itself never does.  State is moments-only (O(1) per key)."""
-    from datetime import datetime, timedelta
-
-    from cassandra_util_spark.streaming.stateful import streaming_anomalies
-
-    schema = "user_id bigint, event_type string, ts timestamp"
-    t0 = datetime(2024, 1, 1)
-    rows = []
-    for h in range(10):  # stable: 2 events/hour
-        rows += [(1, "view", t0 + timedelta(hours=h)),
-                 (1, "view", t0 + timedelta(hours=h, minutes=30))]
-    burst = [(1, "view", t0 + timedelta(hours=10, minutes=m)) for m in range(40)]
-    closer = [(1, "view", t0 + timedelta(hours=12))]  # closes the burst bucket
-
-    src = os.path.join(workdir, "anom-src")
-    import time as _time
-
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(burst, schema).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(closer, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        streaming_anomalies(stream, z_threshold=2.0, watermark="1 second")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(workdir, "anom-cp"))
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName("anom_mem")
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.sql("select * from anom_mem").collect()
-    flagged = [r for r in res if r.anomalous]
-    assert len(flagged) == 1 and flagged[0].n_events == 40
-    # baseline buckets scored non-anomalous
-    base = [r for r in res if r.n_events == 2]
-    assert base and all(not r.anomalous for r in base)
-
-
-@pytest.mark.slow
-def test_streaming_funnel_non_advancing_after_deadline(spark, workdir):
-    """ADVICE r4 (high): a stage>=1 key that receives only NON-advancing
-    events after the watermark passed its deadline used to re-arm the
-    timeout BELOW the watermark — INVALID_TIMEOUT_TIMESTAMP, killing the
-    whole query.  Now the key emits its abandonment row inline (same
-    semantics as the timeout path) and the query survives."""
-    from datetime import datetime
-
-    from cassandra_util_spark.streaming.stateful import funnel_detector
-
-    schema = "user_id bigint, event_type string, ts timestamp"
-    b0 = [(1, "view", datetime(2024, 1, 1, 0, 0, 0))]  # stage 1; deadline 00:10
-    # b1 advances the watermark past the deadline but gives key 1 nothing
-    b1 = [(2, "view", datetime(2024, 1, 1, 2, 0, 0))]
-    # b2 delivers ONLY a non-advancing event (repeat stage-0 "view") to key 1:
-    # it has data, so hasTimedOut is False, and the old code re-armed at
-    # 00:10 < watermark(~02:00)
-    b2 = [(1, "view", datetime(2024, 1, 1, 3, 0, 0)),
-          (3, "view", datetime(2024, 1, 1, 3, 0, 0))]
-
-    src = os.path.join(workdir, "nonadv-src")
-    import time as _time
-
-    for i, b in enumerate([b0, b1, b2]):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        funnel_detector(
-            stream, ("view", "click", "purchase"),
-            timeout_seconds=600, watermark="1 second",
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(workdir, "nonadv-cp"))
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName("nonadv_mem")
-        .start()
-    )
-    q.awaitTermination(180)  # old code: StreamingQueryException here
-    res = spark.sql("select * from nonadv_mem").collect()
-    ab = [r for r in res if r.abandoned and r.user_id == 1]
-    assert len(ab) == 1 and ab[0].stage_reached == 1
-    assert not [r for r in res if r.completed]
-
-
-@pytest.mark.slow
-def test_streaming_anomalies_out_of_order_bucket_across_batches(spark, workdir):
-    """ADVICE r4 (medium) + ADVICE r5 (low): an in-watermark event for a
-    bucket OLDER than the open one used to overwrite the open bucket's
-    counts; the r4 fix then closed late buckets unconditionally, so a
-    fragment of an ALREADY-closed bucket was folded into the moments a
-    second time and emitted as a duplicate row.  Now closed buckets are
-    final: a disordered bucket NEWER than the close frontier closes exactly
-    once; a fragment AT/BEHIND the frontier is dropped."""
-    from datetime import datetime, timedelta
-
-    from cassandra_util_spark.streaming.stateful import streaming_anomalies
-
-    schema = "user_id bigint, event_type string, ts timestamp"
-    t0 = datetime(2024, 1, 1)
-    b0 = []
-    for h in [0, 1, 2, 4]:  # h3 intentionally absent; h4 stays open
-        b0 += [(1, "view", t0 + timedelta(hours=h)),
-               (1, "view", t0 + timedelta(hours=h, minutes=30))]
-    # b1: late event for NEVER-closed bucket h3 (frontier is h2, open is h4)
-    #     + a fragment for ALREADY-closed bucket h2
-    #     + one more event for the open bucket h4
-    b1 = [(1, "view", t0 + timedelta(hours=3, minutes=15)),
-          (1, "view", t0 + timedelta(hours=2, minutes=45)),
-          (1, "view", t0 + timedelta(hours=4, minutes=45))]
-    # b2: closer, pushes the open bucket h4 out
-    b2 = [(1, "view", t0 + timedelta(hours=6))]
-
-    src = os.path.join(workdir, "ooo-src")
-    import time as _time
-
-    for b in [b0, b1, b2]:
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        streaming_anomalies(stream, z_threshold=10.0, watermark="12 hours")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(workdir, "ooo-cp"))
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName("ooo_mem")
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.sql("select * from ooo_mem").collect()
-    h2 = int((t0 + timedelta(hours=2)).timestamp() * 1000)
-    h3 = int((t0 + timedelta(hours=3)).timestamp() * 1000)
-    h4 = int((t0 + timedelta(hours=4)).timestamp() * 1000)
-    rows = {b: [r.n_events for r in res if r.bucket_start_ms == b] for b in (h2, h3, h4)}
-    # h2 closed once in b0 with its 2 events; the b1 fragment is dropped —
-    # no duplicate row, no double fold into the moments
-    assert rows[h2] == [2], rows
-    # the never-closed h3 straggler closes exactly once as its own row
-    assert rows[h3] == [1], rows
-    # the open h4 bucket keeps all 3 of its events (2 from b0 + 1 from b1)
-    assert rows[h4] == [3], rows

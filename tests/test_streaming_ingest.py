@@ -379,30 +379,6 @@ def test_streaming_count_min_equals_batch_sketch(spark, tmp_path):
     assert len(versions_before) <= 2, versions_before
 
 
-def test_streaming_hll_equals_batch_registers(spark, tmp_path):
-    from cassandra_util_spark.operators.sketches import hll_build
-    from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import stream_hll_to_store
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "user_id", "event_id"
-    )
-    src = str(tmp_path / "src")
-    for i in range(2):
-        ev.filter(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    store = SnapshotStore(str(tmp_path / "hll"))
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = stream_hll_to_store(stream, store, str(tmp_path / "cp"), "user_id", p=8)
-    q.awaitTermination(120)
-    got = {tuple(r) for r in store.read(spark).collect()}
-    want = {tuple(r) for r in hll_build(ev, "user_id", p=8).collect()}
-    assert got == want and got
-
-
 def test_fresh_checkpoint_against_written_store_fails_loudly(spark, tmp_path):
     """ADVICE r5 (medium): the replay guard is keyed on (txn identity,
     batch id), not batch id alone.  Restarting with a FRESH checkpoint
@@ -649,95 +625,3 @@ def test_heavy_hitters_from_store_equals_rebuild(spark, tmp_path):
 
     with pytest.raises(ValueError, match="different parameters"):
         heavy_hitters_from_store(store, ev, "user_id", phi, depth=4, width=32)
-
-
-def test_plan_join_from_stores_equals_plan_join(spark, tmp_path):
-    """The zero-scan advisory: plan_join computed from two STREAM-MAINTAINED
-    sketch stores must equal plan_join over the raw tables (same sketch
-    params) — the join decision for a pipeline run costs two bounded store
-    reads, not a pass over either table."""
-    from cassandra_util_spark.operators.sketches import (
-        plan_join,
-        plan_join_from_stores,
-    )
-    from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import stream_count_min_to_store
-
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-        F.col("o_custkey").alias("k")
-    )
-    c = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").select(
-        F.col("c_custkey").alias("k")
-    )
-    stores = {}
-    for name, df in [("o", o), ("c", c)]:
-        src = str(tmp_path / f"src-{name}")
-        df.coalesce(1).write.parquet(src)
-        store = SnapshotStore(str(tmp_path / f"cm-{name}"))
-        q = stream_count_min_to_store(
-            spark.readStream.schema(df.schema).parquet(src),
-            store,
-            str(tmp_path / f"cp-{name}"),
-            "k",
-            depth=4,
-            width=256,
-        )
-        q.awaitTermination(120)
-        stores[name] = store
-
-    want = plan_join(o, c, "k", depth=4, width=256, seed="cm").collect()[0]
-    got = plan_join_from_stores(spark, stores["o"], stores["c"]).collect()[0]
-    assert tuple(got) == tuple(want) and got.advice == "broadcast_b"
-
-
-def test_store_backed_executor_and_hll_estimate(spark, tmp_path):
-    """advised_join_from_stores routes the join from persisted sketches
-    with rows identical to the plain join; hll_estimate_from_store equals
-    the estimate over the freshly-built registers."""
-    from cassandra_util_spark.operators.sketches import (
-        advised_join_from_stores,
-        hll_build,
-        hll_estimate,
-        hll_estimate_from_store,
-    )
-    from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import (
-        stream_count_min_to_store,
-        stream_hll_to_store,
-    )
-
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-        F.col("o_custkey").alias("k"), F.col("o_totalprice").alias("price")
-    )
-    c = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").select(
-        F.col("c_custkey").alias("k"), "c_mktsegment"
-    )
-    stores = {}
-    for name, df in [("o", o), ("c", c)]:
-        src = str(tmp_path / f"src-{name}")
-        df.select("k").coalesce(1).write.parquet(src)
-        store = SnapshotStore(str(tmp_path / f"cm-{name}"))
-        stream_count_min_to_store(
-            spark.readStream.schema("k bigint").parquet(src),
-            store, str(tmp_path / f"cp-{name}"), "k", depth=4, width=256,
-        ).awaitTermination(120)
-        stores[name] = store
-
-    got = {
-        tuple(r)
-        for r in advised_join_from_stores(o, c, "k", stores["o"], stores["c"]).collect()
-    }
-    want = {
-        tuple(r)
-        for r in o.join(c, "k").select("k", "price", "c_mktsegment").collect()
-    }
-    assert got == want and got
-
-    hll_store = SnapshotStore(str(tmp_path / "hll"))
-    stream_hll_to_store(
-        spark.readStream.schema("k bigint").parquet(str(tmp_path / "src-o")),
-        hll_store, str(tmp_path / "cp-hll"), "k", p=8,
-    ).awaitTermination(120)
-    got_est = hll_estimate_from_store(hll_store, spark, p=8).collect()[0]
-    want_est = hll_estimate(hll_build(o, "k", p=8), p=8).collect()[0]
-    assert tuple(got_est) == tuple(want_est)
