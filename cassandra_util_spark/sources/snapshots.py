@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from typing import Optional
 
@@ -92,8 +93,11 @@ class SnapshotStore:
         atomic with the version swap — there is no window where the snapshot
         is committed but its provenance is not.  The version's schema
         sidecar is written before the swap too, so every published version
-        reads without a schema-inference job.
+        reads without a schema-inference job; a version whose footer yields
+        no schema is deleted and raises instead of being published.
         """
+        if tag is not None and "\n" in tag:
+            raise ValueError("tag must be a single line")
         version = self._next_version()
         path = os.path.join(self.root, version)
         if meta is not None:
@@ -101,11 +105,14 @@ class SnapshotStore:
             self._write_meta(meta)
         df.write.mode("errorifexists").parquet(path)
         schema = _footer_schema(path)
-        if schema is not None:
-            with open(os.path.join(path, _SCHEMA), "w") as f:
-                json.dump(schema, f)
-        if tag is not None and "\n" in tag:
-            raise ValueError("tag must be a single line")
+        if schema is None:
+            shutil.rmtree(path)
+            raise RuntimeError(
+                f"snapshot store {self.root}: {version} has no readable parquet "
+                "footer schema; not publishing it"
+            )
+        with open(os.path.join(path, _SCHEMA), "w") as f:
+            json.dump(schema, f)
         # POSIX rename is atomic: readers see either the old or the new pointer
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._CURRENT.")
         with os.fdopen(fd, "w") as f:
@@ -176,8 +183,6 @@ class SnapshotStore:
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` versions (never the current)."""
-        import shutil
-
         current = self.current_version()
         victims = [v for v in self.versions()[:-keep_last] if v != current]
         for v in victims:

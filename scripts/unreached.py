@@ -73,8 +73,7 @@ ALLOW = {
     # test instruments
     "selected_buckets": "test instrument for bucket pruning",
     "join_is_colocated": "test instrument for exchange-free bucketed joins",
-    "file_stat_spans": "test instrument for z-order file spans",
-    "write_zordered": "the z-order file writer file_stat_spans measures (operators/zorder.py, sources/zordered.py)",
+    "write_zordered": "the z-order file writer whose per-file footer spans zorder_file_stats measures (operators/zorder.py)",
     # public readers of a drain's mark
     "applied_batch_hwm": "public reader of a drain's mark; the drain tests assert through it",
     "applied_txn_app_id": "public reader of a drain's mark; the drain tests assert through it",

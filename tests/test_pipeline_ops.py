@@ -1842,35 +1842,6 @@ def test_zorder_validation(spark):
         zorder_value_sql(["x"], 16)
 
 
-def test_write_zordered_tightens_footer_stats_both_dims(spark, tmp_path):
-    """The z-ordered layout's parquet FOOTER stats (what row-group pruning
-    reads) are tight in BOTH dimensions; an x-sorted layout leaves the
-    y-spans at full range."""
-    from cassandra_util_spark.functions.zorder import zorder_value
-    from cassandra_util_spark.sources.zordered import file_stat_spans, write_zordered
-
-    rows = [(x, y, x * 64 + y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x int, y int, payload int")
-
-    zdir = str(tmp_path / "byz")
-    write_zordered(df, zdir, [F.col("x"), F.col("y")], num_files=16, bits=6)
-    xdir = str(tmp_path / "byx")
-    (df.repartitionByRange(16, F.col("x")).sortWithinPartitions("x")
-       .write.mode("overwrite").parquet(xdir))
-
-    zspans = [s for s in file_stat_spans(zdir, ["x", "y"]) if "x" in s]
-    xspans = [s for s in file_stat_spans(xdir, ["x", "y"]) if "x" in s]
-    assert len(zspans) >= 8
-    # every z file: both dims span at most a quarter of the 0..63 range
-    for s in zspans:
-        assert s["x"][1] - s["x"][0] <= 16
-        assert s["y"][1] - s["y"][0] <= 16
-    # x-sorted files: y is unconstrained (full range) in every file
-    assert all(s["y"][1] - s["y"][0] == 63 for s in xspans)
-    # and the data round-trips completely
-    assert spark.read.parquet(zdir).count() == len(rows)
-
-
 def test_bm25_batch_mixed_case_terms_match_topk(spark, docs):
     """Query terms lowercase on BOTH paths — mixed-case input reproduces
     the single-query operator (code-review regression pin)."""

@@ -59,169 +59,12 @@ def test_map_only_queries_prune_unused_columns(spark):
 
 
 def test_query_registry_prefix_stable():
-    """The driver's correctness window covers the first 50 registered
-    queries; QUERIES is registration-ordered, so an innocent import-order
-    or decorator shuffle would silently swap which operators get driver
-    correctness rows.  Pin the 50-name prefix: extend the registry by
-    APPENDING — never by reordering.  (If a reorder is ever intentional,
-    update this snapshot in the same commit and say why.)
-
-    Round-5 intentional reorder (VERDICT r4, task 2): ten near-trivial or
-    variant queries (odd_pk_filter, writetime_projection, paged_fetch,
-    token_count_regex, orders_profile, dedup_fingerprint,
-    dedup_ngram_jaccard_capped, media_frame_plan, orders_status_rollup,
-    events_json_props) moved to positions 50-59 in favor of one
-    representative per previously-uncovered operator family: connected
-    components (dedup_clusters_star), assembly pipeline, sketches
-    (heavy hitters), LSM run store (leveled view), incremental LSH, BM25,
-    sequence packing, winnowing, CEP funnel, and decontamination report.
-    The reorder is entry_queries._curate_driver_window; displaced queries
-    keep full-strength local oracles and unit tests.
-
-    Round-6 intentional rotation (VERDICT r5, task 1): certification
-    rotates — ten rows driver-certified in BOTH r4 and r5 (dedup_exact,
-    dedup_simhash, doc_fingerprint, lang_id, embedding_quantize,
-    ann_cosine_topk, set_ops_except_intersect, retention_rules_antijoin,
-    retention_ttl_mixed_keys, events_user_gaps) move just past the window
-    in favor of ten never-driver-checked queries (cdc_apply,
-    tombstone_compaction, q9_product_type_profit, hybrid_retrieval_rrf,
-    dsir_select, cluster_aware_split, dedup_incremental,
-    events_incremental_rollup, join_plan_advisory,
-    unicode_nfc_fingerprints).  The rotation is
-    entry_queries._rotate_driver_window_r6; family coverage in the window
-    is preserved (see that block's comment).
-
-    Round-7 intentional rotation (VERDICT r6, task 1): certification keeps
-    rotating — ten rows driver-certified in r4, r5 AND r6
-    (q1_pricing_summary, q3_shipping_priority, q5_region_revenue,
-    top_orders_per_customer, events_hourly_rollup, text_quality,
-    dedup_ngram_jaccard, embedding_neardup, events_sessionize,
-    asof_join_clicks_purchases — exactly the VERDICT's candidate list)
-    move just past the window in favor of the ten highest-value
-    never-driver-checked queries: the round-6 store executors
-    (advised_join_exec, counter_store_totals), the round-6 layout/TWCS
-    rows (zorder_layout_key, runstore_skipindex_view,
-    twcs_retention_view), bucketed_colocated_join, q7_volume_shipping,
-    and the corpus-pipeline suite (corpus_clean_pipeline,
-    gopher_quality_gate, events_cohort_retention).  The rotation is
-    entry_queries._rotate_driver_window_r7; family coverage is preserved
-    (see that block's comment).
-
-    Round-8 intentional rotation (VERDICT r7 task 2): ten rows in the
-    window since round 5 and certified three times (counter_merge,
-    lww_merge, dedup_minhash_lsh, semantic_dedup, q10_returned_items,
-    q6_forecast_revenue, parts_above_avg_price, orders_pivot_priority,
-    media_features, salted_event_rollup) move just past the window in
-    favor of the ten never-driver-checked round-7 additions the VERDICT
-    named: the certified scale-safe semantic dedup, the streaming
-    TWCS/LSH/crawl pipelines, the lossless prefix-filtered Jaccard, PQ
-    ANN, BPE training, the trained quality classifier with Pareto
-    selection, and the watermarked stream-stream interval join.  The
-    rotation is entry_queries._rotate_driver_window_r8; family coverage
-    is preserved (see that block's comment).
-
-    Round-9 intentional rotation (VERDICT r8 task 2, "rotate harder"):
-    twenty-four rows all driver-certified at least three times — the
-    retention/ANN/TPC-H core (7-8 certifications each:
-    retention_rules_delete, retention_ttl, configurable_delete_json,
-    token_range_filter, embedding_dedup_resolve, ann_ivf_topk,
-    range_join_incidents, q4_order_priority, acctbal_percentiles,
-    media_dedup), the r5 family representatives (4 each:
-    dedup_clusters_star, training_corpus_assembly, sketch_heavy_hitters,
-    runstore_leveled_view, dedup_incremental_lsh, bm25_search,
-    sequence_packing, dedup_winnowing, events_funnel,
-    contamination_report), and four thrice-certified rows (cdc_apply,
-    tombstone_compaction, bucketed_colocated_join,
-    q9_product_type_profit) — move just past the window in favor of
-    twenty-four never-driver-checked rows: the eight the r8 judge
-    certified locally (the IVFADC trio, the Jaccard-router pair,
-    bpe_token_profile, ann_pq_rerank_topk, quality_classifier_eval), the
-    entire TPC-H tail (q8_market_share, q11-q22), the PII pair, and
-    retention_rule_impact (keeping the retention family in the window;
-    retention_rules_delete stays the driver's entry() smoke).  The
-    rotation is entry_queries._rotate_driver_window_r9; family coverage
-    is preserved (see that block's comment).
-
-    Round-11 intentional rotation (VERDICT r10 task 1 — the rotation
-    round 10 skipped, so two rounds of candidates queued): twenty-four
-    rows all driver-certified at least three times (the r6 cohort at 5
-    certifications, the r7 cohort at 4, and eight thrice-certified r8
-    rows) move just past the window in favor of the twenty-four
-    highest-value never-driver-checked rows: the eight r9
-    sketch/weighted/filtered-ANN additions (bottom-k family, weighted
-    sampling, quantile sketches, ann_ivfpq_filtered — all locally
-    hash-certified in r9 and re-certified by the r10 judge after the
-    seed/survivor fixes), the ten oldest tail rows the verdict names
-    (HLL/CM sketch tables, ivf_persisted_probe, the runstore
-    compaction/z-order views, the RP projection pair,
-    q2_min_cost_supplier, dedup_edit_distance), and the six corpus
-    planners.  The rotation is entry_queries._rotate_driver_window_r11;
-    family coverage is preserved (see that block's comment).
-
-    Round-12 intentional rotation (VERDICT r11 task 1 — finish
-    certification): the r11 verdict counted 138/175 queries ever
-    driver-certified and named the 37-query never-driver-checked tail;
-    all 37 fit in one window alongside 13 re-certification rows (the 13
-    least-recently-certified: ten last certified in round 4 plus the
-    alphabetically-first three of the round-5 cohort).  Every rotated-out
-    row was certified in round 11, so the whole 50-row window turns over;
-    a green CORRECTNESS_r12 makes cumulative driver certification
-    175/175.  The rotation is entry_queries._rotate_driver_window_r12.
-
-    Round-13 intentional rotation (VERDICT r12 task 1 — finish cumulative
-    certification at 182/182): the entire round-12 window rotates out
-    (all 50 rows green in CORRECTNESS_r12 — rows + schema + value-hash —
-    and green in the committed 182/182 local oracle; the r12 verdict
-    explicitly directs the full turnover) in favor of the 7
-    never-driver-checked round-12 additions (the log-cost weighted
-    sampler family, corpus budget cut, padding-waste report, mixture
-    executor, token-granular duplicated spans) plus the 43
-    least-recently-certified rows (last certified r5-r8, computed from
-    CORRECTNESS_r01..r12).  A green CORRECTNESS_r13 makes cumulative
-    driver certification 182/182.  The rotation is
-    entry_queries._rotate_driver_window_r13; family coverage is preserved
-    (see that block's comment).
-
-    Round-14 intentional rotation (VERDICT r13 task 1 — finish cumulative
-    certification at 195/195): the entire round-13 window rotates out
-    (all 50 rows green in CORRECTNESS_r13 and in the committed 195/195
-    local oracle) in favor of the 13 never-driver-checked round-13
-    additions (the BPE tokenizer family, the token-span excision family,
-    materialized packed windows, semantic decontamination) plus the 37
-    least-recently-certified rows (last certified r8-r11, computed from
-    CORRECTNESS_r01..r13; every rotate-in re-verified against its local
-    oracle at sf0.01 immediately before the rotation commit, 50/50
-    green).  A green CORRECTNESS_r14 makes cumulative driver
-    certification 195/195.  The rotation is
-    entry_queries._rotate_driver_window_r14; family coverage is preserved
-    (see that block's comment).
-
-    Round-15 intentional rotation (VERDICT r14, task 1): the full r14
-    window (all 50 green in CORRECTNESS_r14) turns over — in come the 11
-    round-14 additions (the trainer-facing window surface) plus the 39
-    least-recently-certified rows (all last certified r11), finishing
-    cumulative driver certification at 206/206.  The rotation is
-    entry_queries._rotate_driver_window_r15; family coverage is preserved
-    (see that block's comment).
-
-    Round-16 intentional rotation (VERDICT r15, task 1): the full r15
-    window (all 50 green in CORRECTNESS_r15) turns over — in come the 7
-    round-15 additions (streaming window store, epoch shuffle,
-    fertility, curriculum windows, the ANN/LSH/SimHash recall audits)
-    plus 43 least-recently-certified rows (the r11 six, then 37 last
-    certified r12), finishing cumulative driver certification at
-    213/213.  The rotation is entry_queries._rotate_driver_window_r16;
-    family coverage is preserved (see that block's comment).
-
-    Round-17 intentional rotation (same discipline): the full r16 window
-    (all 50 green in CORRECTNESS_r16) turns over — in come the 7
-    round-16 additions (the byte-fallback encode trio sharing one
-    oracle, the OOV round-trip, the IVFPQ recall fixture, the two
-    store-backed loader twins) plus 43 least-recently-certified rows
-    (13 last certified r12, then 30 last certified r13), finishing
-    cumulative driver certification at 220/220.  The rotation is
-    entry_queries._rotate_driver_window_r17; family coverage is
-    preserved (see that block's comment)."""
+    """The driver's correctness gate runs the first 50 queries of
+    QUERIES, and that prefix is entry_queries._DRIVER_WINDOW.  Pin it, so
+    an import-order or decorator shuffle cannot silently change which
+    queries get driver rows: a rotation edits that tuple and this
+    snapshot in the same commit, with its reasons in the commit message
+    and PARITY.md.  Every registered query must also have an oracle."""
     from cassandra_util_spark.entry_queries import ORACLES, QUERIES
 
     first50 = [

@@ -659,6 +659,35 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
     assert snap.root in str(err.value) and v in str(err.value)
 
 
+def test_snapshot_commit_publishes_only_readable_versions(spark, tmp_path, monkeypatch):
+    """A version whose footer yields no schema would publish and then fail
+    every read, so commit raises before the pointer swap and leaves no
+    version dir behind; a multi-line tag raises before anything is
+    written."""
+    import os
+
+    from cassandra_util_spark.sources import snapshots
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    df = spark.range(3)
+    v1 = snap.commit(df, tag="a:0")
+    with open(os.path.join(snap.root, "_CURRENT")) as f:
+        pointer = f.read()
+
+    with pytest.raises(ValueError, match="single line"):
+        snap.commit(df, tag="a\n1")
+    assert snap.versions() == [v1]
+
+    monkeypatch.setattr(snapshots, "_footer_schema", lambda path: None)
+    with pytest.raises(RuntimeError, match="no readable parquet footer schema"):
+        snap.commit(df, tag="a:1")
+    with open(os.path.join(snap.root, "_CURRENT")) as f:
+        assert f.read() == pointer
+    assert snap.versions() == [v1]
+    assert sorted(r.id for r in snap.read(spark).collect()) == [0, 1, 2]
+
+
 # -- one-partition store paths: inputs that fit one partition merge and ----
 # -- write with no exchange; anything larger keeps the key shuffle ---------
 

@@ -615,6 +615,72 @@ def test_pinned_shard_src_guards(spark):
         spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
 
 
+def test_pinned_shard_src_refuses_a_shard_with_two_part_files(spark, monkeypatch):
+    """Micro-batch k is shard k only while every shard dir holds exactly
+    one parquet part file: a second part file in a shard raises before
+    any drain reads the source."""
+    import glob
+    import os
+    import shutil
+
+    from cassandra_util_spark.entry_queries import _pinned_shard_src
+
+    rename = os.rename
+
+    def rename_and_split(a, b):
+        rename(a, b)
+        part = sorted(glob.glob(os.path.join(b, "*.parquet")))[0]
+        shutil.copy(part, part.replace(".parquet", "-copy.parquet"))
+
+    monkeypatch.setattr(os, "rename", rename_and_split)
+    d = spark.createDataFrame([(1, [1]), (2, [2])], "doc_id bigint, token_ids array<bigint>")
+    with pytest.raises(RuntimeError, match="shard-00 holds .*not exactly one parquet part file"):
+        _pinned_shard_src([d], ["doc_id", "token_ids"], "two-parts")
+
+
+def test_drain_runner_stops_a_drain_that_times_out(spark):
+    """A drain still running when the await times out is stopped and
+    raises TimeoutError naming the query; the scoped shuffle-partition
+    setting is restored on the way out."""
+    from cassandra_util_spark.entry_queries import _run_drain
+
+    class SlowDrain:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            self.partitions = spark.conf.get("spark.sql.shuffle.partitions")
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = SlowDrain()
+    checkpoints = []
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def start(cp):
+        checkpoints.append(cp)
+        return q
+
+    with pytest.raises(TimeoutError, match="slow_view"):
+        _run_drain(spark, "slow_view", start)
+    assert q.stopped and q.partitions == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert len(checkpoints) == 1 and os.path.isdir(checkpoints[0])
+
+
+def test_contract_queries_drain_only_through_the_runner():
+    """entry_queries opens a file stream in one place (`_shard_stream`)
+    and awaits a drain in one place (`_run_drain`), so no query can
+    hand-roll a drain that ignores the timeout."""
+    from cassandra_util_spark import entry_queries
+
+    with open(entry_queries.__file__) as f:
+        src = f.read()
+    assert src.count("awaitTermination(") == 1
+    assert src.count("readStream") == 1
+
+
 def test_shard_step_min_id_rides_strategy_count(spark):
     """r18: with_min_id folds the streaming append-order guard's min-id
     into the strategy-count job.  The returned min must be the SHARD's
