@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.table import KeyedTable, TableMeta, _fits_one_partition
-from cassandra_util_spark.sources.runs import RunStore
+from cassandra_util_spark.sources.runs import RunStore, _write_files
 
 # exact partial type: decimal addition is order-independent, and 28,6 holds
 # any realistic counter without overflow (matches plans/batch.py's choice)
@@ -122,6 +122,6 @@ class CounterStore:
         folded = self._sum_runs(spark, inputs)
         run = f"c{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.store.root, run)
-        KeyedTable(folded, self.store.meta).clustered().write.parquet(path)
+        _write_files(KeyedTable(folded, self.store.meta).clustered(), path)
         self.store._publish(add=[run], drop=inputs)
         return run

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.table import KeyedTable
 from cassandra_util_spark.operators.convictors import Convictor
+from cassandra_util_spark.sources.runs import _write_files
 from cassandra_util_spark.sources.snapshots import SnapshotStore
 
 
@@ -146,10 +147,10 @@ class RetentionJob:
                 # backup BEFORE the rewrite: abort leaves the old snapshot
                 # intact, so the commit protocol is backup → rewrite → swap
                 obs_b = Observation()
-                (
-                    convicted_df.observe(obs_b, F.count(F.lit(1)).alias("n"))
-                    .write.mode("append")
-                    .parquet(self.backup_path)
+                _write_files(
+                    convicted_df.observe(obs_b, F.count(F.lit(1)).alias("n")),
+                    self.backup_path,
+                    "append",
                 )
                 convicted_n = _obs_count(obs_b, convicted_df.count)
                 backup_written = self.backup_path

@@ -31,6 +31,15 @@ AQE would coalesce a shuffle's output to) it merges in ONE partition with
 no exchange, as Cassandra merges a partition's few SSTable fragments in
 place, and an append or compaction output that fits lands as one sorted
 file; larger inputs shuffle once on the primary key (the LWW window).
+
+Store file format: every file a store writes (run appends, STCS/TWCS and
+leveled compaction output, counter folds, snapshot versions and the
+retention backup) is parquet with zstd-compressed pages at parquet's
+default level, written through :func:`_write_files`.  Like Cassandra's
+per-table SSTable ``compression`` option, the format belongs to the store:
+a session's ``spark.sql.parquet.compression.codec`` does not change it.
+The codec is recorded per file, so runs written with another codec stay
+readable and merge with zstd runs in one scan.
 """
 
 from __future__ import annotations
@@ -99,6 +108,17 @@ def _footer_schema(path: str) -> Optional[dict]:
         return _spark_schema(pq.read_schema(parts[0])) if parts else None
     except (ImportError, OSError, ValueError):
         return None
+
+
+def _write_files(
+    df: DataFrame, path: str, mode: str = "errorifexists", partition_by: Sequence[str] = ()
+) -> None:
+    """Write ``df`` to ``path`` as store files: parquet with zstd pages,
+    whatever the session's default codec (see the module note)."""
+    writer = df.write.mode(mode).option("compression", "zstd")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
 def _read(spark: SparkSession, paths: list[str], schema: dict) -> DataFrame:
@@ -298,8 +318,25 @@ class RunStore:
         clustering dimension (DeletingCompactionStrategy.java:102-126
         delegates the key-range scan choice to the layout-aware strategy);
         z-order generalizes that elimination to multiple columns."""
+        return self._append(df, name, None, zorder_by, zorder_bits, zorder_files)
+
+    def _append(
+        self,
+        df: DataFrame,
+        name: Optional[str],
+        mark: Optional[str],
+        zorder_by: Optional[list[str]] = None,
+        zorder_bits: int = 16,
+        zorder_files: int = 16,
+    ) -> str:
+        """:meth:`append_run` that also sets the stream ``mark`` in the
+        run's own publish, so a drain's batch commits in one record swap:
+        the run and its mark become visible together or not at all.  A
+        replay whose named run is already live still publishes the mark."""
         run = name if name is not None else self._next_run()
         if name is not None and run in self.live_runs():
+            if mark is not None:
+                self._publish(mark=mark)
             return run
         path = os.path.join(self.root, run)
         mode = "overwrite" if name is not None else "errorifexists"
@@ -309,16 +346,16 @@ class RunStore:
             from cassandra_util_spark.operators.zorder import zorder_key
 
             keyed = zorder_key(df, list(zorder_by), zorder_bits)
-            (
+            _write_files(
                 keyed.repartitionByRange(zorder_files, F.col("zvalue"))
                 .sortWithinPartitions("zvalue")
-                .drop("zvalue")
-                .write.mode(mode)
-                .parquet(path)
+                .drop("zvalue"),
+                path,
+                mode,
             )
         else:
-            KeyedTable(df, self.meta).clustered().write.mode(mode).parquet(path)
-        self._publish(add=[run], zorder_by=zorder_by)
+            _write_files(KeyedTable(df, self.meta).clustered(), path, mode)
+        self._publish(add=[run], mark=mark, zorder_by=zorder_by)
         return run
 
     # -- key-range stats (leveling + pruned reads) --------------------------
@@ -630,8 +667,7 @@ class RunStore:
         if keep_expr is not None:
             merged = keep_expr(merged)
         run = self._next_run()
-        path = os.path.join(self.root, run)
-        KeyedTable(merged, self.meta).clustered().write.parquet(path)
+        _write_files(KeyedTable(merged, self.meta).clustered(), os.path.join(self.root, run))
         self._publish(add=[run], drop=bucket)
         return run
 
@@ -700,12 +736,13 @@ class RunStore:
         n_out = max(1, -(-in_bytes // run_target_bytes))  # ceil: runs stay <= target
         order = [F.col(c) for c in self.meta.primary_key]
         stage = tempfile.mkdtemp(dir=self.root, prefix="_stage.")
-        (
+        _write_files(
             merged.repartitionByRange(n_out, *order)
             .withColumn("__chunk", F.spark_partition_id())
-            .sortWithinPartitions(*order)
-            .write.partitionBy("__chunk")
-            .parquet(stage, mode="overwrite")
+            .sortWithinPartitions(*order),
+            stage,
+            "overwrite",
+            partition_by=["__chunk"],
         )
         new_runs: list[str] = []
         levels: dict[str, int] = {}

@@ -31,7 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
-from cassandra_util_spark.sources.runs import _footer_schema, _read
+from cassandra_util_spark.sources.runs import _footer_schema, _read, _write_files
 
 _SCHEMA = "_SCHEMA.json"
 
@@ -103,7 +103,7 @@ class SnapshotStore:
         if meta is not None:
             df = KeyedTable(df, meta).clustered()
             self._write_meta(meta)
-        df.write.mode("errorifexists").parquet(path)
+        _write_files(df, path)
         schema = _footer_schema(path)
         if schema is None:
             shutil.rmtree(path)

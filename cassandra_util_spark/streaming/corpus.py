@@ -191,8 +191,9 @@ def stream_corpus_ingest(
             .withColumn("writetime", F.lit(batch_id).cast("long"))
         )
         index_store.append_run(idx_rows, name=run_name_for_batch(batch_id))
-        # the mark is published only after BOTH appends: a crash between
-        # them replays the batch, and the published corpus run no-ops
+        # mark-only publish: the corpus mark must follow BOTH stores'
+        # appends; a crash between them replays the batch, and the
+        # published corpus run no-ops
         corpus_store._publish(mark=f"{app_id}:{batch_id}")
         if maintain_every is not None and (batch_id + 1) % maintain_every == 0:
             for store in (corpus_store, index_store):

@@ -33,9 +33,12 @@ An identity mismatch FAILS LOUDLY instead of skipping.
 
 Every store-backed drain in this package runs that protocol through one
 helper, :func:`_drain`, and reads its mark through one parser,
-:func:`_applied`.  A run store keeps the mark in its commit record, set
-by a mark-only ``RunStore._publish(mark=...)`` after the batch's last
-append.  A snapshot store (the sketch tables, ``continuous_rollup``,
+:func:`_applied`.  A run store keeps the mark in its commit record:
+:func:`stream_to_runstore` sets it in the batch's own append publish
+(``RunStore._append``), so run and mark land in one record swap; the
+counter and corpus drains set it by a mark-only
+``RunStore._publish(mark=...)`` after the batch's last append.  A
+snapshot store (the sketch tables, ``continuous_rollup``,
 ``streaming_apply_changelog``) carries it in the pointer write itself,
 ``SnapshotStore.commit(tag="app_id:batch_id")``, so "state merged" and
 "batch recorded" are one atomic rename.
@@ -249,12 +252,10 @@ def stream_to_runstore(
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
-        store.append_run(batch_df, name=run_name_for_batch(batch_id))
-        # mark BEFORE maintenance: a crash between the append and this
-        # publish replays into append_run's no-op (the run is still live —
-        # maintenance below hasn't run); a crash after it skips the replay
-        # outright, compacted or not
-        store._publish(mark=f"{app_id}:{batch_id}")
+        # run and mark commit in one record swap, BEFORE maintenance: a
+        # crash before it replays into a fresh named append, a crash after
+        # it skips the replay outright, compacted or not
+        store._append(batch_df, run_name_for_batch(batch_id), f"{app_id}:{batch_id}")
         if maintain_every is not None and (batch_id + 1) % maintain_every == 0:
             maintain(
                 store,
@@ -321,6 +322,8 @@ def stream_counter_deltas(
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
         counters.append_increments(batch_df, name=run_name_for_batch(batch_id))
+        # mark-only publish: the delta run goes through append_increments,
+        # which casts the counters and takes no mark
         store._publish(mark=f"{app_id}:{batch_id}")
         if compact_every is not None and (batch_id + 1) % compact_every == 0:
             counters.compact(batch_df.sparkSession)

@@ -147,9 +147,7 @@ elif which == "windows":
                 "token_ids", "doc_spans",
             ).withColumn("writetime", F.lit(batch_id).cast("long"))
         with step("5-append-run"):
-            store.append_run(out, name=run_name_for_batch(batch_id))
-        with step("6-mark"):
-            store._publish(mark=f"pbs:{batch_id}")
+            store._append(out, run_name_for_batch(batch_id), f"pbs:{batch_id}")
 
     t0 = time.monotonic()
     with eq._scoped_shuffle_partitions(spark, 8):

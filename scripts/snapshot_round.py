@@ -47,7 +47,7 @@ def main() -> int:
     n = args.round
 
     if not args.skip_oracle:
-        r = run([sys.executable, "scripts/check_oracle.py"])
+        r = run([sys.executable, "scripts/check_oracle.py", "--write"])
         if r.returncode != 0:
             print("snapshot ABORTED: full oracle run failed", file=sys.stderr)
             return r.returncode

@@ -782,6 +782,157 @@ def test_inflated_estimate_keeps_the_shuffle(spark, exchanges, size_estimate):
     assert clustered.count() == 10000
 
 
+# -- store file format: every file a store writes is zstd parquet ----------
+
+
+def _codecs(root):
+    """The compression codecs of every column chunk in the parquet parts
+    under ``root``, read from the footers.  Every part must hold a row
+    group, so an empty file cannot pass for a zstd one."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    codecs, parts = set(), 0
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                md = pq.ParquetFile(os.path.join(d, f)).metadata
+                assert md.num_row_groups > 0, os.path.join(d, f)
+                parts += 1
+                codecs |= {
+                    md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                }
+    assert parts, f"no parquet part under {root}"
+    return codecs
+
+
+def _store_writes(spark, root):
+    """One write from each of the seven store write sites, as {site: the
+    directory it wrote}."""
+    import os
+
+    from cassandra_util_spark.core.table import KeyedTable
+    from cassandra_util_spark.operators.convictors import create_convictor
+    from cassandra_util_spark.operators.counters import CounterStore
+    from cassandra_util_spark.operators.retention import RetentionJob
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    df = spark.range(200).selectExpr(
+        "id as k", "id % 7 as wt", "id % 16 as x", "id % 13 as y",
+        "concat('v', cast(id as string)) as v",
+    )
+    meta = TableMeta(("k",), (), "wt")
+    stcs = RunStore(os.path.join(root, "stcs"), meta)
+    appended = stcs.append_run(df)
+    stcs.append_run(df)
+    (merged,) = stcs.compact(spark, min_threshold=2)
+    zord = RunStore(os.path.join(root, "zord"), meta)
+    zrun = zord.append_run(df, zorder_by=["x", "y"], zorder_files=4)
+    lv = RunStore(os.path.join(root, "leveled"), meta)
+    lv.append_run(df)
+    lv.append_run(df)
+    chunks = lv.compact_leveled(spark, min_threshold=2)
+    counters = CounterStore(os.path.join(root, "counters"), ["k"], ["x"])
+    counters.append_increments(df)
+    counters.append_increments(df)
+    folded = counters.compact(spark)
+    table = KeyedTable(df, meta)
+    snap = SnapshotStore(os.path.join(root, "snap"))
+    stats = RetentionJob(
+        table, create_convictor("odd_pk", table),
+        backup_path=os.path.join(root, "backup"), store=snap,
+    ).run()
+    assert stats.kept == stats.convicted == 100 and len(chunks) == 1
+    return {
+        "append_run": os.path.join(stcs.root, appended),
+        "append_run zorder": os.path.join(zord.root, zrun),
+        "_compact_bucket": os.path.join(stcs.root, merged),
+        "compact_leveled": os.path.join(lv.root, chunks[0]),
+        "CounterStore.compact": os.path.join(counters.store.root, folded),
+        "SnapshotStore.commit": snap.current_path(),
+        "RetentionJob backup": stats.backup_path,
+    }
+
+
+def test_store_files_are_zstd(spark, tmp_path):
+    """Every file each store write site writes carries ZSTD column chunks."""
+    written = _store_writes(spark, str(tmp_path))
+    assert {site: _codecs(d) for site, d in written.items()} == {
+        site: {"ZSTD"} for site in written
+    }
+
+
+def test_session_codec_does_not_change_store_files(spark, tmp_path):
+    """The file format belongs to the store: under a session whose default
+    parquet codec is snappy, a plain write is snappy and every store write
+    is still zstd."""
+    key = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        spark.range(10).write.parquet(str(tmp_path / "plain"))
+        written = _store_writes(spark, str(tmp_path / "stores"))
+    finally:
+        spark.conf.set(key, old)
+    assert _codecs(str(tmp_path / "plain")) == {"SNAPPY"}
+    assert {site: _codecs(d) for site, d in written.items()} == {
+        site: {"ZSTD"} for site in written
+    }
+
+
+def test_snappy_and_zstd_runs_merge_like_snappy_runs(spark, tmp_path):
+    """Runs already on disk as snappy stay readable and merge with zstd
+    runs: the codec is recorded per file and ``_scan`` groups runs by
+    schema only.  A store of two snappy and two zstd runs gives the same
+    ``read_merged`` view, STCS merge output and counter totals as a store
+    holding the same four runs as snappy."""
+    import os
+
+    from cassandra_util_spark.core.table import KeyedTable
+    from cassandra_util_spark.operators.counters import CounterStore
+
+    frames = [
+        spark.range(10 * i, 10 * i + 20).selectExpr(
+            "id as k", f"{i} as wt", f"concat('v', cast(id as string), '_{i}') as v",
+            f"cast(id % 3 + {i} as decimal(28,6)) as n",
+        )
+        for i in range(4)
+    ]
+
+    def snappy_run(store, df):
+        run = store._next_run()
+        KeyedTable(df, store.meta).clustered().write.option(
+            "compression", "snappy").parquet(os.path.join(store.root, run))
+        store._publish(add=[run])
+
+    def build(root, zstd_runs):
+        meta = TableMeta(("k",), (), "wt")
+        lww = RunStore(os.path.join(root, "lww"), meta)
+        counters = CounterStore(os.path.join(root, "counters"), ["k"], ["n"])
+        for i, df in enumerate(frames):
+            if i in zstd_runs:
+                lww.append_run(df)
+                counters.append_increments(df)
+            else:
+                snappy_run(lww, df)
+                snappy_run(counters.store, df.select("k", "n"))
+        codecs = {c for r in lww.live_runs() for c in _codecs(os.path.join(lww.root, r))}
+        view = sorted(lww.read_merged(spark).collect())
+        run = lww._compact_bucket(spark, lww.live_runs(), None)
+        assert lww.live_runs() == [run]
+        compacted = sorted(lww.read_merged(spark).collect())
+        return codecs, view, compacted, sorted(counters.totals(spark).collect())
+
+    mixed = build(str(tmp_path / "mixed"), zstd_runs={1, 3})
+    snappy = build(str(tmp_path / "snappy"), zstd_runs=set())
+    assert mixed[0] == {"SNAPPY", "ZSTD"} and snappy[0] == {"SNAPPY"}
+    assert mixed[1:] == snappy[1:]
+    assert mixed[1] == mixed[2]  # the merge output is the view
+
+
 try:
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st

@@ -166,13 +166,13 @@ def test_incremental_compaction_leaves_siblings_untouched(spark, seeded_store):
     store, ev = seeded_store
     maintain(
         store, spark, strategy="leveled", min_threshold=2,
-        run_target_bytes=8 << 10, vacuum_min_age_s=0.0,
+        run_target_bytes=6 << 10, vacuum_min_age_s=0.0,
     )
     l1 = [r for r, lv in store.live_levels().items() if lv == 1]
     assert len(l1) >= 3
     before_view = {tuple(r) for r in store.read_merged(spark).collect()}
     # shrink the budget so L1 is over-full: ONE victim must move to L2
-    new = store.compact_leveled(spark, run_target_bytes=4 << 10, fanout=2)
+    new = store.compact_leveled(spark, run_target_bytes=3 << 10, fanout=2)
     assert new
     levels = store.live_levels()
     survivors_l1 = [r for r in l1 if r in levels]
@@ -378,7 +378,7 @@ def test_leveled_outputs_keep_full_skip_index(spark, tmp_path):
                 "id as writetime",
             )
         )
-    new = store.compact_leveled(spark, run_target_bytes=8 << 10, min_threshold=2)
+    new = store.compact_leveled(spark, run_target_bytes=4 << 10, min_threshold=2)
     assert new
     stats = store.run_stats()
     for r in new:

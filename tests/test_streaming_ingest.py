@@ -73,6 +73,35 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     assert store2.read_merged(spark).count() == ev.count()
 
 
+def test_append_with_mark_commits_run_and_mark_together(spark, tmp_path):
+    """``RunStore._append`` publishes the run and the stream mark in one
+    record swap.  Replaying a batch whose run is already live, with its
+    mark behind, still publishes the mark."""
+    from cassandra_util_spark.streaming.ingest import applied_batch_hwm
+
+    ev = _events(spark, 200)
+    store = RunStore(str(tmp_path / "runs"), TableMeta(("user_id",), ("event_id",), "writetime"))
+    calls = []
+    real = RunStore._publish
+
+    def publish(self, **kw):
+        calls.append(kw)
+        return real(self, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(RunStore, "_publish", publish)
+        store._append(ev, run_name_for_batch(0), "s:0")
+    assert [(c["add"], c["mark"]) for c in calls] == [([run_name_for_batch(0)], "s:0")]
+    assert store.live_runs() == [run_name_for_batch(0)]
+    assert applied_batch_hwm(store) == 0
+
+    store.append_run(ev, name=run_name_for_batch(1))  # run live, mark at 0
+    assert applied_batch_hwm(store) == 0
+    store._append(ev, run_name_for_batch(1), "s:1")
+    assert store.live_runs() == [run_name_for_batch(0), run_name_for_batch(1)]
+    assert applied_batch_hwm(store) == 1
+
+
 def test_interleaved_maintenance_compacts_and_retains(spark, tmp_path):
     ev = _events(spark)
     src = str(tmp_path / "src")
@@ -189,12 +218,16 @@ def _crash(query):
 
 @pytest.mark.parametrize("drain", ["runstore", "counter_deltas"])
 def test_fault_in_mark_publish_restarts_clean(spark, tmp_path, monkeypatch, drain):
-    """Fault injection at the mark-only publish after a batch's append:
-    batch 1's run is live but the mark still names batch 0.  A restart
-    from the same checkpoint replays batch 1 into the append's no-op and
-    publishes its mark, so the store's view and mark equal an
-    uninterrupted run's.  Counters would double-count a batch applied
-    twice, and a counter drain also folds its deltas every 2 batches."""
+    """Fault injection at the publish that carries batch 1's mark.  The
+    run-store drain commits run and mark in that one publish, so neither
+    lands: batch 1's run is not live and the mark still names batch 0.
+    The counter drain's mark-only publish follows its append, so there
+    batch 1's run is live while the mark names batch 0.  A restart from
+    the same checkpoint replays batch 1 (a fresh append, or the live
+    run's no-op) and publishes its mark, so the store's view and mark
+    equal an uninterrupted run's.  Counters would double-count a batch
+    applied twice, and a counter drain also folds its deltas every 2
+    batches."""
     from cassandra_util_spark.operators.counters import CounterStore
     from cassandra_util_spark.streaming.ingest import (
         applied_batch_hwm,
@@ -229,7 +262,7 @@ def test_fault_in_mark_publish_restarts_clean(spark, tmp_path, monkeypatch, drai
     root, cp = str(tmp_path / "crash"), str(tmp_path / "cp")
     store, _, q = start(root, cp)
     _crash(q)
-    assert run_name_for_batch(1) in store.live_runs()
+    assert (run_name_for_batch(1) in store.live_runs()) == (drain == "counter_deltas")
     assert applied_batch_hwm(store) == 0
 
     store, view, q = start(root, cp)
