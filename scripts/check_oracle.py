@@ -2,19 +2,17 @@
 entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count,
 column names, and an order-insensitive value hash.
 
-Usage: python scripts/check_oracle.py [sf_dir] [query ...] [--write | --merge]
+Usage: python scripts/check_oracle.py [sf_dir] [query ...] [--merge]
 
-Checking only compares: without a flag nothing is written, so a full check
+Checking only compares: without --merge nothing is written, so a full check
 leaves the tree as it was.
 
---write (full run only): record the run as the committed ORACLE_LOCAL.json,
-replacing it (per-query wall times included).
-
---merge (with an explicit query list): fold the results into the committed
-ORACLE_LOCAL.json instead of discarding them, pruning entries for queries no
-longer registered.  This keeps the release gate
-(scripts/release_check.py, blocking via tests/test_release_artifacts.py)
-green after registering a new query without re-running the full registry.
+--merge: fold the results into the committed ORACLE_LOCAL.json, pruning
+entries for queries no longer registered.  Without a query list it records
+the whole registry (per-query wall times included).  With one it keeps the
+release gate (scripts/release_check.py, blocking via
+tests/test_release_artifacts.py) green after registering a new query without
+re-running the full registry.
 """
 
 from __future__ import annotations
@@ -54,14 +52,11 @@ def value_hash(df: pd.DataFrame) -> str:
 
 def main() -> int:
     argv = list(sys.argv[1:])
-    write, merge = "--write" in argv, "--merge" in argv
-    argv = [a for a in argv if a not in ("--write", "--merge")]
+    merge = "--merge" in argv
+    if merge:
+        argv.remove("--merge")
     sf_dir = argv[0] if argv and os.path.isdir(argv[0]) else "/root/testdata/sf0.01"
     only = [a for a in argv if not os.path.isdir(a)]
-    if write and (merge or only):
-        print("--write records a full run: drop the query list, or use --merge",
-              file=sys.stderr)
-        return 2
 
     from cassandra_util_spark.core.session import get_spark
     import __spark_entry__ as e
@@ -129,14 +124,9 @@ def main() -> int:
     # query" from "query is broken" when the driver caps its correctness set
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "ORACLE_LOCAL.json")
-    if write:
-        with open(out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "failures": failures,
-                       "n_queries": len(report), "results": report}, f, indent=1)
-        print("wrote", out)
-    elif merge:
-        # incremental update: fold this subset into the committed record and
-        # prune unregistered names so the artifact tracks the live registry
+    if merge:
+        # fold this run into the committed record and prune unregistered
+        # names so the artifact tracks the live registry
         with open(out) as f:
             local = json.load(f)
         results = {n: r for n, r in local["results"].items() if n in qs}

@@ -5,8 +5,8 @@ round-stamped bench snapshot structural; the rest was already discipline).
 Steps (each in a FRESH subprocess — the cold bench must not inherit this
 session's JIT/page-cache state, per the bench-session-order-drift rule):
 
-1. full `scripts/check_oracle.py` — regenerates ORACLE_LOCAL.json from a
-   clean run over the whole registry (fails the snapshot on any mismatch);
+1. full `scripts/check_oracle.py --merge` — records ORACLE_LOCAL.json from
+   a clean run over the whole registry (fails the snapshot on any mismatch);
 2. full `bench.py` cold, stdout tee'd to BENCH_LOCAL_r{N}_cold.json (the
    one-line summary) with the per-query map snapshotted round-stamped to
    BENCH_FULL_r{N}.json — cross-round movers never need `git show`
@@ -47,7 +47,7 @@ def main() -> int:
     n = args.round
 
     if not args.skip_oracle:
-        r = run([sys.executable, "scripts/check_oracle.py", "--write"])
+        r = run([sys.executable, "scripts/check_oracle.py", "--merge"])
         if r.returncode != 0:
             print("snapshot ABORTED: full oracle run failed", file=sys.stderr)
             return r.returncode

@@ -858,17 +858,9 @@ def _store_writes(spark, root):
 
 
 def test_store_files_are_zstd(spark, tmp_path):
-    """Every file each store write site writes carries ZSTD column chunks."""
-    written = _store_writes(spark, str(tmp_path))
-    assert {site: _codecs(d) for site, d in written.items()} == {
-        site: {"ZSTD"} for site in written
-    }
-
-
-def test_session_codec_does_not_change_store_files(spark, tmp_path):
-    """The file format belongs to the store: under a session whose default
-    parquet codec is snappy, a plain write is snappy and every store write
-    is still zstd."""
+    """Every file each store write site writes carries ZSTD column chunks,
+    under a session whose default parquet codec is snappy: the file format
+    belongs to the store, and a plain write in the same session is snappy."""
     key = "spark.sql.parquet.compression.codec"
     old = spark.conf.get(key)
     spark.conf.set(key, "snappy")
