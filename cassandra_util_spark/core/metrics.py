@@ -3,8 +3,9 @@
 ``CallbackTracer.scala:12-36``).
 
 Spark-side equivalents:
-- per-query timers and success/failure counters via a
-  ``QueryExecutionListener``;
+- per-action timers and success/failure counters via ``Tracer.trace``, a
+  context manager the caller wraps around each engine action (nothing here
+  registers a Spark listener);
 - in-plan row counters via ``DataFrame.observe`` (the kept/dropped counters
   of ``FilteringSSTableScanner``) — zero extra passes;
 - statement classification (query class / table extraction for metric names)

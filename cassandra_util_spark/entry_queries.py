@@ -18,6 +18,7 @@ Determinism rules used throughout:
 from __future__ import annotations
 
 import os
+import tempfile
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,16 @@ from cassandra_util_spark.functions import (
     writetime_micros,
 )
 from cassandra_util_spark.functions.windows import constant_partition_key as _cpk
+from cassandra_util_spark.operators.bpe import (
+    bpe_decode,
+    bpe_encode,
+    bpe_encode_ids,
+    bpe_merge_table,
+    bpe_token_profile,
+    bpe_train,
+    bpe_vocab,
+    byte_block_bounds,
+)
 from cassandra_util_spark.operators.convictors import (
     ConfigurableDeleter,
     RuleBasedDeletionConvictor,
@@ -154,6 +165,142 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col in _NORMALIZE_COLS.get(name, ()):
         df = normalize_event_time(df, col)
     return df
+
+
+# ---------------------------------------------------------------------------
+# Fixture builders shared by the contract queries.  Every call builds afresh
+# (nothing is memoized across queries or runs), and a builder runs no job a
+# caller does not need: only `_vocab` and what builds on it run bpe_vocab's
+# collect.  Each query keeps its own pin choice; `_packed_windows` and
+# `_oov_frozen` state theirs.
+# ---------------------------------------------------------------------------
+
+
+def _tokenizer(spark: SparkSession, sf_dir: str):
+    """``(d, merges, words)``: the documents table and the BPE model
+    trained on it with `_BPE_N` merges."""
+    d = _t(spark, sf_dir, "documents")
+    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
+    return d, merges, words
+
+
+def _vocab(spark: SparkSession, sf_dir: str):
+    """``(d, merges, words, vocab)``: `_tokenizer` plus its token-id
+    vocabulary."""
+    d, merges, words = _tokenizer(spark, sf_dir)
+    return d, merges, words, bpe_vocab(spark, words, merges)
+
+
+def _encoded(spark: SparkSession, sf_dir: str):
+    """``(d, vocab, enc)``: `_vocab` plus every document's token-id
+    stream, unpinned."""
+    d, _, words, vocab = _vocab(spark, sf_dir)
+    return d, vocab, bpe_encode_ids(d, "doc_id", "text", words, vocab)
+
+
+def _packed_windows(spark: SparkSession, sf_dir: str, with_spans: bool = False):
+    """``(d, win)``: the encoded corpus packed into 1024-token windows by
+    the distributed prefix sum.  The encoded streams are pinned eagerly
+    first: distributed_cumsum executes its input three times (boundaries,
+    totals, local pass), and unpinned each pass would replay encode's
+    (id)-keyed assembly shuffle, which the r14 ramp showed dominating the
+    shuffle bytes (733 MB at x30 against 320 MB for the incremental form,
+    which never re-executes encode; SCALING.md)."""
+    from cassandra_util_spark.operators.packing import materialize_packed_windows
+
+    d, _, enc = _encoded(spark, sf_dir)
+    win = materialize_packed_windows(
+        enc.localCheckpoint(), "doc_id", "token_ids", capacity=1024,
+        distributed=True, with_spans=with_spans,
+    )
+    return d, win
+
+
+def _oov_capped(spark: SparkSession, sf_dir: str):
+    """``(d, kept, vocab)`` — the capped byte-fallback MODEL fixture
+    (train + top-{K} cap + byte-fallback vocabulary), without any
+    encode.  Streaming consumers (`tokenizer_coverage_drift`) stop
+    here: they re-encode through `stream_encode` anyway, and
+    `_oov_frozen`'s eager batch encode would run the whole corpus
+    chain for nothing (review r17)."""
+    d, merges, words = _tokenizer(spark, sf_dir)
+    kept = words.orderBy(F.col("cnt").desc(), "word").limit(_BPE_OOV_KEEP)
+    vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
+    return d, kept, vocab
+
+
+def _oov_frozen(spark: SparkSession, sf_dir: str):
+    """``(d, kept, vocab, enc)`` — `_oov_capped` plus the one-shot
+    ``oov="bytes"`` encode, pinned once: the fixture of the
+    decode-round-trip queries (review r17: one copy)."""
+    d, kept, vocab = _oov_capped(spark, sf_dir)
+    enc = bpe_encode_ids(
+        d, "doc_id", "text", kept, vocab, oov="bytes"
+    ).localCheckpoint()
+    return d, kept, vocab, enc
+
+
+def _oov_artifact(spark: SparkSession, sf_dir: str, prefix: str):
+    """``(d, kept, vocab)`` like `_oov_capped`, but read back from a
+    tokenizer artifact that `write_tokenizer` persisted (top-{K} capped
+    word table, byte-fallback vocabulary) in a new temp dir."""
+    from cassandra_util_spark.sources.tokenizer import read_tokenizer, write_tokenizer
+
+    d, merges, words = _tokenizer(spark, sf_dir)
+    path = tempfile.mkdtemp(prefix=prefix) + "/bpe"
+    write_tokenizer(
+        spark, path, words, merges,
+        byte_fallback=True, capped_words=_BPE_OOV_KEEP,
+    )
+    _, kept, vocab, _ = read_tokenizer(spark, path)
+    return d, kept, vocab
+
+
+def _byte_base(vocab: DataFrame) -> int:
+    """The first id of a byte-fallback vocabulary's reserved byte block."""
+    return int(vocab.filter(F.col("kind") == "byte").agg(F.min("id")).first()[0])
+
+
+def _run_store(prefix: str, keys: tuple, clustering: tuple = ()):
+    """An empty RunStore in a new temp dir, keyed on ``keys``, clustered
+    by ``clustering``, with a ``writetime`` column."""
+    from cassandra_util_spark.sources.runs import RunStore
+
+    return RunStore(
+        tempfile.mkdtemp(prefix=prefix), TableMeta(keys, clustering, "writetime")
+    )
+
+
+def _mod3_shards(df: DataFrame, col: str = "doc_id") -> list:
+    """``df`` split into three shard frames by ``col % 3``."""
+    return [df.filter(F.col(col) % 3 == k) for k in range(3)]
+
+
+def _ids_text(col: str = "token_ids"):
+    """The id array ``col`` as space-joined text, the form the
+    cross-engine hash compares."""
+    return F.concat_ws(" ", F.transform(col, lambda x: x.cast("string"))).alias(col)
+
+
+def _windows_view(win: DataFrame) -> DataFrame:
+    """(bin, n_docs, n_tokens, token_ids) of packed windows, rendered for
+    the cross-engine hash."""
+    return win.select(
+        "bin", F.col("n_docs").cast("bigint").alias("n_docs"), "n_tokens", _ids_text()
+    )
+
+
+def _oov_stream_view(enc: DataFrame, byte_base: int) -> DataFrame:
+    """(doc_id, token_ids, n_tokens, n_byte_tokens) of a byte-fallback
+    encode, rendered for the cross-engine hash."""
+    return enc.select(
+        "doc_id",
+        _ids_text(),
+        "n_tokens",
+        F.size(
+            F.filter("token_ids", lambda t: t >= F.lit(byte_base))
+        ).cast("bigint").alias("n_byte_tokens"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1722,7 +1869,6 @@ def bucketed_colocated_join_query(spark: SparkSession, sf_dir: str) -> DataFrame
     CQLBatch.groupByFirstReplica locality).  The oracle is the plain join —
     bucketing must change the plan, never the result."""
     import os
-    import tempfile
 
     from cassandra_util_spark.sources.bucketed import colocated_join, write_bucketed
 
@@ -5079,16 +5225,12 @@ def runstore_compaction_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction merges until one run remains, and the returned view must be
     the exact LWW merge of everything appended — the compaction invariant
     as a hash-checked contract, not just a pytest."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore
-
     ev = (
         _t(spark, sf_dir, "events")
         .withColumn("writetime", writetime_micros(F.col("ts")))
         .select("user_id", "event_type", "event_id", "writetime")
     )
-    store = RunStore(tempfile.mkdtemp(prefix="runstore-q-"), TableMeta(("user_id",), ("event_id",), "writetime"))
+    store = _run_store("runstore-q-", ("user_id",), ("event_id",))
     store.append_run(ev)
     store.append_run(ev.filter(F.col("user_id") <= 50))
     store.append_run(ev.filter(F.col("user_id").between(25, 75)))
@@ -5110,7 +5252,6 @@ def ivf_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the on-disk partition-pruned path returns byte-identical neighbors to
     the in-memory plan."""
     from cassandra_util_spark.sources.ivf_index import probe_ivf_index, write_ivf_index
-    import tempfile
 
     e = _t(spark, sf_dir, "embeddings")
     path = tempfile.mkdtemp(prefix="ivfq-") + "/idx"
@@ -5687,19 +5828,14 @@ def runstore_leveled_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever survives pruning.  The Spark analog of Cassandra's
     LeveledCompactionStrategy read path (one sstable per level per key
     range) under the reference's strategy-agnostic deleting wrapper."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore, maintain
+    from cassandra_util_spark.sources.runs import maintain
 
     ev = (
         _t(spark, sf_dir, "events")
         .withColumn("writetime", writetime_micros(F.col("ts")))
         .select("user_id", "event_type", "event_id", "writetime")
     )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-lq-"),
-        TableMeta(("user_id",), ("event_id",), "writetime"),
-    )
+    store = _run_store("runstore-lq-", ("user_id",), ("event_id",))
     store.append_run(ev)
     store.append_run(ev.filter(F.col("user_id") <= 50))
     store.append_run(ev.filter(F.col("user_id").between(25, 75)))
@@ -5807,7 +5943,7 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    parts = [partial(ev.filter(F.col("event_id") % 3 == i)) for i in range(3)]
+    parts = [partial(shard) for shard in _mod3_shards(ev, "event_id")]
     merged = merge_rollups(
         parts,
         ["day_start", "event_type"],
@@ -6278,8 +6414,6 @@ def counter_store_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole correctness argument, and the hash pins it).  Reference anchor:
     CQLBatch.scala:284-336 — Cassandra counter batches ship increments
     merged server-side per cell; this is that shape on files."""
-    import tempfile
-
     from cassandra_util_spark.operators.counters import CounterStore
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id")
@@ -6374,20 +6508,13 @@ def runstore_skipindex_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes sstables by key range before scanning
     (FilteringSSTableScanner.java:95-124); this extends that elimination
     to any stats-covered column."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore
-
     ev = (
         _t(spark, sf_dir, "events")
         .withColumn("writetime", writetime_micros(F.col("ts")))
         .withColumn("shard", F.col("user_id") % 4)
         .select("user_id", "event_id", "event_type", "writetime", "shard")
     )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-skip-"),
-        TableMeta(("user_id",), ("event_id",), "writetime"),
-    )
+    store = _run_store("runstore-skip-", ("user_id",), ("event_id",))
     for s in range(4):
         store.append_run(ev.filter(F.col("shard") == s))
     pruned = store.prune_runs(2, 2, column="shard")
@@ -6420,9 +6547,7 @@ def twcs_retention_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving windows imply; run/window arithmetic is exact-integer on
     both sides.  The two span-derived scalars collected to the driver are
     1-row bounded aggregates (the O(K) discipline)."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore, maintain
+    from cassandra_util_spark.sources.runs import maintain
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -6431,10 +6556,7 @@ def twcs_retention_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = ev.agg(F.min("writetime").alias("mn"), F.max("writetime").alias("mx")).collect()[0]
     mn, win = row["mn"], (row["mx"] - row["mn"]) // 4 + 1
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-twcs-"),
-        TableMeta(("user_id",), ("event_id",), "writetime"),
-    )
+    store = _run_store("runstore-twcs-", ("user_id",), ("event_id",))
     for w in range(4):
         in_window = ev.filter(F.expr(f"(writetime - {mn}) div {win}") == w)
         store.append_run(in_window.filter(F.col("event_id") % 2 == 0))
@@ -6488,10 +6610,7 @@ def runstore_zorder_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FilteringSSTableScanner.java:95-124, DeletingCompactionStrategy.java:
     102-126 delegating scan choice to the layout-aware strategy); the
     z-ordered run generalizes that elimination to two columns at once."""
-    import tempfile
-
     from cassandra_util_spark.operators.zorder import zorder_file_stats
-    from cassandra_util_spark.sources.runs import RunStore
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -6502,10 +6621,7 @@ def runstore_zorder_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = ev.agg(F.min("writetime").alias("mn"), F.max("writetime").alias("mx")).collect()[0]
     mn, win = row["mn"], (row["mx"] - row["mn"]) // 4 + 1
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-z2d-"),
-        TableMeta(("user_id",), ("event_id",), "writetime"),
-    )
+    store = _run_store("runstore-z2d-", ("user_id",), ("event_id",))
     for w in range(4):
         store.append_run(
             ev.filter(F.expr(f"(writetime - {mn}) div {win}") == w),
@@ -6636,9 +6752,6 @@ def twcs_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the reference's deleting compaction
     (DeletingCompactionStrategy.java:102-126 delegates bucketing to the
     wrapped strategy); the streaming drain models its flush cadence."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.ingest import stream_to_runstore
 
     ev = (
@@ -6656,10 +6769,7 @@ def twcs_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append")
             .parquet(src)
         )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-twcs-stream-"),
-        TableMeta(("user_id",), ("event_id",), "writetime"),
-    )
+    store = _run_store("runstore-twcs-stream-", ("user_id",), ("event_id",))
     stream = _shard_stream(
         spark, "user_id bigint, event_id bigint, event_type string, writetime bigint", src
     )
@@ -6871,10 +6981,7 @@ def dedup_streaming_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at warehouse scale.  Reference anchor: per-sstable summaries
     maintained at flush time, consulted before any data read
     (SSTableReader key-range/estimated-keys discipline)."""
-    import tempfile
-
     from cassandra_util_spark.operators.dedup import lsh_dedup_from_store
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.dedup import stream_lsh_index
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6889,10 +6996,7 @@ def dedup_streaming_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["doc_id", "text"],
         "lsh-stream",
     )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-lsh-index-"),
-        TableMeta(("id",), (), "writetime"),
-    )
+    store = _run_store("runstore-lsh-index-", ("id",))
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     # session shuffle partitions, not 8 (r9): unlike the other streaming
     # drains, the LSH batch work is CPU-bound signature hashing whose
@@ -7010,25 +7114,12 @@ def corpus_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries make.
     Reference anchors: CQLBatch.scala's ordered sub-batch application;
     SSTableReader summary-before-data reads."""
-    import tempfile
-
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.corpus import stream_corpus_ingest
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == k) for k in range(3)],
-        ["doc_id", "text"],
-        "corpus-ingest",
-    )
-    corpus_store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-corpus-"),
-        TableMeta(("doc_id",), (), "writetime"),
-    )
-    index_store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-corpus-index-"),
-        TableMeta(("id",), (), "writetime"),
-    )
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "text"], "corpus-ingest")
+    corpus_store = _run_store("runstore-corpus-", ("doc_id",))
+    index_store = _run_store("runstore-corpus-index-", ("id",))
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     # State-partition sizing, the stream_interval_join_view lever (r9): the
     # admission chain's per-batch joins/windows inherit the session's
@@ -7183,10 +7274,7 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the learned merge sequence — including count-tie resolution and the
     adjacent-repeat greedy semantics the naive string-replace gets wrong —
     is hash-certified end to end."""
-    from cassandra_util_spark.operators.bpe import bpe_merge_table, bpe_train
-
-    d = _t(spark, sf_dir, "documents")
-    merges, _ = bpe_train(d, "text", num_merges=_BPE_N)
+    _, merges, _ = _tokenizer(spark, sf_dir)
     return bpe_merge_table(spark, merges)
 
 
@@ -7214,10 +7302,7 @@ def bpe_token_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the real token-budget input for a training pipeline: the
     text.bpe_token_estimate regex is the cheap static guess, this is the
     learned-vocab truth."""
-    from cassandra_util_spark.operators.bpe import bpe_token_profile, bpe_train
-
-    d = _t(spark, sf_dir, "documents")
-    _, words = bpe_train(d, "text", num_merges=_BPE_N)
+    d, _, words = _tokenizer(spark, sf_dir)
     return bpe_token_profile(d, "doc_id", "text", words)
 
 
@@ -7269,7 +7354,6 @@ def stream_interval_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark where the no-data batch stays enabled)."""
     import glob
     import os
-    import tempfile
 
     from cassandra_util_spark.streaming.events import (
         stream_events,
@@ -7583,8 +7667,6 @@ def ivfpq_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     and test_ivfpq.py for this one) returns byte-identical neighbors to
     the in-memory IVFADC plan, and that the index directory carries the
     64-of-512-bytes-per-vector memory contract physically."""
-    import tempfile
-
     from cassandra_util_spark.sources.ivf_index import (
         probe_ivfpq_index,
         write_ivfpq_index,
@@ -7617,14 +7699,11 @@ def ivfpq_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of batch boundaries — the property that lets a 100 TB
     embedding store grow shard-by-shard without ever re-encoding
     history."""
-    import tempfile
-
     from cassandra_util_spark.operators.similarity import (
         ivf_assign,
         ivf_seeds,
         pq_codebooks,
     )
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.ann import (
         probe_ivfpq_store,
         stream_ivfpq_index,
@@ -7650,15 +7729,8 @@ def ivfpq_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cb = pq_codebooks(res, "vec_id", "__res", 64, 8, 16).localCheckpoint()
 
-    src = _pinned_shard_src(
-        [e.filter(F.col("vec_id") % 3 == k) for k in range(3)],
-        list(e.columns),
-        "ivfpq-stream",
-    )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-ivfpq-"),
-        TableMeta(("vec_id",), (), "writetime"),
-    )
+    src = _pinned_shard_src(_mod3_shards(e, "vec_id"), list(e.columns), "ivfpq-stream")
+    store = _run_store("runstore-ivfpq-", ("vec_id",))
     stream = _shard_stream(spark, e.schema, os.path.join(src, "shard-*"))
     _run_drain(
         spark,
@@ -7879,9 +7951,8 @@ def bottomk_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     shards = [
-        bottomk_sample(d.filter(F.col("doc_id") % 3 == i), "doc_id", k=256,
-                       payload=("n_chars",))
-        for i in range(3)
+        bottomk_sample(shard, "doc_id", k=256, payload=("n_chars",))
+        for shard in _mod3_shards(d)
     ]
     return bottomk_merge(*shards, k=256, key_col="doc_id")
 
@@ -7932,17 +8003,11 @@ def bottomk_streaming_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-corpus sample — the KMV closure property through the streaming
     path, the same triple-certification shape as the IVFADC family
     (in-memory / sharded / streamed, one oracle)."""
-    import tempfile
-
     from cassandra_util_spark.sources.snapshots import SnapshotStore
     from cassandra_util_spark.streaming.sketches import stream_bottomk_to_store
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-        ["doc_id", "n_chars"],
-        "bk-stream",
-    )
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "n_chars"], "bk-stream")
     store = SnapshotStore(tempfile.mkdtemp(prefix="bk-store-"))
     stream = _shard_stream(spark, d.schema, os.path.join(src, "shard-*"))
     _run_drain(
@@ -8030,8 +8095,6 @@ def _run_drain(spark: SparkSession, name: str, start, partitions: Optional[int] 
     session's value).  A drain still running after ``_DRAIN_TIMEOUT_S`` is
     stopped and raises TimeoutError naming ``name``: reading a partial
     store would surface much later as an opaque value-hash mismatch."""
-    import tempfile
-
     scope = (
         nullcontext() if partitions is None else _scoped_shuffle_partitions(spark, partitions)
     )
@@ -8253,8 +8316,6 @@ def logcost_streaming_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the direct whole-corpus `weighted_sample_logcost` — the E-S
     closure through the streaming path, the triple-certification shape
     of the bottom-k family (batch / shard-merge / streamed, one oracle)."""
-    import tempfile
-
     from cassandra_util_spark.sources.snapshots import SnapshotStore
     from cassandra_util_spark.streaming.sketches import stream_bottomk_to_store
 
@@ -8263,11 +8324,7 @@ def logcost_streaming_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars").cast("bigint") * F.lit(1811)).alias("wt"),
         "n_chars",
     )
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-        ["doc_id", "wt", "n_chars"],
-        "lc-stream",
-    )
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "wt", "n_chars"], "lc-stream")
     store = SnapshotStore(tempfile.mkdtemp(prefix="lc-store-"))
     stream = _shard_stream(spark, d.schema, os.path.join(src, "shard-*"))
     _run_drain(
@@ -8533,8 +8590,6 @@ def bpe_learned_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives the selection independently (top-4·batch pool, exclusion
     joins), so a drift in pool sizing, tie order, or disjointness
     semantics breaks the hash."""
-    from cassandra_util_spark.operators.bpe import bpe_merge_table, bpe_train
-
     d = _t(spark, sf_dir, "documents")
     merges, _ = bpe_train(d, "text", num_merges=_BPE_BATCHED_N, batch=_BPE_BATCH)
     return bpe_merge_table(spark, merges)
@@ -8628,18 +8683,12 @@ def token_spans_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams plus a merge-on-read of the bounded count runs — historical
     CONTENT is never re-read, which is what lets a 100 TB crawl excise
     incrementally while the batch operator re-counts the corpus per run."""
-    import tempfile
-
     from cassandra_util_spark.operators.counters import CounterStore
     from cassandra_util_spark.operators.dedup import token_spans_from_store
     from cassandra_util_spark.streaming.dedup import stream_token_span_index
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == k) for k in range(3)],
-        ["doc_id", "text"],
-        "spanstream",
-    )
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "text"], "spanstream")
     cs = CounterStore(tempfile.mkdtemp(prefix="spanstore-"), ["g"], ["c"])
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     _run_drain(
@@ -8768,8 +8817,6 @@ def token_spans_incremental_excision(spark: SparkSession, sf_dir: str) -> DataFr
     and excises the shard's slice).  This is the per-shard production
     loop of a 100 TB crawl: per arrival, cost ∝ shard grams + one
     merge-on-read of the bounded count runs."""
-    import tempfile
-
     from cassandra_util_spark.operators.counters import CounterStore
     from cassandra_util_spark.operators.dedup import (
         excise_token_spans,
@@ -8779,12 +8826,8 @@ def token_spans_incremental_excision(spark: SparkSession, sf_dir: str) -> DataFr
     from cassandra_util_spark.streaming.dedup import stream_token_span_index
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _pinned_shard_src(
-        # HISTORY: batches 0 and 1
-        [d.filter(F.col("doc_id") % 3 == k) for k in range(2)],
-        ["doc_id", "text"],
-        "increx",
-    )
+    *history, shard = _mod3_shards(d)  # HISTORY: batches 0 and 1
+    src = _pinned_shard_src(history, ["doc_id", "text"], "increx")
     cs = CounterStore(tempfile.mkdtemp(prefix="increx-store-"), ["g"], ["c"])
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     _run_drain(
@@ -8794,7 +8837,6 @@ def token_spans_incremental_excision(spark: SparkSession, sf_dir: str) -> DataFr
             stream, cs, cp, id_col="doc_id", text_col="text", n=8
         ),
     )
-    shard = d.filter(F.col("doc_id") % 3 == 2)
     # the shard ingests first (its within-shard duplicates count too),
     # then only IT is probed and excised
     cs.append_increments(gram_count_deltas(shard, "doc_id", "text", n=8), name="b2")
@@ -8856,10 +8898,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics the trainer left in the word table) is exercised and
     reference-pinned in tests/test_bpe_encode.py; here train and encode
     share the corpus, so the oracle replays the trained table."""
-    from cassandra_util_spark.operators.bpe import bpe_encode, bpe_train
-
-    d = _t(spark, sf_dir, "documents")
-    _, words = bpe_train(d, "text", num_merges=_BPE_N)
+    d, _, words = _tokenizer(spark, sf_dir)
     enc = bpe_encode(d, "doc_id", "text", words=words)
     return enc.select(
         "doc_id",
@@ -8901,11 +8940,7 @@ def bpe_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     charset (≤37), so the id assignment is a bounded driver-side step over
     an alphabet, never a corpus scan; the oracle replays the training CTE
     chain and re-derives the same ids in SQL."""
-    from cassandra_util_spark.operators.bpe import bpe_train, bpe_vocab
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    return bpe_vocab(spark, words, merges)
+    return _vocab(spark, sf_dir)[3]
 
 
 @query(
@@ -8940,24 +8975,8 @@ def bpe_encode_ids_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings; the oracle re-derives the ids and streams in SQL from the
     same training replay.  Rendered as the space-joined id text for the
     cross-engine hash."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
-    return enc.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-    )
+    _, _, enc = _encoded(spark, sf_dir)
+    return enc.select("doc_id", _ids_text(), "n_tokens")
 
 
 @query(
@@ -8992,11 +9011,9 @@ def tokenized_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream with NO single-task window stage — and the oracle replays
     both the tokenizer and the window arithmetic in SQL, so the
     composition is hash-certified through both halves."""
-    from cassandra_util_spark.operators.bpe import bpe_token_profile, bpe_train
     from cassandra_util_spark.operators.packing import pack_sequences
 
-    d = _t(spark, sf_dir, "documents")
-    _, words = bpe_train(d, "text", num_merges=_BPE_N)
+    d, _, words = _tokenizer(spark, sf_dir)
     prof = bpe_token_profile(d, "doc_id", "text", words).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
     )
@@ -9068,37 +9085,7 @@ def packed_training_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reassembly is ONE (bin)-keyed shuffle of packed SLICE PIECES
     (~4 bytes/token — r14).  Window contents rendered as space-joined id
     text for the cross-engine hash."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        materialize_packed_windows,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams: distributed_cumsum executes its input
-    # three times (boundaries, totals, local pass) — unpinned, each pass
-    # replays encode's (id)-keyed assembly shuffle, which the r14 ramp
-    # showed dominating the query's shuffle bytes (the incremental form,
-    # which never re-executes encode, moved 320 MB at x30 vs 733 MB
-    # here; see SCALING.md)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True
-    )
-    return win.select(
-        "bin",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        "n_tokens",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-    )
+    return _windows_view(_packed_windows(spark, sf_dir)[1])
 
 
 @query("bpe_streaming_encode", oracle=None)
@@ -9115,39 +9102,18 @@ def bpe_streaming_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     store converges to the batch result regardless of batch boundaries —
     the property that lets a 100 TB corpus tokenize shard-by-shard
     without ever re-encoding history."""
-    import tempfile
-
-    from cassandra_util_spark.core.table import TableMeta
-    from cassandra_util_spark.operators.bpe import bpe_train, bpe_vocab
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.corpus import stream_encode
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    vocab = bpe_vocab(spark, words, merges)
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == k) for k in range(3)],
-        ["doc_id", "text"],
-        "bpe-stream",
-    )
-    store = RunStore(
-        tempfile.mkdtemp(prefix="runstore-bpe-enc-"),
-        TableMeta(("doc_id",), (), "writetime"),
-    )
+    d, merges, words, vocab = _vocab(spark, sf_dir)
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "text"], "bpe-stream")
+    store = _run_store("runstore-bpe-enc-", ("doc_id",))
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     _run_drain(
         spark,
         "bpe_streaming_encode",
         lambda cp: stream_encode(stream, store, cp, words, vocab, merges=merges),
     )
-    view = store.read_merged(spark)
-    return view.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-    )
+    return store.read_merged(spark).select("doc_id", _ids_text(), "n_tokens")
 
 
 ORACLES["bpe_streaming_encode"] = ORACLES["bpe_encode_ids_corpus"]
@@ -9168,17 +9134,7 @@ def bpe_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenate, so decode is pure string surgery; the ``</w>`` terminal
     is the word boundary and cannot collide with normalized [a-z0-9]
     content."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_decode,
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    vocab = bpe_vocab(spark, words, merges)
-    ids = bpe_encode_ids(d, "doc_id", "text", words, vocab)
+    _, vocab, ids = _encoded(spark, sf_dir)
     return bpe_decode(ids, "doc_id", "token_ids", vocab=vocab)
 
 
@@ -9280,27 +9236,7 @@ def packed_window_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle re-derives every span as (min position, count) of the
     document's tokens inside the window.  Rendered doc:off:len for the
     cross-engine hash."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        materialize_packed_windows,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams: distributed_cumsum executes its input
-    # three times, the shuffle-amplification hazard fixed in
-    # packed_training_windows r14 (ADVICE r14: same pin everywhere)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True,
-        with_spans=True,
-    )
+    _, win = _packed_windows(spark, sf_dir, with_spans=True)
     return win.select(
         "bin",
         F.col("n_docs").cast("bigint").alias("n_docs"),
@@ -9358,27 +9294,9 @@ def packed_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine reproduces it exactly).  One extra aggregate over the
     certified window contents; at 100 TB the manifest is |shards| rows
     and the checksum folds map-side."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        materialize_packed_windows,
-        shard_manifest,
-    )
+    from cassandra_util_spark.operators.packing import shard_manifest
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams: distributed_cumsum executes its input
-    # three times, the shuffle-amplification hazard fixed in
-    # packed_training_windows r14 (ADVICE r14: same pin everywhere)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True
-    )
+    _, win = _packed_windows(spark, sf_dir)
     return shard_manifest(win, num_shards=_N_WSHARDS, seed=_WSHARD_SEED)
 
 
@@ -9519,30 +9437,14 @@ def fim_token_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including degenerate empty-middle spans) exactly; the transform
     itself is one map-only expression pass over the encoded streams —
     three array slices and a concat, no shuffle, no UDF."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.packing import fim_transform
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
+    _, _, enc = _encoded(spark, sf_dir)
     out = fim_transform(
         enc, "doc_id", "token_ids",
         rate=_FIM_RATE, min_tokens=_FIM_MIN, seed=_FIM_SEED,
     )
-    return out.select(
-        "doc_id",
-        "fim",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-    )
+    return out.select("doc_id", "fim", _ids_text(), "n_tokens")
 
 
 @query("manifest_incremental_totals", oracle=_WMANIFEST_ORACLE)
@@ -9560,24 +9462,13 @@ def manifest_incremental_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     never recomputes the corpus view — and addition's associativity (the
     counter store's whole correctness argument) is exactly what makes
     the checksum fold-invariant."""
-    import tempfile
-
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.counters import CounterStore
     from cassandra_util_spark.operators.packing import (
         materialize_packed_windows,
         shard_manifest,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
+    _, _, enc = _encoded(spark, sf_dir)
     # pin the windows once: three batch filters must not re-run the
     # train+encode chain (the bounded-materialization discipline).
     # LAZY: the first consumer is the ``bin % 3 == 0`` filtered counter
@@ -9681,32 +9572,15 @@ def span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; short documents pass through.  The transform itself is
     map-only array expressions (no shuffle, no UDF); the oracle replays
     every draw, the lag-stitched inputs, and the target stream in SQL."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.packing import span_corruption
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
+    _, _, enc = _encoded(spark, sf_dir)
     out = span_corruption(
         enc, "doc_id", "token_ids",
         noise_density=0.15, mean_span=3, min_tokens=16, seed=_T5_SEED,
     )
-    joined = F.concat_ws  # noqa: E731 — alias for line width
     return out.select(
-        "doc_id",
-        "corrupted",
-        joined(" ", F.transform("inputs", lambda x: x.cast("string"))).alias(
-            "inputs"
-        ),
-        joined(" ", F.transform("targets", lambda x: x.cast("string"))).alias(
-            "targets"
-        ),
+        "doc_id", "corrupted", _ids_text("inputs"), _ids_text("targets")
     )
 
 
@@ -9747,29 +9621,10 @@ def windowed_loss_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders below tokens), one (doc)-keyed join, one (bin)-keyed
     regroup — token content never ships.  The oracle re-derives every
     span and the keep verdicts and rebuilds each bitstring in SQL."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        loss_mask_windows,
-        materialize_packed_windows,
-    )
+    from cassandra_util_spark.operators.packing import loss_mask_windows
     from cassandra_util_spark.operators.text import quality_score
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams: distributed_cumsum executes its input
-    # three times, the shuffle-amplification hazard fixed in
-    # packed_training_windows r14 (ADVICE r14: same pin everywhere)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True,
-        with_spans=True,
-    )
+    d, win = _packed_windows(spark, sf_dir, with_spans=True)
     keep = d.select(
         F.col("doc_id").alias("doc"),
         (quality_score(F.col("text")) >= 0.5).alias("keep"),
@@ -9812,28 +9667,9 @@ def window_leak_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc)-keyed join against the held-out set, one (bin)-keyed rollup —
     token content never ships, and the audit is reproducible in SQL
     down to the gate literals."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        materialize_packed_windows,
-    )
     from cassandra_util_spark.operators.sampling import corpus_splits
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams: distributed_cumsum executes its input
-    # three times, the shuffle-amplification hazard fixed in
-    # packed_training_windows r14 (ADVICE r14: same pin everywhere)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True,
-        with_spans=True,
-    )
+    d, win = _packed_windows(spark, sf_dir, with_spans=True)
     held = corpus_splits(
         d.select("doc_id"), "doc_id", {"train": 0.90, "val": 0.05, "test": 0.05}
     ).filter(F.col("split") != "train").select(F.col("doc_id").alias("doc"))
@@ -9863,43 +9699,20 @@ def windows_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingests, already-emitted full windows are IMMUTABLE — history never
     re-packs — and the only cross-shard state is ≤ capacity tokens (the
     O(1) carry), not the stream."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.packing import (
         materialize_windows_incremental,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
+    _, _, enc = _encoded(spark, sf_dir)
     # pin the encoded streams once: the three shard filters must not
     # re-run the train+encode chain (the bounded-materialization
-    # discipline).  LAZY (r18): the max-id aggregate right below scans
-    # every partition and materializes the pin inside its own job —
+    # discipline).  LAZY (r18): `_ascending_id_shards`'s max-id aggregate
+    # scans every partition and materializes the pin inside its own job —
     # one fewer full execution of the train+encode chain; the shard
     # steps then read the pinned blocks
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint(eager=False)
-    mx = enc.agg(F.max("doc_id").alias("m")).first()["m"]
-    c1, c2 = mx // 3, (2 * mx) // 3
-    shards = [
-        enc.filter(F.col("doc_id") <= c1),
-        enc.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2)),
-        enc.filter(F.col("doc_id") > c2),
-    ]
-    win = materialize_windows_incremental(
-        shards, "doc_id", "token_ids", capacity=1024
-    )
-    return win.select(
-        "bin",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        "n_tokens",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
+    shards = _ascending_id_shards(enc.localCheckpoint(eager=False))
+    return _windows_view(
+        materialize_windows_incremental(shards, "doc_id", "token_ids", capacity=1024)
     )
 
 
@@ -9953,31 +9766,21 @@ def sharded_training_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment actually runs — fully parallel across shards, one
     (shard, bin)-keyed slice-piece shuffle — against a per-shard SQL
     replay of the same arithmetic."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.packing import (
         materialize_packed_windows,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).join(d.select("doc_id", "lang"), "doc_id")
+    d, _, enc = _encoded(spark, sf_dir)
     win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, shard_col="lang"
+        enc.join(d.select("doc_id", "lang"), "doc_id"),
+        "doc_id", "token_ids", capacity=1024, shard_col="lang",
     )
     return win.select(
         "lang",
         "bin",
         F.col("n_docs").cast("bigint").alias("n_docs"),
         "n_tokens",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
+        _ids_text(),
     )
 
 
@@ -10068,7 +9871,6 @@ def _pinned_shard_src(shard_frames, cols, prefix: str) -> str:
     missing dirs are backfilled with a zero-row parquet write before the
     mtime pinning."""
     import os
-    import tempfile
     import time
 
     if not shard_frames:
@@ -10128,16 +9930,10 @@ def _drain_encode_store(spark, src, kept, vocab, prefix, oov="bytes"):
     encode` and `tokenizer_coverage_drift`.  `_run_drain` raises on a
     drain timeout."""
     import os
-    import tempfile
 
-    from cassandra_util_spark.core.table import TableMeta
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.corpus import stream_encode
 
-    store = RunStore(
-        tempfile.mkdtemp(prefix=f"{prefix}-store-"),
-        TableMeta(("doc_id",), (), "writetime"),
-    )
+    store = _run_store(f"{prefix}-store-", ("doc_id",))
     stream = _shard_stream(spark, "doc_id bigint, text string", os.path.join(src, "shard-*"))
     _run_drain(
         spark, prefix, lambda cp: stream_encode(stream, store, cp, kept, vocab, oov=oov)
@@ -10155,18 +9951,12 @@ def _drain_windows_store(spark, shard_frames, id_col, capacity, prefix):
     mtimes; three hand-maintained copies could silently drift).
     `_run_drain` raises on a drain timeout."""
     import os
-    import tempfile
 
-    from cassandra_util_spark.core.table import TableMeta
-    from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.corpus import stream_windows
 
     dtypes = dict(shard_frames[0].dtypes)
     src = _pinned_shard_src(shard_frames, [id_col, "token_ids"], prefix)
-    store = RunStore(
-        tempfile.mkdtemp(prefix=f"{prefix}-store-"),
-        TableMeta(("bin",), (), "writetime"),
-    )
+    store = _run_store(f"{prefix}-store-", ("bin",))
     stream = _shard_stream(
         spark,
         f"{id_col} {dtypes[id_col]}, token_ids {dtypes['token_ids']}",
@@ -10208,14 +9998,7 @@ def _corpus_window_store(spark, sf_dir: str):
     """train → encode → three ascending doc-id micro-batches → persisted
     1024-token window store: the shared fixture build of
     `windows_streaming_store` and `epoch_plan_from_store`."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
+    _, _, enc = _encoded(spark, sf_dir)
     # pin the encoded streams once: the three shard writes must not
     # re-run the train+encode chain (the bounded-materialization
     # discipline).  LAZY (r18): `_ascending_id_shards`'s max-id
@@ -10223,26 +10006,9 @@ def _corpus_window_store(spark, sf_dir: str):
     # materializes the pin in its own job, and the one tagged shard
     # write then reads the pinned blocks (its three union branches see
     # an already-materialized checkpoint, so no duplicate compute)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint(eager=False)
     return _drain_windows_store(
-        spark, _ascending_id_shards(enc), "doc_id", capacity=1024,
-        prefix="win-stream",
-    )
-
-
-def _windows_store_view(spark, store) -> DataFrame:
-    """The store's LWW-merged window view rendered for the cross-engine
-    hash (token ids as the space-joined string)."""
-    view = store.read_merged(spark)
-    return view.select(
-        "bin",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        "n_tokens",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
+        spark, _ascending_id_shards(enc.localCheckpoint(eager=False)),
+        "doc_id", capacity=1024, prefix="win-stream",
     )
 
 
@@ -10264,7 +10030,7 @@ def windows_streaming_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are immutable, per-batch cost ∝ the batch, and the only
     cross-batch state is ≤ capacity tokens read back from the store's
     max-bin row."""
-    return _windows_store_view(spark, _corpus_window_store(spark, sf_dir))
+    return _windows_view(_corpus_window_store(spark, sf_dir).read_merged(spark))
 
 _EPOCH_SEED = "ep0"
 _N_EPOCHS = 3
@@ -10312,25 +10078,9 @@ def windows_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the |epochs| side, one (epoch, shard) hash exchange
     with per-group sort, never a global sort (the library operator
     `epoch_shuffle_plan`)."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-    from cassandra_util_spark.operators.packing import (
-        epoch_shuffle_plan,
-        materialize_packed_windows,
-    )
+    from cassandra_util_spark.operators.packing import epoch_shuffle_plan
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    # pin the encoded streams (the r14 distributed_cumsum discipline)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    ).localCheckpoint()
-    win = materialize_packed_windows(
-        enc, "doc_id", "token_ids", capacity=1024, distributed=True
-    )
+    _, win = _packed_windows(spark, sf_dir)
     return epoch_shuffle_plan(
         win, epochs=_N_EPOCHS, num_shards=_EPOCH_SHARDS, seed=_EPOCH_SEED
     )
@@ -10369,11 +10119,9 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio divides two exact integer sums, so a 1000-executor
     aggregation is order-independent and replays bit-identically in
     SQL."""
-    from cassandra_util_spark.operators.bpe import bpe_token_profile, bpe_train
     from cassandra_util_spark.operators.text import normalize_text
 
-    d = _t(spark, sf_dir, "documents")
-    _, words = bpe_train(d, "text", num_merges=_BPE_N)
+    d, _, words = _tokenizer(spark, sf_dir)
     enc = bpe_token_profile(d, "doc_id", "text", words).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
     )
@@ -10491,20 +10239,11 @@ def curriculum_packed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     one quality-scored scan, one (id)-keyed assembly, the two-phase
     prefix sum, one slice-piece regroup — the stage join is
     (id)-keyed against the already-pinned encode."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
     from cassandra_util_spark.operators.packing import (
         materialize_packed_windows,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
+    d, _, enc = _encoded(spark, sf_dir)
     # ONE pin, after the order-key join: distributed_cumsum executes its
     # input three times, so the full chain (encode + quality-score scan +
     # join) is pinned here (review r15); pinning enc separately too was a
@@ -10516,14 +10255,7 @@ def curriculum_packed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc2, "doc_id", "token_ids", capacity=1024,
         order_col="__cur_ord", distributed=True,
     )
-    return win.select(
-        "bin",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        "n_tokens",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-    )
+    return _windows_view(win)
 
 
 @query(
@@ -10884,30 +10616,10 @@ def bpe_encode_oov_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     words are ASCII, so DuckDB's per-char code points equal Spark's
     UTF-8 bytes).  ``n_byte_tokens`` certifies the fallback actually
     fired (7 planted OOV words at every SF)."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    kept = words.orderBy(F.col("cnt").desc(), "word").limit(_BPE_OOV_KEEP)
-    vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
-    byte_base = int(
-        vocab.filter(F.col("kind") == "byte").agg(F.min("id")).first()[0]
-    )
+    d, kept, vocab = _oov_capped(spark, sf_dir)
+    byte_base = _byte_base(vocab)
     enc = bpe_encode_ids(d, "doc_id", "text", kept, vocab, oov="bytes")
-    return enc.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-        F.size(
-            F.filter("token_ids", lambda t: t >= F.lit(byte_base))
-        ).cast("bigint").alias("n_byte_tokens"),
-    )
+    return _oov_stream_view(enc, byte_base)
 
 
 @query(
@@ -11034,17 +10746,7 @@ def curriculum_windows_from_store(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: the certified streaming-store shape (per-batch cost ∝
     batch, one clustered append + O(capacity) carry read per stage)
     over the certified curriculum order."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", words, bpe_vocab(spark, words, merges)
-    )
+    d, _, enc = _encoded(spark, sf_dir)
     # ONE pin after the order-key join (r17, same reasoning as
     # curriculum_packed_windows: enc has no other consumer here, so a
     # separate enc pin was a wasted extra materialization round-trip)
@@ -11064,7 +10766,7 @@ def curriculum_windows_from_store(spark: SparkSession, sf_dir: str) -> DataFrame
     store = _drain_windows_store(
         spark, shards, "cur_ord", capacity=1024, prefix="win-cur"
     )
-    return _windows_store_view(spark, store)
+    return _windows_view(store.read_merged(spark))
 
 
 # the persisted curriculum windows must hash-match the in-memory twin's
@@ -11086,36 +10788,10 @@ def tokenizer_persisted_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the actual production shape: `bpe_train` runs once;
     every later crawl shard mounts the megabyte-sized artifact
     (vocabulary-sized tables, broadcast whole) and pays only the encode."""
-    import tempfile
-
-    from cassandra_util_spark.operators.bpe import bpe_encode_ids, bpe_train
-    from cassandra_util_spark.sources.tokenizer import (
-        read_tokenizer,
-        write_tokenizer,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    path = tempfile.mkdtemp(prefix="tokenizer-") + "/bpe"
-    write_tokenizer(
-        spark, path, words, merges,
-        byte_fallback=True, capped_words=_BPE_OOV_KEEP,
-    )
-    _, kept, vocab, _ = read_tokenizer(spark, path)
-    byte_base = int(
-        vocab.filter(F.col("kind") == "byte").agg(F.min("id")).first()[0]
-    )
+    d, kept, vocab = _oov_artifact(spark, sf_dir, "tokenizer-")
+    byte_base = _byte_base(vocab)
     enc = bpe_encode_ids(d, "doc_id", "text", kept, vocab, oov="bytes")
-    return enc.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-        F.size(
-            F.filter("token_ids", lambda t: t >= F.lit(byte_base))
-        ).cast("bigint").alias("n_byte_tokens"),
-    )
+    return _oov_stream_view(enc, byte_base)
 
 
 # the persisted tokenizer must induce the byte-identical stream the
@@ -11140,17 +10816,7 @@ def bpe_roundtrip_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens travel as bytes — the property that makes byte fallback SAFE
     to default to in production, not just non-fatal.  Scale shape: the
     certified encode + decode chains, both token-linear."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_decode,
-        bpe_encode_ids,
-        bpe_train,
-        bpe_vocab,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    kept = words.orderBy(F.col("cnt").desc(), "word").limit(_BPE_OOV_KEEP)
-    vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
+    d, kept, vocab = _oov_capped(spark, sf_dir)
     ids = bpe_encode_ids(d, "doc_id", "text", kept, vocab, oov="bytes")
     return bpe_decode(ids, "doc_id", "token_ids", vocab=vocab)
 
@@ -11171,42 +10837,11 @@ def tokenizer_streaming_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the uncapped raise-mode tokenizer).  Composes three certified
     pieces: the artifact round trip (`tokenizer_persisted_encode`), the
     inline byte fallback, and the idempotent streamed encode."""
-    import tempfile
-
-    from cassandra_util_spark.operators.bpe import bpe_train
-    from cassandra_util_spark.sources.tokenizer import (
-        read_tokenizer,
-        write_tokenizer,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    path = tempfile.mkdtemp(prefix="tokenizer-stream-") + "/bpe"
-    write_tokenizer(
-        spark, path, words, merges,
-        byte_fallback=True, capped_words=_BPE_OOV_KEEP,
-    )
-    _, kept, vocab, _ = read_tokenizer(spark, path)
-    byte_base = int(
-        vocab.filter(F.col("kind") == "byte").agg(F.min("id")).first()[0]
-    )
-    src = _pinned_shard_src(
-        [d.filter(F.col("doc_id") % 3 == k) for k in range(3)],
-        ["doc_id", "text"],
-        "tok-stream",
-    )
+    d, kept, vocab = _oov_artifact(spark, sf_dir, "tokenizer-stream-")
+    byte_base = _byte_base(vocab)
+    src = _pinned_shard_src(_mod3_shards(d), ["doc_id", "text"], "tok-stream")
     store = _drain_encode_store(spark, src, kept, vocab, "tok-enc")
-    view = store.read_merged(spark)
-    return view.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids"),
-        "n_tokens",
-        F.size(
-            F.filter("token_ids", lambda t: t >= F.lit(byte_base))
-        ).cast("bigint").alias("n_byte_tokens"),
-    )
+    return _oov_stream_view(store.read_merged(spark), byte_base)
 
 
 # the streamed frozen-artifact encode must converge to the one-batch
@@ -11262,35 +10897,6 @@ def _windecode_sql(extra_cte: str = "", from_extra: str = "",
 _WINDECODE_ORACLE = _bpe_sql(_BPE_N, _windecode_sql())
 
 
-def _oov_capped(spark, sf_dir: str):
-    """``(d, kept, vocab)`` — the capped byte-fallback MODEL fixture
-    (train + top-{K} cap + byte-fallback vocabulary), without any
-    encode.  Streaming consumers (`tokenizer_coverage_drift`) stop
-    here: they re-encode through `stream_encode` anyway, and
-    `_oov_frozen`'s eager batch encode would run the whole corpus
-    chain for nothing (review r17)."""
-    from cassandra_util_spark.operators.bpe import bpe_train, bpe_vocab
-
-    d = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(d, "text", num_merges=_BPE_N)
-    kept = words.orderBy(F.col("cnt").desc(), "word").limit(_BPE_OOV_KEEP)
-    vocab = bpe_vocab(spark, words, merges, byte_fallback=True)
-    return d, kept, vocab
-
-
-def _oov_frozen(spark, sf_dir: str):
-    """``(d, kept, vocab, enc)`` — `_oov_capped` plus the one-shot
-    ``oov="bytes"`` encode, pinned once: the fixture of the
-    decode-round-trip queries (review r17: one copy)."""
-    from cassandra_util_spark.operators.bpe import bpe_encode_ids
-
-    d, kept, vocab = _oov_capped(spark, sf_dir)
-    enc = bpe_encode_ids(
-        d, "doc_id", "text", kept, vocab, oov="bytes"
-    ).localCheckpoint()
-    return d, kept, vocab, enc
-
-
 def _decode_roundtrip_view(d, win, vocab) -> DataFrame:
     """(doc_id, n_windows, n_tokens, restored) — the shared inversion
     tail of the two decode-round-trip queries (review r17: one copy,
@@ -11299,7 +10905,6 @@ def _decode_roundtrip_view(d, win, vocab) -> DataFrame:
     read off the attribution map, so the reassembled stream feeds ONLY
     the decode.  ``win`` must be pinned by the caller: it feeds two plan
     branches (the span aggregate and reassemble → decode)."""
-    from cassandra_util_spark.operators.bpe import bpe_decode
     from cassandra_util_spark.operators.packing import reassemble_doc_streams
 
     nwin = (
@@ -11441,11 +11046,9 @@ def tokenizer_coverage_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, and a partial-aggregated group-by emitting |languages| rows —
     no token-id assembly, no array shuffle, the cheapest possible pass
     over a 100 TB corpus."""
-    from cassandra_util_spark.operators.bpe import bpe_train
     from cassandra_util_spark.operators.text import _norm_tokens
 
-    d = _t(spark, sf_dir, "documents")
-    _, words = bpe_train(d, "text", num_merges=_BPE_N)
+    d, _, words = _tokenizer(spark, sf_dir)
     kept = words.orderBy(F.col("cnt").desc(), "word").limit(_BPE_OOV_KEEP)
     kc = kept.select("word", F.size("syms").alias("__nseg"))
     dw = d.select(
@@ -11611,8 +11214,6 @@ def tokenizer_coverage_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     writetime column SQL-replayable.  Scale shape: one metadata-light
     aggregate over the store (token arrays feed one map-side
     size/filter pass; the group-by emits |batches| rows)."""
-    from cassandra_util_spark.operators.bpe import byte_block_bounds
-
     d, kept, vocab = _oov_capped(spark, sf_dir)
     byte_base, _end = byte_block_bounds(vocab)
     src = _pinned_shard_src(

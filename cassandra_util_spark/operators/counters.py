@@ -72,14 +72,20 @@ class CounterStore:
         independent writers collision-free.  Deltas are cast to
         DECIMAL(28,6) at write so every run is sum-compatible with every
         other (raw long/double inputs included)."""
+        return self.store.append_run(
+            self._delta(df), name=name or f"c{uuid.uuid4().hex[:12]}"
+        )
+
+    def _delta(self, df: DataFrame) -> DataFrame:
+        """The batch as a delta run's rows: the key columns and each
+        counter cast to DECIMAL(28,6)."""
         missing = [c for c in self.keys + self.counters if c not in df.columns]
         if missing:
             raise ValueError(f"counter batch is missing columns {missing}")
-        delta = df.select(
+        return df.select(
             *self.keys,
             *[F.col(c).cast(_DELTA_TYPE).alias(c) for c in self.counters],
         )
-        return self.store.append_run(delta, name=name or f"c{uuid.uuid4().hex[:12]}")
 
     # -- read path ----------------------------------------------------------
 

@@ -34,9 +34,9 @@ An identity mismatch FAILS LOUDLY instead of skipping.
 Every store-backed drain in this package runs that protocol through one
 helper, :func:`_drain`, and reads its mark through one parser,
 :func:`_applied`.  A run store keeps the mark in its commit record:
-:func:`stream_to_runstore` sets it in the batch's own append publish
-(``RunStore._append``), so run and mark land in one record swap; the
-counter and corpus drains set it by a mark-only
+:func:`stream_to_runstore` and :func:`stream_counter_deltas` set it in
+the batch's own append publish (``RunStore._append``), so run and mark
+land in one record swap; the corpus drain sets it by a mark-only
 ``RunStore._publish(mark=...)`` after the batch's last append.  A
 snapshot store (the sketch tables, ``continuous_rollup``,
 ``streaming_apply_changelog``) carries it in the pointer write itself,
@@ -302,7 +302,7 @@ def stream_counter_deltas(
     the raw events need rolling up first).
 
     Exactly-once under at-least-once replay uses BOTH run-store guards:
-    the run name is the batch id (a replay of a live run is append_run's
+    the run name is the batch id (a replay of a live run is the append's
     no-op) and the store's mark (txn identity + batch id in its commit
     record, same protocol as :func:`stream_to_runstore`) skips replays
     whose run a compaction
@@ -321,10 +321,10 @@ def stream_counter_deltas(
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if transform is not None:
             batch_df = transform(batch_df, batch_id)
-        counters.append_increments(batch_df, name=run_name_for_batch(batch_id))
-        # mark-only publish: the delta run goes through append_increments,
-        # which casts the counters and takes no mark
-        store._publish(mark=f"{app_id}:{batch_id}")
+        store._append(
+            counters._delta(batch_df), run_name_for_batch(batch_id),
+            f"{app_id}:{batch_id}",
+        )
         if compact_every is not None and (batch_id + 1) % compact_every == 0:
             counters.compact(batch_df.sparkSession)
 

@@ -672,13 +672,32 @@ def test_drain_runner_stops_a_drain_that_times_out(spark):
 def test_contract_queries_drain_only_through_the_runner():
     """entry_queries opens a file stream in one place (`_shard_stream`)
     and awaits a drain in one place (`_run_drain`), so no query can
-    hand-roll a drain that ignores the timeout."""
+    hand-roll a drain that ignores the timeout.  Its fixtures are built
+    in one place too: the `_BPE_N` tokenizer is trained only in
+    `_tokenizer`, its id vocabulary is built only in `_vocab`, and
+    `tempfile` is imported once, at module level, so no query grows its
+    own copy of a fixture that can drift from its oracle."""
     from cassandra_util_spark import entry_queries
 
     with open(entry_queries.__file__) as f:
         src = f.read()
     assert src.count("awaitTermination(") == 1
     assert src.count("readStream") == 1
+    assert src.count("num_merges=_BPE_N)") == 1
+    assert src.count("bpe_vocab(spark, words, merges)") == 1
+    assert src.count("import tempfile") == 1
+
+
+def test_tokenizer_fixture_is_not_memoized(spark, count_jobs):
+    """Two builds of the contract queries' tokenizer fixture each train
+    from scratch: the same, nonzero number of jobs both times."""
+    from cassandra_util_spark.entry_queries import _tokenizer
+
+    sf = "/root/testdata/sf0.001"  # the smoke scale, TESTDATA.md
+    (_, merges_a, _), jobs_a = count_jobs("tokenizer-a", lambda: _tokenizer(spark, sf))
+    (_, merges_b, _), jobs_b = count_jobs("tokenizer-b", lambda: _tokenizer(spark, sf))
+    assert jobs_a == jobs_b > 0
+    assert merges_a == merges_b
 
 
 def test_shard_step_min_id_rides_strategy_count(spark):

@@ -218,14 +218,12 @@ def _crash(query):
 
 @pytest.mark.parametrize("drain", ["runstore", "counter_deltas"])
 def test_fault_in_mark_publish_restarts_clean(spark, tmp_path, monkeypatch, drain):
-    """Fault injection at the publish that carries batch 1's mark.  The
-    run-store drain commits run and mark in that one publish, so neither
-    lands: batch 1's run is not live and the mark still names batch 0.
-    The counter drain's mark-only publish follows its append, so there
-    batch 1's run is live while the mark names batch 0.  A restart from
-    the same checkpoint replays batch 1 (a fresh append, or the live
-    run's no-op) and publishes its mark, so the store's view and mark
-    equal an uninterrupted run's.  Counters would double-count a batch
+    """Fault injection at the publish that carries batch 1's mark.  Both
+    drains commit run and mark in that one publish, so neither lands:
+    batch 1's run is not live and the mark still names batch 0.  A
+    restart from the same checkpoint replays batch 1 as a fresh append
+    and publishes its mark, so the store's view and mark equal an
+    uninterrupted run's.  Counters would double-count a batch
     applied twice, and a counter drain also folds its deltas every 2
     batches."""
     from cassandra_util_spark.operators.counters import CounterStore
@@ -262,7 +260,7 @@ def test_fault_in_mark_publish_restarts_clean(spark, tmp_path, monkeypatch, drai
     root, cp = str(tmp_path / "crash"), str(tmp_path / "cp")
     store, _, q = start(root, cp)
     _crash(q)
-    assert (run_name_for_batch(1) in store.live_runs()) == (drain == "counter_deltas")
+    assert run_name_for_batch(1) not in store.live_runs()
     assert applied_batch_hwm(store) == 0
 
     store, view, q = start(root, cp)
