@@ -87,23 +87,12 @@ def cmd_snapshots(args: argparse.Namespace) -> int:
         removed = store.vacuum(keep_last=args.vacuum)
         print(json.dumps({"removed": removed, "current": store.current_version()}))
     else:
-        print(
-            json.dumps(
-                {
-                    "current": store.current_version(),
-                    "versions": store.versions(),
-                    "meta": (
-                        {
-                            "partition_keys": list(m.partition_keys),
-                            "clustering_keys": list(m.clustering_keys),
-                            "writetime_col": m.writetime_col,
-                        }
-                        if (m := store.read_meta())
-                        else None
-                    ),
-                }
-            )
-        )
+        rec = store._record()
+        print(json.dumps({
+            "current": rec["current"],
+            "versions": [v["name"] for v in rec["versions"]],
+            "meta": rec["meta"],
+        }))
     return 0
 
 

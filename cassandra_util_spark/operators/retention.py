@@ -10,7 +10,7 @@ Spark flow (everything stays in Catalyst):
     keep   = convictor.keep_expr()          # literal-folded predicate
     kept, convicted = src.filter(keep), src.filter(~keep)
     convicted → backup dir (parquet append)   [dcs_backup_dir]
-    kept      → new snapshot version + atomic pointer swap
+    kept      → new snapshot version + atomic record swap
     counts    → df.observe() aggregates       [status report]
 
 At 100 TB: one full scan, no shuffle (filter is map-side), writes partitioned

@@ -156,53 +156,6 @@ def hll_build(df: DataFrame, key_col: str, p: int = 9, seed: str = "hll") -> Dat
     )
 
 
-def hll_estimate(registers: DataFrame, p: int = 9) -> DataFrame:
-    """Cardinality estimate from a register table, in exact-integer form.
-
-    Empty buckets count with register 0.  The harmonic term Σ 2^-M_j is
-    summed as EXACT integers Σ 2^(40 - M_j) (M_j ≤ 32-p+1 ≤ 29 < 40), so
-    the only float steps are one division and the small-range correction's
-    ln — deterministic double ops over identical integers in any engine.
-
-    Output: 1 row (n_buckets, n_zero, raw_estimate, estimate) — estimate
-    applies the standard small-range linear counting when raw ≤ 2.5m and
-    empty buckets exist.
-    """
-    m = None
-    # p is a parameter of the build; the register table only knows buckets
-    # present, so m must be passed via p
-    m = 1 << p
-    agg = registers.agg(
-        F.count(F.lit(1)).alias("filled"),
-        # empty sketch (no keys at all): 0 filled buckets, harmonic term 0 —
-        # the estimate then comes out via linear counting as m·ln(m/m) = 0
-        F.coalesce(
-            F.sum(F.expr("shiftleft(1L, cast(40 - register AS int))")), F.lit(0)
-        ).alias("s_filled"),
-    )
-    alpha = _alpha_m(m)
-    two40 = float(1 << 40)
-    return agg.select(
-        F.lit(m).cast("bigint").alias("n_buckets"),
-        (F.lit(m) - F.col("filled")).cast("bigint").alias("n_zero"),
-        F.round(
-            F.lit(alpha * m * m)
-            / ((F.col("s_filled") + (F.lit(m) - F.col("filled")) * F.lit(1 << 40)).cast("double") / F.lit(two40)),
-            4,
-        ).alias("raw_estimate"),
-    ).select(
-        "n_buckets",
-        "n_zero",
-        "raw_estimate",
-        F.when(
-            (F.col("raw_estimate") <= 2.5 * m) & (F.col("n_zero") > 0),
-            F.round(F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("n_zero")), 4),
-        )
-        .otherwise(F.col("raw_estimate"))
-        .alias("estimate"),
-    )
-
-
 def hll_build_grouped(
     df: DataFrame,
     group_col: str,
@@ -236,8 +189,10 @@ def hll_build_grouped(
 
 def hll_estimate_grouped(registers: DataFrame, p: int = 9) -> DataFrame:
     """Per-group cardinality estimates from grouped register tables; the
-    same exact-integer harmonic sum as :func:`hll_estimate`, one row per
-    group."""
+    harmonic term Σ 2^-M_j summed as EXACT integers Σ 2^(40 - M_j)
+    (M_j ≤ 32-p+1 ≤ 29 < 40), so the only float steps are one division and
+    the small-range correction's ln — deterministic double ops over
+    identical integers in any engine.  One row per group."""
     m = 1 << p
     alpha = _alpha_m(m)
     two40 = float(1 << 40)

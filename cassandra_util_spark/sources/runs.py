@@ -17,10 +17,12 @@ live runs, each with its LSM level and its stats entry (row count,
 per-column min/max skip index, parquet bytes and Spark schema, all taken
 from the written footers), plus the stream mark ``"app_id:batch_id"`` of
 the last micro-batch a drain applied.  :meth:`RunStore._publish` is its
-only writer: under the store lock it re-reads the record, applies the
-adds, drops, levels and mark, and swaps it in through a temp file and
-``os.replace`` — one atomic step, as the reference replaces SSTables and
-their metadata together and as Delta Lake's log commits a table version.
+only writer, through :func:`_swap_record`, the one record writer of this
+module and of ``SnapshotStore``: under the store lock it re-reads the
+record, applies the change (here the adds, drops, levels and mark), and
+swaps it in through a temp file and ``os.replace`` — one atomic step, as
+the reference replaces SSTables and their metadata together and as Delta
+Lake's log commits a table version.
 Readers parse that one file, so planning a read opens one metadata file
 and never runs a Spark job: every scan is handed its run's recorded
 schema instead of inferring it from a footer (one job per directory).
@@ -44,6 +46,7 @@ readable and merge with zstd runs in one scan.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import tempfile
@@ -127,6 +130,81 @@ def _read(spark: SparkSession, paths: list[str], schema: dict) -> DataFrame:
     return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
 
 
+@contextmanager
+def _locked(root: str, timeout_s: float = 30.0, stale_s: float = 120.0):
+    """Advisory record lock (O_CREAT|O_EXCL lockfile ``<root>/_LOCK``) for
+    multi-writer stores.  The LWW/compaction paths keep their
+    single-maintainer discipline; this exists so INDEPENDENT writers
+    (counter deltas, concurrent backfills, two sketch drains first-using
+    one snapshot store) can commit without one writer's read → swap losing
+    the other's just-published change.  Held only around
+    :func:`_swap_record`'s record re-read and swap — never across a data
+    write.  A lock older than ``stale_s`` is presumed abandoned (crashed
+    holder) and broken; acquisition past ``timeout_s`` raises rather than
+    deadlock."""
+    lock = os.path.join(root, "_LOCK")
+    deadline = time.monotonic() + timeout_s
+    while True:
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.write(fd, str(os.getpid()).encode())
+            os.close(fd)
+            break
+        except FileExistsError:
+            try:
+                if time.time() - os.path.getmtime(lock) > stale_s:
+                    os.unlink(lock)
+                    continue
+            except FileNotFoundError:
+                continue
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"record lock {lock} held past {timeout_s}s")
+            time.sleep(0.05)
+    try:
+        yield
+    finally:
+        try:
+            os.unlink(lock)
+        except FileNotFoundError:
+            pass
+
+
+def _load_record(root: str, name: str, empty: dict, kind: str) -> dict:
+    """The commit record ``<root>/<name>`` of a store: a JSON object with
+    exactly ``empty``'s keys.  A store with no record yet reads as
+    ``empty``; a file that is not a record raises, naming the ``kind`` of
+    store and its root, rather than read as an empty store."""
+    try:
+        with open(os.path.join(root, name)) as f:
+            text = f.read()
+    except FileNotFoundError:
+        return copy.deepcopy(empty)
+    try:
+        rec = json.loads(text)
+    except ValueError:
+        rec = None
+    if not isinstance(rec, dict) or rec.keys() != empty.keys():
+        raise ValueError(f"{kind} at {root}: {name} is not a commit record")
+    return rec
+
+
+def _swap_record(
+    root: str, name: str, read: Callable[[], dict], change: Callable[[dict], dict]
+) -> None:
+    """The one writer of every store's commit record: under the store's
+    :func:`_locked`, re-read the record with ``read``, apply ``change`` to
+    it and swap the result in through a temp file and ``os.replace`` (atomic
+    on POSIX), so readers see the old record or the new one and a change
+    another writer published meanwhile is never lost.  ``change`` may
+    raise to refuse the commit; the record is then left as it was."""
+    with _locked(root):
+        rec = change(read())
+        fd, tmp = tempfile.mkstemp(dir=root, prefix=f"{name}.")
+        with os.fdopen(fd, "w") as f:
+            json.dump(rec, f, default=str, separators=(",", ":"))
+        os.replace(tmp, os.path.join(root, name))
+
+
 def size_tiered_plan(
     run_sizes: dict[str, int],
     min_threshold: int = 4,
@@ -171,27 +249,11 @@ class RunStore:
         self.meta = meta
         os.makedirs(root, exist_ok=True)
 
-    @property
-    def _record_path(self) -> str:
-        return os.path.join(self.root, "_RUNS")
-
     def _record(self) -> dict:
         """The store's commit record: ``{"runs": [{"name", "level",
         "stats"}, ...], "mark": "app_id:batch_id" | None}``, runs in
-        publish order.  A store with no record yet is empty; a ``_RUNS``
-        that is not a record raises rather than read as an empty store."""
-        try:
-            with open(self._record_path) as f:
-                text = f.read()
-        except FileNotFoundError:
-            return {"runs": [], "mark": None}
-        try:
-            rec = json.loads(text)
-        except ValueError:
-            rec = None
-        if not isinstance(rec, dict) or not isinstance(rec.get("runs"), list):
-            raise ValueError(f"run store at {self.root}: _RUNS is not a commit record")
-        return rec
+        publish order (see :func:`_load_record`)."""
+        return _load_record(self.root, "_RUNS", {"runs": [], "mark": None}, "run store")
 
     def live_runs(self) -> list[str]:
         return [e["name"] for e in self._record()["runs"]]
@@ -200,42 +262,10 @@ class RunStore:
         """Run → LSM level (0 is the overlapping append tier)."""
         return {e["name"]: e["level"] for e in self._record()["runs"]}
 
-    @contextmanager
     def locked(self, timeout_s: float = 30.0, stale_s: float = 120.0):
-        """Advisory record lock (O_CREAT|O_EXCL lockfile) for multi-writer
-        appends.  The LWW/compaction paths keep their single-maintainer
-        discipline; this exists so INDEPENDENT writers (counter deltas,
-        concurrent backfills) can append runs without one writer's
-        read-live → swap losing the other's just-published run.  Held only
-        around :meth:`_publish`'s record re-read and swap — never across a
-        data write.  A lock older than ``stale_s`` is presumed abandoned
-        (crashed holder) and broken; acquisition past ``timeout_s`` raises
-        rather than deadlock."""
-        lock = os.path.join(self.root, "_LOCK")
-        deadline = time.monotonic() + timeout_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lock) > stale_s:
-                        os.unlink(lock)
-                        continue
-                except FileNotFoundError:
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"record lock {lock} held past {timeout_s}s")
-                time.sleep(0.05)
-        try:
-            yield
-        finally:
-            try:
-                os.unlink(lock)
-            except FileNotFoundError:
-                pass
+        """The store's record lock (:func:`_locked`), for writers that must
+        hold it across their own re-read and swap."""
+        return _locked(self.root, timeout_s, stale_s)
 
     def _publish(
         self,
@@ -250,28 +280,22 @@ class RunStore:
         otherwise; a name already live is left as it is), remove the runs
         ``drop``, and set the stream ``mark`` when given.  The added runs'
         stats entries are computed first, outside the lock; the record is
-        then re-read under :meth:`locked` and swapped atomically, so a run
-        another writer published meanwhile is never lost — a mark-only
-        publish included."""
+        then re-read and swapped by :func:`_swap_record`, so a run another
+        writer published meanwhile is never lost — a mark-only publish
+        included."""
         entries = [
             {"name": r, "level": 0, "stats": self._stats(r, zorder_by)} for r in add
         ]
-        with self.locked():
-            rec = self._record()
+
+        def change(rec: dict) -> dict:
             live, gone = {e["name"] for e in rec["runs"]}, set(drop)
             runs = [e for e in rec["runs"] if e["name"] not in gone]
             runs += [e for e in entries if e["name"] not in live]
             for e in runs:
                 e["level"] = (levels or {}).get(e["name"], e["level"])
-            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_RUNS.")
-            with os.fdopen(fd, "w") as f:
-                json.dump(
-                    {"runs": runs, "mark": rec["mark"] if mark is None else mark},
-                    f,
-                    default=str,
-                    separators=(",", ":"),
-                )
-            os.replace(tmp, self._record_path)  # atomic on POSIX
+            return {"runs": runs, "mark": rec["mark"] if mark is None else mark}
+
+        _swap_record(self.root, "_RUNS", self._record, change)
 
     def _next_run(self) -> str:
         existing = [
@@ -924,8 +948,8 @@ def vacuum_dead_runs(store: RunStore, min_age_s: float = 3600.0) -> list[str]:
 
     ``min_age_s`` is the in-flight guard: a directory younger than this may
     be an append that has not published it yet, so it is left
-    alone — the same reasoning as SnapshotStore.vacuum keeping the current
-    pointer's version.  Returns the removed run names.
+    alone — the same reasoning as SnapshotStore.vacuum keeping the newest
+    version directories.  Returns the removed run names.
     """
     import shutil
 

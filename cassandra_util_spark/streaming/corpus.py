@@ -68,7 +68,7 @@ from cassandra_util_spark.operators.text import (
     whitespace_token_count,
 )
 from cassandra_util_spark.sources.runs import RunStore, maintain
-from cassandra_util_spark.streaming.ingest import _applied, _drain, run_name_for_batch
+from cassandra_util_spark.streaming.ingest import _drain, run_name_for_batch
 
 
 def stream_corpus_ingest(
@@ -205,9 +205,7 @@ def stream_corpus_ingest(
                 )
 
     return _drain(
-        stream, checkpoint_dir, query_name,
-        lambda app: _applied(corpus_store.root, corpus_store._record()["mark"], app),
-        apply, txn_app_id, available_now,
+        stream, checkpoint_dir, query_name, corpus_store, apply, txn_app_id, available_now
     )
 
 

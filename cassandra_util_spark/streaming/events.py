@@ -33,7 +33,7 @@ from pyspark.sql.types import StructType
 from cassandra_util_spark.core.table import KeyedTable, TableMeta
 from cassandra_util_spark.functions import normalize_event_time, writetime_micros
 from cassandra_util_spark.operators.convictors import Convictor
-from cassandra_util_spark.streaming.ingest import _applied, _drain
+from cassandra_util_spark.streaming.ingest import _drain
 
 
 def progress_listener(registry, name: str = "stream"):
@@ -218,10 +218,7 @@ def continuous_rollup(
             merged = partial
         store.commit(merged, tag=f"{app_id}:{batch_id}")
 
-    return _drain(
-        events, checkpoint_dir, None,
-        lambda app: _applied(store.root, store.current_tag(), app), apply,
-    )
+    return _drain(events, checkpoint_dir, None, store, apply)
 
 
 def streaming_dedup(
@@ -348,10 +345,7 @@ def streaming_apply_changelog(
         )
         store.commit(merged, tag=f"{app_id}:{batch_id}")
 
-    return _drain(
-        changes, checkpoint_dir, None,
-        lambda app: _applied(store.root, store.current_tag(), app), apply,
-    )
+    return _drain(changes, checkpoint_dir, None, store, apply)
 
 
 def read_changelog_state(spark, store, op_col: str = "op") -> DataFrame:

@@ -39,9 +39,11 @@ the batch's own append publish (``RunStore._append``), so run and mark
 land in one record swap; the corpus drain sets it by a mark-only
 ``RunStore._publish(mark=...)`` after the batch's last append.  A
 snapshot store (the sketch tables, ``continuous_rollup``,
-``streaming_apply_changelog``) carries it in the pointer write itself,
+``streaming_apply_changelog``) keeps it under the same ``mark`` field of
+its own commit record, set in the version's swap,
 ``SnapshotStore.commit(tag="app_id:batch_id")``, so "state merged" and
-"batch recorded" are one atomic rename.
+"batch recorded" are one atomic rename.  :func:`_drain` reads the mark
+from the store it is given, whichever kind it is.
 """
 
 from __future__ import annotations
@@ -127,7 +129,7 @@ def _drain(
     stream: DataFrame,
     checkpoint_dir: str,
     query_name: Optional[str],
-    applied: Callable[[str], int],
+    store,
     apply: Callable[[DataFrame, int, str], None],
     txn_app_id: Optional[str] = None,
     available_now: bool = True,
@@ -135,15 +137,15 @@ def _drain(
     """Start ``stream`` as an exactly-once drain into a store.
 
     Per micro-batch: resolve the transaction identity (``txn_app_id``, else
-    the checkpoint's query id via :func:`resolve_txn_app_id`), ask
-    ``applied(app_id)`` for the last batch id this stream applied (it
-    raises when another stream wrote the store's mark), skip the batch if
-    its id is at or below that, else call ``apply(batch_df, batch_id,
-    app_id)``.  ``apply`` writes the batch and then advances the store's
+    the checkpoint's query id via :func:`resolve_txn_app_id`), read the
+    last batch id this stream applied from the mark in ``store``'s commit
+    record (a run or a snapshot store; :func:`_applied` raises when
+    another stream wrote the mark), skip the batch if its id is at or
+    below that, else call ``apply(batch_df, batch_id, app_id)``.  ``apply`` writes the batch and then advances the store's
     mark itself, after its last write: a crash before the mark replays the
     batch into idempotent named writes, a crash after it skips the replay
     even when compaction has since folded the batch's run away.  The guard
-    is driver-side file reads; it runs no Spark job.
+    is one driver-side file read; it runs no Spark job.
 
     ``query_name=None`` leaves the query unnamed (the identity fallback
     for unreadable checkpoints is then the checkpoint path), and
@@ -154,7 +156,7 @@ def _drain(
         app_id = txn_app_id or resolve_txn_app_id(
             checkpoint_dir, query_name or checkpoint_dir
         )
-        if batch_id <= applied(app_id):
+        if batch_id <= _applied(store.root, store._record()["mark"], app_id):
             # replay of an already-applied batch whose run compaction may
             # have folded away — re-applying would resurrect convicted rows
             # or double-count additive state
@@ -271,9 +273,7 @@ def stream_to_runstore(
             )
 
     return _drain(
-        stream, checkpoint_dir, query_name,
-        lambda app: _applied(store.root, store._record()["mark"], app), apply,
-        txn_app_id, available_now,
+        stream, checkpoint_dir, query_name, store, apply, txn_app_id, available_now
     )
 
 
@@ -329,7 +329,5 @@ def stream_counter_deltas(
             counters.compact(batch_df.sparkSession)
 
     return _drain(
-        stream, checkpoint_dir, query_name,
-        lambda app: _applied(store.root, store._record()["mark"], app), apply,
-        txn_app_id, available_now,
+        stream, checkpoint_dir, query_name, store, apply, txn_app_id, available_now
     )

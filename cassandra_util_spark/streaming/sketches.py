@@ -11,7 +11,7 @@ gates (``heavy_hitters_from_store``) or join-size estimates
 (``cm_join_size_estimate``) without touching events at all.
 
 Exactly-once: the replay guard of :mod:`.ingest`, with the applied
-``app_id:batch_id`` riding in the snapshot pointer write
+``app_id:batch_id`` riding in the snapshot store's commit record swap
 (``SnapshotStore.commit(tag=...)``, the mark ``continuous_rollup`` and
 ``streaming_apply_changelog`` keep too).  Double-counting is the failure
 it prevents here: CM counters are additive, so a replayed merge would
@@ -29,8 +29,6 @@ micro-batch flush.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -39,101 +37,7 @@ from typing import Optional
 
 from cassandra_util_spark.operators.sketches import count_min_build
 from cassandra_util_spark.sources.snapshots import SnapshotStore
-from cassandra_util_spark.streaming.ingest import _applied, _drain
-
-
-def _pin_sampler_identity(store: SnapshotStore, identity: dict) -> None:
-    """Record the resolved sampler identity in the store root (sidecar
-    ``_SAMPLER``, atomic write like ``_META``) and fail loudly when an
-    existing store was built under a different one.
-
-    Why (ADVICE r10): the seed default became per-mode in round 10 —
-    ``'wbk'`` for weighted stores, ``'bk'`` for uniform.  A weighted store
-    built under the OLD default (``'bk'`` even with ``weight_col`` set)
-    would otherwise silently merge ``'wbk'``-seeded batch deltas into
-    ``'bk'``-seeded persisted state: mixed-seed priorities are not
-    comparable, so the merged "sample" is statistically invalid with no
-    error.  The same applies to any drift in hash function, key column,
-    weight column, or k across the store's life.
-
-    Migration for pre-change stores (versions exist, no ``_SAMPLER``):
-    the identity is adopted and pinned with a warning.  The sidecar only
-    prevents FUTURE mixing — it cannot detect whether mixed-seed batches
-    were already merged before identity recording existed, so the warning
-    tells the operator to rebuild; adoption merely stops the bleeding.
-
-    Concurrency (ADVICE r11, mechanism revised per ADVICE r12): creation
-    is first-writer-wins ATOMIC — ``os.open(path, O_CREAT|O_EXCL)``
-    fails with ``FileExistsError`` instead of overwriting, and the loser
-    re-reads the winner's identity and runs the mismatch check.  The old
-    check-then-``os.replace`` form let two streams first-using a fresh
-    store both observe "no sidecar" and pin DIFFERENT identities, last
-    write silently winning — exactly the corruption the sidecar exists
-    to prevent.  ``O_EXCL`` rather than the previous ``os.link`` trick:
-    hard links are unsupported on some filesystems (certain NFS/FUSE/
-    object-store mounts) while exclusive create is universal.  The one
-    property ``os.link`` had that ``O_EXCL`` lacks — the sidecar
-    appearing with its content already complete — is recovered on the
-    read side: the payload lands in a single small ``write`` and a
-    reader that catches the in-flight window (``JSONDecodeError``)
-    simply re-reads, bounded so a genuinely corrupt sidecar still
-    raises."""
-    import json
-    import time as _time
-    import warnings as _warnings
-
-    path = os.path.join(store.root, "_SAMPLER")
-    decode_retries = 0
-    while True:
-        try:
-            with open(path) as f:
-                existing = json.load(f)
-        except FileNotFoundError:
-            existing = None
-        except json.JSONDecodeError:
-            # a concurrent winner created the sidecar but its single
-            # small write is still in flight; re-read after a beat
-            decode_retries += 1
-            if decode_retries > 100:
-                raise
-            _time.sleep(0.01)
-            continue
-        if existing is not None:
-            if existing != identity:
-                diff = {
-                    key: (existing.get(key), identity.get(key))
-                    for key in sorted(set(existing) | set(identity))
-                    if existing.get(key) != identity.get(key)
-                }
-                raise RuntimeError(
-                    f"sketch store {store.root} was built with a different "
-                    f"sampler identity; refusing to merge incompatible "
-                    f"priorities (stored vs requested): {diff}"
-                )
-            return
-        if store.current_version() is not None:
-            _warnings.warn(
-                f"sketch store {store.root} predates sampler-identity "
-                f"recording; adopting and pinning {identity}. This pin "
-                "prevents future seed mixing but CANNOT detect past "
-                "mixing: if this store may have merged batches under "
-                "more than one identity before recording existed (in "
-                "particular a WEIGHTED store continued across the "
-                "per-mode seed-default change), REBUILD it from source — "
-                "an already-mixed sample is statistically invalid and "
-                "nothing can repair it in place. To continue a "
-                "pre-change weighted store that was consistently built "
-                "with seed='bk', pass seed='bk' explicitly.",
-                stacklevel=3,
-            )
-        try:
-            # atomic exclusive create; EEXIST = lost the race
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue  # re-read the winner's identity and mismatch-check it
-        with os.fdopen(fd, "w") as f:
-            f.write(json.dumps(identity, sort_keys=True))  # one small write
-        return
+from cassandra_util_spark.streaming.ingest import _drain
 
 
 def stream_count_min_to_store(
@@ -175,9 +79,7 @@ def stream_count_min_to_store(
         store.vacuum(keep_last=retain_versions)
 
     return _drain(
-        stream, checkpoint_dir, query_name,
-        lambda app: _applied(store.root, store.current_tag(), app), apply,
-        txn_app_id, available_now,
+        stream, checkpoint_dir, query_name, store, apply, txn_app_id, available_now
     )
 
 
@@ -231,11 +133,13 @@ def stream_bottomk_to_store(
     a batch run with defaults in BOTH modes (ADVICE r9: a fixed ``'bk'``
     silently broke the weighted closure unless callers passed the seed).
 
-    The resolved identity (seed, mode, hash, key/weight columns, k) is
-    pinned in the store's ``_SAMPLER`` sidecar on first use and re-checked
-    every batch: continuing a store under a DIFFERENT identity raises
-    instead of silently merging incomparable priorities (ADVICE r10 — see
-    :func:`_pin_sampler_identity` for the pre-change-store migration)."""
+    The resolved identity (seed, mode, hash, key/weight columns, k) is a
+    field of the store's commit record: the first batch's commit sets it,
+    and it is compared when the drain starts and again under the record
+    lock in every batch's commit swap.  Continuing a store under a
+    DIFFERENT identity raises instead of silently merging incomparable
+    priorities (ADVICE r10); of two streams first-using one store, the
+    first to swap wins and the other raises."""
     from cassandra_util_spark.operators.sketches import (
         bottomk_merge,
         bottomk_sample,
@@ -265,9 +169,7 @@ def stream_bottomk_to_store(
         "k": k,
     }
 
-    def applied(app_id: str) -> int:
-        _pin_sampler_identity(store, sampler_identity)
-        return _applied(store.root, store.current_tag(), app_id)
+    store._check_sampler(store._record()["sampler"], sampler_identity)
 
     def apply(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         if weight_col is not None:
@@ -287,10 +189,9 @@ def stream_bottomk_to_store(
             delta = bottomk_merge(
                 state, delta, k=k, key_col=key_col, priority_col=pri
             )
-        store.commit(delta, tag=f"{app_id}:{batch_id}")
+        store._commit(delta, tag=f"{app_id}:{batch_id}", sampler=sampler_identity)
         store.vacuum(keep_last=retain_versions)
 
     return _drain(
-        stream, checkpoint_dir, query_name, applied, apply,
-        txn_app_id, available_now,
+        stream, checkpoint_dir, query_name, store, apply, txn_app_id, available_now
     )

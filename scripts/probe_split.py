@@ -1,7 +1,8 @@
 """Probe: split any registered query's wall time into build (Python/py4j
 DataFrame construction), plan (analysis+optimization+physical planning),
-and exec (noop write) — the probe_rp.py splitter generalized to a query
-list (VERDICT r17 item 3: the dedup family probes).
+and exec (noop write), for each query named on the command line (for
+example ``embedding_rp_project ann_rp_rerank --reps 2`` for the
+random-projection pair).
 
 Usage: python scripts/probe_split.py <query> [query ...] [--reps N]
 """

@@ -68,7 +68,6 @@ ALLOW = {
     "stream_count_min_to_store": "store-backed Count-Min drain (PARITY.md 'Round 5 ... streaming sketches')",
     "heavy_hitters_from_store": "reads stream_count_min_to_store's store (PARITY.md round 6, item 7)",
     "cm_join_size_estimate": "Count-Min join-size bound over two sketch tables (operators/sketches.py)",
-    "hll_estimate": "estimator for the registers hll_build makes (the sketch_hll_registers query returns them)",
     "derive_writetime": "type-introspecting writetime path (PARITY.md 'ANSI does NOT guard numeric→timestamp casts')",
     # test instruments
     "selected_buckets": "test instrument for bucket pruning",

@@ -163,17 +163,14 @@ def test_sampler_identity_pinned_and_mismatch_fails(spark, docs, tmp_path):
     """ADVICE r10: a store must refuse to merge deltas built under a
     different sampler identity (seed/mode/hash/key/k) — mixed-seed
     priorities are not comparable, so the merged sample would be
-    statistically invalid with no error.  The resolved identity is pinned
-    in the store's _SAMPLER sidecar on first use; a pre-change store
-    (versions but no sidecar) adopts the identity with a warning."""
+    statistically invalid with no error.  The resolved identity is the
+    ``sampler`` field of the store's commit record, set by the first
+    batch; the store root holds only that record and its version
+    directories."""
     import os
-    import warnings
 
     from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import (
-        _pin_sampler_identity,
-        stream_bottomk_to_store,
-    )
+    from cassandra_util_spark.streaming.sketches import stream_bottomk_to_store
 
     d = docs.select("doc_id", "n_chars").limit(200)
     src = str(tmp_path / "src")
@@ -186,82 +183,66 @@ def test_sampler_identity_pinned_and_mismatch_fails(spark, docs, tmp_path):
         stream, store, str(tmp_path / "cp1"), "doc_id", k=32, payload=("n_chars",)
     )
     q.awaitTermination(120)
-    assert os.path.exists(os.path.join(store.root, "_SAMPLER"))
-
-    # continuing the same store under a different identity (weighted mode
-    # resolves seed='wbk') must fail loudly, not merge silently
-    stream2 = (
-        spark.readStream.schema(d.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q2 = stream_bottomk_to_store(
-        stream2, store, str(tmp_path / "cp2"), "doc_id", k=32,
-        payload=("n_chars",), weight_col="n_chars",
-    )
-    with pytest.raises(Exception, match="sampler identity"):
-        q2.awaitTermination(120)
-        raise AssertionError("mismatched-identity stream did not fail")
-
-    # pre-change migration: a store with history but no sidecar adopts the
-    # requested identity once, with a warning — and pins it
-    os.remove(os.path.join(store.root, "_SAMPLER"))
     ident = {"kind": "bottomk", "mode": "uniform", "seed": "bk",
              "hash_fn": "portable", "key_col": "doc_id",
              "weight_col": None, "k": 32}
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _pin_sampler_identity(store, ident)
-    adopt_msgs = [str(x.message) for x in w
-                  if "predates sampler-identity" in str(x.message)]
-    assert adopt_msgs
-    # the pin cannot detect PAST mixing — the warning must instruct a
-    # rebuild, not merely note the adoption (VERDICT r11 item 5)
-    assert all("REBUILD" in m for m in adopt_msgs), adopt_msgs
-    _pin_sampler_identity(store, ident)  # same identity: no-op
+    assert store._record()["sampler"] == ident
+    assert sorted(os.listdir(store.root)) == ["_CURRENT", *store.versions()]
+    for dirpath, _, files in os.walk(store.root):
+        assert not {"_META", "_SAMPLER", "_SCHEMA.json"} & set(files), dirpath
+    versions = store.versions()
+
+    # continuing the same store under a different identity (weighted mode
+    # resolves seed='wbk') must fail loudly before the drain starts, not
+    # merge silently
+    stream2 = (
+        spark.readStream.schema(d.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
     with pytest.raises(RuntimeError, match="sampler identity"):
-        _pin_sampler_identity(store, {**ident, "seed": "other"})
+        stream_bottomk_to_store(
+            stream2, store, str(tmp_path / "cp2"), "doc_id", k=32,
+            payload=("n_chars",), weight_col="n_chars",
+        )
+    assert store._record()["sampler"] == ident and store.versions() == versions
 
 
-def test_sampler_identity_pin_race_is_first_writer_wins(tmp_path, monkeypatch):
-    """ADVICE r11 (mechanism revised per ADVICE r12): two streams
-    first-using the same FRESH store must not both pin — creation is an
-    atomic exclusive create (os.open O_CREAT|O_EXCL, EEXIST on loss; more
-    portable than the previous os.link trick, which some NFS/FUSE mounts
-    reject) and the loser re-reads the winner's identity and runs the
-    mismatch check instead of overwriting it.  Simulated by injecting the
-    winner's sidecar at the moment the loser creates."""
-    import json
-    import os
-
+def test_sampler_identity_pin_race_is_first_writer_wins(spark, tmp_path, monkeypatch):
+    """ADVICE r11: two streams first-using the same FRESH store must not
+    both pin.  The identity is compared under the record lock in the
+    commit's swap, so an identity another writer publishes between the
+    caller's read of the record and its swap survives, and the loser
+    raises instead of overwriting it.  Simulated by committing the
+    winner's version while the loser's files are already written; a
+    same-identity commit afterwards converges silently on the winner's
+    pin."""
+    from cassandra_util_spark.sources import snapshots
     from cassandra_util_spark.sources.snapshots import SnapshotStore
-    from cassandra_util_spark.streaming.sketches import _pin_sampler_identity
 
     store = SnapshotStore(str(tmp_path / "race"))
     winner = {"kind": "bottomk", "mode": "uniform", "seed": "bk", "k": 32}
     loser = {"kind": "bottomk", "mode": "weighted", "seed": "wbk", "k": 32}
-    sidecar = os.path.join(store.root, "_SAMPLER")
+    df = spark.range(3)
+    assert store._record()["sampler"] is None  # the loser's read
+    real_schema = snapshots._footer_schema
 
-    real_open = os.open
-    state = {"injected": False}
+    def winner_lands_first(path):
+        monkeypatch.setattr(snapshots, "_footer_schema", real_schema)
+        store._commit(df, tag="w:0", sampler=winner)  # the concurrent winner
+        return real_schema(path)
 
-    def racing_open(p, flags, *a, **kw):
-        if p == sidecar and flags & os.O_EXCL and not state["injected"]:
-            state["injected"] = True  # the concurrent winner lands first
-            with open(sidecar, "w") as f:
-                json.dump(winner, f, sort_keys=True)
-        return real_open(p, flags, *a, **kw)
-
-    monkeypatch.setattr(os, "open", racing_open)
+    monkeypatch.setattr(snapshots, "_footer_schema", winner_lands_first)
     with pytest.raises(RuntimeError, match="sampler identity"):
-        _pin_sampler_identity(store, loser)
-    # the winner's pin survives untouched
-    with open(sidecar) as f:
-        assert json.load(f) == winner
-    # and a SAME-identity loser converges silently on the winner's pin
-    state["injected"] = False
-    os.remove(sidecar)
+        store._commit(df, tag="l:0", sampler=loser)
+    # the winner's pin, version and mark survive untouched
+    rec = store._record()
+    assert rec["sampler"] == winner
+    assert (rec["current"], rec["mark"]) == ("v00002", "w:0")
+    assert store.versions() == ["v00002"]
     with pytest.raises(RuntimeError, match="sampler identity"):
-        _pin_sampler_identity(store, loser)  # winner re-injected, mismatch
-    _pin_sampler_identity(store, winner)  # matching identity: clean return
+        store._commit(df, sampler=loser)
+    store._commit(df, tag="w:1", sampler=winner)  # matching identity: clean
+    store.commit(df)  # a commit naming no identity keeps the pin
+    assert store._record()["sampler"] == winner and store.current_tag() == "w:1"
 
 
 def test_grouped_sample_and_quantiles(docs):

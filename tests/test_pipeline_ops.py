@@ -2130,13 +2130,12 @@ def test_heavy_hitters_exact_matches_group_by(spark):
 
 
 def test_hll_estimate_accuracy_and_merge(spark):
-    from cassandra_util_spark.operators.sketches import hll_build, hll_estimate
+    """HLL registers merge by max: the max-union of split sketches is the
+    whole sketch.  Estimate accuracy is test_hll_grouped_estimates_accurate's."""
+    from cassandra_util_spark.operators.sketches import hll_build
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     regs = hll_build(ev, "user_id", p=9)
-    est = hll_estimate(regs, p=9).collect()[0]
-    exact = ev.select("user_id").distinct().count()
-    assert abs(est.estimate - exact) / exact < 0.15
     # register merge law: max-union of split sketches == whole sketch
     a = ev.filter(F.col("event_id") % 2 == 0)
     b = ev.filter(F.col("event_id") % 2 == 1)

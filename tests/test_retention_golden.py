@@ -2,6 +2,8 @@
 RuleBasedDeletionConvictorSpec.scala — exact, deterministic oracles for the
 rule→expression compiler and the retention job."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,8 +243,13 @@ def test_wet_run_backup_and_snapshot(spark, abcd, rules_df, tmp_path, rng, want_
     # backup dir holds exactly the convicted rows (or was never created)
     if want_convicted:
         assert spark.read.parquet(backup).count() == want_convicted
-    # pointer advances per commit
+    # the record advances per commit, and the store root holds only the
+    # record and its version directories: no sidecar metadata files
     assert store.current_version() == stats.committed_version
+    assert store.read_meta() == table.meta
+    assert sorted(os.listdir(store.root)) == ["_CURRENT", stats.committed_version]
+    for dirpath, _, files in os.walk(store.root):
+        assert not {"_META", "_SAMPLER", "_SCHEMA.json"} & set(files), dirpath
 
 
 def test_rules_loaded_via_select_statement(spark, tenanted, rules_df):

@@ -527,12 +527,19 @@ def test_listing_threshold_caps_paths_per_scan(spark, tmp_path, count_jobs):
 def test_record_readers_open_one_file(spark, tmp_path, monkeypatch):
     """Runs, levels, stats, sizes and schemas live in one commit record:
     ``run_stats()``, ``live_runs()``, ``run_sizes()`` and ``_scan`` over a
-    4-run store each open exactly that one file."""
+    4-run store each open exactly that one file.  So do a keyed, tagged
+    snapshot store's ``current_version``, ``current_tag``, ``read_meta``,
+    ``versions`` and ``read`` (planning only)."""
     import builtins
     import os
 
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
     store = _small_store(spark, str(tmp_path / "runs"))
     runs = store.live_runs()
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    snap.commit(spark.range(3).selectExpr("id as k", "id as wt"), TableMeta(("k",), (), "wt"))
+    snap.commit(spark.range(4).selectExpr("id as k", "id as wt"), tag="app:1")
     real_open = builtins.open
     opened = []
 
@@ -551,7 +558,21 @@ def test_record_readers_open_one_file(spark, tmp_path, monkeypatch):
         opened.clear()
         read()
         assert opened == [record], (name, opened)
+    snap_record = os.path.join(snap.root, "_CURRENT")
+    for name, read in [
+        ("current_version", snap.current_version),
+        ("current_tag", snap.current_tag),
+        ("read_meta", snap.read_meta),
+        ("versions", snap.versions),
+        ("read", lambda: snap.read(spark)),
+    ]:
+        opened.clear()
+        read()
+        assert opened == [snap_record], (name, opened)
     monkeypatch.setattr(builtins, "open", real_open)
+    assert (snap.current_version(), snap.current_tag()) == ("v00002", "app:1")
+    assert snap.read_meta() == TableMeta(("k",), (), "wt")
+    assert snap.read(spark).count() == 4
     sizes = store.run_sizes()
     for r in runs:
         parts = os.listdir(os.path.join(store.root, r))
@@ -563,18 +584,29 @@ def test_record_readers_open_one_file(spark, tmp_path, monkeypatch):
 
 def test_non_record_runs_file_raises(tmp_path):
     """A ``_RUNS`` that is not a commit record — a bare run list, a bare
-    number, empty — raises naming the store; it never reads as empty."""
+    number, empty, a record missing a field — raises naming the store; it
+    never reads as empty.  So does a snapshot store's ``_CURRENT`` that is
+    not a record, the old two-line version/tag pointer included."""
     import os
+
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
 
     store = RunStore(str(tmp_path / "runs"), TableMeta(("k",), (), "wt"))
     assert store.live_runs() == []  # no record yet: an empty store
-    for text in ("r00001 0\nr00002 0", "5", "", "[]"):
-        with open(os.path.join(store.root, "_RUNS"), "w") as f:
-            f.write(text)
-        for read in (store.live_runs, store.run_stats, store.live_levels):
-            with pytest.raises(ValueError, match="not a commit record") as e:
-                read()
-            assert store.root in str(e.value)
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    assert snap.versions() == [] and snap.current_tag() is None
+    for text in ("r00001 0\nr00002 0", "5", "", "[]", "v00001\napp:3", '{"runs": []}'):
+        for root, name, reads in [
+            (store.root, "_RUNS", (store.live_runs, store.run_stats, store.live_levels)),
+            (snap.root, "_CURRENT", (snap.current_version, snap.current_tag,
+                                     snap.versions, snap.read_meta)),
+        ]:
+            with open(os.path.join(root, name), "w") as f:
+                f.write(text)
+            for read in reads:
+                with pytest.raises(ValueError, match="not a commit record") as e:
+                    read()
+                assert root in str(e.value)
 
 
 def test_extra_bound_prunes_once(spark, tmp_path, monkeypatch):
@@ -621,10 +653,10 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
     """The schema a run records is exactly what an inferring read of the
     run reports, for every column type the engine writes: array<int>
     token ids, array<struct> doc spans, array<bigint> signatures,
-    timestamp, string and bigint — and a SnapshotStore version's sidecar
-    matches its version the same way."""
-    import json
+    timestamp, string and bigint — and the schema a SnapshotStore's record
+    holds for a version matches that version the same way."""
     import os
+    import shutil
 
     from pyspark.sql.types import StructType
 
@@ -649,19 +681,21 @@ def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
 
     snap = SnapshotStore(str(tmp_path / "snap"))
     v = snap.commit(df)
-    with open(os.path.join(snap.root, v, "_SCHEMA.json")) as f:
-        sidecar = StructType.fromJson(json.load(f))
-    assert sidecar == spark.read.parquet(os.path.join(snap.root, v)).schema
-    # a version with no sidecar does not read; the error names store and version
-    os.remove(os.path.join(snap.root, v, "_SCHEMA.json"))
+    (entry,) = snap._record()["versions"]
+    assert entry["name"] == v
+    recorded = StructType.fromJson(entry["schema"])
+    assert recorded == spark.read.parquet(os.path.join(snap.root, v)).schema
+    # a version directory the record does not list does not read; the error
+    # names store and version
+    shutil.copytree(os.path.join(snap.root, v), os.path.join(snap.root, "v00002"))
     with pytest.raises(FileNotFoundError) as err:
-        snap.read(spark, v)
-    assert snap.root in str(err.value) and v in str(err.value)
+        snap.read(spark, "v00002")
+    assert snap.root in str(err.value) and "v00002" in str(err.value)
 
 
 def test_snapshot_commit_publishes_only_readable_versions(spark, tmp_path, monkeypatch):
     """A version whose footer yields no schema would publish and then fail
-    every read, so commit raises before the pointer swap and leaves no
+    every read, so commit raises before the record swap and leaves no
     version dir behind; a multi-line tag raises before anything is
     written."""
     import os
@@ -686,6 +720,46 @@ def test_snapshot_commit_publishes_only_readable_versions(spark, tmp_path, monke
         assert f.read() == pointer
     assert snap.versions() == [v1]
     assert sorted(r.id for r in snap.read(spark).collect()) == [0, 1, 2]
+
+
+def test_fault_in_snapshot_record_swap_leaves_store_unchanged(spark, tmp_path, monkeypatch):
+    """A commit that raises inside its record swap, after the version's
+    files are written, publishes nothing: version, tag and read are the
+    old ones, the orphaned directory is not listed, the next commit neither
+    reuses nor lists it, and ``vacuum`` deletes it."""
+    import os
+
+    from cassandra_util_spark.sources import snapshots
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    v1 = snap.commit(spark.range(3), tag="a:0")
+    real_swap = snapshots._swap_record
+
+    def crash_once(root, name, read, change):
+        monkeypatch.setattr(snapshots, "_swap_record", real_swap)
+
+        def crash(rec):
+            raise OSError("crash inside the record swap")
+
+        return real_swap(root, name, read, crash)
+
+    monkeypatch.setattr(snapshots, "_swap_record", crash_once)
+    with pytest.raises(OSError, match="inside the record swap"):
+        snap.commit(spark.range(5), tag="a:1")
+    orphan = "v00002"
+    assert os.path.isdir(os.path.join(snap.root, orphan))
+    assert (snap.current_version(), snap.current_tag()) == (v1, "a:0")
+    assert sorted(r.id for r in snap.read(spark).collect()) == [0, 1, 2]
+    assert snap.versions() == [v1]
+    assert not os.path.exists(os.path.join(snap.root, "_LOCK"))
+
+    v3 = snap.commit(spark.range(4), tag="a:1")
+    assert v3 == "v00003" and snap.versions() == [v1, v3]
+    assert snap.read(spark).count() == 4
+    assert snap.vacuum(keep_last=1) == [v1, orphan]
+    assert snap.versions() == [v3]
+    assert sorted(os.listdir(snap.root)) == ["_CURRENT", v3]
 
 
 # -- one-partition store paths: inputs that fit one partition merge and ----
