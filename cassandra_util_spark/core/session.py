@@ -43,6 +43,13 @@ _DEFAULTS = {
     "spark.sql.ansi.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
+    # generated classes kept compiled (a static conf; Spark's default is
+    # 100).  A corpus_stream benchmark cycle (three drains) uses ~230
+    # distinct classes, so at 100 every cycle recompiled ~215 of them with
+    # Janino.  256 is the smallest size measured to keep a repeated cycle
+    # at <= 30 compiles (4 vCPUs, seeds 1-3: 22 in the first repeat, 0-4
+    # after; 240 let one seed's second repeat reach 36, 200 kept ~115)
+    "spark.sql.codegen.cache.maxEntries": "256",
 }
 
 

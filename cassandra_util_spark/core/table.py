@@ -36,14 +36,19 @@ def _fits_one_partition(df: DataFrame) -> bool:
     try:
         spark = df.sparkSession
         size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
-        # read through SQLConf so the conf's fallback default resolves
-        bound = spark._jsparkSession.sessionState().conf().getConf(
-            sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-        )
-        return int(str(size)) <= int(bound)
+        return int(str(size)) <= _one_partition_bytes(spark)
     except (AttributeError, Py4JError):  # no JVM plan to read: keep the shuffle
         return False
+
+
+def _one_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the bound of
+    :func:`_fits_one_partition`, read through SQLConf so the conf's
+    fallback default resolves."""
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    return int(spark._jsparkSession.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    ))
 
 
 @dataclass(frozen=True)

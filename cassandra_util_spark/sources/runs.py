@@ -26,13 +26,19 @@ Lake's log commits a table version.
 Readers parse that one file, so planning a read opens one metadata file
 and never runs a Spark job: every scan is handed its run's recorded
 schema instead of inferring it from a footer (one job per directory).
-Runs sharing a schema are read as one multi-file scan.  A merge reads
-only the bucket's runs.  When their union's size estimate fits one
-partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
-AQE would coalesce a shuffle's output to) it merges in ONE partition with
-no exchange, as Cassandra merges a partition's few SSTable fragments in
-place, and an append or compaction output that fits lands as one sorted
-file; larger inputs shuffle once on the primary key (the LWW window).
+Runs sharing a schema are read as one multi-file scan.  A small bounded
+read is not a Spark job at all: when the runs it keeps share one schema
+and their recorded bytes fit one partition, the driver reads their files
+with ``pyarrow.dataset`` under the bounds, takes the LWW winners and
+hands them back as a local relation, as a Cassandra replica answers a
+bound ``SELECT`` from its SSTables (see :meth:`RunStore.read_merged`).
+A merge reads only the bucket's runs.  When their union's size estimate
+fits one partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+the size AQE would coalesce a shuffle's output to) it merges in ONE
+partition with no exchange, as Cassandra merges a partition's few
+SSTable fragments in place, and an append or compaction output that fits
+lands as one sorted file; larger inputs shuffle once on the primary key
+(the LWW window).
 
 Store file format: every file a store writes (run appends, STCS/TWCS and
 leveled compaction output, counter folds, snapshot versions and the
@@ -57,11 +63,19 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from cassandra_util_spark.core.table import KeyedTable, TableMeta, _fits_one_partition
+from cassandra_util_spark.core.table import (
+    KeyedTable,
+    TableMeta,
+    _fits_one_partition,
+    _one_partition_bytes,
+)
 
 # the footer key Spark's parquet writer stores the row schema under — the
 # one Spark's own schema inference reads back
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the footer keys Spark's parquet writer adds when it rebases dates and
+# timestamps to the legacy hybrid calendar, which Arrow's reader does not
+_LEGACY_CALENDAR = {b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96"}
 
 
 def _parquet_parts(path: str) -> list[str]:
@@ -484,7 +498,13 @@ class RunStore:
                         if st.null_count != rg.num_rows:
                             bad.add(name)
                         continue
-                    mn, mx = st.min, st.max
+                    try:
+                        mn, mx = st.min, st.max
+                    except NotImplementedError:
+                        # Arrow cannot convert some bounds, e.g. a
+                        # decimal stored as INT64
+                        bad.add(name)
+                        continue
                     if isinstance(mn, bytes) or isinstance(mx, bytes):
                         bad.add(name)  # raw binary — the agg path skipped these
                         continue
@@ -626,7 +646,25 @@ class RunStore:
         inside would resurface the stale row, so use extra bounds only on
         columns that are immutable per key (event time, ingest day) or on
         append-only stores; the key bound has the same caveat and the same
-        established contract."""
+        established contract.
+
+        A bounded read whose kept runs are small is served on the driver
+        (:meth:`_read_small`), the way a CQL bound ``SELECT`` streams a key
+        range back without a distributed job: it runs no Spark job, and a
+        new bound compiles no code (the Spark scan inlines bounds into its
+        generated code).  It applies when the read has a key bound or
+        ``extra_bounds`` and no ``allow_schema_evolution``, the kept runs
+        share one recorded schema, their recorded parquet bytes sum to at
+        most ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the
+        one-partition bound of :meth:`_merge`), the bound, primary-key
+        and writetime columns are integral or string (Arrow and Spark
+        order those alike; floats are out, as Spark orders NaN above
+        +inf), and no kept row has a null primary-key column.  Such a read
+        is a SNAPSHOT taken when this is called, not a lazy scan: a later
+        compaction or vacuum cannot break a view already built.  On equal
+        writetimes the row of the later-published run wins there; the
+        Spark path leaves such ties unordered.  Every other read is the
+        lazy Spark scan and merge."""
         from pyspark.sql import functions as F
 
         bounded = key_lower is not None or key_upper is not None
@@ -640,12 +678,16 @@ class RunStore:
                 # everything pruned: an empty view with the store's schema
                 return self._scan(spark, live[:1])[0].limit(0)
             raise ValueError(f"run store at {self.root} has no runs")
+        all_bounds = dict(extra_bounds or {})
+        if bounded:
+            all_bounds[self._range_col] = (key_lower, key_upper)
+        if all_bounds and not allow_schema_evolution:
+            small = self._read_small(spark, runs, all_bounds)
+            if small is not None:
+                return small
         dfs = self._scan(spark, runs)
-        if bounded or extra_bounds:
+        if all_bounds:
             cond = F.lit(True)
-            all_bounds = dict(extra_bounds or {})
-            if bounded:
-                all_bounds[self._range_col] = (key_lower, key_upper)
             for c, (lo, hi) in all_bounds.items():
                 if lo is not None:
                     cond = cond & (F.col(c) >= F.lit(lo))
@@ -653,6 +695,82 @@ class RunStore:
                     cond = cond & (F.col(c) <= F.lit(hi))
             dfs = [d.filter(cond) for d in dfs]
         return self._merge(dfs, allow_schema_evolution)
+
+    def _read_small(
+        self, spark: SparkSession, runs: list[str], bounds: dict
+    ) -> Optional[DataFrame]:
+        """The driver-side form of a bounded :meth:`read_merged` over
+        ``runs`` (in publish order), or None when the read does not
+        qualify (see there).  Each run's part files are read with
+        ``pyarrow.dataset`` under ``bounds`` as a pushed filter, so
+        row-group stats prune as in the Spark scan; the rows are sorted on
+        the primary key ascending, the writetime descending and the run
+        descending, and the first row of each key is its LWW winner.  The
+        result is a local relation with the runs' recorded schema."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import IntegralType, StringType
+
+        stats = self.run_stats()
+        if len({json.dumps(stats[r]["schema"], sort_keys=True) for r in runs}) > 1:
+            return None
+        if sum(stats[r]["bytes"] for r in runs) > _one_partition_bytes(spark):
+            return None
+        schema = StructType.fromJson(stats[runs[0]]["schema"])
+        types = {f.name: f.dataType for f in schema.fields}
+
+        def ordered_alike(col: str, *values) -> bool:
+            """Arrow and Spark compare ``col`` with ``values`` alike."""
+            t = types.get(col)
+            if isinstance(t, IntegralType):
+                kind = int
+            elif t == StringType():
+                kind = str
+            else:
+                return False
+            return all(
+                v is None or (isinstance(v, kind) and not isinstance(v, bool))
+                for v in values
+            )
+
+        wt = self.meta.writetime_col
+        keys = list(self.meta.primary_key)
+        if not all(ordered_alike(c) for c in keys + ([wt] if wt else [])) or not all(
+            ordered_alike(c, lo, hi) for c, (lo, hi) in bounds.items()
+        ):
+            return None
+        cond = ds.scalar(True)
+        for c, (lo, hi) in bounds.items():
+            if lo is not None:
+                cond &= ds.field(c) >= lo
+            if hi is not None:
+                cond &= ds.field(c) <= hi
+        parquet = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        target = to_arrow_schema(schema)
+        tables = []
+        for i, r in enumerate(runs):
+            run = ds.dataset(_parquet_parts(os.path.join(self.root, r)), format=parquet)
+            if _LEGACY_CALENDAR & set(run.schema.metadata or {}):
+                return None  # Spark would rebase these dates; Arrow does not
+            t = run.to_table(columns=schema.names, filter=cond).cast(target)
+            tables.append(t.append_column("__run", pa.repeat(pa.scalar(i, pa.int32()), t.num_rows)))
+        table = pa.concat_tables(tables)
+        if any(table[c].null_count for c in keys):
+            return None
+        order = [(c, "ascending") for c in keys]
+        order += [(c, "descending") for c in ([wt] if wt else []) + ["__run"]]
+        # Spark's DESC ordering puts null writetimes last, as here
+        table = table.take(pc.sort_indices(table, order, null_placement="at_end"))
+        if table.num_rows > 1:
+            new_key = pc.not_equal(table[keys[0]][1:], table[keys[0]][:-1])
+            for c in keys[1:]:
+                new_key = pc.or_(new_key, pc.not_equal(table[c][1:], table[c][:-1]))
+            table = table.filter(pa.chunked_array([[True], *new_key.chunks], pa.bool_()))
+        return spark.createDataFrame(table.drop_columns(["__run"]), schema=schema)
 
     def compact(
         self,

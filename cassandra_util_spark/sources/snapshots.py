@@ -200,9 +200,13 @@ class SnapshotStore:
         never the current one.  The victims leave the record in one swap
         before their directories go, so no listed version ever lacks its
         files; a directory a failed commit orphaned is deleted the same
-        way."""
+        way.  ``keep_last=0`` deletes every version but the current one;
+        a negative ``keep_last`` raises."""
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         current = self.current_version()
-        victims = [v for v in self._version_dirs()[:-keep_last] if v != current]
+        dirs = self._version_dirs()
+        victims = [v for v in dirs[:max(len(dirs) - keep_last, 0)] if v != current]
         if victims:
             gone = set(victims)
             _swap_record(self.root, "_CURRENT", self._record, lambda rec: {

@@ -63,6 +63,22 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` -> ``(fn(), number of classes Janino compiled
+    while fn ran)``, read from Spark's ``CodegenMetrics`` compilation-time
+    histogram, which records one sample per compile.  The histogram is
+    JVM-wide, so nothing else may run Spark meanwhile."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(fn):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        out = fn()
+        return out, metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    return run
+
+
 def _shuffle_exchanges(plan) -> int:
     """``ShuffleExchangeExec`` nodes under a physical plan node, looking
     through AQE's wrapper and its query stages."""

@@ -8,6 +8,8 @@ read-view invariance under compaction, and the retention hook dropping rows
 during the merge exactly like a convictor.
 """
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -478,7 +480,13 @@ def _small_store(spark, root, n_runs=4):
     return store
 
 
-def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs):
+def _scans_files(df) -> bool:
+    """True when ``df``'s physical plan reads parquet through a Spark
+    ``FileScan``; a read served on the driver plans a local scan instead."""
+    return "FileScan" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs, count_compiles):
     from cassandra_util_spark.sources.snapshots import SnapshotStore
 
     store = _small_store(spark, str(tmp_path / "runs"))
@@ -489,14 +497,21 @@ def test_building_store_reads_launches_no_job(spark, tmp_path, count_jobs):
     ]:
         _, jobs = count_jobs(f"build-{name}", build)
         assert jobs == 0, f"building the {name} read ran {jobs} job(s)"
-    # keys 0..15 live in the first two runs only: the lookup scans both in
-    # one schema-given scan and executes in at most two jobs
+    # keys 0..15 live in the first two runs only: the lookup reads both on
+    # the driver and runs no job; a second lookup with new bounds compiles
+    # no code either (the Spark path inlines bounds into generated code)
     assert store.prune_runs(0, 15) == store.live_runs()[:2]
     rows, jobs = count_jobs("lookup", lambda: store.read_merged(
         spark, key_lower=0, key_upper=15).collect())
-    assert jobs <= 2, f"a bounded 2-run lookup ran {jobs} jobs"
+    assert jobs == 0, f"a bounded 2-run lookup ran {jobs} jobs"
     assert sorted((r.k, r.wt) for r in rows) == [
         (k, 0 if k < 10 else 1) for k in range(16)
+    ]
+    (rows, jobs), compiles = count_compiles(lambda: count_jobs(
+        "lookup-again", lambda: store.read_merged(spark, key_lower=5, key_upper=12).collect()))
+    assert (jobs, compiles) == (0, 0)
+    assert sorted((r.k, r.wt) for r in rows) == [
+        (k, 0 if k < 10 else 1) for k in range(5, 13)
     ]
 
     snap = SnapshotStore(str(tmp_path / "snap"))
@@ -762,6 +777,26 @@ def test_fault_in_snapshot_record_swap_leaves_store_unchanged(spark, tmp_path, m
     assert sorted(os.listdir(snap.root)) == ["_CURRENT", v3]
 
 
+def test_snapshot_vacuum_keeps_the_newest_versions(spark, tmp_path):
+    """``vacuum(keep_last=n)`` deletes all but the newest ``n`` versions:
+    ``keep_last=0`` leaves only the current one, a ``keep_last`` past the
+    version count deletes nothing, and a negative one raises."""
+    import os
+
+    from cassandra_util_spark.sources.snapshots import SnapshotStore
+
+    snap = SnapshotStore(str(tmp_path / "snap"))
+    versions = [snap.commit(spark.range(n)) for n in (1, 2, 3)]
+    with pytest.raises(ValueError, match="keep_last"):
+        snap.vacuum(keep_last=-1)
+    assert snap.vacuum(keep_last=5) == [] and snap.versions() == versions
+    assert snap.vacuum(keep_last=0) == versions[:2]
+    assert snap.versions() == versions[2:]
+    assert sorted(os.listdir(snap.root)) == ["_CURRENT", versions[2]]
+    assert snap.read(spark).count() == 3
+    assert snap.vacuum(keep_last=0) == []
+
+
 # -- one-partition store paths: inputs that fit one partition merge and ----
 # -- write with no exchange; anything larger keeps the key shuffle ---------
 
@@ -769,11 +804,13 @@ def test_fault_in_snapshot_record_swap_leaves_store_unchanged(spark, tmp_path, m
 def test_small_store_paths_run_one_job_without_exchange(
     spark, tmp_path, count_jobs, exchanges, advisory_size, size_estimate
 ):
-    """Under the size bound a bounded 2-run lookup, an append, a 4-run STCS
+    """Under the size bound a bounded 2-run lookup runs no job (it is
+    served on the driver), and its Spark merge, an append, a 4-run STCS
     compact and a clustered snapshot commit each run in ONE job with no
     exchange.  With the bound one byte below the frame's estimate each
-    shuffles again and yields the same rows; at exactly the estimate the
-    lookup still takes the one-partition path."""
+    shuffles again and yields the same rows; at exactly the estimate,
+    which is the kept runs' recorded bytes, the lookup is still served on
+    the driver and its Spark merge still takes the one-partition path."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
@@ -784,15 +821,22 @@ def test_small_store_paths_run_one_job_without_exchange(
     def union(store, runs):
         return reduce(DataFrame.unionByName, store._scan(spark, runs))
 
-    # bounded 2-run lookup
+    # bounded 2-run lookup, served on the driver; allow_schema_evolution
+    # keeps the same read on the Spark merge
     store = _small_store(spark, str(tmp_path / "lookup"))
     lookup = lambda: store.read_merged(spark, key_lower=0, key_upper=15)  # noqa: E731
-    want, jobs = count_jobs("lookup-small", lambda: lookup().collect())
-    assert jobs == 1 and exchanges(lookup()) == 0
-    est = size_estimate(union(store, store.prune_runs(0, 15)))
-    advisory_size(est)
-    _, jobs = count_jobs("lookup-at-bound", lambda: lookup().collect())
-    assert jobs == 1 and exchanges(lookup()) == 0
+    merge = lambda: store.read_merged(  # noqa: E731
+        spark, key_lower=0, key_upper=15, allow_schema_evolution=True)
+    kept = store.prune_runs(0, 15)
+    est = size_estimate(union(store, kept))
+    assert est == sum(store.run_sizes()[r] for r in kept)
+    for bound in (64 << 20, est):
+        advisory_size(bound)
+        want, jobs = count_jobs(f"lookup-{bound}", lambda: lookup().collect())
+        assert jobs == 0 and not _scans_files(lookup())
+        got, jobs = count_jobs(f"merge-{bound}", lambda: merge().collect())
+        assert jobs == 1 and exchanges(merge()) == 0
+        assert sorted(got) == sorted(want)
     advisory_size(est - 1)
     got, jobs = count_jobs("lookup-over", lambda: lookup().collect())
     assert jobs > 1 and exchanges(lookup()) == 1
@@ -854,6 +898,115 @@ def test_inflated_estimate_keeps_the_shuffle(spark, exchanges, size_estimate):
     clustered = KeyedTable(df, TableMeta(("x",), ("k",))).clustered()
     assert exchanges(clustered) == exchanges(df) + 1
     assert clustered.count() == 10000
+
+
+# -- driver-side bounded reads: small key-bounded reads run no Spark job ---
+
+
+@contextmanager
+def _session_conf(spark, conf: dict):
+    """Set the SQL confs ``conf`` for the block, restoring the session's
+    values after it."""
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _typed_store(spark, root):
+    """Three overlapping runs over even keys 0..58 whose non-key columns
+    cover the types the stores hold (arrays, the windows store's span
+    structs, timestamps, decimals, strings), with nulls in each.  The last
+    run stores its timestamps as INT96, Spark's default physical type."""
+    store = RunStore(root, TableMeta(("k",), ("c",), "wt"))
+    for i, ts_type in enumerate(("TIMESTAMP_MICROS", "TIMESTAMP_MICROS", "INT96")):
+        with _session_conf(spark, {"spark.sql.parquet.outputTimestampType": ts_type}):
+            store.append_run(spark.range(10 * i, 10 * i + 20).selectExpr(
+                "id * 2 as k", "cast(id % 2 as int) as c", f"{i} as wt",
+                "case when id % 5 = 0 then null else array(cast(id as int), null) end as ids",
+                "array(named_struct('doc', id, 'off', cast(id as int), 'len', 2)) as doc_spans",
+                "case when id % 6 = 0 then null else timestamp_micros(id * 1000003) end as ts",
+                "case when id % 3 = 0 then null else cast(id / 7 as decimal(28,6)) end as amount",
+                "cast(id / 3 as decimal(10,2)) as price",
+                f"case when id % 4 = 0 then null else concat('v{i}_', cast(id as string)) end as s",
+            ))
+    return store
+
+
+def test_driver_read_equals_spark_read_on_every_type(spark, tmp_path, advisory_size, count_jobs):
+    """A bounded read served on the driver returns the rows and the schema
+    of the same read on the Spark path (forced by a one-byte size bound),
+    over array, span-struct, timestamp, decimal and string columns with
+    nulls: key bounds, a string extra bound, a read that keeps runs but
+    no rows, and one whose bounds prune every run."""
+    store = _typed_store(spark, str(tmp_path / "typed"))
+    forms = {
+        "key": {"key_lower": 15, "key_upper": 41},
+        "key-open": {"key_lower": 30},
+        "extra": {"extra_bounds": {"s": ("v1_", "v2_15"), "wt": (1, None)}},
+        "no-rows": {"key_lower": 21, "key_upper": 21},
+        "all-pruned": {"key_lower": 1000, "key_upper": 2000},
+    }
+    driver = {}
+    for name, kw in forms.items():
+        df = store.read_merged(spark, **kw)
+        rows, jobs = count_jobs(f"typed-{name}", df.collect)
+        assert jobs == 0 and not _scans_files(df), name
+        driver[name] = (df.schema, sorted(rows))
+    assert driver["key"][1] and not driver["no-rows"][1]
+    advisory_size(1)
+    for name, kw in forms.items():
+        df = store.read_merged(spark, **kw)
+        assert _scans_files(df) == (name != "all-pruned"), name
+        assert (df.schema, sorted(df.collect())) == driver[name], name
+
+
+def test_driver_read_falls_back_to_spark(spark, tmp_path, advisory_size):
+    """Bounded reads the driver does not serve keep the Spark scan and
+    return the LWW rows: a float key, runs with two recorded schemas, a
+    run Spark wrote in the legacy hybrid calendar (which Arrow would not
+    rebase), and runs whose recorded bytes exceed the bound."""
+    import datetime
+
+    floats = RunStore(str(tmp_path / "floats"), TableMeta(("x",), (), "wt"))
+    for i in range(2):
+        floats.append_run(spark.range(10 * i, 10 * i + 20).selectExpr(
+            "cast(id as double) / 2 as x", f"{i} as wt"))
+    df = floats.read_merged(spark, key_lower=2.0, key_upper=7.5)
+    assert _scans_files(df)
+    assert sorted((r.x, r.wt) for r in df.collect()) == [
+        (k / 2, 0 if k < 10 else 1) for k in range(4, 16)
+    ]
+
+    # the same columns in another order: a second recorded schema that the
+    # strict union by name still merges
+    mixed = RunStore(str(tmp_path / "mixed"), TableMeta(("k",), (), "wt"))
+    mixed.append_run(spark.range(10).selectExpr("id as k", "0 as wt", "'a' as v"))
+    mixed.append_run(spark.range(5, 15).selectExpr("'b' as v", "id as k", "1 as wt"))
+    df = mixed.read_merged(spark, key_lower=3, key_upper=8)
+    assert _scans_files(df) and df.columns == ["k", "wt", "v"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (k, 0, "a") for k in (3, 4)] + [(k, 1, "b") for k in range(5, 9)]
+
+    legacy = RunStore(str(tmp_path / "legacy"), TableMeta(("k",), (), "wt"))
+    with _session_conf(spark, {"spark.sql.parquet.outputTimestampType": "INT96",
+                               "spark.sql.parquet.int96RebaseModeInWrite": "LEGACY"}):
+        legacy.append_run(spark.range(5).selectExpr(
+            "id as k", "0 as wt", "timestamp'1500-01-01 00:00:00' as ts"))
+    df = legacy.read_merged(spark, key_lower=1, key_upper=3)
+    assert _scans_files(df)
+    assert [r.ts for r in df.collect()] == [datetime.datetime(1500, 1, 1)] * 3
+
+    store = _small_store(spark, str(tmp_path / "runs"))
+    want = sorted(store.read_merged(spark, key_lower=0, key_upper=15).collect())
+    kept = sum(store.run_sizes()[r] for r in store.prune_runs(0, 15))
+    advisory_size(kept - 1)
+    df = store.read_merged(spark, key_lower=0, key_upper=15)
+    assert _scans_files(df) and sorted(df.collect()) == want
 
 
 # -- store file format: every file a store writes is zstd parquet ----------
@@ -1022,7 +1175,10 @@ try:
         ``read_merged`` (unbounded, key-bounded, with ``extra_bounds``, and
         with ``allow_schema_evolution`` over runs with and without an added
         column) returns the same rows on the one-partition path as with
-        the shuffle forced, and so does the view a compaction leaves."""
+        the shuffle forced, and so does the view a compaction leaves.  The
+        bounded and ``extra_bounds`` forms without schema evolution are
+        served on the driver on the one-partition side and never on the
+        forced-shuffle side."""
         import tempfile
 
         n_rows = sum(len(rows) for rows, _ in runs)
@@ -1047,6 +1203,15 @@ try:
                 if with_note:
                     df = df.withColumn("note", F.concat(F.lit("n"), F.col("v").cast("string")))
                 store.append_run(df)
+            served = []  # per read reaching the driver branch: was it served
+            read_small = store._read_small
+
+            def spy(*args):
+                small = read_small(*args)
+                served.append(small is not None)
+                return small
+
+            store._read_small = spy
             out = [
                 {r.k: r.asDict() for r in store.read_merged(spark, **f).collect()}
                 for f in forms
@@ -1054,21 +1219,24 @@ try:
             store._compact_bucket(spark, store.live_runs(), None)
             out.append({r.k: r.asDict() for r in store.read_merged(
                 spark, allow_schema_evolution=True).collect()})
-            return out
+            return out, served
 
         key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         old = spark.conf.get(key, None)
         with tempfile.TemporaryDirectory() as tmp:
-            one = views(f"{tmp}/one")
+            one, served_one = views(f"{tmp}/one")
             spark.conf.set(key, "1")  # nothing fits: every path shuffles
             try:
-                shuffled = views(f"{tmp}/shuffled")
+                shuffled, served_shuffled = views(f"{tmp}/shuffled")
             finally:
                 if old is None:
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, old)
         assert one == shuffled
+        assert served_one == [True] * len(served_shuffled) and not any(served_shuffled)
+        if evolve:  # schema-evolving reads always take the Spark path
+            assert served_one == []
         # and the unbounded view is the last-write-wins of the batches
         newest = {}
         for rows, _ in batches:
