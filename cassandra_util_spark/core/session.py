@@ -46,10 +46,12 @@ _DEFAULTS = {
     # generated classes kept compiled (a static conf; Spark's default is
     # 100).  A corpus_stream benchmark cycle (three drains) uses ~230
     # distinct classes, so at 100 every cycle recompiled ~215 of them with
-    # Janino.  256 is the smallest size measured to keep a repeated cycle
-    # at <= 30 compiles (4 vCPUs, seeds 1-3: 22 in the first repeat, 0-4
-    # after; 240 let one seed's second repeat reach 36, 200 kept ~115)
-    "spark.sql.codegen.cache.maxEntries": "256",
+    # Janino, and the LRU falls back into that once the working set
+    # outgrows the cache (4 vCPUs, seeds 1-3, compiles per repeated cycle:
+    # 200 entries ~115, 230 up to 69, 240 up to 36, 256 and 512 22 in the
+    # first repeat and 0-4 after).  512 leaves the working set twice the
+    # room that 256, the smallest size at <= 30, leaves it
+    "spark.sql.codegen.cache.maxEntries": "512",
 }
 
 

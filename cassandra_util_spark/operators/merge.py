@@ -86,6 +86,31 @@ def merge_snapshots(
     return lww_merge(unioned, meta.primary_key, meta.writetime_col, tiebreak)
 
 
+def lww_merge_table(table, primary_key: Sequence[str], writetime_col: Optional[str]):
+    """:func:`merge_snapshots`' policy over an Arrow table, the form a run
+    store read served on the driver merges (``RunStore.read_merged``):
+    per primary key the row with the newest writetime wins, a null
+    writetime losing to any value as in Spark's descending order; with no
+    writetime column one row per key is kept.  As in
+    :func:`merge_snapshots` without ``tiebreak``, which of two rows with
+    equal writetimes wins is undefined.  Key columns must hold no nulls."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    order = [(c, "ascending") for c in primary_key]
+    if writetime_col:
+        order.append((writetime_col, "descending"))
+    table = table.take(pc.sort_indices(table, order, null_placement="at_end"))
+    if table.num_rows < 2:
+        return table
+    # sorted on the key, a row whose key differs from the previous row's
+    # is its key's first row: the winner
+    new_key = reduce(
+        pc.or_, (pc.not_equal(table[c][1:], table[c][:-1]) for c in primary_key)
+    )
+    return table.filter(pa.chunked_array([[True], *new_key.chunks], pa.bool_()))
+
+
 def compact_with_tombstones(
     df: DataFrame,
     primary_key: Sequence[str],

@@ -28,9 +28,9 @@ and never runs a Spark job: every scan is handed its run's recorded
 schema instead of inferring it from a footer (one job per directory).
 Runs sharing a schema are read as one multi-file scan.  A small bounded
 read is not a Spark job at all: when the runs it keeps share one schema
-and their recorded bytes fit one partition, the driver reads their files
-with ``pyarrow.dataset`` under the bounds, takes the LWW winners and
-hands them back as a local relation, as a Cassandra replica answers a
+and hold at most 4 MB of parquet, the driver reads their files with
+``pyarrow.dataset`` under the bounds, takes the LWW winners and hands
+them back as a local relation, as a Cassandra replica answers a
 bound ``SELECT`` from its SSTables (see :meth:`RunStore.read_merged`).
 A merge reads only the bucket's runs.  When their union's size estimate
 fits one partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
@@ -54,10 +54,12 @@ from __future__ import annotations
 
 import copy
 import json
+import operator
 import os
 import tempfile
 import time
 from contextlib import contextmanager
+from functools import reduce
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +78,17 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # the footer keys Spark's parquet writer adds when it rebases dates and
 # timestamps to the legacy hybrid calendar, which Arrow's reader does not
 _LEGACY_CALENDAR = {b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96"}
+# the most recorded parquet bytes a bounded read serves on the driver:
+# the largest size measured at which the driver lost on no read shape.
+# 4 overlapping lsm-shaped runs, local[4] with a 1 GB driver heap, medians
+# of two fresh-driver passes, driver against Spark job: a 25-key lookup
+# took 54-70 against ~350 ms at 1-4.1 MB and still 240-290 against
+# 400-440 ms at 59 MB; a read keeping every row, then aggregated, took
+# 410-560 against 600-700 ms at 4.1 MB, 720-920 against 690-730 ms at
+# 8.2 MB and 1.6-1.8 against 0.9-1.0 s at 16 MB (JVM peak +450 against
+# +330 MB), and ran the heap out at 59 MB, as the driver holds the rows
+# as Arrow, as IPC and as a JVM local relation.
+_DRIVER_READ_BYTES = 4 << 20
 
 
 def _parquet_parts(path: str) -> list[str]:
@@ -136,6 +149,20 @@ def _write_files(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def _within(bounds: list[tuple], field: Callable):
+    """``lo <= field(c) <= hi`` for each (column, lo, hi) of ``bounds`` (a
+    None side is open), as one conjunction, or None when no side is set:
+    a Spark Column for ``field=F.col``, an Arrow expression for
+    ``pyarrow.dataset.field``, so both read paths apply one predicate."""
+    conds = []
+    for c, lo, hi in bounds:
+        if lo is not None:
+            conds.append(field(c) >= lo)
+        if hi is not None:
+            conds.append(field(c) <= hi)
+    return reduce(operator.and_, conds) if conds else None
 
 
 def _read(spark: SparkSession, paths: list[str], schema: dict) -> DataFrame:
@@ -655,16 +682,17 @@ class RunStore:
         generated code).  It applies when the read has a key bound or
         ``extra_bounds`` and no ``allow_schema_evolution``, the kept runs
         share one recorded schema, their recorded parquet bytes sum to at
-        most ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the
+        most 4 MB (``_DRIVER_READ_BYTES``, measured) and to at most
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the
         one-partition bound of :meth:`_merge`), the bound, primary-key
         and writetime columns are integral or string (Arrow and Spark
         order those alike; floats are out, as Spark orders NaN above
         +inf), and no kept row has a null primary-key column.  Such a read
         is a SNAPSHOT taken when this is called, not a lazy scan: a later
-        compaction or vacuum cannot break a view already built.  On equal
-        writetimes the row of the later-published run wins there; the
-        Spark path leaves such ties unordered.  Every other read is the
-        lazy Spark scan and merge."""
+        compaction or vacuum cannot break a view already built.  Both
+        paths apply one LWW policy (``operators.merge``); as there, which
+        of two rows with equal writetimes wins is undefined.  Every other
+        read is the lazy Spark scan and merge."""
         from pyspark.sql import functions as F
 
         bounded = key_lower is not None or key_upper is not None
@@ -681,42 +709,40 @@ class RunStore:
         all_bounds = dict(extra_bounds or {})
         if bounded:
             all_bounds[self._range_col] = (key_lower, key_upper)
-        if all_bounds and not allow_schema_evolution:
-            small = self._read_small(spark, runs, all_bounds)
+        bounds = [(c, lo, hi) for c, (lo, hi) in all_bounds.items()]
+        if bounds and not allow_schema_evolution:
+            small = self._read_small(spark, runs, bounds)
             if small is not None:
                 return small
         dfs = self._scan(spark, runs)
-        if all_bounds:
-            cond = F.lit(True)
-            for c, (lo, hi) in all_bounds.items():
-                if lo is not None:
-                    cond = cond & (F.col(c) >= F.lit(lo))
-                if hi is not None:
-                    cond = cond & (F.col(c) <= F.lit(hi))
+        cond = _within(bounds, F.col)
+        if cond is not None:
             dfs = [d.filter(cond) for d in dfs]
         return self._merge(dfs, allow_schema_evolution)
 
     def _read_small(
-        self, spark: SparkSession, runs: list[str], bounds: dict
+        self, spark: SparkSession, runs: list[str], bounds: list[tuple]
     ) -> Optional[DataFrame]:
         """The driver-side form of a bounded :meth:`read_merged` over
-        ``runs`` (in publish order), or None when the read does not
-        qualify (see there).  Each run's part files are read with
-        ``pyarrow.dataset`` under ``bounds`` as a pushed filter, so
-        row-group stats prune as in the Spark scan; the rows are sorted on
-        the primary key ascending, the writetime descending and the run
-        descending, and the first row of each key is its LWW winner.  The
-        result is a local relation with the runs' recorded schema."""
+        ``runs`` under the (column, lo, hi) triples ``bounds``, or None
+        when the read does not qualify (see there).  Each run's part files
+        are read with ``pyarrow.dataset`` under the bounds as a pushed
+        filter, so row-group stats prune as in the Spark scan, and
+        :func:`~cassandra_util_spark.operators.merge.lww_merge_table`
+        keeps each key's winner.  The result is a local relation with the
+        runs' recorded schema."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import IntegralType, StringType
 
+        from cassandra_util_spark.operators.merge import lww_merge_table
+
         stats = self.run_stats()
         if len({json.dumps(stats[r]["schema"], sort_keys=True) for r in runs}) > 1:
             return None
-        if sum(stats[r]["bytes"] for r in runs) > _one_partition_bytes(spark):
+        limit = min(_DRIVER_READ_BYTES, _one_partition_bytes(spark))
+        if sum(stats[r]["bytes"] for r in runs) > limit:
             return None
         schema = StructType.fromJson(stats[runs[0]]["schema"])
         types = {f.name: f.dataType for f in schema.fields}
@@ -738,39 +764,24 @@ class RunStore:
         wt = self.meta.writetime_col
         keys = list(self.meta.primary_key)
         if not all(ordered_alike(c) for c in keys + ([wt] if wt else [])) or not all(
-            ordered_alike(c, lo, hi) for c, (lo, hi) in bounds.items()
+            ordered_alike(c, lo, hi) for c, lo, hi in bounds
         ):
             return None
-        cond = ds.scalar(True)
-        for c, (lo, hi) in bounds.items():
-            if lo is not None:
-                cond &= ds.field(c) >= lo
-            if hi is not None:
-                cond &= ds.field(c) <= hi
+        cond = _within(bounds, ds.field)
         parquet = ds.ParquetFileFormat(
             read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
         )
         target = to_arrow_schema(schema)
         tables = []
-        for i, r in enumerate(runs):
+        for r in runs:
             run = ds.dataset(_parquet_parts(os.path.join(self.root, r)), format=parquet)
             if _LEGACY_CALENDAR & set(run.schema.metadata or {}):
                 return None  # Spark would rebase these dates; Arrow does not
-            t = run.to_table(columns=schema.names, filter=cond).cast(target)
-            tables.append(t.append_column("__run", pa.repeat(pa.scalar(i, pa.int32()), t.num_rows)))
+            tables.append(run.to_table(columns=schema.names, filter=cond).cast(target))
         table = pa.concat_tables(tables)
         if any(table[c].null_count for c in keys):
             return None
-        order = [(c, "ascending") for c in keys]
-        order += [(c, "descending") for c in ([wt] if wt else []) + ["__run"]]
-        # Spark's DESC ordering puts null writetimes last, as here
-        table = table.take(pc.sort_indices(table, order, null_placement="at_end"))
-        if table.num_rows > 1:
-            new_key = pc.not_equal(table[keys[0]][1:], table[keys[0]][:-1])
-            for c in keys[1:]:
-                new_key = pc.or_(new_key, pc.not_equal(table[c][1:], table[c][:-1]))
-            table = table.filter(pa.chunked_array([[True], *new_key.chunks], pa.bool_()))
-        return spark.createDataFrame(table.drop_columns(["__run"]), schema=schema)
+        return spark.createDataFrame(lww_merge_table(table, keys, wt), schema=schema)
 
     def compact(
         self,

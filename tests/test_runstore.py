@@ -965,12 +965,15 @@ def test_driver_read_equals_spark_read_on_every_type(spark, tmp_path, advisory_s
         assert (df.schema, sorted(df.collect())) == driver[name], name
 
 
-def test_driver_read_falls_back_to_spark(spark, tmp_path, advisory_size):
+def test_driver_read_falls_back_to_spark(spark, tmp_path, advisory_size, monkeypatch):
     """Bounded reads the driver does not serve keep the Spark scan and
     return the LWW rows: a float key, runs with two recorded schemas, a
     run Spark wrote in the legacy hybrid calendar (which Arrow would not
-    rebase), and runs whose recorded bytes exceed the bound."""
+    rebase), and runs whose recorded bytes exceed the driver-read cap or
+    the one-partition bound."""
     import datetime
+
+    from cassandra_util_spark.sources import runs as runs_module
 
     floats = RunStore(str(tmp_path / "floats"), TableMeta(("x",), (), "wt"))
     for i in range(2):
@@ -1004,9 +1007,35 @@ def test_driver_read_falls_back_to_spark(spark, tmp_path, advisory_size):
     store = _small_store(spark, str(tmp_path / "runs"))
     want = sorted(store.read_merged(spark, key_lower=0, key_upper=15).collect())
     kept = sum(store.run_sizes()[r] for r in store.prune_runs(0, 15))
+    with monkeypatch.context() as m:
+        m.setattr(runs_module, "_DRIVER_READ_BYTES", kept - 1)
+        df = store.read_merged(spark, key_lower=0, key_upper=15)
+        assert _scans_files(df) and sorted(df.collect()) == want
     advisory_size(kept - 1)
     df = store.read_merged(spark, key_lower=0, key_upper=15)
     assert _scans_files(df) and sorted(df.collect()) == want
+
+
+def test_lww_merge_table_keeps_the_newest_row_per_key():
+    """The Arrow form of the LWW policy: per (composite) key the newest
+    writetime wins and a null writetime loses to any value, as in the
+    Spark merge's descending order; without a writetime column one row
+    per key is kept."""
+    import pyarrow as pa
+
+    from cassandra_util_spark.operators.merge import lww_merge_table
+
+    t = pa.table({
+        "k": [2, 1, 1, 2, 1, 3],
+        "c": [0, 0, 1, 0, 0, 0],
+        "wt": [5, 3, None, None, 7, None],
+        "v": ["b5", "a3", "x", "bn", "a7", "c"],
+    })
+    got = lww_merge_table(t, ["k", "c"], "wt").to_pylist()
+    assert [(r["k"], r["c"], r["v"]) for r in got] == [
+        (1, 0, "a7"), (1, 1, "x"), (2, 0, "b5"), (3, 0, "c")]
+    assert lww_merge_table(t, ["k"], None)["k"].to_pylist() == [1, 2, 3]
+    assert lww_merge_table(t.slice(0, 0), ["k"], "wt").num_rows == 0
 
 
 # -- store file format: every file a store writes is zstd parquet ----------
