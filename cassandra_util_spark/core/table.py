@@ -33,12 +33,17 @@ def _fits_one_partition(df: DataFrame) -> bool:
     unknown estimate reads as ``Long.MaxValue`` and an inflated one (a
     join's estimate is the product of its inputs') exceeds the bound, so
     both keep the shuffle; so does a frame with no JVM plan to read."""
+    size = _plan_bytes(df)
+    return size is not None and size <= _one_partition_bytes(df.sparkSession)
+
+
+def _plan_bytes(df: DataFrame) -> "int | None":
+    """``df``'s optimized-plan ``sizeInBytes`` estimate (metadata only, no
+    job), or None when ``df`` has no JVM plan to read."""
     try:
-        spark = df.sparkSession
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return int(str(size)) <= _one_partition_bytes(spark)
-    except (AttributeError, Py4JError):  # no JVM plan to read: keep the shuffle
-        return False
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (AttributeError, Py4JError):
+        return None
 
 
 def _one_partition_bytes(spark: SparkSession) -> int:

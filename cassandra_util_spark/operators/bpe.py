@@ -75,6 +75,15 @@ DECODE_LITERAL_MAP_MAX = 8192
 # holds ~1.5 KB per word (~0.3 GB at the bound), which is what caps it.
 DRIVER_WORDS_MAX = 200_000
 
+# the out-of-vocabulary error under oov="raise", around the word: one text
+# for the Spark encoder's raise_error and its Arrow twin
+_OOV_PREFIX = "bpe encode: out-of-vocabulary word '"
+_OOV_SUFFIX = (
+    "' has no segmentation — pass merges= so the replay path can segment "
+    "unseen words, segment_words() the input's vocabulary first, or "
+    "degrade with oov='bytes'"
+)
+
 
 def byte_fallback_syms(word: Column) -> Column:
     """``['<0xNN>', ..., '</w>']`` — the UTF-8 byte-token segmentation of
@@ -640,16 +649,7 @@ def _assemble_streams(
         oov_expr(F.col("word"))
         if oov_expr is not None
         else F.raise_error(
-            F.concat(
-                F.lit("bpe encode: out-of-vocabulary word '"),
-                F.col("word"),
-                F.lit(
-                    "' has no segmentation — pass merges= so the "
-                    "replay path can segment unseen words, "
-                    "segment_words() the input's vocabulary first, "
-                    "or degrade with oov='bytes'"
-                ),
-            )
+            F.concat(F.lit(_OOV_PREFIX), F.col("word"), F.lit(_OOV_SUFFIX))
         )
     )
     guarded = doc_words.join(seg, "word", "left").withColumn(
@@ -822,7 +822,21 @@ def bpe_encode_ids(
         # micro-batch on the streaming path (r18)
         base, end = byte_bounds if byte_bounds else byte_block_bounds(vocab)
         oov_expr = lambda w: byte_fallback_ids(w, base, end)  # noqa: E731
-    seg_ids = (
+    return _assemble_streams(
+        df, id_col, text_col, segment_ids(words, vocab, unk_id), "int",
+        oov_expr=oov_expr,
+    ).withColumnRenamed("tokens", "token_ids")
+
+
+def segment_ids(words: DataFrame, vocab: DataFrame, unk_id: int = -1) -> DataFrame:
+    """(word, syms array<int>) — each word of the table ``words`` with its
+    segment array mapped through ``vocab`` to token ids, a symbol absent
+    from ``vocab`` mapping to ``unk_id``: the vocabulary-side map
+    :func:`bpe_encode_ids` assembles streams from, and the map the
+    streaming encoder collects once for :func:`bpe_encode_ids_table`.  A
+    word whose segment array is empty or null has no row, so both encoders
+    treat it as out of vocabulary."""
+    return (
         words.select("word", F.posexplode("syms").alias("j", "sym"))
         .join(F.broadcast(vocab.select("sym", "id")), "sym", "left")
         .groupBy("word")
@@ -835,9 +849,64 @@ def bpe_encode_ids(
             ).alias("syms")
         )
     )
-    return _assemble_streams(
-        df, id_col, text_col, seg_ids, "int", oov_expr=oov_expr
-    ).withColumnRenamed("tokens", "token_ids")
+
+
+def bpe_encode_ids_table(
+    docs,
+    id_col: str,
+    words_col: str,
+    seg,
+    oov: str = "raise",
+    byte_bounds: Tuple[int, int] | None = None,
+):
+    """The Arrow form of :func:`bpe_encode_ids`, computed on the driver:
+    ``docs`` holds one row per document, ``id_col`` and ``words_col``
+    (the document's normalized words, ``_norm_tokens`` of its text,
+    never null), and ``seg`` is :func:`segment_ids` collected to Arrow
+    (``word``, ``syms``), so symbols outside the vocabulary are already
+    ``unk_id``.  Returns (id_col, token_ids list<int32>, n_tokens int64)
+    in ``docs``' row order: each document's words map through ``seg``
+    and concatenate in order, and a document without words gets an empty
+    stream.  A word ``seg`` lacks follows ``oov`` as in
+    :func:`bpe_encode_ids`: ``"raise"`` raises ``ValueError`` with the
+    Spark encoder's message, ``"bytes"`` encodes it as
+    :func:`byte_fallback_ids` does from ``byte_bounds``
+    (``(byte_base, end_id)``, required)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if oov not in ("raise", "bytes"):
+        raise ValueError(f"oov must be 'raise' or 'bytes', got {oov!r}")
+    if oov == "bytes" and byte_bounds is None:
+        raise ValueError("oov='bytes' needs byte_bounds=(byte_base, end_id)")
+    words = docs[words_col].combine_chunks()
+    flat = words.flatten()
+    known = seg["word"].combine_chunks().cast(flat.type)
+    ids = seg["syms"].combine_chunks()
+    idx = pc.index_in(flat, value_set=known)
+    if idx.null_count:
+        unseen = pc.unique(pc.filter(flat, idx.is_null())).to_pylist()
+        if oov == "raise":
+            raise ValueError(_OOV_PREFIX + unseen[0] + _OOV_SUFFIX)
+        base, end = byte_bounds
+        known = pa.concat_arrays([known, pa.array(unseen, flat.type)])
+        ids = pa.concat_arrays([ids, pa.array(
+            [[base + b for b in w.encode("utf-8")] + [end] for w in unseen],
+            ids.type,
+        )])
+        idx = pc.index_in(flat, value_set=known)
+    pieces = ids.take(idx)
+    per_word = np.concatenate([[0], np.cumsum(pc.list_value_length(pieces))])
+    word_offsets = np.asarray(words.offsets) - words.offsets[0].as_py()
+    offsets = per_word[word_offsets]
+    return pa.table({
+        id_col: docs[id_col],
+        "token_ids": pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), pieces.flatten().cast(pa.int32())
+        ),
+        "n_tokens": pa.array(np.diff(offsets), pa.int64()),
+    })
 
 
 def _reassemble_byte_runs(joined: Column) -> Column:

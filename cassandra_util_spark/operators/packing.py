@@ -267,6 +267,74 @@ def materialize_packed_windows(
     return pieces.groupBy(*keys, "bin").agg(*aggs).select(*out)
 
 
+def materialize_packed_windows_table(
+    table, id_col: str, ids_col: str, capacity: int, order_col: str | None = None
+):
+    """The Arrow form of :func:`materialize_packed_windows` with
+    ``with_spans=True`` (global form, no ``eod_id``), computed on the
+    driver: (bin, n_docs, n_tokens, token_ids, doc_spans), one row per
+    window in bin order.  Every document's ids concatenate in the
+    ``order_col`` (then ``id_col``) order into one stream cut every
+    ``capacity`` tokens, and each document contributes one
+    ``(doc, off, len)`` span per window it touches; empty documents
+    contribute nothing.  ``table`` must hold no nulls in ``id_col``,
+    ``order_col`` or ``ids_col`` (arrays or elements), and the order
+    chain must be a total order, as the Spark form requires."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if capacity <= 0:
+        raise ValueError(f"capacity must be positive, got {capacity}")
+    order = _order_chain(order_col, id_col)
+    table = table.take(pc.sort_indices(table, [(c, "ascending") for c in order]))
+    ids = table[ids_col].combine_chunks()
+    n = pc.list_value_length(ids).to_numpy(zero_copy_only=False).astype(np.int64)
+    cb = np.cumsum(n) - n  # the exclusive running count
+    total = int(n.sum())
+    bins = -(-total // capacity)
+    # one piece per (document, window it touches), in stream order, which
+    # is also (bin, in-window offset) order
+    docs = np.flatnonzero(n)
+    first, last = cb[docs] // capacity, (cb[docs] + n[docs] - 1) // capacity
+    per_doc = last - first + 1
+    doc = np.repeat(docs, per_doc)
+    start = np.repeat(np.cumsum(per_doc) - per_doc, per_doc)
+    piece_bin = np.repeat(first, per_doc) + np.arange(len(doc)) - start
+    lo = np.maximum(cb[doc], piece_bin * capacity)
+    hi = np.minimum(cb[doc] + n[doc], (piece_bin + 1) * capacity)
+    doc_ids = table[id_col].combine_chunks().take(pa.array(doc, pa.int64()))
+    n_docs = np.zeros(bins, np.int64)
+    if len(doc):
+        distinct = pa.table({"b": piece_bin, "d": doc_ids}).group_by(["b", "d"]).aggregate([])
+        np.add.at(n_docs, distinct["b"].to_numpy(), 1)
+    # nullability as the Spark form's plan gives it
+    span = pa.struct([
+        pa.field("doc", doc_ids.type),
+        pa.field("off", pa.int64(), nullable=False),
+        pa.field("len", pa.int64()),
+    ])
+    token_off = np.minimum(np.arange(bins + 1) * capacity, total)
+    span_off = np.searchsorted(piece_bin, np.arange(bins + 1))
+    return pa.table({
+        "bin": pa.array(np.arange(bins), pa.int64()),
+        "n_docs": pa.array(n_docs, pa.int64()),
+        "n_tokens": pa.array(np.diff(token_off), pa.int64()),
+        "token_ids": pa.ListArray.from_arrays(
+            pa.array(token_off, pa.int32()), ids.flatten()
+        ),
+        "doc_spans": pa.ListArray.from_arrays(
+            pa.array(span_off, pa.int32()),
+            pa.StructArray.from_arrays(
+                [doc_ids, pa.array(lo - piece_bin * capacity, pa.int64()),
+                 pa.array(hi - lo, pa.int64())],
+                fields=list(span),
+            ),
+            type=pa.list_(pa.field("element", span, nullable=False)),
+        ),
+    })
+
+
 def reassemble_doc_streams(
     windows: DataFrame,
     doc_col: str = "doc_id",
@@ -953,6 +1021,22 @@ def loss_mask_windows(
 WINDOWS_DISTRIBUTED_MIN_ROWS = 20_000
 
 
+def _check_carry_columns(id_col: str, ids_col: str) -> None:
+    """Raise when the carry protocol's columns collide with the caller's.
+    ``__ord``/``__ids`` are its working columns and bin/n_docs/n_tokens/
+    token_ids/doc_spans its OUTPUT columns: an id column named like either
+    would collide inside the union or the materialization with an
+    unactionable Catalyst error (review r16: window stores are keyed
+    ('bin',), so id_col="bin" is a plausible mistake)."""
+    reserved = {"__ord", "__ids", "bin", "n_docs", "n_tokens",
+                "token_ids", "doc_spans"}
+    if id_col in reserved or ids_col in ("__ord", "__ids"):
+        raise ValueError(
+            f"column names {sorted(reserved)} are reserved by the carry "
+            f"protocol; rename id_col={id_col!r} / ids_col={ids_col!r}"
+        )
+
+
 def _windows_shard_step(
     spark,
     carry: list,
@@ -981,18 +1065,7 @@ def _windows_shard_step(
     the min-id aggregate into the strategy-count job that materializes
     the input pin — the streaming caller's append-order guard used to be
     its own driver-blocking job per trigger (r18)."""
-    # __ord/__ids are the protocol's working columns; bin/n_docs/n_tokens/
-    # token_ids/doc_spans are its OUTPUT columns — an id column named like
-    # either class would collide inside the union or the materialization
-    # with an unactionable Catalyst error (review r16: window stores are
-    # keyed ('bin',), so id_col="bin" is a plausible mistake)
-    reserved = {"__ord", "__ids", "bin", "n_docs", "n_tokens",
-                "token_ids", "doc_spans"}
-    if id_col in reserved or ids_col in ("__ord", "__ids"):
-        raise ValueError(
-            f"column names {sorted(reserved)} are reserved by the carry "
-            f"protocol; rename id_col={id_col!r} / ids_col={ids_col!r}"
-        )
+    _check_carry_columns(id_col, ids_col)
     carry_df = spark.createDataFrame(
         [(d, o - capacity, ids) for (d, o, ids) in carry],
         f"`{id_col}` {id_type}, __ord bigint, __ids array<{elem}>",

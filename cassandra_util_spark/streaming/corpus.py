@@ -46,6 +46,28 @@ Reference anchor: the reference's write path batches mutations and
 consults per-sstable summaries before reads (CQLBatch concurrent
 sub-batches; SSTableReader key-range metadata); this composes those
 disciplines into the corpus-building workload the engine targets.
+
+The encode and window drains (:func:`stream_encode`,
+:func:`stream_windows`) transform a SMALL micro-batch on the driver, the
+way the reference flushes a memtable as a local step on one node: a
+batch whose optimized-plan size estimate (metadata only, no job) is at
+most ``sources/runs.py`` ``_DRIVER_READ_BYTES`` is collected once as
+Arrow, collapsed to one row per id as the Spark path does, transformed by
+the Arrow twin of the Spark operator (``bpe_encode_ids_table``,
+``materialize_packed_windows_table``) and appended as a local relation,
+which fits one partition.  A trigger then runs two Spark jobs (the
+collect and the run's write; the window drain's boundary read of a small
+store is served on the driver too) and no shuffle, and it compiles no
+new class: at this size compiling the Spark path's joins, windows and
+aggregates costs more than running them, and the per-batch values it
+inlined into generated code (the ``writetime`` literal, the boundary
+read's bounds) made every trigger compile anew.
+Larger batches, and batches the Arrow twins do not reproduce exactly
+(null ids, texts, arrays or elements; a non-integral or negative window
+id; an encode with ``merges`` or a word table over
+``bpe.DRIVER_WORDS_MAX`` words), take the Spark path.  Both paths append
+the same run, recorded schema included, so a replay re-derives it
+whichever path it takes.
 """
 
 from __future__ import annotations
@@ -56,6 +78,14 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from cassandra_util_spark.operators.dedup import (
     _digest_for,
@@ -67,7 +97,7 @@ from cassandra_util_spark.operators.text import (
     _norm_tokens,
     whitespace_token_count,
 )
-from cassandra_util_spark.sources.runs import RunStore, maintain
+from cassandra_util_spark.sources.runs import RunStore, _driver_sized, maintain
 from cassandra_util_spark.streaming.ingest import _drain, run_name_for_batch
 
 
@@ -257,13 +287,18 @@ def stream_encode(
     same run and the idempotent named append no-ops — the
     ``stream_to_runstore`` replay guard.
 
+    Without ``merges``, the drain collects the word → id-array map of
+    :func:`~cassandra_util_spark.operators.bpe.segment_ids` once when it
+    starts (when the word table holds at most ``DRIVER_WORDS_MAX``
+    words), and each batch small enough for the driver (module note) is
+    encoded there by
+    :func:`~cassandra_util_spark.operators.bpe.bpe_encode_ids_table`:
+    two Spark jobs per trigger.  With ``merges`` every batch takes the
+    Spark path, whose merge replay segments unseen words.
+
     ``store`` must key on ``(id_col,)`` with writetime ``'writetime'``:
     LWW keeps the newest stream per document across re-deliveries."""
-    from cassandra_util_spark.operators.bpe import (
-        bpe_encode_ids,
-        byte_block_bounds,
-        segment_words,
-    )
+    from cassandra_util_spark.operators import bpe
     from cassandra_util_spark.streaming.ingest import stream_to_runstore
 
     if store.meta.partition_keys != (id_col,) or (
@@ -282,11 +317,13 @@ def stream_encode(
             "already segments unseen words; pass the frozen word table "
             "alone for the byte-fallback shape"
         )
-    words = words.select("word", "syms").localCheckpoint()
+    # lazy pins: each materializes inside the first job that reads it (the
+    # byte-block check, the driver path's map, or a Spark-path batch)
+    words = words.select("word", "syms").localCheckpoint(eager=False)
     # keep `kind` when present: bpe_encode_ids' oov='bytes' validation
     # reads the byte block from it
     vcols = ["sym", "id"] + (["kind"] if "kind" in vocab.columns else [])
-    vocab = vocab.select(*vcols).localCheckpoint()
+    vocab = vocab.select(*vcols).localCheckpoint(eager=False)
     byte_bounds = None
     if oov == "bytes":
         # fail-fast (ADVICE r16): run the byte-block/END contiguity
@@ -296,9 +333,49 @@ def stream_encode(
         # wrapped StreamingQueryException inside the first foreachBatch.
         # The bounds feed every batch's encode (the vocab is frozen), so
         # the per-trigger re-collect of the byte block is gone (r18)
-        byte_bounds = byte_block_bounds(vocab)
+        byte_bounds = bpe.byte_block_bounds(vocab)
+    seg = None
+    if merges is None:
+        # the driver path's word -> id-array map, collected once per drain
+        # from the Spark encoder's own map; a table over DRIVER_WORDS_MAX
+        # words keeps every batch on the Spark path
+        seg = bpe.segment_ids(words, vocab, unk_id).limit(
+            bpe.DRIVER_WORDS_MAX + 1
+        ).toArrow()
+        if seg.num_rows > bpe.DRIVER_WORDS_MAX:
+            seg = None
+
+    def encode_small(batch_df: DataFrame, batch_id: int) -> Optional[DataFrame]:
+        """``encode_batch`` on the driver (see the module note), or None
+        when the batch holds a null id or text: one collect of the
+        normalized words, the same per-id max-text collapse, the Arrow
+        encoder and a local relation to append."""
+        docs = batch_df.select(
+            id_col, text_col, _norm_tokens(F.col(text_col)).alias("__words")
+        ).toArrow()
+        if docs[id_col].null_count or docs[text_col].null_count:
+            return None
+        out = bpe.bpe_encode_ids_table(
+            _max_per_id(docs, id_col, text_col), id_col, "__words", seg,
+            oov=oov, byte_bounds=byte_bounds,
+        )
+        # nullability as in the Spark path's plan, so both write the same
+        # parquet columns (a nullable column stores definition levels)
+        schema = StructType([
+            batch_df.schema[id_col],
+            StructField("token_ids", ArrayType(IntegerType()), nullable=False),
+            StructField("n_tokens", LongType(), nullable=False),
+            StructField("writetime", LongType(), nullable=False),
+        ])
+        return batch_df.sparkSession.createDataFrame(
+            _with_writetime(out, batch_id), schema=schema
+        )
 
     def encode_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        if seg is not None and _driver_sized(batch_df):
+            small = encode_small(batch_df, batch_id)
+            if small is not None:
+                return small
         # Intra-batch dedup (the streaming/ann.py ADVICE-r8 contract):
         # writetime is the batch id, so two deliveries of the same doc_id
         # WITHIN one micro-batch would interleave into one garbled stream
@@ -325,18 +402,18 @@ def stream_encode(
         batch_vocab = batch_df.select(
             F.explode(_norm_tokens(F.col(text_col))).alias("word")
         ).distinct()
-        seg = words.join(batch_vocab, "word", "left_semi")
+        batch_words = words.join(batch_vocab, "word", "left_semi")
         if merges is not None:
             unseen = batch_vocab.join(
                 words.select("word"), "word", "left_anti"
             )
             if not unseen.isEmpty():
-                seg = seg.unionByName(
-                    segment_words(unseen, merges, batch=merge_batch)
+                batch_words = batch_words.unionByName(
+                    bpe.segment_words(unseen, merges, batch=merge_batch)
                 )
-        return bpe_encode_ids(
-            batch_df, id_col, text_col, seg, vocab, unk_id=unk_id, oov=oov,
-            byte_bounds=byte_bounds,
+        return bpe.bpe_encode_ids(
+            batch_df, id_col, text_col, batch_words, vocab, unk_id=unk_id,
+            oov=oov, byte_bounds=byte_bounds,
         ).withColumn("writetime", F.lit(batch_id).cast("long"))
 
     return stream_to_runstore(
@@ -412,12 +489,24 @@ def _boundary_row(store: RunStore, spark, key_lower, batch_id: int):
     the read falls back to the LWW merge rather than trust a max over
     them.  Degraded stats (``key_lower`` None) or an unexpectedly empty
     direct read fall back the same way — pruning stays an optimization,
-    never a correctness bet."""
+    never a correctness bet.
+
+    Kept runs small enough for ``RunStore._read_small`` are read there
+    instead, under the same two bounds: their LWW winners come back as a
+    local relation whose max bin is the row, with no Spark job and no
+    bound inlined into generated code, which the scan's filter would
+    compile anew on every trigger."""
     if key_lower is not None:
         runs = store.prune_runs(key_lower, None)
         wt_keep = set(store.prune_runs(None, batch_id - 1, column="writetime"))
         runs = [r for r in runs if r in wt_keep]
-        if runs:
+        bounds = [("bin", key_lower, None), ("writetime", None, batch_id - 1)]
+        small = store._read_small(spark, runs, bounds) if runs else None
+        if small is not None:
+            rows = small.collect()  # a local relation: no job
+            if rows:
+                return max(rows, key=lambda r: r["bin"])
+        elif runs:
             rows = (
                 reduce(DataFrame.unionByName, store._scan(spark, runs))
                 .filter(
@@ -439,6 +528,49 @@ def _boundary_row(store: RunStore, spark, key_lower, batch_id: int):
     )
     top = prior.orderBy(F.col("bin").desc()).limit(1).collect()
     return top[0] if top else None
+
+
+def _check_append_order(batch_id: int, mn, hi) -> None:
+    """``stream_windows``' append-order guard: a batch whose lowest id
+    ``mn`` is at or below ``hi``, the highest already-windowed doc id,
+    would re-pack emitted history, not extend it, so it fails loudly
+    before anything is appended (either may be None: no check)."""
+    if hi is not None and mn is not None and mn <= hi:
+        raise ValueError(
+            f"stream_windows: batch {batch_id} carries id {mn} ≤ "
+            f"already-windowed id {hi} — batches must arrive in "
+            "ascending id order (the carry-forward precondition); "
+            "re-deliveries of windowed documents cannot be "
+            "re-packed without rewriting emitted windows"
+        )
+
+
+def _max_per_id(table, id_col: str, col: str):
+    """``table`` with one row per ``id_col`` value, the one with the
+    greatest ``col``: the driver form of the drains' intra-batch
+    ``groupBy(id_col).agg(max(col))``.  Python orders strings by code
+    point and lists element-wise (a prefix first), as Spark orders
+    strings by their UTF-8 bytes and arrays; ``col`` must hold no
+    nulls."""
+    import pyarrow.compute as pc
+
+    if pc.count_distinct(table[id_col]).as_py() == table.num_rows:
+        return table
+    best: dict = {}
+    vals = table[col].to_pylist()
+    for i, k in enumerate(table[id_col].to_pylist()):
+        if k not in best or vals[i] > vals[best[k]]:
+            best[k] = i
+    return table.take(sorted(best.values()))
+
+
+def _with_writetime(table, batch_id: int):
+    """``table`` plus the drains' ``writetime`` column, the batch id."""
+    import pyarrow as pa
+
+    return table.append_column(
+        "writetime", pa.array([batch_id] * table.num_rows, pa.int64())
+    )
 
 
 def stream_windows(
@@ -486,11 +618,20 @@ def stream_windows(
     same arbitrary-but-deterministic tie-break as ``stream_encode``
     (within one micro-batch there is no version order).
 
+    A batch small enough for the driver (module note) with an integral
+    id column is windowed there, after the same boundary read and
+    before the same append-order guard, by
+    :func:`~cassandra_util_spark.operators.packing.materialize_packed_windows_table`
+    over the carry plus the batch: two Spark jobs per trigger (the
+    batch's collect, the run's write), plus one when the boundary read
+    cannot be served on the driver.  Other batches take the Spark shard
+    step.
+
     ``store`` must key on ``('bin',)`` with writetime ``'writetime'``."""
-    from cassandra_util_spark.operators.packing import (
-        _windows_shard_step,
-        carry_from_window_row,
-    )
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from cassandra_util_spark.operators import packing
     from cassandra_util_spark.streaming.ingest import stream_to_runstore
 
     if capacity <= 0:
@@ -504,19 +645,65 @@ def stream_windows(
             f"writetime={store.meta.writetime_col!r}"
         )
 
+    def window_small(
+        batch_df: DataFrame, batch_id: int, carry: list, bin_base: int, hi
+    ) -> Optional[DataFrame]:
+        """``window_batch`` on the driver (see the module note), or None
+        when the batch holds a null id, array or element or a negative id
+        (the Spark path raises the id guard's error for those): one
+        collect of the batch, the same per-id max-stream collapse and
+        append-order guard, the Arrow windows over the carry plus the
+        batch, and a local relation to append."""
+        docs = batch_df.select(id_col, ids_col).toArrow()
+        ids, streams = docs[id_col], docs[ids_col]
+        if ids.null_count or streams.null_count or pc.list_flatten(streams).null_count:
+            return None
+        if docs.num_rows and pc.min(ids).as_py() < 0:
+            return None
+        docs = _max_per_id(docs, id_col, ids_col)
+        _check_append_order(batch_id, pc.min(docs[id_col]).as_py(), hi)
+        types = docs.schema
+        inp = pa.concat_tables([
+            pa.table({
+                id_col: pa.array([d for d, _, _ in carry], types.field(id_col).type),
+                "__ord": pa.array([o - capacity for _, o, _ in carry], pa.int64()),
+                "__ids": pa.array([p for _, _, p in carry], types.field(ids_col).type),
+            }),
+            pa.table({
+                id_col: docs[id_col],
+                "__ord": pc.cast(docs[id_col], pa.int64()),
+                "__ids": docs[ids_col],
+            }),
+        ])
+        win = packing.materialize_packed_windows_table(
+            inp, id_col, "__ids", capacity, order_col="__ord"
+        )
+        win = win.set_column(0, "bin", pc.add(win["bin"], bin_base))
+        # nullability as in the Spark path's plan, so both write the same
+        # parquet columns (a nullable column stores definition levels)
+        span = StructType([
+            StructField("doc", batch_df.schema[id_col].dataType),
+            StructField("off", LongType(), nullable=False),
+            StructField("len", LongType()),
+        ])
+        schema = StructType([
+            StructField("bin", LongType(), nullable=False),
+            StructField("n_docs", LongType(), nullable=False),
+            StructField("n_tokens", LongType()),
+            StructField("token_ids", ArrayType(
+                batch_df.schema[ids_col].dataType.elementType)),
+            StructField("doc_spans", ArrayType(span, containsNull=False),
+                        nullable=False),
+            StructField("writetime", LongType(), nullable=False),
+        ])
+        return batch_df.sparkSession.createDataFrame(
+            _with_writetime(win, batch_id), schema=schema
+        )
+
     def window_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
         id_type = dict(batch_df.dtypes)[id_col]
         elem = batch_df.schema[ids_col].dataType.elementType.simpleString()
-        # intra-batch dedup, NOT pinned here: the shard step's input
-        # checkpoint materializes it exactly once (r18 — the r17 eager
-        # batch pin double-cached the same rows as the shard step's own
-        # pin and leaked checkpoint blocks for the stream's lifetime;
-        # ADVICE r17), and the append-order guard's min-id now rides the
-        # shard step's strategy-count job instead of running its own
-        batch_df = batch_df.groupBy(id_col).agg(
-            F.max(F.col(ids_col)).alias(ids_col)
-        )
         carry: list = []
         bin_base = 0
         hi: "int | None" = None  # highest already-windowed doc id
@@ -535,27 +722,32 @@ def stream_windows(
                 hi = max(int(s["doc"]) for s in p["doc_spans"])
                 if int(p["n_tokens"]) < capacity:
                     bin_base = int(p["bin"])
-                    carry = carry_from_window_row(p)
+                    carry = packing.carry_from_window_row(p)
                 else:
                     bin_base = int(p["bin"]) + 1
-        win, _, _, mn = _windows_shard_step(
+        if isinstance(batch_df.schema[id_col].dataType, IntegralType) and (
+            _driver_sized(batch_df)
+        ):
+            packing._check_carry_columns(id_col, ids_col)
+            small = window_small(batch_df, batch_id, carry, bin_base, hi)
+            if small is not None:
+                return small
+        # intra-batch dedup, NOT pinned here: the shard step's input
+        # checkpoint materializes it exactly once (r18 — the r17 eager
+        # batch pin double-cached the same rows as the shard step's own
+        # pin and leaked checkpoint blocks for the stream's lifetime;
+        # ADVICE r17), and the append-order guard's min-id now rides the
+        # shard step's strategy-count job instead of running its own
+        batch_df = batch_df.groupBy(id_col).agg(
+            F.max(F.col(ids_col)).alias(ids_col)
+        )
+        win, _, _, mn = packing._windows_shard_step(
             spark, carry, batch_df, id_col, ids_col, capacity, id_type, elem,
             with_min_id=True,
         )
-        if hi is not None and mn is not None and mn <= hi:
-            # append-order guard: a batch id at or below an already-
-            # windowed doc's would re-pack emitted history, not extend
-            # it.  Checked AFTER the shard step computes (its fused
-            # aggregate supplies the min id) but BEFORE anything is
-            # appended — a violating batch still fails loudly with
-            # nothing published, it just wastes its own windowing work
-            raise ValueError(
-                f"stream_windows: batch {batch_id} carries id {mn} ≤ "
-                f"already-windowed id {hi} — batches must arrive in "
-                "ascending id order (the carry-forward precondition); "
-                "re-deliveries of windowed documents cannot be "
-                "re-packed without rewriting emitted windows"
-            )
+        # checked AFTER the shard step computes (its fused aggregate
+        # supplies the min id) but BEFORE anything is appended
+        _check_append_order(batch_id, mn, hi)
         return win.select(
             (F.col("bin") + F.lit(bin_base)).cast("bigint").alias("bin"),
             F.col("n_docs").cast("bigint").alias("n_docs"),

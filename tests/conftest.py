@@ -79,6 +79,75 @@ def count_compiles(spark):
     return run
 
 
+@pytest.fixture(params=["driver", "spark"])
+def drain_path(request, monkeypatch):
+    """Runs a drain test on each path of the encode and window drains:
+    ``"driver"`` leaves the driver-path cap as it is, ``"spark"`` sets
+    ``sources.runs._DRIVER_READ_BYTES`` below every batch's size estimate,
+    so every batch (and every bounded store read) takes the Spark path."""
+    if request.param == "spark":
+        from cassandra_util_spark.sources import runs
+
+        monkeypatch.setattr(runs, "_DRIVER_READ_BYTES", -1)
+    return request.param
+
+
+@pytest.fixture
+def stream_jobs(spark):
+    """``stream_jobs(query)`` -> the Spark jobs a finished streaming
+    ``query`` ran in its micro-batches.  Structured Streaming runs them
+    under the query's run id as their job group, so the jobs a drain runs
+    before ``start`` (its set-up) are not counted."""
+    tracker = spark.sparkContext.statusTracker()
+    return lambda query: len(tracker.getJobIdsForGroup(str(query.runId)))
+
+
+@pytest.fixture
+def runs_of(spark):
+    """``runs_of(store)`` -> {run name: (recorded schema, parquet schemas
+    of its part files, sorted rows)} for every live run of a RunStore:
+    what a drain appended, run by run, down to each column's
+    nullability in the files."""
+    import pyarrow.parquet as pq
+
+    from cassandra_util_spark.sources.runs import _parquet_parts
+
+    def read(store) -> dict:
+        stats = store.run_stats()
+        return {
+            r: (
+                stats[r]["schema"],
+                [pq.read_schema(p) for p in _parquet_parts(os.path.join(store.root, r))],
+                sorted(store._scan(spark, [r])[0].collect()),
+            )
+            for r in store.live_runs()
+        }
+
+    return read
+
+
+@pytest.fixture
+def fail_once(monkeypatch):
+    """``fail_once(module, name, at_call)`` makes ``module.name`` raise
+    ``RuntimeError("injected fault in <name>")`` on its ``at_call``-th
+    call, once, and returns the list its calls are appended to."""
+
+    def patch(module, name: str, at_call: int) -> list:
+        real = getattr(module, name)
+        calls = []
+
+        def failing(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == at_call:
+                raise RuntimeError(f"injected fault in {name}")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, failing)
+        return calls
+
+    return patch
+
+
 def _shuffle_exchanges(plan) -> int:
     """``ShuffleExchangeExec`` nodes under a physical plan node, looking
     through AQE's wrapper and its query stages."""

@@ -10,6 +10,8 @@ import os
 import time
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.table import TableMeta
@@ -790,12 +792,14 @@ def test_boundary_row_collect_is_bounded_and_falls_back_on_extra_rows(
     spark, tmp_path, count_jobs, monkeypatch
 ):
     """The direct boundary read collects at most one row more than the
-    runs it scans.  On a healthy store it is one job, even when the runs
-    it scans are several scan partitions, and it never touches the merged
-    read; a run that holds its max-bin row twice breaks the
-    one-row-per-bin-per-run contract, so the read falls back to the LWW
-    merge, which returns the right boundary row."""
+    runs it scans.  With the driver read off (so the scan runs in Spark),
+    on a healthy store it is one job, even when the runs it scans are
+    several scan partitions, and it never touches the merged read; a run
+    that holds its max-bin row twice breaks the one-row-per-bin-per-run
+    contract, so the read falls back to the LWW merge, which returns the
+    right boundary row."""
     from cassandra_util_spark.core.table import TableMeta
+    from cassandra_util_spark.sources import runs as runs_module
     from cassandra_util_spark.sources.runs import RunStore
     from cassandra_util_spark.streaming.corpus import (
         _boundary_row,
@@ -839,6 +843,12 @@ def test_boundary_row_collect_is_bounded_and_falls_back_on_extra_rows(
 
     key_lower = _prior_max_bin_runs(store, 2)[0]
     assert key_lower == 1 and store.prune_runs(1, None) == store.live_runs()
+    # served on the driver: no job, the same row
+    row, jobs = count_jobs("boundary-driver",
+                           lambda: _boundary_row(store, spark, key_lower, 2))
+    assert jobs == 0 and merged_calls == []
+    assert row.asDict() == merged_top(2).asDict()
+    monkeypatch.setattr(runs_module, "_DRIVER_READ_BYTES", -1)
     # an open cost at the split size puts each run's file in its own scan
     # partition, so a limit over the plain scan would take them in rounds
     key = "spark.sql.files.openCostInBytes"
@@ -862,3 +872,211 @@ def test_boundary_row_collect_is_bounded_and_falls_back_on_extra_rows(
     assert len(merged_calls) == 1
     assert row.asDict() == merged_top(3).asDict()
     assert row["bin"] == 2 and list(row["token_ids"]) == [10, 11]
+
+
+def _live_drain(spark, src, live, store, cp, shards, **kw):
+    """Link ``shards`` of ``src`` into ``live`` and drain ``live`` into
+    ``store`` from checkpoint ``cp``; returns the finished query."""
+    for sh in shards:
+        os.symlink(os.path.join(src, sh), os.path.join(live, sh))
+    stream = (
+        spark.readStream.schema("doc_id bigint, token_ids array<int>")
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(os.path.join(live, "shard-*"))
+    )
+    q = stream_windows(stream, store, cp, CAPACITY, **kw)
+    assert q.awaitTermination(300)
+    return q
+
+
+def _with_duplicate(spark):
+    """DOCS plus a second, lesser delivery of doc 1 (the greater stream
+    wins the intra-batch collapse)."""
+    return spark.createDataFrame(
+        DOCS + [(1, [4, 5])], "doc_id bigint, token_ids array<int>"
+    )
+
+
+def test_both_paths_append_the_same_runs(spark, tmp_path_factory, monkeypatch, runs_of):
+    """The driver path and the Spark path append the same runs: the same
+    names, the same recorded schema and the same rows, carry and
+    intra-batch duplicates included."""
+    from cassandra_util_spark.sources import runs as runs_module
+
+    d = _with_duplicate(spark)
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    got = {}
+    for path in ("driver", "spark"):
+        if path == "spark":
+            monkeypatch.setattr(runs_module, "_DRIVER_READ_BYTES", -1)
+        store = _new_store(tmp_path_factory)
+        _drain(spark, paths, store, str(tmp_path_factory.mktemp("win-cp-")))
+        got[path] = runs_of(store)
+    assert len(got["driver"]) == 3
+    assert got["driver"] == got["spark"]
+    assert _view(spark, store) == _want(
+        spark, spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>"))
+
+
+def test_driver_path_jobs_and_compiles(
+    spark, tmp_path_factory, stream_jobs, count_compiles
+):
+    """On the driver path a trigger runs two Spark jobs, the batch's
+    collect and the run's write: the boundary read of a small store is
+    served on the driver.  A third trigger, after a restart of the same
+    checkpoint, compiles no new class: no bound or batch id is inlined
+    into generated code."""
+    d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
+    _, src = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    live = os.path.join(src, "live")
+    os.makedirs(live)
+    store = _new_store(tmp_path_factory)
+    cp = str(tmp_path_factory.mktemp("win-cp-"))
+    q = _live_drain(spark, src, live, store, cp, ["shard-00", "shard-01"])
+    assert stream_jobs(q) == 2 * 2
+    q, compiles = count_compiles(
+        lambda: _live_drain(spark, src, live, store, cp, ["shard-02"])
+    )
+    assert stream_jobs(q) == 2
+    assert compiles == 0
+    assert _view(spark, store) == _want(spark, d)
+
+
+def test_fault_in_transform_restarts_clean(
+    spark, tmp_path_factory, fail_once, drain_path
+):
+    """A fault inside batch 1's transform, on each path, stops the drain
+    with batch 1 unapplied; a restart from the same checkpoint rebuilds
+    the carry from the store, and the store's view and mark equal an
+    uninterrupted run's."""
+    from pyspark.errors import StreamingQueryException
+
+    from cassandra_util_spark.operators import packing
+    from cassandra_util_spark.streaming.ingest import applied_batch_hwm
+
+    d = spark.createDataFrame(DOCS, "doc_id bigint, token_ids array<int>")
+    paths, _ = _write_shards(tmp_path_factory, d, cuts=[2, 5])
+    clean = _new_store(tmp_path_factory)
+    _drain(spark, paths, clean, str(tmp_path_factory.mktemp("win-cp-")),
+           txn_app_id="win-fault")
+    transform = (
+        "materialize_packed_windows_table" if drain_path == "driver"
+        else "_windows_shard_step"
+    )
+    calls = fail_once(packing, transform, at_call=2)
+    store = _new_store(tmp_path_factory)
+    cp = str(tmp_path_factory.mktemp("win-cp-"))
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        _drain(spark, paths, store, cp, txn_app_id="win-fault")
+        raise AssertionError("the injected fault did not stop the drain")
+    assert len(calls) == 2 and applied_batch_hwm(store) == 0
+    _drain(spark, paths, store, cp, txn_app_id="win-fault")
+    assert applied_batch_hwm(store) == applied_batch_hwm(clean) == 2
+    assert sorted(store.read_merged(spark).collect()) == sorted(
+        clean.read_merged(spark).collect()
+    )
+
+
+def _spark_windows(df, **kw):
+    """``materialize_packed_windows(..., with_spans=True)`` rows as dicts,
+    in bin order."""
+    return sorted(
+        (r.asDict(recursive=True) for r in materialize_packed_windows(
+            df, "doc_id", "token_ids", with_spans=True, **kw).collect()),
+        key=lambda r: r["bin"],
+    )
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    docs=st.lists(
+        st.tuples(st.integers(0, 9), st.lists(st.integers(-3, 3), max_size=9)),
+        max_size=8,
+    ),
+    capacity=st.integers(1, 6),
+    cut=st.integers(0, 9),
+)
+@example(docs=[(1, [1, 2, 3]), (2, [4]), (3, [5, 6, 7, 8])], capacity=4, cut=2)
+def test_windows_table_equals_spark_windows(spark, docs, capacity, cut):
+    """The driver path's transform equals ``materialize_packed_windows``
+    on random batches: duplicate ids (the greatest stream wins), empty
+    documents, exact tiling at ``capacity`` (the example), and a carry
+    across two triggers, whose windows joined equal the one-shot
+    windows of both batches."""
+    import pyarrow as pa
+
+    from cassandra_util_spark.operators.packing import (
+        carry_from_window_row,
+        materialize_packed_windows_table,
+    )
+    from cassandra_util_spark.streaming.corpus import _max_per_id
+
+    schema = "doc_id bigint, token_ids array<int>"
+    batch = spark.createDataFrame(docs, schema)
+    deduped = batch.groupBy("doc_id").agg(F.max("token_ids").alias("token_ids"))
+    table = _max_per_id(batch.toArrow(), "doc_id", "token_ids")
+    one_shot = _spark_windows(deduped, capacity=capacity)
+    assert materialize_packed_windows_table(
+        table, "doc_id", "token_ids", capacity).to_pylist() == one_shot
+
+    # two triggers: ids <= cut, then the carry plus ids > cut
+    first = materialize_packed_windows_table(
+        table.filter(pa.compute.less_equal(table["doc_id"], cut)),
+        "doc_id", "token_ids", capacity,
+    ).to_pylist()
+    carry, base = [], 0
+    if first:
+        last = first[-1]
+        base = last["bin"] if last["n_tokens"] < capacity else last["bin"] + 1
+        if last["n_tokens"] < capacity:
+            carry = carry_from_window_row(last)
+    rest = table.filter(pa.compute.greater(table["doc_id"], cut))
+    inp = pa.concat_tables([
+        pa.table({
+            "doc_id": pa.array([c[0] for c in carry], pa.int64()),
+            "__ord": pa.array([c[1] - capacity for c in carry], pa.int64()),
+            "token_ids": pa.array([c[2] for c in carry], pa.list_(pa.int32())),
+        }),
+        pa.table({"doc_id": rest["doc_id"], "__ord": rest["doc_id"],
+                  "token_ids": rest["token_ids"]}),
+    ])
+    second = materialize_packed_windows_table(
+        inp, "doc_id", "token_ids", capacity, order_col="__ord").to_pylist()
+    assert second == _spark_windows(
+        spark.createDataFrame(inp.to_pylist(), "doc_id bigint, __ord bigint, "
+                              "token_ids array<int>"),
+        capacity=capacity, order_col="__ord",
+    )
+    joined = {w["bin"]: w for w in first}
+    joined.update({w["bin"] + base: dict(w, bin=w["bin"] + base) for w in second})
+    strip = lambda w: (w["bin"], w["n_tokens"], w["token_ids"])  # noqa: E731
+    assert [strip(w) for w in sorted(joined.values(), key=lambda w: w["bin"])] == [
+        strip(w) for w in one_shot]
+
+
+@pytest.mark.parametrize(
+    "drain_test",
+    [
+        test_streamed_windows_equal_one_shot,
+        test_restart_continues_from_store_carry,
+        test_replay_is_idempotent,
+        test_out_of_order_batch_raises,
+        test_out_of_order_after_exact_tiling_raises,
+        test_stream_windows_on_a_monotone_order_key,
+        pytest.param(test_singleton_batches_equal_one_shot, marks=pytest.mark.slow),
+        pytest.param(test_compaction_interleaves_with_carry, marks=pytest.mark.slow),
+    ],
+    ids=lambda t: t.__name__,
+)
+def test_drain_on_the_spark_path(spark, tmp_path_factory, monkeypatch, drain_test):
+    """The drain tests above take the driver path (their batches are
+    small); each runs here again with every batch on the Spark path."""
+    from cassandra_util_spark.sources import runs as runs_module
+
+    monkeypatch.setattr(runs_module, "_DRIVER_READ_BYTES", -1)
+    drain_test(spark, tmp_path_factory)
